@@ -22,22 +22,13 @@ import graft.functions.expressions.{CosineSimilarity, MinHashSignature, ShingleH
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
-    // materialized-view rewrite (graft.plans.SummaryViews): inactive until a
-    // view is registered, so injection is free for sessions that never use
-    // it. injectOptimizerRule hands the builder the owning session — each
-    // session gets its own RewriteToSummary instance.
-    ext.injectOptimizerRule(session => graft.plans.RewriteToSummary(session))
-    // manifest-served aggregates (graft.plans.MetaAgg): injected AFTER the
-    // summary rewrite (an O(keys) state table beats the manifest leg when
-    // both serve) and BEFORE the scan-pruning rule (a servable aggregate
-    // must not have its scan swapped first) — the same ordering the
-    // install() methods enforce on existing sessions.
-    ext.injectOptimizerRule(session =>
-      graft.plans.RewriteToMetaAggregate(session))
-    // bloom-pruned star joins (graft.plans.BloomJoins): same economics —
-    // inactive until a layout is registered.
-    ext.injectOptimizerRule(session =>
-      graft.plans.RewriteToBloomPrunedJoin(session))
+    // the optimizer rules (summary views, manifest-served aggregates,
+    // bloom-pruned joins), in the order install() also enforces on
+    // existing sessions; each is inactive until something is registered.
+    // injectOptimizerRule passes each rule constructor its owning session.
+    graft.plans.PlanShapes.rules.foreach { case (_, build) =>
+      ext.injectOptimizerRule(build)
+    }
   }
 }
 

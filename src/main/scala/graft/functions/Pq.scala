@@ -47,10 +47,17 @@ object Pq {
   def trainCodebooks(corpus: DataFrame, m: Int, k: Int, iters: Int = 3,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding",
-                     maxTrainRows: Long = 200000L): Array[Array[Array[Float]]] =
+                     maxTrainRows: Long = 200000L): Array[Array[Array[Float]]] = {
+    requireShape(m, k)
     trainCodebooksOn(
       Similarity.trainingSample(corpus, idCol, vecCol, maxTrainRows),
       m, k, iters, idCol, vecCol)
+  }
+
+  /** Codebook shape check, run before any corpus job. */
+  private def requireShape(m: Int, k: Int): Unit =
+    require(m >= 1 && k >= 2 && k <= 256,
+      s"PQ shape out of range: m=$m k=$k (k in [2, 256])")
 
   /** Lloyd iterations over an already-sampled training frame
     * ([[Similarity.trainingSample]]) — the split lets
@@ -60,8 +67,6 @@ object Pq {
   private[functions] def trainCodebooksOn(train: DataFrame, m: Int, k: Int,
                                           iters: Int, idCol: String,
                                           vecCol: String): Array[Array[Array[Float]]] = {
-    require(m >= 1 && k >= 2 && k <= 256,
-      s"PQ shape out of range: m=$m k=$k (k in [2, 256])")
     val seedRows = train
       .select(col(vecCol).as("v"), xxhash64(col(idCol)).as("h"))
       .orderBy(col("h")).limit(k)
@@ -190,6 +195,7 @@ object Pq {
                       vecCol: String = "embedding",
                       maxTrainRows: Long = 200000L,
                       updateCatalog: Boolean = true): Unit = {
+    requireShape(m, kCodes)
     val spark = corpus.sparkSession
     import spark.implicits._
     // ONE sampled, materialized training frame feeds BOTH trainers: the

@@ -2,14 +2,14 @@ package graft.plans
 
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, NamedExpression, PlanExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, NamedExpression, PlanExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, Join, LocalLimit, LocalRelation, LogicalPlan, Project, Sample, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
-import graft.sources.BloomIndex
+import graft.sources.{BloomIndex, Manifests}
 
 /** Bloom-pruned star joins as an OPTIMIZER rule — the ergonomics tier on
   * top of [[graft.sources.BloomIndex.prunedJoin]], the same move
@@ -94,38 +94,23 @@ object BloomJoins {
     * (`_bloomindex` itself is multi-column); a composite-key equi-join
     * INTERSECTS the candidate sets of every registered join column.
     * Re-registering the same (path, col) replaces in place. */
-  private val layouts =
-    new java.util.concurrent.ConcurrentHashMap[String, List[Layout]]()
-  private val zones =
-    new java.util.concurrent.ConcurrentHashMap[String, List[ZoneLayout]]()
+  private val layouts = new PlanShapes.PathRegistry[Layout](_.col)
+  private val zones = new PlanShapes.PathRegistry[ZoneLayout](_.col)
 
-  private[plans] def norm(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
+  private[plans] def norm(p: String): String = Manifests.normPath(p)
 
-  def register(l: Layout): Unit =
-    layouts.compute(norm(l.factPath), (_, cur) =>
-      Option(cur).getOrElse(Nil).filterNot(_.col == l.col) :+ l)
-  def unregister(factPath: String): Unit = layouts.remove(norm(factPath))
+  def register(l: Layout): Unit = layouts.register(l.factPath, l)
+  def unregister(factPath: String): Unit = layouts.removeAll(factPath)
   /** Remove ONE indexed column's layout, keeping siblings (the
     * [[SummaryViews.unregister]] two-arg discipline applied here: the
     * single-arg form stays the remove-ALL operation). */
   def unregister(factPath: String, col: String): Unit =
-    layouts.computeIfPresent(norm(factPath), (_, cur) =>
-      cur.filterNot(_.col == col) match {
-        case Nil => null
-        case rest => rest
-      })
-  def registerZone(l: ZoneLayout): Unit =
-    zones.compute(norm(l.factPath), (_, cur) =>
-      Option(cur).getOrElse(Nil).filterNot(_.col == l.col) :+ l)
-  def unregisterZone(factPath: String): Unit = zones.remove(norm(factPath))
+    layouts.remove(factPath, col)
+  def registerZone(l: ZoneLayout): Unit = zones.register(l.factPath, l)
+  def unregisterZone(factPath: String): Unit = zones.removeAll(factPath)
   /** Remove ONE zoned column's layout, keeping siblings. */
   def unregisterZone(factPath: String, col: String): Unit =
-    zones.computeIfPresent(norm(factPath), (_, cur) =>
-      cur.filterNot(_.col == col) match {
-        case Nil => null
-        case rest => rest
-      })
+    zones.remove(factPath, col)
   def clear(): Unit = {
     layouts.clear(); zones.clear(); probeCache.clear(); warned.clear()
   }
@@ -223,14 +208,7 @@ object BloomJoins {
         s"go FULL until the manifest is repaired): $e")
   }
 
-  private[plans] def forPaths(paths: Seq[String]): Seq[Layout] =
-    paths.map(norm).flatMap(p => Option(layouts.get(p)).getOrElse(Nil))
-
-  private[plans] def zonesForPaths(paths: Seq[String]): Seq[ZoneLayout] =
-    paths.map(norm).flatMap(p => Option(zones.get(p)).getOrElse(Nil))
-
-  private[graft] def layoutsFor(path: String): Seq[Layout] =
-    Option(layouts.get(norm(path))).getOrElse(Nil)
+  private[graft] def layoutsFor(path: String): Seq[Layout] = layouts.get(path)
 
   /** The relation's single layout root, when it is a single-root parquet
     * scan, with catalog discovery probed on the way — shared by every
@@ -250,21 +228,14 @@ object BloomJoins {
     }
 
   private[graft] def zoneLayoutsFor(path: String): Seq[ZoneLayout] =
-    Option(zones.get(norm(path))).getOrElse(Nil)
+    zones.get(path)
 
-  /** Install on an existing session (the extensions hook only runs at
-    * construction). Idempotent. */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[RewriteToBloomPrunedJoin]))
-      spark.experimental.extraOptimizations =
-        cur :+ RewriteToBloomPrunedJoin(spark)
-  }
+  /** Install on an existing session, in [[PlanShapes.rules]] order. */
+  def install(spark: SparkSession): Unit =
+    PlanShapes.install(spark, classOf[RewriteToBloomPrunedJoin])
 
   def uninstall(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[RewriteToBloomPrunedJoin])
+    PlanShapes.uninstall(spark, classOf[RewriteToBloomPrunedJoin])
 }
 
 /** The rewrite rule. Runs in the user-provided-optimizer batch; the
@@ -272,7 +243,7 @@ object BloomJoins {
   * dimKeyᵢ))` with the fact side landing on a registered parquet layout —
   * composite keys probe per column and intersect candidate sets. */
 final case class RewriteToBloomPrunedJoin(spark: SparkSession)
-    extends Rule[LogicalPlan] {
+    extends Rule[LogicalPlan] with PredicateHelper {
 
   import BloomJoins._
 
@@ -300,7 +271,7 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
           // in either order — normalize conjuncts to (left, right) pairs,
           // then try both orientations, first success wins. COMPOSITE
           // equi-joins prune too: per-column candidate sets INTERSECT.
-          equiPairs(cond, left, right).flatMap { pairs =>
+          PlanShapes.equiPairs(cond, left, right).flatMap { pairs =>
             tryPrune(j, left, right, pairs)
               .orElse(tryPrune(j, right, left, pairs.map(_.swap)))
           }.getOrElse(j)
@@ -309,7 +280,7 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
           // rows only, so the candidate-superset swap stays exact. The
           // fact is ALWAYS the left side; anti joins must never prune
           // (they keep exactly the rows a pruned scan would drop).
-          equiPairs(cond, left, right)
+          PlanShapes.equiPairs(cond, left, right)
             .flatMap(pairs => tryPrune(j, left, right, pairs))
             .getOrElse(j)
         case fl @ Filter(cond, rel: LogicalRelation) =>
@@ -326,31 +297,6 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
       } finally inRule.set(false)
     }
 
-  private def conjunctsOf(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjunctsOf(l) ++ conjunctsOf(r)
-    case other => Seq(other)
-  }
-
-  /** The join condition normalized to (left-side attr, right-side attr)
-    * pairs — defined only when EVERY conjunct is a bare cross-side
-    * equality (a non-equi or single-side conjunct refuses the whole
-    * join: pushdown already split what could be split, so whatever is
-    * left genuinely constrains the pair set). */
-  private def equiPairs(cond: Expression, left: LogicalPlan,
-                        right: LogicalPlan)
-      : Option[Seq[(AttributeReference, AttributeReference)]] = {
-    val pairs = conjunctsOf(cond).map {
-      case EqualTo(a: AttributeReference, b: AttributeReference)
-          if left.outputSet.contains(a) && right.outputSet.contains(b) =>
-        Some((a, b))
-      case EqualTo(a: AttributeReference, b: AttributeReference)
-          if left.outputSet.contains(b) && right.outputSet.contains(a) =>
-        Some((b, a))
-      case _ => None
-    }
-    if (pairs.exists(_.isEmpty)) None else Some(pairs.map(_.get))
-  }
-
   /** Literal values a top-level conjunct pins `key` to — the smallest
     * such list (any pinning conjunct yields a sound candidate superset).
     * NULL literals are dropped: `key = NULL` / `IN (…, NULL)` never
@@ -358,7 +304,7 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
   private def pinnedValues(cond: Expression,
                            key: AttributeReference): Option[Seq[Any]] = {
     val toScala = CatalystTypeConverters.createToScalaConverter(key.dataType)
-    val lists = conjunctsOf(cond).flatMap {
+    val lists = splitConjunctivePredicates(cond).flatMap {
       case EqualTo(a: AttributeReference, l: Literal)
           if a.exprId == key.exprId => Some(Seq(l.value))
       case EqualTo(l: Literal, a: AttributeReference)
@@ -375,16 +321,6 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
     else Some(lists.minBy(_.length)
       .filter(_ != null).map(toScala))
   }
-
-  /** The relation's single layout root, when it is a single-root parquet
-    * scan, with catalog discovery probed on the way. MULTI-root relations
-    * (`spark.read.parquet(a, b)`) refuse: candidate files of different
-    * roots cannot anchor at one `basePath`, and per-root candidate sets
-    * for the SAME column would have to union across roots before any
-    * cross-column intersection — refusing is the sound plan until someone
-    * actually needs that shape. */
-  private def singleRoot(rel: LogicalRelation): Option[String] =
-    BloomJoins.singleRootOf(spark, rel)
 
   /** Candidate-file sets from LITERAL pins on bloom-registered columns:
     * one entry per (registered column × pinning conjunct set); None =
@@ -446,9 +382,9 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
     * contributes nothing; only when NO leg lands does the rewrite. */
   private def tryPruneFilter(fl: Filter, cond: Expression,
                              rel: LogicalRelation): Option[LogicalPlan] =
-    singleRoot(rel).flatMap { root =>
-      val ls = forPaths(Seq(root))
-      val zls = zonesForPaths(Seq(root))
+    singleRootOf(spark, rel).flatMap { root =>
+      val ls = layoutsFor(root)
+      val zls = zoneLayoutsFor(root)
       if (zls.exists(zl => rel.output.find(_.name == zl.col)
           .exists(key => nullComparison(cond, key))))
         // a NULL comparison on a zoned column keeps no rows: exact empty
@@ -610,8 +546,8 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
         rewriteFact(child, pairs, dimSide, fc :: conds)
           .map(c => f.copy(child = c))
       case rel: LogicalRelation =>
-        singleRoot(rel).flatMap { root =>
-          val ls = forPaths(Seq(root))
+        singleRootOf(spark, rel).flatMap { root =>
+          val ls = layoutsFor(root)
           val usable = pairs.flatMap { case (fk, dk) =>
             ls.find(l => l.col == fk.name &&
                 rel.output.exists(_.exprId == fk.exprId))
@@ -624,7 +560,7 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
           // that are range-CLUSTERED on the join key (time-bucketed,
           // id-sorted), where a zone map is the cheap manifest.
           val usableZone = pairs.flatMap { case (fk, dk) =>
-            zonesForPaths(Seq(root)).find(z => z.col == fk.name &&
+            zoneLayoutsFor(root).find(z => z.col == fk.name &&
                 rel.output.exists(_.exprId == fk.exprId))
               .map(z => (z, dk))
           }
@@ -713,8 +649,8 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
       // contribute their candidate sets to the SAME intersection — the
       // `dim ⋈ fact WHERE fact.day BETWEEN …` shape skips by both legs
       val filterSets = conds.reduceOption(And).toSeq.flatMap { c =>
-        bloomLiteralSets(c, rel, forPaths(Seq(root))) ++
-          zoneRangeSets(c, rel, zonesForPaths(Seq(root)))
+        bloomLiteralSets(c, rel, layoutsFor(root)) ++
+          zoneRangeSets(c, rel, zoneLayoutsFor(root))
       }.flatten
       swappedScan(rel,
         (joinSets ++ filterSets).map(_.toSet).reduce(_ intersect _)
@@ -747,7 +683,7 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
     * rule runs; the rule stays explicit about it regardless.) */
   private def nullComparison(cond: Expression,
                              key: AttributeReference): Boolean =
-    conjunctsOf(cond).exists {
+    splitConjunctivePredicates(cond).exists {
       case GreaterThan(a: AttributeReference, Literal(null, _))
         if a.exprId == key.exprId => true
       case LessThan(a: AttributeReference, Literal(null, _))
@@ -782,7 +718,7 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
       : Seq[(Option[Any], Option[Any])] = {
     val toScala = CatalystTypeConverters.createToScalaConverter(key.dataType)
     def v(l: Literal): Any = toScala(l.value)
-    conjunctsOf(cond).flatMap {
+    splitConjunctivePredicates(cond).flatMap {
       case _ @ (GreaterThan(_, Literal(null, _)) |
                 LessThan(_, Literal(null, _)) |
                 GreaterThanOrEqual(_, Literal(null, _)) |
@@ -833,8 +769,8 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
       // shape) keeps its directory-derived partition columns — without
       // basePath the pruned scan would lose them and the schema guard
       // below would refuse every partitioned layout. `root` is the
-      // relation's SINGLE root ([[singleRoot]]), by construction the
-      // directory every candidate file lives under.
+      // relation's SINGLE root ([[BloomJoins.singleRootOf]]), by
+      // construction the directory every candidate file lives under.
       val scan = graft.sources.Manifests
         .batchedRead(spark, files.iterator, basePath = Some(root))
         .get.queryExecution.analyzed

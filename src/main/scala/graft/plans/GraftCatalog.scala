@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
+import graft.sources.Manifests.normPath
+
 /** Persistence + discovery for the optimizer-tier registries — the fix
   * for "the registry dies with the session": `register(...)` then
   * [[save]] records [[BloomJoins]] layouts, zone layouts and
@@ -47,8 +49,6 @@ object GraftCatalog {
 
   private val FileName = "_graft_catalog.json"
 
-  private def norm(p: String): String = BloomJoins.norm(p)
-
   /** Roots already probed for a catalog this session, mapped to the
     * probe's re-check deadline: a POSITIVE probe (catalog found and
     * loaded) never re-probes (`Long.MaxValue` — the same freshness
@@ -72,15 +72,12 @@ object GraftCatalog {
     * per root (the writers own their roots exclusively). */
   final case class Artifact(kind: String, params: Map[String, String])
 
-  private val artifactReg =
-    new java.util.concurrent.ConcurrentHashMap[String, List[Artifact]]()
+  private val artifactReg = new PlanShapes.PathRegistry[Artifact](_.kind)
 
   def registerArtifact(root: String, a: Artifact): Unit =
-    artifactReg.compute(norm(root), (_, cur) =>
-      Option(cur).getOrElse(Nil).filterNot(_.kind == a.kind) :+ a)
+    artifactReg.register(root, a)
 
-  def artifactsFor(root: String): Seq[Artifact] =
-    Option(artifactReg.get(norm(root))).getOrElse(Nil)
+  def artifactsFor(root: String): Seq[Artifact] = artifactReg.get(root)
 
   /** Spec/fresh-session hook (the registries sibling of [[clearCache]]). */
   private[graft] def clearArtifacts(): Unit = artifactReg.clear()
@@ -151,7 +148,7 @@ object GraftCatalog {
     // IN-PROCESS writers serialize per root: two threads saving the same
     // root compose deterministically (no retry needed). The verify-retry
     // below is the CROSS-PROCESS backstop, where no shared lock exists.
-    saveLocks.computeIfAbsent(norm(root), _ => new Object).synchronized {
+    saveLocks.computeIfAbsent(normPath(root), _ => new Object).synchronized {
       var attempt = 0
       var done = false
       while (!done) {
@@ -159,7 +156,7 @@ object GraftCatalog {
         attempt += 1
         if (!merge || verifyOwn(spark, root, written)) done = true
         else if (attempt >= 5) {
-          refused(root, "catalog-save", new java.io.IOException(
+          BloomJoins.refused(root, "catalog-save", new java.io.IOException(
             "concurrent catalog writers kept racing; an entry of this " +
               "session may be missing until its next save"))
           done = true
@@ -174,9 +171,6 @@ object GraftCatalog {
   private final case class Written(bloom: Set[String], zones: Set[String],
                                    views: Set[String], arts: Set[String])
 
-  private def refused(root: String, leg: String, e: Throwable): Unit =
-    BloomJoins.refused(root, leg, e)
-
   private def verifyOwn(spark: SparkSession, root: String,
                         w: Written): Boolean =
     try {
@@ -188,7 +182,7 @@ object GraftCatalog {
         w.zones.subsetOf(
           arr(doc, "zones").map(_.get("col").asText()).toSet) &&
         w.views.subsetOf(
-          arr(doc, "views").map(n => norm(n.get("statePath").asText())).toSet) &&
+          arr(doc, "views").map(n => normPath(n.get("statePath").asText())).toSet) &&
         w.arts.subsetOf(
           arr(doc, "artifacts").map(_.get("kind").asText()).toSet)
     } catch { case _: Exception => false } // unreadable: let the loop retry
@@ -218,7 +212,7 @@ object GraftCatalog {
       strMap(n, "nnCounts", v.nnCounts)
       strMap(n, "minCols", v.minCols)
       strMap(n, "maxCols", v.maxCols)
-      norm(v.statePath)
+      normPath(v.statePath)
     }.toSet
     val arts = doc.putArray("artifacts")
     val artKinds = artifactsFor(root).map { a =>
@@ -244,7 +238,7 @@ object GraftCatalog {
           .foreach(n => zs.add(n))
         arr(old, "views")
           .filterNot(n =>
-            viewPaths.contains(norm(n.get("statePath").asText())))
+            viewPaths.contains(normPath(n.get("statePath").asText())))
           .foreach(n => vs.add(n))
         arr(old, "artifacts")
           .filterNot(n => artKinds.contains(n.get("kind").asText()))
@@ -275,7 +269,7 @@ object GraftCatalog {
     }
     testAfterRename() // spec-only hook: simulates a cross-process racer
     // this session has by definition "attempted" the root — and found it
-    attempted.put(norm(root), java.lang.Long.MAX_VALUE)
+    attempted.put(normPath(root), java.lang.Long.MAX_VALUE)
     Written(bloomCols, zoneCols, viewPaths, artKinds)
   }
 
@@ -396,9 +390,9 @@ object GraftCatalog {
               Artifact(n.get("kind").asText(), pairs(n, "params")))
           }
         val haveView = SummaryViews.viewsFor(root)
-          .map(v => norm(v.statePath)).toSet
+          .map(v => normPath(v.statePath)).toSet
         arr(doc, "views")
-          .filterNot(n => haveView.contains(norm(n.get("statePath").asText())))
+          .filterNot(n => haveView.contains(normPath(n.get("statePath").asText())))
           .foreach { n =>
             SummaryViews.register(SummaryViews.View(
               root,
@@ -454,7 +448,7 @@ object GraftCatalog {
     if (!autoload(spark)) return
     val now = clock()
     paths.foreach { p =>
-      val k = norm(p)
+      val k = normPath(p)
       val entry = attempted.get(k)
       if (entry == null || (entry != java.lang.Long.MAX_VALUE &&
           now >= entry)) {
@@ -481,7 +475,7 @@ object GraftCatalog {
   def delete(spark: SparkSession, root: String): Unit = {
     val (fs, rootPath) = graft.sources.Manifests.fsFor(spark, root)
     fs.delete(new Path(rootPath, FileName), false)
-    attempted.remove(norm(root))
+    attempted.remove(normPath(root))
   }
 
   /** The zone manifest's sketch columns (KLL list, HLL list,
@@ -491,7 +485,7 @@ object GraftCatalog {
     * refuses (the row is absent, never a crash). */
   private def sketchColsFor(spark: SparkSession, root: String)
       : Option[(Seq[String], Seq[String], Seq[String], Seq[String])] = {
-    val r = norm(root)
+    val r = normPath(root)
     if (BloomJoins.zoneLayoutsFor(root).isEmpty) return None
     val ver = graft.sources.Manifests.manifestVersion(r, "_zonemap")
     val tagged = BloomJoins.cachedProbe(("sketchcols", r, ver)) {
@@ -529,7 +523,7 @@ object GraftCatalog {
     * construction: rows = registrations, never files or data. */
   def describe(spark: SparkSession, root: String): org.apache.spark.sql.DataFrame = {
     load(spark, root)
-    val r = norm(root)
+    val r = normPath(root)
     val legs = Seq("literal-scan", "zone-scan", "join", "zone-join",
       "filter-scan", "catalog-load", "catalog-merge", "catalog-save",
       "self-describe", "summary-state", "meta-agg", "meta-agg-budget")
@@ -586,10 +580,10 @@ object GraftCatalog {
         // state-read refusals are recorded under the view's STATE PATH
         // (SummaryViews.statePlan refuses with that label) — a view row
         // must surface those, not the base root's
-        (r, "view", norm(v.statePath), detail,
+        (r, "view", normPath(v.statePath), detail,
           graft.streaming.BucketedStateTable.stateVersion(v.statePath),
-          refusals + refusalsFor(norm(v.statePath)),
-          detailFor(r, norm(v.statePath)))
+          refusals + refusalsFor(normPath(v.statePath)),
+          detailFor(r, normPath(v.statePath)))
       }
     import spark.implicits._
     rows.toDF("root", "kind", "name", "detail", "version", "refusals",

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, Ceil, EqualTo, ExprId, Expression, Floor, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, LessThan, LessThanOrEqual, Literal, NamedExpression, Substring, TruncDate, TruncTimestamp, Year}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, Ceil, EqualTo, ExprId, Expression, Floor, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, LessThan, LessThanOrEqual, Literal, NamedExpression, PredicateHelper, Substring, TruncDate, TruncTimestamp, Year}
 import org.apache.spark.sql.catalyst.expressions.EvalMode
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
@@ -10,6 +10,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.sources.Manifests.normPath
 
 /** Manifest-served aggregates — the optimizer tier over
   * [[graft.sources.ZoneMap.metaProfile]], and the third rewrite rule in
@@ -186,36 +188,20 @@ object MetaAgg {
                                         values: Seq[Any]) extends ZonePred
 
 
-  /** Install on an existing session, AHEAD of the scan-pruning rule but
-    * BEHIND the summary-view rewrite: in the user-rule fixed point the
-    * first matching rewrite wins. An aggregate this rule can serve from
-    * the manifest must not first have its scan swapped by
-    * [[RewriteToBloomPrunedJoin]] (after the swap the relation is no
-    * longer a registered single-root scan — pruned scan instead of no
-    * scan); conversely a query a MAINTAINED summary can serve must go to
-    * [[RewriteToSummary]] first — the O(keys) state table beats the
-    * files-sized manifest leg plus boundary scans every time. Idempotent. */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[RewriteToMetaAggregate])) {
-      val (summaries, rest) =
-        cur.partition(_.isInstanceOf[RewriteToSummary])
-      spark.experimental.extraOptimizations =
-        summaries ++ (RewriteToMetaAggregate(spark) +: rest)
-    }
-  }
+  /** Install on an existing session, in [[PlanShapes.rules]] order:
+    * behind the summary-view rewrite, ahead of the scan-pruning rule. */
+  def install(spark: SparkSession): Unit =
+    PlanShapes.install(spark, classOf[RewriteToMetaAggregate])
 
   def uninstall(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[RewriteToMetaAggregate])
+    PlanShapes.uninstall(spark, classOf[RewriteToMetaAggregate])
 }
 
 /** The rewrite rule — see [[MetaAgg]] for semantics. Matches a global
   * `Aggregate` whose child unwraps (through attribute/rename Projects
   * and Filters) to a single zone-registered parquet relation. */
 final case class RewriteToMetaAggregate(spark: SparkSession)
-    extends Rule[LogicalPlan] {
+    extends Rule[LogicalPlan] with PredicateHelper {
 
   import BloomJoins.{cachedProbe, refused, Probed, RefusedTransient, RefusedWide}
   import MetaAgg.{Bound, ColIn, ColRange, CountCol, CountStar, DistinctCount, GroupKey, MaxCol, MinCol, Spec, SumCol, ZonePred}
@@ -245,83 +231,30 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
 
   // ------------------------------------------------------------ matching
 
-  /** Unwrap Projects and Filters down to the relation, keeping the
-    * invariant that collected conditions and the substitution map are
-    * expressed in CURRENT-depth attributes — at the relation both are in
-    * relation attrs. Projects may carry GENERAL aliases (the analyzer's
-    * extracted `_groupingexpression#N` projections): their definitions
-    * are collected into `defs` (id → definition), rename-substituted as
-    * the walk descends and fixpoint-resolved against each other at the
-    * relation, so a def's leaves are relation attributes (or deeper def
-    * ids that never resolved — the consumers refuse those). Any other
-    * node refuses. */
+  /** Strip attribute/alias Projects and Filters down to the relation
+    * ([[PlanShapes.strip]]): the relation, the Filter conditions over its
+    * attributes (outermost first) and the alias definitions (renames map
+    * to relation attributes; GENERAL aliases — the analyzer's extracted
+    * `_groupingexpression#N` projections — to their definitions). Any
+    * other node refuses. */
   private def unwrap(plan: LogicalPlan)
-      : Option[(LogicalRelation, List[Expression],
-                Map[ExprId, AttributeReference], Map[Long, Expression])] = {
-    var cur = plan
-    var conds: List[Expression] = Nil
-    var sub = Map.empty[ExprId, AttributeReference]
-    var defs = Map.empty[Long, Expression]
-    while (true) {
-      cur match {
-        case Project(exprs, pchild) if exprs.forall {
-              case _: AttributeReference => true
-              case _: Alias => true
-              case _ => false
-            } =>
-          val m: Map[ExprId, AttributeReference] = exprs.collect {
-            case a: AttributeReference => a.exprId -> a
-            case al @ Alias(a: AttributeReference, _) => al.exprId -> a
-          }.toMap
-          def renamed(e: Expression): Expression = e.transform {
-            case a: AttributeReference if m.contains(a.exprId) => m(a.exprId)
-          }
-          conds = conds.map(renamed)
-          defs = defs.map { case (k, e) => k -> renamed(e) } ++
-            exprs.collect {
-              case al @ Alias(d, _) if !d.isInstanceOf[AttributeReference] =>
-                al.exprId.id -> d
-            }
-          sub = sub.map { case (k, v) =>
-            k -> m.getOrElse(v.exprId, v)
-          } ++ m
-          cur = pchild
-        case Filter(c, fchild) =>
-          conds = conds :+ c
-          cur = fchild
-        case rel: LogicalRelation =>
-          // defs collected at an OUTER project may reference a def alias
-          // from an inner one: substitute to a fixpoint (depth-bounded)
-          var resolved = defs
-          var changed = true
-          var fuel = 8
-          while (changed && fuel > 0) {
-            changed = false
-            fuel -= 1
-            resolved = resolved.map { case (k, e) =>
-              val e2 = e.transform {
-                case a: AttributeReference
-                    if a.exprId.id != k && resolved.contains(a.exprId.id) =>
-                  resolved(a.exprId.id)
-              }
-              if (!(e2 fastEquals e)) changed = true
-              k -> e2
-            }
-          }
-          return Some((rel, conds, sub, resolved))
-        case _ => return None
-      }
+      : Option[(LogicalRelation, List[Expression], Map[ExprId, Expression])] = {
+    val s = PlanShapes.strip(plan)
+    s.leaf match {
+      case rel: LogicalRelation => Some((rel, s.filters.reverse, s.defs))
+      case _ => None
     }
-    None // unreachable
   }
 
-  /** Resolve an aggregate argument to a relation column name (through the
-    * unwrapped rename map); None refuses. */
-  private def relCol(e: Expression, sub: Map[ExprId, AttributeReference],
+  /** Resolve an aggregate argument to a relation column name (through
+    * rename definitions); None refuses. */
+  private def relCol(e: Expression, defs: Map[ExprId, Expression],
                      rel: LogicalRelation): Option[String] = e match {
-    case a: AttributeReference =>
-      val r = sub.getOrElse(a.exprId, a)
-      rel.output.find(_.exprId == r.exprId).map(_.name)
+    case a: AttributeReference => defs.getOrElse(a.exprId, a) match {
+      case r: AttributeReference =>
+        rel.output.find(_.exprId == r.exprId).map(_.name)
+      case _ => None
+    }
     case _ => None
   }
 
@@ -346,12 +279,12 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     * stay their own [[ColRange]]; the covered/candidate tests AND over
     * all of them, which IS the interval intersection. */
   private def parseConds(conds: Seq[Expression], zcols: Set[String],
-                         sub: Map[ExprId, AttributeReference],
+                         defs: Map[ExprId, Expression],
                          rel: LogicalRelation): Option[Seq[ZonePred]] = {
     def zc(e: Expression): Option[String] =
-      relCol(e, sub, rel).filter(zcols.contains)
+      relCol(e, defs, rel).filter(zcols.contains)
     def litV(l: Literal): Option[Any] = Option(l.value)
-    val parsed: Seq[Option[ZonePred]] = conds.flatMap(conjunctsOf).map {
+    val parsed: Seq[Option[ZonePred]] = conds.flatMap(splitConjunctivePredicates).map {
       case In(a: AttributeReference, vs)
           if vs.forall(_.isInstanceOf[Literal]) =>
         // NULL literals drop (they only ever yield NULL, filtered anyway);
@@ -420,18 +353,13 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     case other => String.valueOf(other)
   }
 
-  private def conjunctsOf(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjunctsOf(l) ++ conjunctsOf(r)
-    case other => Seq(other)
-  }
-
   // ------------------------------------------------------------- serving
 
   private def tryServe(gexprs: Seq[AttributeReference],
                        aggExprs: Seq[NamedExpression],
                        child: LogicalPlan): Option[LogicalPlan] =
     for {
-      (rel, conds, sub, defs) <- unwrap(child)
+      (rel, conds, defs) <- unwrap(child)
       root <- BloomJoins.singleRootOf(spark, rel)
       zls = BloomJoins.zoneLayoutsFor(root)
       if zls.nonEmpty
@@ -442,8 +370,8 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
       // optimizer keeps the partition Filter in the logical plan and the
       // relation's listing unpruned, so the stale check stays sound)
       pcols = partitionColsOf(rel)
-      groupCols <- resolveGroups(gexprs, sub, defs, rel, zcols ++ pcols)
-      specs <- parseSpecs(aggExprs, gexprs, sub, rel, zcols, groupCols)
+      groupCols <- resolveGroups(gexprs, defs, rel, zcols ++ pcols)
+      specs <- parseSpecs(aggExprs, gexprs, defs, rel, zcols, groupCols)
       // shape validation: a DISTINCT COUNT never mixes with other
       // aggregates (Spark plans that mix through Expand — a different
       // shape that never reaches here anyway); at most one
@@ -451,7 +379,7 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
         (!specs.exists(_.isInstanceOf[DistinctCount]) ||
           specs.forall(sp => sp.isInstanceOf[DistinctCount] ||
             sp.isInstanceOf[GroupKey]))
-      ranges <- parseConds(conds, zcols ++ pcols, sub, rel)
+      ranges <- parseConds(conds, zcols ++ pcols, defs, rel)
       plan <- serve(aggExprs, specs, groupCols, conds, ranges, rel, root)
     } yield plan
 
@@ -476,48 +404,6 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
       pairs: Seq[(AttributeReference, AttributeReference)],
       joinType: JoinType)
 
-  /** Strip attribute/rename Projects, composing the rename map and
-    * collecting GENERAL alias definitions (the analyzer's extracted
-    * `_groupingexpression` projections) exactly as [[unwrap]] does —
-    * shared by the above-aggregate walk and the between-joins walk (the
-    * optimizer's column pruning inserts Projects between nested joins). */
-  private def stripRenames(plan: LogicalPlan,
-      sub0: Map[ExprId, AttributeReference],
-      defs0: Map[Long, Expression])
-      : (LogicalPlan, Map[ExprId, AttributeReference], Map[Long, Expression]) = {
-    var cur = plan
-    var sub = sub0
-    var defs = defs0
-    var done = false
-    while (!done) {
-      cur match {
-        case Project(exprs, pchild) if exprs.forall {
-              case _: AttributeReference => true
-              case _: Alias => true
-              case _ => false
-            } =>
-          val m: Map[ExprId, AttributeReference] = exprs.collect {
-            case a: AttributeReference => a.exprId -> a
-            case al @ Alias(a: AttributeReference, _) => al.exprId -> a
-          }.toMap
-          def renamed(e: Expression): Expression = e.transform {
-            case a: AttributeReference if m.contains(a.exprId) => m(a.exprId)
-          }
-          defs = defs.map { case (k, e) => k -> renamed(e) } ++
-            exprs.collect {
-              case al @ Alias(d, _) if !d.isInstanceOf[AttributeReference] =>
-                al.exprId.id -> d
-            }
-          sub = sub.map { case (k, v) =>
-            k -> m.getOrElse(v.exprId, v)
-          } ++ m
-          cur = pchild
-        case _ => done = true
-      }
-    }
-    (cur, sub, defs)
-  }
-
   /** Decompose a (possibly nested) inner equi-join tree into candidate
     * (fact plan, dims) splits — `fact ⋈ dim1 ⋈ dim2 …` in any
     * association/orientation. Each Join node tries BOTH sides as the
@@ -532,72 +418,40 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     * instead of silently standing aside). Dims come back INNER-FIRST,
     * the original join order for the replay leg. */
   private def starCandidates(plan: LogicalPlan,
-      sub0: Map[ExprId, AttributeReference],
-      defs0: Map[Long, Expression],
+      defs0: Map[ExprId, Expression],
       budget: Int,
       budgetHit: java.util.concurrent.atomic.AtomicBoolean)
-      : List[(LogicalPlan, List[DimSide],
-              Map[ExprId, AttributeReference], Map[Long, Expression])] = {
-    val (cur, sub, defs) = stripRenames(plan, sub0, defs0)
-    cur match {
-      case Join(_, _, jt, Some(cond), _)
+      : List[(LogicalPlan, List[DimSide], Map[ExprId, Expression])] = {
+    // the optimizer's column pruning inserts Projects between nested joins
+    val between = PlanShapes.stripProjects(plan)
+    val defs = PlanShapes.compose(defs0, between.defs)
+    between.leaf match {
+      case j @ Join(l, r, jt, Some(cond), _)
           if budget <= 0 &&
             (jt == Inner || jt == LeftSemi || jt == LeftAnti) &&
-            conjunctsOf(cond).forall {
-              case EqualTo(_: AttributeReference, _: AttributeReference) =>
-                true
-              case _ => false
-            } =>
-        // a bare-attribute equi-join the walk WOULD have decomposed,
-        // stopped only by the budget — record it so the stand-aside is
-        // visible (a non-equi or null-aware join at this depth refuses
-        // on SHAPE and stays silent, as it would at any budget)
+            PlanShapes.equiPairs(cond, l, r).isDefined =>
+        // an equi-join the walk WOULD have decomposed, stopped only by the
+        // budget — record it so the stand-aside is visible (a non-equi or
+        // null-aware join at this depth refuses on SHAPE and stays
+        // silent, as it would at any budget)
         budgetHit.set(true)
-        List((cur, Nil, sub, defs))
+        List((j, Nil, defs))
       case Join(l, r, jt, Some(cond), _)
           if budget > 0 &&
             (jt == Inner || jt == LeftSemi || jt == LeftAnti) =>
-        val eqs: Option[Seq[(AttributeReference, AttributeReference)]] = {
-          val cs = conjunctsOf(cond).map {
-            case EqualTo(x: AttributeReference, y: AttributeReference) =>
-              Some((x, y))
-            case _ => None
-          }
-          // a NULL-AWARE anti join (NOT IN over nullables) carries an
-          // Or(EqualTo, IsNull) condition — it fails this parse and the
-          // whole shape refuses, as it must (its null semantics are not
-          // the plain anti's)
-          if (cs.exists(_.isEmpty)) None else Some(cs.map(_.get))
-        }
-        eqs.toList.flatMap { pairs =>
-          // orient every pair as (fact-side attr, dim attr); a pair whose
-          // attrs don't split one-per-side kills the orientation
-          def orient(fside: LogicalPlan, dside: LogicalPlan)
-              : Option[Seq[(AttributeReference, AttributeReference)]] = {
-            val o = pairs.map { case (x, y) =>
-              if (fside.outputSet.contains(x) && dside.outputSet.contains(y))
-                Some((x, y))
-              else if (fside.outputSet.contains(y) &&
-                  dside.outputSet.contains(x)) Some((y, x))
-              else None
-            }
-            if (o.exists(_.isEmpty)) None else Some(o.map(_.get))
-          }
-          val leftAsFact = orient(l, r).toList.flatMap(ps =>
-            starCandidates(l, sub, defs, budget - 1, budgetHit).map {
-              case (f, ds, s2, d2) => (f, ds :+ DimSide(r, ps, jt), s2, d2)
+        // every pair oriented as (fact-side attr, dim attr); a NULL-AWARE
+        // anti join (NOT IN over nullables) carries an Or(EqualTo, IsNull)
+        // condition — it fails this parse and the whole shape refuses, as
+        // it must (its null semantics are not the plain anti's)
+        def asFact(fact: LogicalPlan, dim: LogicalPlan) =
+          PlanShapes.equiPairs(cond, fact, dim).toList.flatMap(ps =>
+            starCandidates(fact, defs, budget - 1, budgetHit).map {
+              case (f, ds, d2) => (f, ds :+ DimSide(dim, ps, jt), d2)
             })
-          // semi/anti joins emit the LEFT side only — the fact can never
-          // be the right side there
-          val rightAsFact =
-            if (jt != Inner) Nil
-            else orient(r, l).toList.flatMap(ps =>
-              starCandidates(r, sub, defs, budget - 1, budgetHit).map {
-                case (f, ds, s2, d2) => (f, ds :+ DimSide(l, ps, jt), s2, d2)
-              })
-          leftAsFact ++ rightAsFact
-        }
-      case _ => List((cur, Nil, sub, defs))
+        // semi/anti joins emit the LEFT side only — the fact can never
+        // be the right side there
+        asFact(l, r) ++ (if (jt == Inner) asFact(r, l) else Nil)
+      case leaf => List((leaf, Nil, defs))
     }
   }
 
@@ -648,10 +502,10 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
                            child: LogicalPlan): Option[LogicalPlan] = {
     val budgetHit = new java.util.concurrent.atomic.AtomicBoolean(false)
     val served =
-      starCandidates(child, Map.empty, Map.empty, budget = 4, budgetHit)
-        .iterator.flatMap { case (factPlan, dims, osub, odefs) =>
+      starCandidates(child, Map.empty, budget = 4, budgetHit)
+        .iterator.flatMap { case (factPlan, dims, odefs) =>
           if (dims.isEmpty) None
-          else attemptJoinServe(gexprs, aggExprs, osub, odefs, factPlan, dims)
+          else attemptJoinServe(gexprs, aggExprs, odefs, factPlan, dims)
         }.nextOption()
     // a star WIDER than the serving budget stood the tier aside: count it
     // per registered layout under its own leg (visible in describe()'s
@@ -680,12 +534,12 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     * unresolvable key (snowflake, non-zone non-partition column) refuses
     * the candidate. */
   private def resolveDims(dims: List[DimSide],
-                          fullSub: Map[ExprId, AttributeReference],
+                          defs: Map[ExprId, Expression],
                           rel: LogicalRelation,
                           zcols: Set[String]): Option[List[DimJoin]] = {
     val out = dims.map { d =>
       val keys = d.pairs.map { case (fa, da) =>
-        relCol(fa, fullSub, rel).filter(zcols.contains).flatMap { c =>
+        relCol(fa, defs, rel).filter(zcols.contains).flatMap { c =>
           rel.output.collectFirst {
             case a: AttributeReference if a.name == c => (c, a, da) }
         }
@@ -698,39 +552,29 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
 
   private def attemptJoinServe(gexprs: Seq[AttributeReference],
                                aggExprs: Seq[NamedExpression],
-                               osub: Map[ExprId, AttributeReference],
-                               odefs: Map[Long, Expression],
+                               odefs: Map[ExprId, Expression],
                                factPlan: LogicalPlan,
                                dims: List[DimSide]): Option[LogicalPlan] =
     for {
-      (rel, conds, sub, _) <- unwrap(factPlan)
+      (rel, conds, factDefs) <- unwrap(factPlan)
       root <- BloomJoins.singleRootOf(spark, rel)
       zls = BloomJoins.zoneLayoutsFor(root)
       if zls.nonEmpty
       zcols = zls.map(_.col).toSet
-      // aggExprs, groupings and join keys resolve through the above-join
-      // renames THEN the fact-side ones (composed single-step map) —
-      // nested-join candidates carry renames from Projects BETWEEN joins
-      fullSub = osub.map { case (kk, v) =>
-        kk -> sub.getOrElse(v.exprId, v) } ++ sub
-      rdims <- resolveDims(dims, fullSub, rel,
-        zcols ++ partitionColsOf(rel))
+      // aggExprs, groupings and join keys resolve through the definitions
+      // above and between the joins, then the fact-side RENAMES (a
+      // fact-side computed alias stays opaque and refuses; a def
+      // referencing a DIM column fails zone resolution in resolveGroups)
+      defs = PlanShapes.compose(odefs,
+        factDefs.filter(_._2.isInstanceOf[AttributeReference]))
+      rdims <- resolveDims(dims, defs, rel, zcols ++ partitionColsOf(rel))
       // the dims execute inside BOTH legs of the rewritten plan — a
       // non-deterministic dim would diverge between them
       if rdims.forall(_.dimPlan.find(p =>
         p.expressions.exists(!_.deterministic)).isEmpty)
-      // above-join grouping definitions: rewrite their references down
-      // to fact-side attributes (a def referencing a DIM column then
-      // fails zone resolution and refuses in resolveGroups)
-      defs = odefs.map { case (kk, e) =>
-        kk -> e.transform {
-          case a: AttributeReference if fullSub.contains(a.exprId) =>
-            fullSub(a.exprId)
-        }
-      }
       pcols = partitionColsOf(rel)
-      groupCols <- resolveGroups(gexprs, fullSub, defs, rel, zcols ++ pcols)
-      specs <- parseSpecs(aggExprs, gexprs, fullSub, rel, zcols, groupCols)
+      groupCols <- resolveGroups(gexprs, defs, rel, zcols ++ pcols)
+      specs <- parseSpecs(aggExprs, gexprs, defs, rel, zcols, groupCols)
       // same distinct-shape validation as [[tryServe]]: distinct counts
       // never mix with plain aggregates (DISTINCT shapes themselves DO
       // serve under joins — the value set is multiplicity-free, see
@@ -739,7 +583,7 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
         (!specs.exists(_.isInstanceOf[DistinctCount]) ||
           specs.forall(sp => sp.isInstanceOf[DistinctCount] ||
             sp.isInstanceOf[GroupKey]))
-      ranges <- parseConds(conds, zcols ++ pcols, sub, rel)
+      ranges <- parseConds(conds, zcols ++ pcols, factDefs, rel)
       plan <- serve(aggExprs, specs, groupCols, conds, ranges, rel, root,
         rdims)
     } yield plan
@@ -753,19 +597,18 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     * exactly as it would over every row. Non-deterministic and
     * multi-column expressions refuse. */
   private def resolveGroups(gexprs: Seq[AttributeReference],
-                            sub: Map[ExprId, AttributeReference],
-                            defs: Map[Long, Expression],
+                            defs: Map[ExprId, Expression],
                             rel: LogicalRelation,
                             zcols: Set[String]): Option[Seq[MetaAgg.Grouping]] = {
     val gs: Seq[Option[MetaAgg.Grouping]] = gexprs.map { g =>
-      relCol(g, sub, rel).filter(zcols.contains) match {
+      relCol(g, defs, rel).filter(zcols.contains) match {
         case Some(c) => Some(MetaAgg.Grouping(c, None, monotone = true))
         case None =>
-          defs.get(g.exprId.id).flatMap { d =>
+          defs.get(g.exprId).flatMap { d =>
             // canonicalize every reference to THE relation attribute of
             // its base column (references may be renames of it)
             val refCols = d.references.toSeq
-              .map(a => relCol(a, sub, rel).filter(zcols.contains))
+              .map(a => relCol(a, defs, rel).filter(zcols.contains))
             if (!d.deterministic || refCols.isEmpty ||
                 refCols.exists(_.isEmpty) ||
                 refCols.flatten.distinct.length != 1) None
@@ -834,7 +677,7 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     * aggregate; any other shape refuses the whole rewrite. */
   private def parseSpecs(aggExprs: Seq[NamedExpression],
                          gexprs: Seq[AttributeReference],
-                         sub: Map[ExprId, AttributeReference],
+                         defs: Map[ExprId, Expression],
                          rel: LogicalRelation,
                          zcols: Set[String],
                          groupCols: Seq[MetaAgg.Grouping]): Option[Seq[Spec]] = {
@@ -849,13 +692,13 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
         case _ => None
       }
       if (keyOpt.isDefined) keyOpt
-      else parseAgg(ne, sub, rel, zcols)
+      else parseAgg(ne, defs, rel, zcols)
     }
     if (specs.exists(_.isEmpty)) None else Some(specs.map(_.get))
   }
 
   private def parseAgg(ne: NamedExpression,
-                       sub: Map[ExprId, AttributeReference],
+                       defs: Map[ExprId, Expression],
                        rel: LogicalRelation,
                        zcols: Set[String]): Option[Spec] = {
       val aeOpt = ne match {
@@ -869,26 +712,26 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
             case c: Count if ae.isDistinct && c.children.length == 1 =>
               // count(DISTINCT c): served via distinct-value legs
               c.children.head match {
-                case e => relCol(e, sub, rel).filter(zcols.contains)
+                case e => relCol(e, defs, rel).filter(zcols.contains)
                     .map(DistinctCount)
               }
             case _ if ae.isDistinct => None
             case c: Count if c.children.length == 1 =>
               c.children.head match {
                 case Literal(v, _) if v != null => Some(CountStar)
-                case e => relCol(e, sub, rel).filter(zcols.contains)
+                case e => relCol(e, defs, rel).filter(zcols.contains)
                     .map(CountCol)
               }
             case m: Min =>
-              relCol(m.child, sub, rel).filter(zcols.contains).map(MinCol)
+              relCol(m.child, defs, rel).filter(zcols.contains).map(MinCol)
             case m: Max =>
-              relCol(m.child, sub, rel).filter(zcols.contains).map(MaxCol)
+              relCol(m.child, defs, rel).filter(zcols.contains).map(MaxCol)
             case s: Sum if sumableType(s.child.dataType) &&
                 s.evalContext.evalMode != EvalMode.TRY =>
               // TRY sums return NULL on overflow — a semantics the
               // composed per-file sums cannot replicate; LEGACY (wraps)
               // and ANSI (errors) both compose, argued in the scaladoc
-              relCol(s.child, sub, rel).filter(zcols.contains)
+              relCol(s.child, defs, rel).filter(zcols.contains)
                 .map(SumCol(_, s.evalContext.evalMode == EvalMode.ANSI))
             case _ => None
           }
@@ -914,7 +757,7 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
                     rel: LogicalRelation, root: String,
                     joinDims: Seq[DimJoin] = Nil)
       : Option[LogicalPlan] = try {
-    val nroot = BloomJoins.norm(root)
+    val nroot = normPath(root)
     val mpath = s"$root/_zonemap"
     val ver = graft.sources.Manifests.manifestVersion(root, "_zonemap")
 

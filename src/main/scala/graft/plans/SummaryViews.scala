@@ -2,14 +2,15 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Coalesce, DecimalDivideWithOverflowCheck, Divide, EqualTo, EvalMode, Expression, GreaterThan, If, Literal, Multiply, NamedExpression, UnscaledValue}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Coalesce, DecimalDivideWithOverflowCheck, Divide, EqualTo, EvalMode, ExprId, Expression, GreaterThan, If, Literal, Multiply, NamedExpression, UnscaledValue}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, LongType}
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Project, Sample}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Sample}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
+import graft.sources.Manifests.normPath
 import graft.streaming.BucketedStateTable
 
 /** Materialized-view REWRITE — the optimizer tier on top of
@@ -110,41 +111,26 @@ object SummaryViews {
     * statePath) pair REPLACES that registration in place (the idempotent
     * "update my view's columns" path); a different statePath appends. */
   private val views =
-    new java.util.concurrent.ConcurrentHashMap[String, List[View]]()
+    new PlanShapes.PathRegistry[View](v => normPath(v.statePath))
 
-  private def norm(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
-
-  def register(v: View): Unit =
-    views.compute(norm(v.basePath), (_, cur) =>
-      Option(cur).getOrElse(Nil)
-        .filterNot(x => norm(x.statePath) == norm(v.statePath)) :+ v)
-  def unregister(basePath: String): Unit = {
-    Option(views.remove(norm(basePath)))
-      .foreach(_.foreach(v => planCache.remove(norm(v.statePath))))
-  }
+  def register(v: View): Unit = views.register(v.basePath, v)
+  def unregister(basePath: String): Unit =
+    views.removeAll(basePath).foreach(v => planCache.remove(normPath(v.statePath)))
   /** Remove ONE view of a multi-view base (and its plan-cache slot),
     * leaving sibling registrations intact; the single-argument form
     * remains the remove-ALL-views-of-this-base operation. */
   def unregister(basePath: String, statePath: String): Unit = {
-    val sp = norm(statePath)
-    views.computeIfPresent(norm(basePath), (_, cur) =>
-      cur.filterNot(v => norm(v.statePath) == sp) match {
-        case Nil => null // last view gone: drop the base entry entirely
-        case rest => rest
-      })
-    planCache.remove(sp)
+    views.remove(basePath, normPath(statePath))
+    planCache.remove(normPath(statePath))
   }
   def clear(): Unit = { views.clear(); planCache.clear() }
   def isEmpty: Boolean = views.isEmpty
 
   /** Candidate views for a scanned base, coarsest (fewest keys) first. */
   private[plans] def forPaths(paths: Seq[String]): Seq[View] =
-    paths.map(norm).flatMap(p => Option(views.get(p)).getOrElse(Nil))
-      .distinct.sortBy(_.keyCols.size)
+    paths.flatMap(views.get).distinct.sortBy(_.keyCols.size)
 
-  private[graft] def viewsFor(path: String): Seq[View] =
-    Option(views.get(norm(path))).getOrElse(Nil)
+  private[graft] def viewsFor(path: String): Seq[View] = views.get(path)
 
   /** Resolved summary-scan plan per registered view, keyed by state path and
     * stamped with [[BucketedStateTable.stateVersion]] at resolve time.
@@ -175,7 +161,7 @@ object SummaryViews {
   private[plans] def statePlan(spark: SparkSession,
                                view: View): Option[LogicalPlan] = {
     val dir = BucketedStateTable.stateDir(view.statePath)
-    val key = norm(view.statePath)
+    val key = normPath(view.statePath)
     val ver = BucketedStateTable.stateVersion(view.statePath)
     val base = Option(planCache.get(key)) match {
       case Some((v, p)) if v == ver && p.isInstanceOf[MultiInstanceRelation] =>
@@ -201,34 +187,18 @@ object SummaryViews {
     }
   }
 
-  /** Install on an existing session (the extensions hook only runs at
-    * construction). Idempotent. Inserts AHEAD of any
-    * [[RewriteToMetaAggregate]]: when both tiers can serve a query, the
-    * O(keys) summary state beats the files-sized manifest leg — and the
-    * first matching rewrite in the user-rule fixed point wins (MetaAgg's
-    * own install honors the same ordering from the other side). */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[RewriteToSummary])) {
-      val idx = cur.indexWhere(_.isInstanceOf[RewriteToMetaAggregate])
-      spark.experimental.extraOptimizations =
-        if (idx < 0) cur :+ RewriteToSummary(spark)
-        else {
-          val (before, after) = cur.splitAt(idx)
-          before ++ (RewriteToSummary(spark) +: after)
-        }
-    }
-  }
+  /** Install on an existing session, in [[PlanShapes.rules]] order. */
+  def install(spark: SparkSession): Unit =
+    PlanShapes.install(spark, classOf[RewriteToSummary])
 
   def uninstall(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_.isInstanceOf[RewriteToSummary])
+    PlanShapes.uninstall(spark, classOf[RewriteToSummary])
 }
 
 /** The rewrite rule. Runs in the user-provided-optimizer batch (after
   * column pruning), so the guarded pattern is
-  * `Aggregate → [Project|Filter]* → LogicalRelation(parquet base)`. */
+  * `Aggregate → [Project|Filter]* → LogicalRelation(parquet base)`,
+  * possibly under a tree of inner joins ([[Star]]). */
 final case class RewriteToSummary(spark: SparkSession)
     extends Rule[LogicalPlan] {
 
@@ -239,58 +209,36 @@ final case class RewriteToSummary(spark: SparkSession)
     // first time a catalogued base is scanned (GraftCatalog)
     plan.transformUp {
       case agg: Aggregate =>
-        tryRewrite(agg).orElse(tryRewriteJoin(agg)).getOrElse(agg)
+        starShape(agg.child).flatMap { star =>
+          // candidates arrive coarsest-first ([[SummaryViews.forPaths]]):
+          // the first view that serves the query exactly is the cheapest
+          star.views.iterator.map(v => rewriteWith(agg, v, star))
+            .collectFirst { case Some(p) => p }
+        }.getOrElse(agg)
     }
 
   /** Strip Projects (attributes, plus Aliases — the analyzer extracts
     * grouping expressions into `… AS _groupingexpression#N` projections
-    * below the Aggregate; their definitions are collected and inlined so
-    * eligibility is judged on the REAL expressions over base columns),
-    * collect Filters, and land on the base relation — anything else
-    * refuses. Filter eligibility (key-only, deterministic) is judged per
-    * candidate view by [[rewriteWith]]. */
-  private def unwrap(plan: LogicalPlan, filters: List[Expression],
-                     defs: Map[Long, Expression])
-      : Option[(Seq[View], List[Expression], Map[Long, Expression])] =
-    plan match {
-      case Project(exprs, child)
-          if exprs.forall(e => e.isInstanceOf[AttributeReference] ||
-            e.isInstanceOf[Alias]) =>
-        // outer defs may reference THIS project's aliases — resolve after
-        // the recursion returns, substituting inner definitions upward
-        val layer = exprs.collect {
-          case al: Alias => al.exprId.id -> al.child
-        }.toMap
-        unwrap(child, filters, defs).map { case (cands, fs, inner) =>
-          val resolved = layer.map { case (id, e) =>
-            id -> e.transformUp {
-              case a: AttributeReference if inner.contains(a.exprId.id) =>
-                inner(a.exprId.id)
-            }
-          }
-          (cands, fs, inner ++ resolved)
-        }
-      case Filter(cond, child) =>
-        unwrap(child, cond :: filters, defs)
-      case rel: LogicalRelation =>
-        val cands = rel.relation match {
-          case fs: HadoopFsRelation =>
-            val paths = fs.location.rootPaths.map(_.toString)
-            GraftCatalog.ensureDiscovered(spark, paths)
-            forPaths(paths)
-          case _ => Nil
-        }
-        if (cands.nonEmpty) Some((cands, filters, defs)) else None
-      case _ => None
+    * below the Aggregate; their definitions are inlined so eligibility is
+    * judged on the REAL expressions over base columns) and Filters, and
+    * land on a registered base relation — anything else refuses. Filter
+    * eligibility (key-only, deterministic) is judged per candidate view by
+    * [[rewriteWith]]. */
+  private def unwrap(plan: LogicalPlan)
+      : Option[(Seq[View], List[Expression], Map[ExprId, Expression])] = {
+    val s = PlanShapes.strip(plan)
+    val cands = s.leaf match {
+      case rel: LogicalRelation => rel.relation match {
+        case fs: HadoopFsRelation =>
+          val paths = fs.location.rootPaths.map(_.toString)
+          GraftCatalog.ensureDiscovered(spark, paths)
+          forPaths(paths)
+        case _ => Nil
+      }
+      case _ => Nil
     }
-
-  private def tryRewrite(agg: Aggregate): Option[LogicalPlan] =
-    unwrap(agg.child, Nil, Map.empty).flatMap { case (cands, filters, defs) =>
-      // candidates arrive coarsest-first ([[SummaryViews.forPaths]]): the
-      // first view that serves the query exactly is the cheapest to read
-      cands.iterator.map(v => rewriteWith(agg, v, filters, defs))
-        .collectFirst { case Some(p) => p }
-    }
+    if (cands.nonEmpty) Some((cands, s.filters, s.defs)) else None
+  }
 
   /** `AVG(decimal)` served from maintained sums and non-null counts,
     * replicating Spark's own decimal Average formula EXPRESSION FOR
@@ -386,19 +334,6 @@ final case class RewriteToSummary(spark: SparkSession)
       Literal(Decimal(BigDecimal(10).pow(dt.scale)),
         DecimalType(dt.scale + 1, 0)))
 
-  /** A grouping is servable from `view` iff it is a key attribute or a
-    * DETERMINISTIC expression whose references are all key columns: such
-    * an expression evaluates over the summary's key VALUES to exactly
-    * what it evaluates to over the base rows of that key (the same
-    * commuting argument as the key-only filter pushdown), and every
-    * served aggregate composes across the key groups a coarser
-    * f(key)-group merges. Non-deterministic groupings (rand() buckets —
-    * which would bucket GROUPS instead of rows) and expressions touching
-    * non-key columns refuse. */
-  private def groupingServable(view: View, e: Expression): Boolean =
-    e.deterministic &&
-      e.references.forall(a => view.keyCols.contains(a.name))
-
   /** `groupBy(expr.as("x"))` leaves the Alias inside groupingExpressions;
     * SQL `GROUP BY expr` does not — compare modulo the outer alias. */
   private def stripAlias(e: Expression): Expression = e match {
@@ -406,326 +341,25 @@ final case class RewriteToSummary(spark: SparkSession)
     case other => other
   }
 
-  private def rewriteWith(agg: Aggregate, view: View,
-                          filters: List[Expression],
-                          defs: Map[Long, Expression]): Option[LogicalPlan] = {
-    /** Substitute extracted-projection aliases with their definitions so
-      * every eligibility check and every rewritten expression sees base
-      * columns only. */
-    def inline(e: Expression): Expression = e.transformUp {
-      case a: AttributeReference if defs.contains(a.exprId.id) =>
-        defs(a.exprId.id)
-    }
-    /** The BASE relation column an aggregate-argument attribute denotes,
-      * inlined through extracted-projection aliases: a bare relation
-      * attribute (possibly RENAMED — `select(col("x").as("v"))`) resolves
-      * to the underlying attribute and every view lookup below uses ITS
-      * name; a COMPUTED alias (`(col("v") * 2).as("v")` surviving
-      * CollapseProject) resolves to None and the aggregate case REFUSES —
-      * the summary's maintained column aggregates the raw base column,
-      * not the caller's computation, and matching by surface name alone
-      * would silently return the wrong sums. */
-    def baseArg(c: AttributeReference): Option[AttributeReference] =
-      inline(c) match {
-        case a: AttributeReference => Some(a)
-        case _ => None
-      }
-    val groupings = agg.groupingExpressions.map(inline)
-    val aggExprs = agg.aggregateExpressions
-    locally {
-      // key-only AND deterministic: a non-deterministic predicate (e.g.
-      // rand() < 0.5 — which also passes the reference check vacuously)
-      // pushed onto the summary would sample GROUPS instead of base rows
-      val filtersOk = filters.map(inline).forall(f => f.deterministic &&
-        f.references.forall(a => view.keyCols.contains(a.name)))
-      val groupAttrs = agg.groupingExpressions.collect {
-        case a: AttributeReference if !defs.contains(a.exprId.id) => a
-      }
-      val eligibleKeys = groupings.forall(groupingServable(view, _))
-      // the summary side: resolved parquet scan of the state dir, from the
-      // version-stamped plan cache (the bucket/guard bookkeeping columns
-      // prune away — nothing below references them)
-      val stateOpt =
-        if (!filtersOk || !eligibleKeys) None
-        else SummaryViews.statePlan(spark, view)
-      stateOpt.flatMap { state =>
-        val stateAttr: Map[String, Attribute] =
-          state.output.map(a => a.name -> a).toMap
-        val covered =
-          (view.keyCols ++ view.sumCols ++ view.countCol ++
-            view.nnCounts.values ++ view.minCols.values ++
-            view.maxCols.values).forall(stateAttr.contains)
-        if (!covered) None
-        else {
-          /** Serve one aggregate call from the summary, or refuse. Shared
-            * by the bare `Alias(agg)` shape and the `Alias(Cast(agg))`
-            * shape (CollapseProject folds a post-aggregation cast into
-            * the Aggregate's own output list, so `CAST(SUM(x) AS …)`
-            * arrives here as one alias). */
-          def serveAgg(ae: AggregateExpression): Option[Expression] =
-            ae match {
-              case AggregateExpression(
-                    Sum(c: AttributeReference, _), _, false, None, _)
-                  if baseArg(c).exists(b => view.sumCols.contains(b.name)) =>
-                val b = baseArg(c).get
-                // re-summing the summary can WIDEN the type (decimal Sum
-                // adds 10 precision again: state holds decimal(p+10,s), Sum
-                // over it yields decimal(p+20,s)); parents recorded the
-                // ORIGINAL type for this exprId, so cast back. The cast is
-                // exact whenever the true total fits the original Sum type
-                // — the same condition under which the un-rewritten query
-                // succeeds.
-                val reSum: Expression =
-                  ae.copy(aggregateFunction = Sum(stateAttr(b.name)))
-                Some(if (reSum.dataType == ae.dataType) reSum
-                  else Cast(reSum, ae.dataType))
-              case AggregateExpression(
-                    Count(Seq(Literal(_, _))), _, false, None, _)
-                  if view.countCol.isDefined =>
-                val n = stateAttr(view.countCol.get)
-                val summed: Expression = ae.copy(aggregateFunction = Sum(n))
-                // post-analysis plans get no implicit coercion: pin the
-                // summed count back to COUNT's own LongType
-                val typed =
-                  if (summed.dataType == ae.dataType) summed
-                  else Cast(summed, ae.dataType)
-                Some(Coalesce(Seq(typed, Literal(0L))))
-              case AggregateExpression(
-                    Count(Seq(c: AttributeReference)), _, false, None, _)
-                  if baseArg(c).exists(b => view.nnCounts.contains(b.name)) =>
-                // COUNT(col) = total of the maintained per-column non-null
-                // count; a group whose every value was null holds nn = 0
-                // and re-sums to 0, matching COUNT's never-null contract
-                val nn = stateAttr(view.nnCounts(baseArg(c).get.name))
-                val summed: Expression = ae.copy(aggregateFunction = Sum(nn))
-                val typed =
-                  if (summed.dataType == ae.dataType) summed
-                  else Cast(summed, ae.dataType)
-                Some(Coalesce(Seq(typed, Literal(0L))))
-              case AggregateExpression(
-                    Min(c: AttributeReference), _, false, None, _)
-                  if baseArg(c).exists(b => view.minCols.contains(b.name)) =>
-                // min of per-key mins; null state cells (all-null groups)
-                // skip, exactly as Min over the base skips null rows. No
-                // widening — Min keeps its input type.
-                Some(ae.copy(aggregateFunction = Min(
-                  stateAttr(view.minCols(baseArg(c).get.name)))))
-              case AggregateExpression(
-                    Max(c: AttributeReference), _, false, None, _)
-                  if baseArg(c).exists(b => view.maxCols.contains(b.name)) =>
-                Some(ae.copy(aggregateFunction = Max(
-                  stateAttr(view.maxCols(baseArg(c).get.name)))))
-              case AggregateExpression(
-                    Average(c: AttributeReference, _), _, false, None, _)
-                  if baseArg(c).exists(b => view.sumCols.contains(b.name) &&
-                      view.nnCounts.contains(b.name)) &&
-                    ae.dataType == DoubleType =>
-                val b = baseArg(c).get
-                // AVG(col) = SUM(partial sums) / SUM(non-null counts). Two
-                // NEW AggregateExpressions (fresh resultIds — ae.copy twice
-                // would collide on ae's). All-null group: sums re-sum to
-                // null, null/0 = null = AVG.
-                val sumE: Expression = AggregateExpression(
-                  Sum(stateAttr(b.name)), ae.mode, isDistinct = false,
-                  None, NamedExpression.newExprId)
-                val cntE: Expression = AggregateExpression(
-                  Sum(stateAttr(view.nnCounts(b.name))), ae.mode,
-                  isDistinct = false, None, NamedExpression.newExprId)
-                Some(Divide(Cast(sumE, DoubleType), Cast(cntE, DoubleType)))
-              case AggregateExpression(
-                    Average(c: AttributeReference, em), _, false, None, _)
-                  if baseArg(c).exists(b => view.sumCols.contains(b.name) &&
-                      view.nnCounts.contains(b.name)) &&
-                    ae.dataType.isInstanceOf[DecimalType] &&
-                    c.dataType.isInstanceOf[DecimalType] =>
-                val b = baseArg(c).get
-                Some(decimalAvg(ae, c.dataType.asInstanceOf[DecimalType], em,
-                  stateAttr(b.name), stateAttr(view.nnCounts(b.name))))
-              case AggregateExpression(
-                    Average(u: UnscaledValue, _), _, false, None, _)
-                  if u.child.isInstanceOf[AttributeReference] && {
-                    val c = u.child.asInstanceOf[AttributeReference]
-                    c.dataType.isInstanceOf[DecimalType] &&
-                      baseArg(c).exists(b => view.sumCols.contains(b.name) &&
-                        view.nnCounts.contains(b.name))
-                  } =>
-                // DecimalAggregates rewrote avg(decimal(p≤11,s)) to
-                // avg(unscaled longs) before this rule ran — serve the
-                // same double arithmetic from the state sums
-                val c = u.child.asInstanceOf[AttributeReference]
-                val b = baseArg(c).get
-                Some(unscaledAvg(ae, c.dataType.asInstanceOf[DecimalType],
-                  stateAttr(b.name), stateAttr(view.nnCounts(b.name))))
-              case AggregateExpression(
-                    Sum(u: UnscaledValue, _), _, false, None, _)
-                  if u.child.isInstanceOf[AttributeReference] && {
-                    val c = u.child.asInstanceOf[AttributeReference]
-                    c.dataType.isInstanceOf[DecimalType] &&
-                      baseArg(c).exists(b => view.sumCols.contains(b.name))
-                  } =>
-                // DecimalAggregates' sum(decimal(p≤8,s)) unscaled-long form
-                val c = u.child.asInstanceOf[AttributeReference]
-                val b = baseArg(c).get
-                Some(unscaledSum(ae, c.dataType.asInstanceOf[DecimalType],
-                  stateAttr(b.name)))
-              case AggregateExpression(Count(cs), _, true, None, _)
-                  if view.countCol.isDefined && cs.nonEmpty &&
-                    cs.forall(c => groupingServable(view, inline(c))) =>
-                // COUNT(DISTINCT key cols — or deterministic expressions
-                // over them, same commuting argument as the groupings):
-                // every LIVE summary row is one distinct key combination,
-                // so distinct-over-f(keys) counts the same value set over
-                // the summary's key values as over the base rows — exact
-                // only under the liveness filter below (a fully-deleted
-                // group's row lingers in state with count 0). Count keeps
-                // LongType: no cast. NULL args skip rows identically on
-                // both sides (f is deterministic).
-                val mappedArgs: Seq[Expression] = cs.map(c =>
-                  inline(c).transform {
-                    case a: AttributeReference => stateAttr(a.name)
-                  })
-                Some(ae.copy(aggregateFunction = Count(mappedArgs)))
-              case _ => None
-            }
-          // every output expression must map exactly, preserving both the
-          // name and the exprId — parents never see the substitution
-          val mapped: Seq[Option[NamedExpression]] = aggExprs.map {
-            case a: AttributeReference
-                if groupAttrs.exists(_.exprId == a.exprId) =>
-              Some(Alias(stateAttr(a.name), a.name)(exprId = a.exprId))
-            case a: AttributeReference
-                if defs.contains(a.exprId.id) &&
-                  groupings.exists(_.semanticEquals(inline(a))) =>
-              // output referencing an EXTRACTED grouping expression by id
-              // (the analyzer's _groupingexpression#N projection shape)
-              Some(Alias(inline(a).transform {
-                case ar: AttributeReference => stateAttr(ar.name)
-              }, a.name)(exprId = a.exprId))
-            case a: AttributeReference
-                if agg.groupingExpressions.exists {
-                  case al: Alias => al.exprId == a.exprId
-                  case _ => false
-                } =>
-              // output referencing an ALIASED grouping expression by id
-              // (the groupBy(expr.as("x")) shape): re-root the aliased
-              // expression's key references onto the summary scan
-              val src = agg.groupingExpressions.collectFirst {
-                case al: Alias if al.exprId == a.exprId => inline(al.child)
-              }.get
-              Some(Alias(src.transform {
-                case ar: AttributeReference => stateAttr(ar.name)
-              }, a.name)(exprId = a.exprId))
-            case al @ Alias(e, name)
-                if groupings.exists(g =>
-                  stripAlias(g).semanticEquals(inline(e))) =>
-              // a key-derived grouping EXPRESSION (date_trunc(key),
-              // substring(key, …)) surfacing in the output: re-root its
-              // key references onto the summary scan. groupingServable
-              // already held for every grouping, and groupings never
-              // contain aggregates, so the transform is total.
-              Some(Alias(inline(e).transform {
-                case a: AttributeReference => stateAttr(a.name)
-              }, name)(exprId = al.exprId))
-            case al @ Alias(e, name)
-                if e.exists(_.isInstanceOf[AggregateExpression]) =>
-              serveWrapped(e, serveAgg).map(se =>
-                Alias(se, name)(exprId = al.exprId))
-            case _ => None
-          }
-          if (mapped.exists(_.isEmpty)) None
-          else {
-            val newGroupings: Seq[Expression] =
-              groupings.map(_.transform {
-                case a: AttributeReference => stateAttr(a.name)
-              })
-            val rewrittenFilters = filters.map(f => inline(f).transform {
-              case a: AttributeReference => stateAttr(a.name)
-            })
-            // liveness: only summary rows with base rows still behind them
-            // (see the object scaladoc — dead groups must not resurrect;
-            // exact for every shape since net-zero rows contribute zero)
-            val liveness: Option[Expression] = view.countCol.map { nc =>
-              GreaterThan(stateAttr(nc),
-                Cast(Literal(0), stateAttr(nc).dataType))
-            }
-            val newChild = (rewrittenFilters ++ liveness)
-              .foldLeft(state)((p, c) => Filter(c, p))
-            Some(Aggregate(newGroupings, mapped.map(_.get), newChild))
-          }
-        }
-      }
-    }
-  }
-
-  // ======================================================= star-schema path
-
-  /** Star-schema rewrite: `Aggregate → [Project|Filter]* → (possibly
-    * NESTED Inner-join tree)` in which exactly one leg lands on a
-    * registered base is served with that leg replaced by the summary
-    * scan — every dim subtree is kept verbatim. Multi-dim stars
-    * (`fact ⋈ dim1 ⋈ dim2 …`, the real dashboard shape) fall out of the
-    * same recursion ([[starShape]]); the single join is the depth-1 case.
-    *
-    * Exactness argument. Eligibility requires every FACT-side reference
-    * in every join condition on the path, in filters above the joins, and
-    * in the grouping expressions to resolve to view KEY columns — the query then
-    * sees a fact row only through its key vector κ(f): all rows of one
-    * key group pass or fail the join together and land in the same
-    * output group. Each live summary row stands for exactly one key
-    * group, carrying that group's sums/counts/extrema, so fact-side
-    * SUM / COUNT(*) / COUNT(col) / MIN / MAX / AVG commute through the
-    * join REGARDLESS of dim-side multiplicity — N:M included: a key
-    * group matching m dim rows contributes its whole aggregate to each
-    * of the m (key, dim-row) pairs, identically on both sides. (No N:1
-    * restriction is needed; the restriction that IS needed is on the
-    * aggregate ARGUMENTS, below.)
-    *
-    * Refusals beyond the single-base rule's: aggregates over DIM columns
-    * (a dim value weighs once per FACT ROW originally but once per
-    * SUMMARY ROW after the rewrite — multiplicities differ), DISTINCT
-    * aggregates (key multiplicity across dim rows is no longer 1:1 with
-    * base rows), non-inner joins (outer sides fabricate or keep rows the
-    * key argument cannot see), and dims whose ROW SET is run-dependent
-    * (non-deterministic expressions, Sample, Limit — the parity claim
-    * quantifies over both plans). */
-  private def tryRewriteJoin(agg: Aggregate): Option[LogicalPlan] =
-    unwrapToJoin(agg.child, Nil, Map.empty).flatMap {
-      case (j, aboveFilters, aboveDefs) =>
-        starShape(j).flatMap { star =>
-          // above-join defs may reference fact-side aliases: resolve them
-          // against the fact layer so one inline pass reaches base columns
-          val resolvedAbove = aboveDefs.map { case (id, e) =>
-            id -> e.transformUp {
-              case a: AttributeReference
-                if star.factDefs.contains(a.exprId.id) =>
-                star.factDefs(a.exprId.id)
-            }
-          }
-          val defs = star.factDefs ++ resolvedAbove
-          star.views.iterator
-            .map(v => rewriteStarWith(agg, v, star, aboveFilters, defs))
-            .collectFirst { case Some(p) => p }
-        }
-    }
-
   /** A (possibly NESTED) Inner-join tree in which exactly one leg unwraps
     * to a registered base: `views`/`factFilters`/`factDefs` describe that
     * leg, `dimOut` unions every other leg's output, `conds` collects every
-    * join condition on the path, and `rebuild(newFact, subst)` rebuilds
-    * the tree with the fact leg replaced and each condition mapped
-    * through `subst` (the fact attrs it references move to the summary
-    * scan). Multi-dim stars — `fact ⋈ dim1 ⋈ dim2 …`, the real dashboard
-    * shape — fall out of the recursion; the single-join case is the
-    * depth-1 instance. */
+    * join condition and mid-tree filter on the path, and
+    * `rebuild(newFact, subst)` rebuilds the tree with the fact leg
+    * replaced and each condition mapped through `subst` (the fact attrs it
+    * references move to the summary scan). Multi-dim stars —
+    * `fact ⋈ dim1 ⋈ dim2 …`, the real dashboard shape — fall out of the
+    * recursion; a single join is the depth-1 instance and a plain
+    * `Aggregate → [Project|Filter]* → base` the depth-0 one (no dims). */
   private final case class Star(
       views: Seq[SummaryViews.View], factFilters: List[Expression],
-      factDefs: Map[Long, Expression],
+      factDefs: Map[ExprId, Expression],
       dimOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
       conds: List[Expression],
       rebuild: (LogicalPlan, Expression => Expression) => LogicalPlan)
 
   private def starShape(plan: LogicalPlan): Option[Star] =
-    unwrap(plan, Nil, Map.empty) match {
+    unwrap(plan) match {
       case Some((views, ff, fd)) =>
         Some(Star(views, ff, fd,
           org.apache.spark.sql.catalyst.expressions.AttributeSet.empty,
@@ -746,27 +380,6 @@ final case class RewriteToSummary(spark: SparkSession)
                   right = s.rebuild(nf, subst),
                   condition = jn.condition.map(subst)))
             })
-        case p @ Project(exprs, child)
-            if exprs.forall(e => e.isInstanceOf[AttributeReference] ||
-              e.isInstanceOf[Alias]) =>
-          // column pruning interposes attribute/rename Projects BETWEEN
-          // the join nodes of a multi-dim star; the aliases live on as
-          // defs and the Project itself is DROPPED from the rebuilt tree
-          // (pure pruning — physical planning re-derives required columns
-          // from the new operators' references)
-          val layer = exprs.collect {
-            case al: Alias => al.exprId.id -> al.child
-          }.toMap
-          starShape(child).map { s =>
-            val resolved = layer.map { case (id, e) =>
-              id -> e.transformUp {
-                case a: AttributeReference
-                  if s.factDefs.contains(a.exprId.id) =>
-                  s.factDefs(a.exprId.id)
-              }
-            }
-            s.copy(factDefs = s.factDefs ++ resolved)
-          }
         case Filter(cond, child) =>
           // a mid-tree filter (mixed-side predicates the optimizer could
           // not push into a join condition): validated like a condition,
@@ -776,35 +389,17 @@ final case class RewriteToSummary(spark: SparkSession)
               rebuild = (nf, subst) =>
                 Filter(subst(cond), s.rebuild(nf, subst)))
           }
-        case _ => None
+        case _ =>
+          // column pruning interposes attribute/rename Projects BETWEEN
+          // the join nodes of a multi-dim star; the aliases live on as
+          // defs and the Projects themselves are DROPPED from the rebuilt
+          // tree (pure pruning — physical planning re-derives required
+          // columns from the new operators' references)
+          val between = PlanShapes.stripProjects(plan)
+          if (between.leaf eq plan) None
+          else starShape(between.leaf).map(s =>
+            s.copy(factDefs = PlanShapes.compose(between.defs, s.factDefs)))
       }
-    }
-
-  /** Strip Projects/Filters between the Aggregate and a Join, collecting
-    * alias definitions and filter conjuncts exactly like [[unwrap]]. */
-  private def unwrapToJoin(plan: LogicalPlan, filters: List[Expression],
-                           defs: Map[Long, Expression])
-      : Option[(Join, List[Expression], Map[Long, Expression])] =
-    plan match {
-      case Project(exprs, child)
-          if exprs.forall(e => e.isInstanceOf[AttributeReference] ||
-            e.isInstanceOf[Alias]) =>
-        val layer = exprs.collect {
-          case al: Alias => al.exprId.id -> al.child
-        }.toMap
-        unwrapToJoin(child, filters, defs).map { case (jn, fs, inner) =>
-          val resolved = layer.map { case (id, e) =>
-            id -> e.transformUp {
-              case a: AttributeReference if inner.contains(a.exprId.id) =>
-                inner(a.exprId.id)
-            }
-          }
-          (jn, fs, inner ++ resolved)
-        }
-      case Filter(cond, child) =>
-        unwrapToJoin(child, cond :: filters, defs)
-      case jn: Join => Some((jn, filters, defs))
-      case _ => None
     }
 
   /** Row-set reproducibility for the untouched dim side: a dim whose row
@@ -815,16 +410,44 @@ final case class RewriteToSummary(spark: SparkSession)
       case p => p.expressions.exists(!_.deterministic)
     }
 
-  private def rewriteStarWith(agg: Aggregate, view: View, star: Star,
-                              aboveFilters: List[Expression],
-                              defs: Map[Long, Expression])
+  /** Serve `agg` over `star` from `view`'s summary, or refuse. With no
+    * dims this is the plain roll-up; with dims, the star-schema rewrite:
+    * the fact leg is replaced by the summary scan and every dim subtree
+    * is kept verbatim.
+    *
+    * Exactness argument. Eligibility requires every FACT-side reference
+    * in every join condition and filter on the path and in the grouping
+    * expressions to resolve to view KEY columns — the query then sees a
+    * fact row only through its key vector κ(f): all rows of one key group
+    * pass or fail the joins and filters together and land in the same
+    * output group. A deterministic grouping expression over key columns
+    * (`date_trunc(key)`) evaluates over the summary's key VALUES to
+    * exactly its value over the base rows of that key, and every served
+    * aggregate composes across the key groups a coarser group merges
+    * (non-deterministic groupings — rand() buckets — would bucket GROUPS
+    * instead of rows, and refuse). Each live summary row stands for
+    * exactly one key group, carrying that group's sums/counts/extrema, so
+    * fact-side SUM / COUNT(*) / COUNT(col) / MIN / MAX / AVG commute
+    * through the joins REGARDLESS of dim-side multiplicity — N:M
+    * included: a key group matching m dim rows contributes its whole
+    * aggregate to each of the m (key, dim-row) pairs, identically on both
+    * sides. (No N:1 restriction is needed; the restriction that IS needed
+    * is on the aggregate ARGUMENTS, below.)
+    *
+    * Refusals: aggregates over DIM columns (a dim value weighs once per
+    * FACT ROW originally but once per SUMMARY ROW after the rewrite —
+    * multiplicities differ), non-inner joins (outer sides fabricate or
+    * keep rows the key argument cannot see), and dims whose ROW SET is
+    * run-dependent (non-deterministic expressions, Sample, Limit — the
+    * parity claim quantifies over both plans). */
+  private def rewriteWith(agg: Aggregate, view: View, star: Star)
       : Option[LogicalPlan] = {
     val dimOut = star.dimOut
-    val factFilters = star.factFilters
-    def inline(e: Expression): Expression = e.transformUp {
-      case a: AttributeReference if defs.contains(a.exprId.id) =>
-        defs(a.exprId.id)
-    }
+    val defs = star.factDefs
+    /** Substitute extracted-projection aliases with their definitions so
+      * every eligibility check and every rewritten expression sees base
+      * columns only. */
+    def inline(e: Expression): Expression = PlanShapes.inline(e, defs)
     /** Post-inline reference discipline: every reference is either a dim
       * attribute (kept verbatim) or a fact BASE attribute naming a view
       * key column. */
@@ -834,10 +457,16 @@ final case class RewriteToSummary(spark: SparkSession)
       val inl = inline(e)
       inl.deterministic && refsOk(inl)
     }
-    /** The base-column resolution of an aggregate argument (the
-      * [[rewriteWith]] `baseArg` discipline): bare base attribute or
-      * refuse — and a DIM attribute refuses too (dim-side aggregates do
-      * not commute, see the scaladoc). */
+    /** The BASE relation column an aggregate-argument attribute denotes,
+      * inlined through extracted-projection aliases: a bare relation
+      * attribute (possibly RENAMED — `select(col("x").as("v"))`) resolves
+      * to the underlying attribute and every view lookup below uses ITS
+      * name; a COMPUTED alias (`(col("v") * 2).as("v")` surviving
+      * CollapseProject) resolves to None and the aggregate REFUSES — the
+      * summary's maintained column aggregates the raw base column, not the
+      * caller's computation, and matching by surface name alone would
+      * silently return the wrong sums. A DIM attribute refuses too
+      * (dim-side aggregates do not commute). */
     def factArg(c: AttributeReference): Option[AttributeReference] =
       inline(c) match {
         case a: AttributeReference if !dimOut.contains(a) => Some(a)
@@ -845,22 +474,25 @@ final case class RewriteToSummary(spark: SparkSession)
       }
 
     val condOk = star.conds.forall(exprOk)
-    val aboveOk = aboveFilters.forall(exprOk)
-    val factFiltersOk = factFilters.forall { f =>
+    val factFiltersOk = star.factFilters.forall { f =>
       val inl = inline(f)
-      // below-join filters cannot reference the dim; key-only like the
-      // single-base path
+      // fact-leg filters cannot reference the dim: key-only AND
+      // deterministic (a rand() < 0.5 pushed onto the summary would
+      // sample GROUPS instead of base rows)
       inl.deterministic &&
         inl.references.forall(a => view.keyCols.contains(a.name))
     }
     val groupings = agg.groupingExpressions.map(inline)
     val groupingsOk = groupings.forall(g => g.deterministic && refsOk(g))
     val groupAttrs = agg.groupingExpressions.collect {
-      case a: AttributeReference if !defs.contains(a.exprId.id) => a
+      case a: AttributeReference if !defs.contains(a.exprId) => a
     }
 
+    // the summary side: resolved parquet scan of the state dir, from the
+    // version-stamped plan cache (the bucket/guard bookkeeping columns
+    // prune away — nothing below references them)
     val stateOpt =
-      if (!condOk || !aboveOk || !factFiltersOk || !groupingsOk) None
+      if (!condOk || !factFiltersOk || !groupingsOk) None
       else SummaryViews.statePlan(spark, view)
     stateOpt.flatMap { state =>
       val stateAttr: Map[String, Attribute] =
@@ -871,24 +503,31 @@ final case class RewriteToSummary(spark: SparkSession)
           view.maxCols.values).forall(stateAttr.contains)
       if (!covered) None
       else {
-        /** Re-root an INLINED expression onto the rewritten join: fact
+        /** Re-root an INLINED expression onto the rewritten plan: fact
           * base attributes (guaranteed key columns by [[refsOk]]) move to
           * the summary scan, dim attributes stay themselves. */
         def reRoot(e: Expression): Expression = e.transform {
           case a: AttributeReference if !dimOut.contains(a) =>
             stateAttr(a.name)
         }
-        /** Serve one aggregate call from the summary through the star
-          * shape, or refuse — the [[rewriteWith]] serveAgg with the
-          * star's stricter argument discipline ([[factArg]]: dim-side
-          * aggregates refuse, they do not commute). Shared by the bare
-          * `Alias(agg)` and `Alias(Cast(agg))` shapes. */
+        /** Serve one aggregate call from the summary, or refuse. Shared
+          * by the bare `Alias(agg)` shape and the `Alias(Cast(agg))` shape
+          * (CollapseProject folds a post-aggregation cast into the
+          * Aggregate's own output list, so `CAST(SUM(x) AS …)` arrives
+          * here as one alias). */
         def serveAgg(ae: AggregateExpression): Option[Expression] =
           ae match {
             case AggregateExpression(
                   Sum(c: AttributeReference, _), _, false, None, _)
                 if factArg(c).exists(b => view.sumCols.contains(b.name)) =>
               val b = factArg(c).get
+              // re-summing the summary can WIDEN the type (decimal Sum
+              // adds 10 precision again: state holds decimal(p+10,s), Sum
+              // over it yields decimal(p+20,s)); parents recorded the
+              // ORIGINAL type for this exprId, so cast back. The cast is
+              // exact whenever the true total fits the original Sum type
+              // — the same condition under which the un-rewritten query
+              // succeeds.
               val reSum: Expression =
                 ae.copy(aggregateFunction = Sum(stateAttr(b.name)))
               Some(if (reSum.dataType == ae.dataType) reSum
@@ -896,10 +535,12 @@ final case class RewriteToSummary(spark: SparkSession)
             case AggregateExpression(
                   Count(Seq(Literal(_, _))), _, false, None, _)
                 if view.countCol.isDefined =>
-              // COUNT(*) over the join = Σ over matching (key, dim-row)
-              // pairs of the key group's row count
+              // COUNT(*) = Σ over matching (key, dim-row) pairs of the key
+              // group's row count
               val n = stateAttr(view.countCol.get)
               val summed: Expression = ae.copy(aggregateFunction = Sum(n))
+              // post-analysis plans get no implicit coercion: pin the
+              // summed count back to COUNT's own LongType
               val typed =
                 if (summed.dataType == ae.dataType) summed
                 else Cast(summed, ae.dataType)
@@ -907,6 +548,9 @@ final case class RewriteToSummary(spark: SparkSession)
             case AggregateExpression(
                   Count(Seq(c: AttributeReference)), _, false, None, _)
                 if factArg(c).exists(b => view.nnCounts.contains(b.name)) =>
+              // COUNT(col) = total of the maintained per-column non-null
+              // count; a group whose every value was null holds nn = 0
+              // and re-sums to 0, matching COUNT's never-null contract
               val nn = stateAttr(view.nnCounts(factArg(c).get.name))
               val summed: Expression = ae.copy(aggregateFunction = Sum(nn))
               val typed =
@@ -916,6 +560,9 @@ final case class RewriteToSummary(spark: SparkSession)
             case AggregateExpression(
                   Min(c: AttributeReference), _, false, None, _)
                 if factArg(c).exists(b => view.minCols.contains(b.name)) =>
+              // min of per-key mins; null state cells (all-null groups)
+              // skip, exactly as Min over the base skips null rows. No
+              // widening — Min keeps its input type.
               Some(ae.copy(aggregateFunction = Min(
                 stateAttr(view.minCols(factArg(c).get.name)))))
             case AggregateExpression(
@@ -999,9 +646,10 @@ final case class RewriteToSummary(spark: SparkSession)
               // fact-side key grouping attribute
               Some(Alias(stateAttr(a.name), a.name)(exprId = a.exprId))
             case a: AttributeReference
-                if defs.contains(a.exprId.id) &&
+                if defs.contains(a.exprId) &&
                   groupings.exists(_.semanticEquals(inline(a))) =>
-              // extracted grouping expression (_groupingexpression#N)
+              // output referencing an EXTRACTED grouping expression by id
+              // (the analyzer's _groupingexpression#N projection shape)
               Some(Alias(reRoot(inline(a)), a.name)(exprId = a.exprId))
             case a: AttributeReference
                 if agg.groupingExpressions.exists {
@@ -1025,24 +673,26 @@ final case class RewriteToSummary(spark: SparkSession)
                 Alias(se, name)(exprId = al.exprId))
             case _ => None
           }
+        // every output expression must map exactly, preserving both the
+        // name and the exprId — parents never see the substitution
         if (mapped.exists(_.isEmpty)) None
         else {
+          // liveness: only summary rows with base rows still behind them
+          // (see the object scaladoc — dead groups must not resurrect;
+          // exact for every shape since net-zero rows contribute zero)
           val liveness: Option[Expression] = view.countCol.map { nc =>
             GreaterThan(stateAttr(nc),
               Cast(Literal(0), stateAttr(nc).dataType))
           }
-          val factScan = (factFilters.map(f => reRoot(inline(f))) ++
+          val factScan = (star.factFilters.map(f => reRoot(inline(f))) ++
               liveness)
             .foldLeft(state)((p, c) => Filter(c, p))
           // rebuild the join TREE around the summary scan, every node's
           // condition re-rooted (fact key refs → summary attrs, dim refs
           // untouched)
           val subst: Expression => Expression = e => reRoot(inline(e))
-          val newTree = star.rebuild(factScan, subst)
-          val withAbove = aboveFilters.map(f => reRoot(inline(f)))
-            .foldLeft(newTree)((p, c) => Filter(c, p))
           Some(Aggregate(groupings.map(reRoot), mapped.map(_.get),
-            withAbove))
+            star.rebuild(factScan, subst)))
         }
       }
     }

@@ -33,8 +33,14 @@ private[graft] object Manifests {
     new java.util.concurrent.ConcurrentHashMap[
       String, java.util.concurrent.atomic.AtomicLong]()
 
+  /** The one normal form of a layout/table path for registry and cache
+    * keys: callers may spell the same path with a trailing slash or a
+    * `file:` prefix, and every keyed lookup must agree. */
+  def normPath(p: String): String =
+    p.stripSuffix("/").replaceFirst("^file:", "")
+
   private def versionKey(path: String, kind: String): String =
-    path.stripSuffix("/").replaceFirst("^file:", "") + "|" + kind
+    normPath(path) + "|" + kind
 
   def manifestVersion(path: String, kind: String): Long =
     Option(manifestVersions.get(versionKey(path, kind)))

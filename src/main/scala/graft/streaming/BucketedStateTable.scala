@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Manifests
+
 /** The SHARED exactly-once bucketed-state-table protocol behind
   * [[IncrementalAgg]] (running aggregates) and [[ReplicaTable]] (CDC
   * last-writer-wins replica) — one implementation of the fold skeleton
@@ -49,22 +51,16 @@ private[graft] object BucketedStateTable {
     * scan plan) compare versions instead of touching the filesystem — a
     * pure-memory staleness check, correct under the same single-writer-per-
     * path-per-process contract fold itself assumes. A writer in ANOTHER
-    * process does not bump this (the cache consumer documents that). */
+    * process does not bump this (the cache consumer documents that).
+    * Keyed by [[Manifests.normPath]], so every spelling of a path agrees. */
   private val versions =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Key normalization shared with [[graft.plans.SummaryViews]]: the fold
-    * caller and the cache consumer may spell the same table path with a
-    * trailing slash or a `file:` prefix — both sides MUST agree on the
-    * version key or the bump is invisible to the compare. */
-  private def normKey(p: String): String =
-    p.stripSuffix("/").replaceFirst("^file:", "")
-
   def stateVersion(path: String): Long =
-    Option(versions.get(normKey(path))).fold(0L)(_.longValue)
+    Option(versions.get(Manifests.normPath(path))).fold(0L)(_.longValue)
 
   private def bumpVersion(path: String): Unit =
-    versions.merge(normKey(path), java.lang.Long.valueOf(1L),
+    versions.merge(Manifests.normPath(path), java.lang.Long.valueOf(1L),
       (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
 
   private def marker(path: String, batchId: Long) =

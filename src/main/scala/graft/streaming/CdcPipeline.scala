@@ -111,12 +111,15 @@ object CdcPipeline {
     * changelog checkpointing when that provider is RocksDB). */
   def startWithProvider(spark: SparkSession, provider: Option[String])(
       doStart: => StreamingQuery): StreamingQuery =
-    startWithConfs(spark, provider match {
+    startWithConfs(spark, providerConfs(provider))(doStart)
+
+  private def providerConfs(provider: Option[String]): Map[String, String] =
+    provider match {
       case Some(p) if p == RocksDBProvider =>
         Map(ProviderConfKey -> p, ChangelogConfKey -> "true")
       case Some(p) => Map(ProviderConfKey -> p)
       case None    => Map.empty
-    })(doStart)
+    }
 
   /** S1/S2/S3 — the bounded-source scan levels become path shapes: a
     * collection is a directory, a database a glob of collections, a
@@ -315,13 +318,8 @@ object CdcPipeline {
       case Some(iv) => writer.trigger(Trigger.ProcessingTime(iv))
       case None     => writer.trigger(Trigger.AvailableNow())
     }
-    val confs =
-      (cfg.stateStoreProvider match {
-        case Some(p) if p == RocksDBProvider =>
-          Map(ProviderConfKey -> p, ChangelogConfKey -> "true")
-        case Some(p) => Map(ProviderConfKey -> p)
-        case None    => Map.empty[String, String]
-      }) ++ cfg.statePartitions.map(n => PartitionsConfKey -> n.toString)
+    val confs = providerConfs(cfg.stateStoreProvider) ++
+      cfg.statePartitions.map(n => PartitionsConfKey -> n.toString)
     startWithConfs(spark, confs)(triggered.start())
   }
 

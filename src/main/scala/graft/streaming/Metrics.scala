@@ -20,7 +20,11 @@ object GraftMetrics {
   private def key(name: String, labels: Seq[(String, String)]): String =
     if (labels.isEmpty) name
     else name + labels.sortBy(_._1)
-      .map { case (k, v) => s"""$k="$v"""" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"""$k="${escape(v)}"""" }.mkString("{", ",", "}")
+
+  /** Label-value escaping of the text exposition format. */
+  private def escape(v: String): String =
+    v.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
 
   def inc(name: String, labels: (String, String)*): Unit = add(name, 1, labels: _*)
   def add(name: String, n: Long, labels: (String, String)*): Unit =
@@ -56,7 +60,11 @@ object GraftMetrics {
     val gs = gauges.asScala.toSeq.sortBy(_._1)
       .map { case (k, v) => s"$k $v" }
     val hs = histoCount.asScala.toSeq.sortBy(_._1).flatMap { case (k, v) =>
-      Seq(s"${k}_count ${v.sum()}", s"${k}_sum ${histoSum.get(k).sum()}")
+      // the suffix belongs to the metric name, before the label set
+      val i = k.indexOf('{')
+      val (name, labels) = if (i < 0) (k, "") else k.splitAt(i)
+      Seq(s"${name}_count$labels ${v.sum()}",
+        s"${name}_sum$labels ${histoSum.get(k).sum()}")
     }
     (cs ++ gs ++ hs).mkString("\n")
   }

@@ -85,35 +85,21 @@ object SourceError {
     * error — source or destination — and report its retryability.
     * Unclassified failures stay retryable, matching the reference's
     * treatment of unknown SDK errors (pipeline.rs:1871-1875). */
-  def isRetryableFailure(t: Throwable): Boolean = {
-    var cur = t
-    var hops = 0
-    while (cur != null && hops < 16) {
-      cur match {
-        case s: SourceError      => return s.retryable
-        case d: DestinationError => return d.retryable
-        case _                   => ()
-      }
-      cur = if (cur.getCause eq cur) null else cur.getCause
-      hops += 1
-    }
-    true
-  }
+  def isRetryableFailure(t: Throwable): Boolean =
+    firstClassified(t).forall(_._1)
 
   /** Category of the first classified error in the chain, for metric
     * labels (stream.rs:346-357 category). */
-  def categoryOf(t: Throwable): String = {
-    var cur = t
-    var hops = 0
-    while (cur != null && hops < 16) {
-      cur match {
-        case s: SourceError      => return s.category
-        case d: DestinationError => return d.errorType
-        case _                   => ()
+  def categoryOf(t: Throwable): String =
+    firstClassified(t).fold("unknown")(_._2)
+
+  /** (retryable, category) of the first classified error within 16
+    * cause hops. */
+  private def firstClassified(t: Throwable): Option[(Boolean, String)] =
+    Iterator.iterate(t)(c => if (c.getCause eq c) null else c.getCause)
+      .take(16).takeWhile(_ != null)
+      .collectFirst {
+        case s: SourceError      => (s.retryable, s.category)
+        case d: DestinationError => (d.retryable, d.errorType)
       }
-      cur = if (cur.getCause eq cur) null else cur.getCause
-      hops += 1
-    }
-    "unknown"
-  }
 }

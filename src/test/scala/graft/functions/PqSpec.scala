@@ -225,4 +225,23 @@ class PqSpec extends SparkSpec {
         Similarity.cosineFast(col("qv"), col("cv"))) > 1e-12)
     assert(bad.count() === 0, "cos_sim in the output must be exact")
   }
+
+  test("an out-of-range PQ shape fails before any corpus job runs") {
+    // evaluating this corpus throws; the shape check must surface first
+    val boom = udf { (_: Long) =>
+      throw new IllegalStateException("corpus evaluated"); true }
+    val corpus = spark.range(4)
+      .select(col("id").as("vec_id"),
+        array(lit(1.0f), lit(0.0f)).as("embedding"))
+      .filter(boom(col("vec_id")))
+    val viaTrain = intercept[IllegalArgumentException] {
+      Pq.trainCodebooks(corpus, m = 1, k = 1)
+    }
+    assert(viaTrain.getMessage.contains("PQ shape out of range"))
+    val viaIndex = intercept[IllegalArgumentException] {
+      Pq.writeIvfPqIndex(corpus, "target/test-out/ivfpq/bad-shape",
+        m = 1, kCodes = 1)
+    }
+    assert(viaIndex.getMessage.contains("PQ shape out of range"))
+  }
 }

@@ -449,6 +449,23 @@ class StreamingSpec extends SparkSpec {
       assert(rendered.contains("rigatoni_destination_write_bytes"))
       assert(rendered.contains("rigatoni_change_stream_lag_seconds"))
       assert(rendered.contains("rigatoni_batch_queue_size"))
+      // every line is a valid exposition sample `name{k="v",...} value`:
+      // histogram suffixes sit before the label set, and label values
+      // escape backslash, double quote and newline
+      GraftMetrics.observe(GraftMetrics.BatchSize, 2.0,
+        "query" -> "say \"hi\"\\\n")
+      val exposition = GraftMetrics.render()
+      val pair = """[a-zA-Z_][a-zA-Z0-9_]*="(?:[^"\\\n]|\\[\\"n])*""""
+      val sample = ("""[a-zA-Z_:][a-zA-Z0-9_:]*""" +
+        s"""(?:\\{$pair(?:,$pair)*\\})?""" +
+        """ (?:[-+]?(?:\d+(?:\.\d*)?|\.\d+)(?:[eE][-+]?\d+)?|NaN|[-+]Inf)""").r
+      val bad = exposition.split("\n").filter(_.nonEmpty)
+        .filterNot(sample.matches)
+      assert(bad.isEmpty, bad.mkString("invalid exposition lines:\n", "\n", ""))
+      assert(exposition.linesIterator.contains(
+        """rigatoni_batch_size_count{query="say \"hi\"\\\n"} 1"""),
+        exposition)
+      assert(exposition.contains("""rigatoni_batch_size_count{query="metrics-q"} """))
     } finally spark.streams.removeListener(listener)
   }
 
