@@ -5,6 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.cdc.CdcEnvelope
 
+/** Where catalog sinks and test fixtures write: the build's `target` dir,
+  * passed to forked JVMs as `-Dgraft.outRoot` by build.sbt, else
+  * `target` under the working directory. */
+private[graft] object OutRoot {
+  val dir: String = sys.props.getOrElse("graft.outRoot",
+    new java.io.File("target").getAbsolutePath)
+}
+
 /** The shared surface under the domain-sliced query catalog: the
   * registry the [[Queries]] traits write into, plus the helpers used
   * across more than one domain slice. Registration order = trait
@@ -28,7 +36,7 @@ private[graft] trait QueryDomain {
   protected def dsum(c: org.apache.spark.sql.Column, scale: Int = 4) =
     sum(c.cast(s"decimal(38,$scale)")).cast("double")
 
-  protected val sinkRoot = "/root/repo/target/graft-out"
+  protected val sinkRoot = s"${OutRoot.dir}/graft-out"
 
   // shared verbatim by quality_drift_psi AND its streaming leg
   // stream_drift_psi: the incremental monitor must read exactly what the

@@ -77,7 +77,7 @@ object CdcPipeline {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   private val ProviderConfKey = "spark.sql.streaming.stateStore.providerClass"
-  private val startLock = new Object
+  private val confLock = new Object
 
   /** RocksDB changelog checkpointing: commit per-trigger DELTAS to the
     * checkpoint instead of a full store snapshot every commit — the
@@ -90,22 +90,28 @@ object CdcPipeline {
 
   private val PartitionsConfKey = "spark.sql.shuffle.partitions"
 
+  /** Run `body` with the given session confs set, restoring the previous
+    * values after. The lock serializes every scoped change, so a query
+    * start never captures another caller's temporary settings. */
+  private[graft] def withConfs[T](spark: SparkSession,
+                                  confs: Map[String, String])(body: => T): T =
+    confLock.synchronized {
+      val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+    }
+
   /** Start a streaming query with the given session confs pinned for THIS
     * query only. The streaming engine clones the session inside `start()`
     * (and then persists state-relevant confs in the checkpoint's offset-log
     * metadata), so the confs are set just around the start call and
-    * restored after — the lock serializes concurrent starts on the same
-    * session so queries can't observe each other's settings. */
+    * restored after ([[withConfs]]). */
   def startWithConfs(spark: SparkSession, confs: Map[String, String])(
-      doStart: => StreamingQuery): StreamingQuery = startLock.synchronized {
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try doStart
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+      doStart: => StreamingQuery): StreamingQuery = withConfs(spark, confs)(doStart)
 
   /** [[startWithConfs]] specialized to the state-store provider (plus
     * changelog checkpointing when that provider is RocksDB). */
@@ -263,14 +269,12 @@ object CdcPipeline {
           observe(WriteDuration, (System.nanoTime() - t0) / 1e9,
             "query" -> cfg.queryName)
           // backlog AFTER this batch: staged minus admitted-through-now.
-          // Gauge = current backlog (a drained run ends at 0); histogram
-          // keeps the per-batch samples.
+          // A gauge only, as in the reference (a drained run ends at 0).
           scala.util.Try {
             val backlog = math.max(0L,
               stagedFileCount(spark, cfg.sourceDir) -
                 admittedFileCount(spark, cfg.checkpointDir, logLineCache))
             setGauge(BatchQueueSize, backlog.toDouble, "query" -> cfg.queryName)
-            observe(BatchQueueSize, backlog.toDouble, "query" -> cfg.queryName)
           }
           // getRowOrEmpty (not get): never blocks if a destination consumed
           // the batch without completing the observed plan

@@ -71,6 +71,7 @@ object IncrementalAgg {
       "sum/min/max columns must be distinct state columns (stage a copy " +
         "of the source column per role)")
     require(nBuckets >= 1, s"nBuckets must be >= 1 (got $nBuckets)")
+    BucketedStateTable.pinBuckets(spark, path, nBuckets)
     def reAgg(df: DataFrame): DataFrame = {
       val aggs = sumCols.map(c => sum(col(c)).as(c)) ++
         minCols.map(c => min(col(c)).as(c)) ++

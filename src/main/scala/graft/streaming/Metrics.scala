@@ -53,20 +53,28 @@ object GraftMetrics {
     Option(histoSum.get(key(name, labels))).map(_.sum()).getOrElse(0.0)
 
   /** Text exposition (Prometheus-style) — the equivalent of the reference's
-    * /metrics endpoint payload. */
+    * /metrics endpoint payload. One `# TYPE` line heads each metric family.
+    * Histograms carry `_count`/`_sum` and no buckets, which the format
+    * types as `summary`. */
   def render(): String = {
-    val cs = counters.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"$k ${v.sum()}" }
-    val gs = gauges.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"$k $v" }
-    val hs = histoCount.asScala.toSeq.sortBy(_._1).flatMap { case (k, v) =>
+    def split(k: String): (String, String) = k.splitAt(
+      k.indexOf('{') match { case -1 => k.length; case i => i })
+    val cs = counters.asScala.toSeq
+      .map { case (k, v) => split(k)._1 -> s"$k ${v.sum()}" }
+    val gs = gauges.asScala.toSeq
+      .map { case (k, v) => split(k)._1 -> s"$k $v" }
+    val hs = histoCount.asScala.toSeq.flatMap { case (k, v) =>
       // the suffix belongs to the metric name, before the label set
-      val i = k.indexOf('{')
-      val (name, labels) = if (i < 0) (k, "") else k.splitAt(i)
-      Seq(s"${name}_count$labels ${v.sum()}",
-        s"${name}_sum$labels ${histoSum.get(k).sum()}")
+      val (name, labels) = split(k)
+      Seq(name -> s"${name}_count$labels ${v.sum()}",
+        name -> s"${name}_sum$labels ${histoSum.get(k).sum()}")
     }
-    (cs ++ gs ++ hs).mkString("\n")
+    Seq("counter" -> cs, "gauge" -> gs, "summary" -> hs).flatMap {
+      case (typ, samples) =>
+        samples.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (name, ls) =>
+          s"# TYPE $name $typ" +: ls.map(_._2).sorted
+        }
+    }.mkString("\n")
   }
 
   def reset(): Unit = { counters.clear(); gauges.clear(); histoCount.clear(); histoSum.clear() }

@@ -58,6 +58,7 @@ object ReplicaTable {
     require(keyCols.nonEmpty && versionCols.nonEmpty,
       "applyBatch needs key and version columns")
     require(nBuckets >= 1, s"nBuckets must be >= 1 (got $nBuckets)")
+    BucketedStateTable.pinBuckets(spark, path, nBuckets)
     val bucketCol = BucketedStateTable.BucketCol
     val tagged = batch.withColumn(TombstoneCol, deleteWhen)
     val dataCols = tagged.columns.filterNot(keyCols.contains)

@@ -270,7 +270,7 @@ class PlanAuditSpec extends SparkSpec {
     // the engine's flagship suite running through its own optimizer tier:
     // a brand-filtered part dimension joined to a bloom-indexed lineitem
     // layout on l_partkey — the star-join point-lookup shape at 100 TB
-    val path = "/root/repo/target/test-out/planaudit-bloom-lineitem"
+    val path = s"$outRoot/test-out/planaudit-bloom-lineitem"
     Tables.lineitem(spark, sfSmall)
       .select("l_partkey", "l_quantity", "l_extendedprice")
       .repartition(16, col("l_partkey"))

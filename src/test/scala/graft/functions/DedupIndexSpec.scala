@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 class DedupIndexSpec extends SparkSpec {
 
-  private val root = "/root/repo/target/test-out/dedup-index"
+  private val root = s"$outRoot/test-out/dedup-index"
   private lazy val docs = Tables.documents(spark, sfTiny).cache()
   private lazy val day1 = docs.filter(col("doc_id") % 2 === 0)
   private lazy val day2 = docs.filter(col("doc_id") % 2 === 1)

@@ -122,7 +122,7 @@ class PqSpec extends SparkSpec {
     // trainers (one corpus pass instead of two count+seed+Lloyd pipelines);
     // the persisted models must be value-identical to what the standalone
     // trainer entry points produce on the same corpus
-    val path = "/root/repo/target/test-out/ivfpq/fused-train"
+    val path = s"$outRoot/test-out/ivfpq/fused-train"
     Pq.writeIvfPqIndex(emb, path, nLists = 8, m = M, kCodes = KCodes)
     val gotCents = Similarity.readCentroids(spark, path)
     val wantCents = Similarity.ivfCentroids(emb, nLists = 8, iters = 2)
@@ -137,7 +137,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("IVF-PQ index: probe-all + deep re-rank == brute force exactly") {
-    val path = "/root/repo/target/test-out/ivfpq/exact"
+    val path = s"$outRoot/test-out/ivfpq/exact"
     val n = emb.count().toInt
     Pq.writeIvfPqIndex(emb, path, nLists = 8, m = M, kCodes = KCodes)
     // with every list probed and a rerank depth covering the corpus, the
@@ -153,7 +153,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("IVF-PQ recall >= 0.8 at catalog parameters; scan prunes to probed lists") {
-    val path = "/root/repo/target/test-out/ivfpq/recall"
+    val path = s"$outRoot/test-out/ivfpq/recall"
     Pq.writeIvfPqIndex(emb, path, nLists = 16, m = M, kCodes = KCodes,
       ivfIters = 3)
     val res = Pq.searchIvfPqIndex(spark, path, queries, emb, K,
@@ -181,7 +181,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("IVF-PQ append: delta lands in its lists; search == rebuild with same models") {
-    val path = "/root/repo/target/test-out/ivfpq/append"
+    val path = s"$outRoot/test-out/ivfpq/append"
     val base = emb.filter(col("vec_id") % 2 === 0)
     val delta = emb.filter(col("vec_id") % 2 === 1)
     Pq.writeIvfPqIndex(base, path, nLists = 8, m = M, kCodes = KCodes)

@@ -197,7 +197,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("persisted IVF layout: search equals in-memory IVF; scan prunes to probed lists") {
-    val path = "/root/repo/target/similarity-spec/ivf-index"
+    val path = s"$outRoot/similarity-spec/ivf-index"
     Similarity.writeIvfIndex(emb, path, nLists = 16, iters = 3)
     val fromIndex = Similarity.searchIvfIndex(spark, path, queries, K, nProbe = 8)
     val inMemory = Similarity.ivfTopK(emb, queries, K, nLists = 16, nProbe = 8, iters = 3)
@@ -224,7 +224,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("incremental IVF append: delta lands in its lists; probe-all search is exact") {
-    val path = "/root/repo/target/similarity-spec/ivf-append"
+    val path = s"$outRoot/similarity-spec/ivf-append"
     val old = emb.filter(col("vec_id") % 5 =!= 0)   // initial 80%
     val delta = emb.filter(col("vec_id") % 5 === 0) // the "daily ingest"
     Similarity.writeIvfIndex(old, path, nLists = 16, iters = 3)

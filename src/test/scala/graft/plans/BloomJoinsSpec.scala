@@ -14,7 +14,7 @@ class BloomJoinsSpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
 
-  private val root = "/root/repo/target/test-out/bloom-joins"
+  private val root = s"$outRoot/test-out/bloom-joins"
   private val factPath = s"$root/fact"
   private val fs = new org.apache.hadoop.fs.Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -18,7 +18,7 @@ class GraftCatalogSpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
 
-  private val root = "/root/repo/target/test-out/graft-catalog"
+  private val root = s"$outRoot/test-out/graft-catalog"
   private val factPath = s"$root/fact"
   private val basePath = s"$root/base"
   private val statePath = s"$root/mv-state"

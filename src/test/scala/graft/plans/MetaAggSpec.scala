@@ -14,7 +14,7 @@ class MetaAggSpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
 
-  private val root = "/root/repo/target/test-out/meta-agg"
+  private val root = s"$outRoot/test-out/meta-agg"
   private val layout = s"$root/fact"
   private val fs = new org.apache.hadoop.fs.Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -15,7 +15,7 @@ class SummaryViewsSpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
 
-  private val root = "/root/repo/target/test-out/summary-views"
+  private val root = s"$outRoot/test-out/summary-views"
   private val basePath = s"$root/base"
   private val baseUnregistered = s"$root/base-unreg"
   private val statePath = s"$root/mv-state"

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class BloomIndexSpec extends SparkSpec {
 
   private def fresh(tag: String): String = {
-    val p = s"/root/repo/target/test-out/bloomindex/$tag"
+    val p = s"$outRoot/test-out/bloomindex/$tag"
     val fs = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(p), true)

@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
   * integration tests, s3_integration_test.rs:73-360). */
 class WritersSpec extends SparkSpec {
 
-  private val outRoot = "/root/repo/target/test-out/writers"
+  private val writersOut = s"$outRoot/test-out/writers"
 
   private lazy val env = CdcEnvelope
     .envelopeOnly(CdcEnvelope.fromEvents(Tables.events(spark, sfTiny)))
@@ -50,7 +50,7 @@ class WritersSpec extends SparkSpec {
 
   for ((fmt, comp, strat) <- matrix) {
     test(s"round-trip ${fmt.name} × ${comp.name} × ${strat.getClass.getSimpleName.stripSuffix("$")}") {
-      val path = s"$outRoot/${fmt.name}-${comp.name}-${strat.getClass.getSimpleName.stripSuffix("$")}"
+      val path = s"$writersOut/${fmt.name}-${comp.name}-${strat.getClass.getSimpleName.stripSuffix("$")}"
       Writers.write(env, path, fmt, comp, strat)
       val back = Writers.read(spark, path, fmt, Some(envDDL))
       assert(canon(back) === want)
@@ -58,7 +58,7 @@ class WritersSpec extends SparkSpec {
   }
 
   test("hive layout on disk matches the reference key scheme") {
-    val path = s"$outRoot/layout-check"
+    val path = s"$writersOut/layout-check"
     Writers.write(env, path, OutFormat.Jsonl, OutCompression.Gzip,
       KeyStrategy.HivePartitioned)
     // expect .../collection=c_0/year=YYYY/month=M/day=D/hour=H/part-*.json.gz
@@ -79,7 +79,7 @@ class WritersSpec extends SparkSpec {
   }
 
   test("partitioned layout is partition-prunable on read (scan skips other keys)") {
-    val path = s"$outRoot/prune-check"
+    val path = s"$writersOut/prune-check"
     Writers.write(env, path, OutFormat.Parquet, OutCompression.Snappy,
       KeyStrategy.CollectionBased)
     val one = Writers.read(spark, path, OutFormat.Parquet)
@@ -100,7 +100,7 @@ class WritersSpec extends SparkSpec {
     val skewed = (0 until 20000).map { i =>
       (if (i % 10 == 0) s"c_${i % 4}" else "c_hot", s"doc-$i", i.toLong)
     }.toDF("collection", "document_key", "seq")
-    val path = s"$outRoot/skew-check"
+    val path = s"$writersOut/skew-check"
     // tiny targetFileBytes forces the adaptive salt to its maxFilesPerKey
     // ceiling — the regime a hot key hits at production volume
     Writers.write(skewed, path, OutFormat.Jsonl, OutCompression.None,
@@ -130,7 +130,7 @@ class WritersSpec extends SparkSpec {
 
     // and the flip side: at the default 128 MiB target this small write
     // must NOT salt — one file per key, no tiny-file multiplication
-    val smallPath = s"$outRoot/skew-check-small"
+    val smallPath = s"$writersOut/skew-check-small"
     Writers.write(skewed, smallPath, OutFormat.Jsonl, OutCompression.None,
       KeyStrategy.CollectionBased, maxFilesPerKey = maxFiles)
     def filesAt(base: String, key: String): Int = {
@@ -143,7 +143,7 @@ class WritersSpec extends SparkSpec {
   }
 
   test("avro honors save modes: append adds, errorifexists refuses, ignore skips") {
-    val path = s"$outRoot/avro-modes"
+    val path = s"$writersOut/avro-modes"
     val half1 = env.filter(col("operation") === "purchase")
     val half2 = env.filter(col("operation") =!= "purchase")
     Writers.write(half1, path, OutFormat.Avro, OutCompression.None, KeyStrategy.Flat)
@@ -169,7 +169,7 @@ class WritersSpec extends SparkSpec {
   }
 
   test("avro read-back recovers directory partition columns like the other formats") {
-    val path = s"$outRoot/avro-parts"
+    val path = s"$writersOut/avro-parts"
     // fresh dir: the append leg below would otherwise accumulate across runs
     val p = Paths.get(path)
     if (Files.exists(p))
@@ -192,7 +192,7 @@ class WritersSpec extends SparkSpec {
   }
 
   test("avro empty layout reads back as an empty frame when a schema shapes it") {
-    val path = s"$outRoot/avro-empty"
+    val path = s"$writersOut/avro-empty"
     Writers.write(env.filter(lit(false)), path, OutFormat.Avro,
       OutCompression.None, KeyStrategy.Flat)
     val back = Writers.read(spark, path, OutFormat.Avro, Some(envDDL))
@@ -238,7 +238,7 @@ class WritersSpec extends SparkSpec {
         !f.getName.startsWith("."))
 
   test("compaction: fragmented dirs bin-pack to ceil(bytes/target), lossless, idempotent") {
-    val path = s"$outRoot/compact"
+    val path = s"$writersOut/compact"
     Writers.write(env, path, OutFormat.Parquet, OutCompression.Zstd,
       KeyStrategy.CollectionBased, filesPerKeyHint = Some(8))
     val keyDirs = new java.io.File(path).listFiles()
@@ -273,8 +273,8 @@ class WritersSpec extends SparkSpec {
   }
 
   test("parallel compaction == sequential: same report shape, lossless") {
-    val seqPath = s"$outRoot/compact-par-seq"
-    val parPath = s"$outRoot/compact-par-par"
+    val seqPath = s"$writersOut/compact-par-seq"
+    val parPath = s"$writersOut/compact-par-par"
     Seq(seqPath, parPath).foreach(p => Writers.write(env, p,
       OutFormat.Parquet, OutCompression.Zstd, KeyStrategy.CollectionBased,
       filesPerKeyHint = Some(8)))
@@ -292,7 +292,7 @@ class WritersSpec extends SparkSpec {
   }
 
   test("compaction is selective: already-compact dirs are not rewritten") {
-    val path = s"$outRoot/compact-selective"
+    val path = s"$writersOut/compact-selective"
     Writers.write(env, path, OutFormat.Parquet, OutCompression.Zstd,
       KeyStrategy.CollectionBased, filesPerKeyHint = Some(6))
     // pre-compact ONE key dir to a single file by hand
@@ -319,7 +319,7 @@ class WritersSpec extends SparkSpec {
   }
 
   test("compaction packs a jsonl+gzip layout too (text formats share the path)") {
-    val path = s"$outRoot/compact-jsonl"
+    val path = s"$writersOut/compact-jsonl"
     // Flat layout has no partition columns, so the writer's salt never
     // engages — fragment via the input partitioning instead (exactly how
     // a many-task streaming job fragments a flat sink)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 
 class ZOrderSpec extends SparkSpec {
 
-  private val root = "/root/repo/target/zorder-spec"
+  private val root = s"$outRoot/zorder-spec"
 
   /** Reference Morton interleave for the low 16 bits of (a, b). */
   private def morton(a: Long, b: Long): Long = {
@@ -126,7 +126,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("hilbert layout keeps BOTH dimensions' zones tight (vs single-sort)") {
-    val root = "/root/repo/target/test-out/zorder-hilbert"
+    val root = s"$outRoot/test-out/zorder-hilbert"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)

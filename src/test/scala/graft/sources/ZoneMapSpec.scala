@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class ZoneMapSpec extends SparkSpec {
 
   private def fresh(tag: String): String = {
-    val p = s"/root/repo/target/test-out/zonemap/$tag"
+    val p = s"$outRoot/test-out/zonemap/$tag"
     val fs = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(p), true)

@@ -8,7 +8,7 @@ class IncrementalAggSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshPath(tag: String): String = {
-    val p = s"/root/repo/target/test-out/incr-agg/$tag"
+    val p = s"$outRoot/test-out/incr-agg/$tag"
     val fs = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(p), true)
@@ -130,6 +130,27 @@ class IncrementalAggSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(kA -> 107L, kB -> 211L),
       s"partial-swap replay must skip kA's bucket and apply kB's: $got")
+  }
+
+  test("a changed nBuckets is refused before any Spark job runs") {
+    val path = freshPath("nbuckets")
+    val df = Seq((1L, 10L), (2L, 20L)).toDF("key", "v")
+    IncrementalAgg.applyDelta(spark, path, df, Seq("key"), Seq("v"),
+      nBuckets = 4, batchId = 0)
+    var err: IllegalArgumentException = null
+    val jobs = jobTasks {
+      err = intercept[IllegalArgumentException] {
+        IncrementalAgg.applyDelta(spark, path, df, Seq("key"), Seq("v"),
+          nBuckets = 16, batchId = 1)
+      }
+    }
+    assert(jobs.isEmpty, s"refusal ran Spark jobs: $jobs")
+    assert(err.getMessage.contains("nBuckets=4"), err.getMessage)
+    IncrementalAgg.applyDelta(spark, path, df, Seq("key"), Seq("v"),
+      nBuckets = 4, batchId = 1)
+    val got = IncrementalAgg.read(spark, path)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === Map(1L -> 20L, 2L -> 40L))
   }
 
   test("foreachBatch wiring: streamed deltas land exactly once") {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * is a no-op, and the sink's zone map answers exactly. */
 class IngestDaySpec extends SparkSpec {
 
-  private val root = "/root/repo/target/test-out/ingest-day"
+  private val root = s"$outRoot/test-out/ingest-day"
   private def fresh(tag: String): String = {
     val p = s"$root/$tag"
     val fs = new org.apache.hadoop.fs.Path(p)

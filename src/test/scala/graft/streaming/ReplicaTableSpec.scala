@@ -7,7 +7,7 @@ class ReplicaTableSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshPath(tag: String): String = {
-    val p = s"/root/repo/target/test-out/replica/$tag"
+    val p = s"$outRoot/test-out/replica/$tag"
     val fs = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(p), true)
@@ -115,5 +115,98 @@ class ReplicaTableSpec extends SparkSpec {
     val got = ReplicaTable.read(spark, path)
       .filter(col("key") === 1L).collect()
     assert(got.length === 1 && got.head.getString(3) === "v2")
+  }
+
+  private def stateRows(path: String) =
+    spark.read.parquet(BucketedStateTable.stateDir(path))
+      .drop(BucketedStateTable.AppliedCol).collect().map(_.toString).toSet
+
+  test("crash replay: a partially swapped batch lands exactly like one apply") {
+    val nBuckets = 4
+    def bucketOf(k: Long): Int = Seq(k).toDF("key")
+      .select(BucketedStateTable.bucketOf(Seq("key"), nBuckets))
+      .head().getInt(0)
+    val seed = (1L to 40L).map(k => (k, 1L, "upsert", s"a$k"))
+    val upd = (1L to 40L).filter(_ % 3 != 0)
+      .map(k => (k, 2L, if (k % 5 == 0) "delete" else "upsert", s"b$k"))
+    val swapped = bucketOf(upd.head._1)
+    assert(upd.map(r => bucketOf(r._1)).distinct.length > 1,
+      "the replay must touch swapped and unswapped buckets")
+    def apply(path: String, rows: Seq[(Long, Long, String, String)],
+              id: Long): Unit =
+      ReplicaTable.applyBatch(spark, path, df(rows: _*), Seq("key"),
+        Seq("ver"), col("op") === "delete", nBuckets, batchId = id)
+    val once = freshPath("crash-once")
+    apply(once, seed, 0)
+    apply(once, upd, 1)
+    val crashed = freshPath("crash-replay")
+    apply(crashed, seed, 0)
+    // batch 1 crashed after swapping one bucket, before its marker
+    apply(crashed, upd.filter(r => bucketOf(r._1) == swapped), 1)
+    val fs = BucketedStateTable.fsFor(spark, crashed)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$crashed/_applied/batch-1"),
+      false))
+    apply(crashed, upd, 1) // the engine's replay carries the FULL batch
+    assert(stateRows(crashed) === stateRows(once))
+    assert(ReplicaTable.read(spark, crashed).collect().toSet ===
+      ReplicaTable.read(spark, once).collect().toSet)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$crashed/_applied/batch-1")))
+  }
+
+  test("a changed nBuckets is refused before any Spark job runs") {
+    val path = freshPath("nbuckets")
+    def apply(nBuckets: Int, id: Long): Unit =
+      ReplicaTable.applyBatch(spark, path,
+        df((1L to 20L).map(k => (k, id, "upsert", s"p$k")): _*), Seq("key"),
+        Seq("ver"), col("op") === "delete", nBuckets, batchId = id)
+    apply(4, 0)
+    val before = stateRows(path)
+    var err: IllegalArgumentException = null
+    val jobs = jobTasks {
+      err = intercept[IllegalArgumentException](apply(8, 1))
+    }
+    assert(jobs.isEmpty, s"refusal ran Spark jobs: $jobs")
+    assert(err.getMessage.contains("nBuckets=4") &&
+      err.getMessage.contains("nBuckets=8"), err.getMessage)
+    assert(stateRows(path) === before)
+    // a table from before the count was recorded is checked against its
+    // bucket dirs: one holding a bucket >= nBuckets is refused too
+    val fs = BucketedStateTable.fsFor(spark, path)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_buckets"), false)
+    intercept[IllegalArgumentException](apply(1, 1))
+    apply(4, 1)
+    assert(ReplicaTable.read(spark, path).count() === 20)
+  }
+
+  test("fold onto a 64-bucket state: no listing job, input evaluated once") {
+    val path = freshPath("job-shape")
+    val nBuckets = 64
+    def batch(ver: Long) = spark.range(1, 2001).select(col("id").as("key"),
+      lit(ver).as("ver"), lit("upsert").as("op"),
+      concat(lit("p"), col("id").cast("string")).as("payload"))
+    ReplicaTable.applyBatch(spark, path, batch(1L), Seq("key"), Seq("ver"),
+      col("op") === "delete", nBuckets, batchId = 0)
+    assert(new java.io.File(s"$path/state").listFiles()
+      .count(_.getName.startsWith("__bucket=")) === nBuckets)
+    val evaluated = spark.sparkContext.longAccumulator("fold-input-rows")
+    val tick = udf((k: Long) => { evaluated.add(1L); k }).asNondeterministic()
+    val input = batch(2L).withColumn("key", tick(col("key")))
+    val jobs = jobTasks {
+      ReplicaTable.applyBatch(spark, path, input, Seq("key"), Seq("ver"),
+        col("op") === "delete", nBuckets, batchId = 1)
+    }
+    // a distributed file listing (or a cache-refresh relist) is one task
+    // per bucket dir
+    assert(jobs.nonEmpty && jobs.values.max < nBuckets,
+      s"a job ran one task per bucket: $jobs")
+    assert(evaluated.value === 2000L,
+      "the input batch must be evaluated once per row")
+    // whole buckets per write task: one data file per bucket
+    val files = new java.io.File(s"$path/state").listFiles()
+      .filter(_.getName.startsWith("__bucket="))
+      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
+    assert(files.length === nBuckets && files.forall(_ == 1))
+    val got = ReplicaTable.read(spark, path)
+    assert(got.count() === 2000L && got.filter(col("ver") =!= 2L).isEmpty)
   }
 }

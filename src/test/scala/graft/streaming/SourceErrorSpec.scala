@@ -69,7 +69,7 @@ class SourceErrorSpec extends SparkSpec {
   }
 
   test("restart loop reconnects on transient source errors, dies on 286") {
-    val root = "/root/repo/target/test-out/source-error"
+    val root = s"$outRoot/test-out/source-error"
     val p = java.nio.file.Paths.get(root)
     if (java.nio.file.Files.exists(p)) {
       import scala.jdk.CollectionConverters._

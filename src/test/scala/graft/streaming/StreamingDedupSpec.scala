@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 
 class StreamingDedupSpec extends SparkSpec {
 
-  private val root = "/root/repo/target/streaming-dedup-spec"
+  private val root = s"$outRoot/streaming-dedup-spec"
 
   private def freshCkpt(name: String): String = {
     val base = s"$root/$name"

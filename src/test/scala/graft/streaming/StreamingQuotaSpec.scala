@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
   * state, saturation, and the overshoot-by-one bound. */
 class StreamingQuotaSpec extends SparkSpec {
 
-  private val root = "/root/repo/target/test-out/streaming-quota"
+  private val root = s"$outRoot/test-out/streaming-quota"
 
   private def fresh(): (String, String) = {
     val p = Paths.get(root)

@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
   * after drain. */
 class StreamingSampleSpec extends SparkSpec {
 
-  private val root = "/root/repo/target/test-out/streaming-sample"
+  private val root = s"$outRoot/test-out/streaming-sample"
 
   private def fresh(): (String, String) = {
     val p = Paths.get(root)

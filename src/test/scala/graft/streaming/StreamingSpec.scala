@@ -16,7 +16,7 @@ import scala.jdk.CollectionConverters._
   * pipeline_integration_test.rs scenarios on Structured Streaming. */
 class StreamingSpec extends SparkSpec {
 
-  private val root = "/root/repo/target/test-out/streaming"
+  private val root = s"$outRoot/test-out/streaming"
 
   private val envDDL =
     "operation string, database string, collection string, " +
@@ -405,8 +405,19 @@ class StreamingSpec extends SparkSpec {
     try {
       val (src, ckpt, out) = fresh("metrics")
       val n = stageSource(src, parts = 2)
-      val dest = new FileDestination(out, OutFormat.Jsonl, OutCompression.None,
-        KeyStrategy.Flat)
+      val files = new FileDestination(out, OutFormat.Jsonl,
+        OutCompression.None, KeyStrategy.Flat)
+      // the backlog gauge as each batch starts: batch 1 sees what batch 0
+      // left behind
+      val backlogSeen = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
+      val dest = new Destination {
+        def writeBatch(df: DataFrame, batchId: Long): Unit = {
+          backlogSeen.add(GraftMetrics.gauge(GraftMetrics.BatchQueueSize,
+            "query" -> "metrics-q"))
+          files.writeBatch(df, batchId)
+        }
+        def metadata: DestinationMetadata = files.metadata
+      }
       // maxFilesPerTrigger=1: two batches, so batch 0 ends with a known
       // 1-file backlog — the batch_queue_size signal
       val q = CdcPipeline.start(spark,
@@ -431,8 +442,7 @@ class StreamingSpec extends SparkSpec {
         "query" -> "metrics-q") > 0.0)
       // batch_queue_size: the earlier batch must have reported backlog > 0,
       // the drained stream's final gauge reads 0
-      assert(GraftMetrics.histogramSum(GraftMetrics.BatchQueueSize,
-        "query" -> "metrics-q") > 0.0, "no backlog ever observed")
+      assert(backlogSeen.asScala.exists(_ > 0.0), "no backlog ever observed")
       assert(GraftMetrics.gauge(GraftMetrics.BatchQueueSize,
         "query" -> "metrics-q") === 0.0, "drained stream still shows backlog")
       // pipeline_status must return to 0 under the SAME label it was set
@@ -449,19 +459,37 @@ class StreamingSpec extends SparkSpec {
       assert(rendered.contains("rigatoni_destination_write_bytes"))
       assert(rendered.contains("rigatoni_change_stream_lag_seconds"))
       assert(rendered.contains("rigatoni_batch_queue_size"))
-      // every line is a valid exposition sample `name{k="v",...} value`:
-      // histogram suffixes sit before the label set, and label values
-      // escape backslash, double quote and newline
+      // every line is a `# TYPE` line or a valid exposition sample
+      // `name{k="v",...} value`: histogram suffixes sit before the label
+      // set, and label values escape backslash, double quote and newline
       GraftMetrics.observe(GraftMetrics.BatchSize, 2.0,
         "query" -> "say \"hi\"\\\n")
       val exposition = GraftMetrics.render()
       val pair = """[a-zA-Z_][a-zA-Z0-9_]*="(?:[^"\\\n]|\\[\\"n])*""""
-      val sample = ("""[a-zA-Z_:][a-zA-Z0-9_:]*""" +
+      val sample = ("""([a-zA-Z_:][a-zA-Z0-9_:]*)""" +
         s"""(?:\\{$pair(?:,$pair)*\\})?""" +
         """ (?:[-+]?(?:\d+(?:\.\d*)?|\.\d+)(?:[eE][-+]?\d+)?|NaN|[-+]Inf)""").r
-      val bad = exposition.split("\n").filter(_.nonEmpty)
-        .filterNot(sample.matches)
+      val typeLine = """# TYPE ([a-zA-Z_:][a-zA-Z0-9_:]*) (counter|gauge|summary|histogram)""".r
+      val lines = exposition.split("\n").filter(_.nonEmpty).toSeq
+      val bad = lines.filterNot(l => sample.matches(l) || typeLine.matches(l))
       assert(bad.isEmpty, bad.mkString("invalid exposition lines:\n", "\n", ""))
+      // one type per metric family: a name declared twice (say a gauge also
+      // observed as a histogram) is invalid, and every sample follows the
+      // TYPE line of its own family
+      val declared = lines.collect { case typeLine(name, _) => name }
+      assert(declared.diff(declared.distinct).isEmpty,
+        s"metric families with more than one TYPE: ${declared.diff(declared.distinct)}")
+      var family: Option[(String, String)] = None
+      lines.foreach {
+        case typeLine(name, typ) => family = Some(name -> typ)
+        case sample(name) =>
+          val fits = family.exists { case (f, typ) =>
+            name == f || (Set("summary", "histogram")(typ) &&
+              Seq("_count", "_sum", "_bucket").exists(sfx => name == f + sfx))
+          }
+          assert(fits, s"sample $name outside its family's TYPE block ($family)")
+        case _ => ()
+      }
       assert(exposition.linesIterator.contains(
         """rigatoni_batch_size_count{query="say \"hi\"\\\n"} 1"""),
         exposition)

@@ -74,4 +74,6 @@ def main(sf_dir: str, out_dir: str):
 
 if __name__ == "__main__":
     main(sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01",
-         sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/verify-out")
+         sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+             "target", "verify-out"))
