@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.cdc.CdcEnvelope
 import graft.operators.{Batching, Enrichment, Filters, PartitionKeys}
 import graft.functions.{Dedup, Multimodal, Similarity, TextFunctions => TF}
+import graft.plans.{RewriteToBloomPrunedJoin, RewriteToSummary}
 
 /** CDC / reference-surface operators (SURVEY §2).
   *
@@ -396,33 +397,19 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         keyCols = Seq("lang", "source"), sumCols = Seq("n_chars", "n_docs"),
         nBuckets = 8, batchId = i)
     }
-    graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
-      base, path, Seq("lang", "source"), Set("n_chars"), Some("n_docs")))
-    graft.plans.SummaryViews.install(s)
-    try {
+    withRule(s, classOf[RewriteToSummary]) {
+      graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
+        base, path, Seq("lang", "source"), Set("n_chars"), Some("n_docs")))
       val q = s.read.parquet(base)
         .where(col("source") =!= "web")
         .groupBy("lang")
         .agg(sum(col("n_chars")).as("sum_chars"),
           count(lit(1)).as("n_docs"))
-      val readsState = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              f.location.rootPaths.exists(p =>
-                p.toString.contains("agg_mv_rewrite") &&
-                  p.toString.endsWith("/state"))
-            case _ => false
-          }
-      }.exists(identity)
-      require(readsState,
+      require(readsState(q, "agg_mv_rewrite"),
         "agg_mv_rewrite: the summary rewrite did not fire — the optimized " +
           "plan still reads the base table")
       // eager: the hashed rows are computed NOW, under the installed rule
       q.localCheckpoint()
-    } finally {
-      graft.plans.SummaryViews.uninstall(s)
-      graft.plans.SummaryViews.unregister(base)
     }
   }
 
@@ -453,33 +440,19 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         sumCols = Seq("n_chars", "n_docs", "n_chars_nn"),
         nBuckets = 8, batchId = i)
     }
-    graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
-      base, path, Seq("lang", "source"), Set("n_chars"), Some("n_docs"),
-      nnCounts = Map("n_chars" -> "n_chars_nn")))
-    graft.plans.SummaryViews.install(s)
-    try {
+    withRule(s, classOf[RewriteToSummary]) {
+      graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
+        base, path, Seq("lang", "source"), Set("n_chars"), Some("n_docs"),
+        nnCounts = Map("n_chars" -> "n_chars_nn")))
       val q = s.read.parquet(base)
         .where(col("lang") =!= "en")
         .groupBy("source")
         .agg(avg(col("n_chars")).as("avg_chars"),
           count(col("n_chars")).as("n_vals"))
-      val readsState = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              f.location.rootPaths.exists(p =>
-                p.toString.contains("agg_mv_rewrite_avg") &&
-                  p.toString.endsWith("/state"))
-            case _ => false
-          }
-      }.exists(identity)
-      require(readsState,
+      require(readsState(q, "agg_mv_rewrite_avg"),
         "agg_mv_rewrite_avg: the AVG/COUNT(col) rewrite did not fire — " +
           "the optimized plan still reads the base table")
       q.localCheckpoint()
-    } finally {
-      graft.plans.SummaryViews.uninstall(s)
-      graft.plans.SummaryViews.unregister(base)
     }
   }
 
@@ -521,33 +494,19 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         sumCols = Seq("price", "n_docs", "price_nn"),
         nBuckets = 8, batchId = i)
     }
-    graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
-      baseCopy, path, Seq("lang", "source"), Set("price"), Some("n_docs"),
-      nnCounts = Map("price" -> "price_nn")))
-    graft.plans.SummaryViews.install(s)
-    try {
+    withRule(s, classOf[RewriteToSummary]) {
+      graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
+        baseCopy, path, Seq("lang", "source"), Set("price"), Some("n_docs"),
+        nnCounts = Map("price" -> "price_nn")))
       val q = s.read.parquet(baseCopy)
         .where(col("lang") =!= "en")
         .groupBy("source")
         .agg(avg(col("price")).cast("double").as("avg_price"),
           sum(col("price")).cast("double").as("sum_price"))
-      val readsState = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              f.location.rootPaths.exists(p =>
-                p.toString.contains("agg_mv_avg_dec_state") &&
-                  p.toString.endsWith("/state"))
-            case _ => false
-          }
-      }.exists(identity)
-      require(readsState,
+      require(readsState(q, "agg_mv_avg_dec_state"),
         "agg_mv_rewrite_avg_decimal: the decimal-AVG rewrite did not " +
           "fire — the optimized plan still reads the base table")
       q.localCheckpoint()
-    } finally {
-      graft.plans.SummaryViews.uninstall(s)
-      graft.plans.SummaryViews.unregister(baseCopy)
     }
   }
 
@@ -577,35 +536,21 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         nBuckets = 8, batchId = i,
         minCols = Seq("n_chars_min"), maxCols = Seq("n_chars_max"))
     }
-    graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
-      base, path, Seq("lang", "source"), Set("n_chars"), None,
-      minCols = Map("n_chars" -> "n_chars_min"),
-      maxCols = Map("n_chars" -> "n_chars_max")))
-    graft.plans.SummaryViews.install(s)
-    try {
+    withRule(s, classOf[RewriteToSummary]) {
+      graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
+        base, path, Seq("lang", "source"), Set("n_chars"), None,
+        minCols = Map("n_chars" -> "n_chars_min"),
+        maxCols = Map("n_chars" -> "n_chars_max")))
       val q = s.read.parquet(base)
         .where(col("source") =!= "web")
         .groupBy("lang")
         .agg(min(col("n_chars")).as("min_chars"),
           max(col("n_chars")).as("max_chars"),
           sum(col("n_chars")).as("sum_chars"))
-      val readsState = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              f.location.rootPaths.exists(p =>
-                p.toString.contains("agg_mv_rewrite_minmax") &&
-                  p.toString.endsWith("/state"))
-            case _ => false
-          }
-      }.exists(identity)
-      require(readsState,
+      require(readsState(q, "agg_mv_rewrite_minmax"),
         "agg_mv_rewrite_minmax: the MIN/MAX rewrite did not fire — the " +
           "optimized plan still reads the base table")
       q.localCheckpoint()
-    } finally {
-      graft.plans.SummaryViews.uninstall(s)
-      graft.plans.SummaryViews.unregister(base)
     }
   }
 
@@ -647,31 +592,17 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
       ghost.withColumn("n_docs", lit(-1L)),
       keyCols = Seq("lang", "source"), sumCols = Seq("n_docs"),
       nBuckets = 8, batchId = 4L)
-    graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
-      base, path, Seq("lang", "source"), Set.empty, Some("n_docs")))
-    graft.plans.SummaryViews.install(s)
-    try {
+    withRule(s, classOf[RewriteToSummary]) {
+      graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
+        base, path, Seq("lang", "source"), Set.empty, Some("n_docs")))
       val q = s.read.parquet(base)
         .groupBy("lang")
         .agg(countDistinct(col("source")).as("n_sources"),
           count(lit(1)).as("n_docs"))
-      val readsState = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              f.location.rootPaths.exists(p =>
-                p.toString.contains("agg_mv_rewrite_distinct") &&
-                  p.toString.endsWith("/state"))
-            case _ => false
-          }
-      }.exists(identity)
-      require(readsState,
+      require(readsState(q, "agg_mv_rewrite_distinct"),
         "agg_mv_rewrite_distinct: the summary rewrite did not fire — the " +
           "optimized plan still reads the base table")
       q.localCheckpoint()
-    } finally {
-      graft.plans.SummaryViews.uninstall(s)
-      graft.plans.SummaryViews.unregister(base)
     }
   }
 
@@ -703,33 +634,19 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         keyCols = Seq("lang", "source"), sumCols = Seq("n_docs"),
         nBuckets = 8, batchId = i)
     }
-    graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
-      base, path, Seq("lang", "source"), Set.empty, Some("n_docs")))
-    graft.plans.SummaryViews.install(s)
-    try {
+    withRule(s, classOf[RewriteToSummary]) {
+      graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
+        base, path, Seq("lang", "source"), Set.empty, Some("n_docs")))
       val q = s.read.parquet(base)
         .groupBy(upper(col("lang")).as("lang_uc"),
           substring(col("source"), 1, 2).as("src2"))
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(col("source")).as("n_sources"))
-      val readsState = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              f.location.rootPaths.exists(p =>
-                p.toString.contains("agg_mv_rewrite_expr") &&
-                  p.toString.endsWith("/state"))
-            case _ => false
-          }
-      }.exists(identity)
-      require(readsState,
+      require(readsState(q, "agg_mv_rewrite_expr"),
         "agg_mv_rewrite_expr: the summary rewrite did not fire on the " +
           "expression-grouped query — the optimized plan still reads the " +
           "base table")
       q.localCheckpoint()
-    } finally {
-      graft.plans.SummaryViews.uninstall(s)
-      graft.plans.SummaryViews.unregister(base)
     }
   }
 
@@ -768,10 +685,9 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         keyCols = Seq("lang", "source"), sumCols = Seq("n_chars", "n_docs"),
         nBuckets = 8, batchId = i)
     }
-    graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
-      base, path, Seq("lang", "source"), Set("n_chars"), Some("n_docs")))
-    graft.plans.SummaryViews.install(s)
-    try {
+    withRule(s, classOf[RewriteToSummary]) {
+      graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
+        base, path, Seq("lang", "source"), Set("n_chars"), Some("n_docs")))
       val f = s.read.parquet(base)
       val dim = s.read.parquet(base)
         .select(col("lang").as("d_lang"),
@@ -782,24 +698,12 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         .groupBy("tier")
         .agg(sum(col("n_chars")).as("sum_chars"),
           count(lit(1)).as("n_docs"))
-      val rels = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case hf: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              hf.location.rootPaths.map(_.toString)
-            case _ => Nil
-          }
-      }.flatten
-      require(rels.exists(p => p.contains("agg_mv_rewrite_join") &&
-          p.endsWith("/state")),
+      require(readsState(q, "agg_mv_rewrite_join"),
         "agg_mv_rewrite_join: the star-schema rewrite did not fire")
-      require(!rels.exists(_.contains("documents")),
+      require(!scans(q).exists(_.roots.exists(_.contains("documents"))),
         "agg_mv_rewrite_join: the plan still reads the BASE table — " +
           "both rewrite tiers must compose to summary-only I/O")
       q.localCheckpoint()
-    } finally {
-      graft.plans.SummaryViews.uninstall(s)
-      graft.plans.SummaryViews.unregister(base)
     }
   }
 
@@ -837,10 +741,9 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         keyCols = Seq("lang", "source"), sumCols = Seq("n_chars", "n_docs"),
         nBuckets = 8, batchId = i)
     }
-    graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
-      base, path, Seq("lang", "source"), Set("n_chars"), Some("n_docs")))
-    graft.plans.SummaryViews.install(s)
-    try {
+    withRule(s, classOf[RewriteToSummary]) {
+      graft.plans.SummaryViews.register(graft.plans.SummaryViews.View(
+        base, path, Seq("lang", "source"), Set("n_chars"), Some("n_docs")))
       val f = s.read.parquet(base)
       val d1 = s.read.parquet(base)
         .select(col("lang").as("d_lang"),
@@ -853,24 +756,12 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         .groupBy("tier", "src_u")
         .agg(sum(col("n_chars")).as("sum_chars"),
           count(lit(1)).as("n_docs"))
-      val rels = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case hf: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              hf.location.rootPaths.map(_.toString)
-            case _ => Nil
-          }
-      }.flatten
-      require(rels.exists(p => p.contains("agg_mv_rewrite_star") &&
-          p.endsWith("/state")),
+      require(readsState(q, "agg_mv_rewrite_star"),
         "agg_mv_rewrite_star: the multi-dim star rewrite did not fire")
-      require(!rels.exists(_.contains("documents")),
+      require(!scans(q).exists(_.roots.exists(_.contains("documents"))),
         "agg_mv_rewrite_star: the plan still reads the BASE table — " +
           "all three rewrite firings must compose to summary-only I/O")
       q.localCheckpoint()
-    } finally {
-      graft.plans.SummaryViews.uninstall(s)
-      graft.plans.SummaryViews.unregister(base)
     }
   }
 
@@ -908,16 +799,8 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
     val joined = graft.sources.BloomIndex.prunedJoin(
       s, path, "l_orderkey", dim, "o_orderkey")
     val totalFiles = s.read.parquet(s"$path/_bloomindex").count()
-    val factFiles = joined.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-              if f.location.rootPaths.exists(_.toString.contains(
-                "join_bloom_pruned")) =>
-            f.location.rootPaths.length.toLong
-          case _ => 0L
-        }
-    }.sum
+    val factFiles = scans(joined).filter(_.roots.exists(
+      _.contains("join_bloom_pruned"))).map(_.roots.length.toLong).sum
     require(factFiles > 0 && factFiles < totalFiles,
       s"join_bloom_pruned: expected file skipping to engage " +
         s"($factFiles of $totalFiles files)")
@@ -950,10 +833,9 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
       .write.mode("overwrite").parquet(path)
     graft.sources.BloomIndex.write(s, path, Seq("l_orderkey"),
       expectedItemsPerFile = 200000, fpp = 0.01)
-    graft.plans.BloomJoins.register(graft.plans.BloomJoins.Layout(
-      path, "l_orderkey"))
-    graft.plans.BloomJoins.install(s)
-    try {
+    withRule(s, classOf[RewriteToBloomPrunedJoin]) {
+      graft.plans.BloomJoins.register(graft.plans.BloomJoins.Layout(
+        path, "l_orderkey"))
       val fact = s.read.parquet(path)
       val dim = Tables.orders(s, dir)
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -961,18 +843,7 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
       val joined = fact.join(dim,
         fact("l_orderkey") === dim("o_orderkey")) // the PLAIN spelling
       val totalFiles = s.read.parquet(s"$path/_bloomindex").count()
-      val factFiles = joined.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if f.location.rootPaths.exists(_.toString.contains(
-                  "join_bloom_pruned_auto")) =>
-              // count the FILE LISTING, not rootPaths — an un-rewritten
-              // directory scan has one root path over all 16 files
-              f.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val factFiles = filesRead(joined, "join_bloom_pruned_auto")
       require(factFiles > 0 && factFiles < totalFiles,
         s"join_bloom_pruned_auto: expected the RULE to skip files " +
           s"($factFiles of $totalFiles)")
@@ -981,9 +852,6 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
           dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 6)
             .as("revenue"))
         .localCheckpoint()
-    } finally {
-      graft.plans.BloomJoins.uninstall(s)
-      graft.plans.BloomJoins.unregister(path)
     }
   }
 
@@ -1014,12 +882,11 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
     graft.sources.BloomIndex.write(s, path,
       Seq("l_orderkey", "l_partkey"),
       expectedItemsPerFile = 200000, fpp = 0.01)
-    graft.plans.BloomJoins.register(graft.plans.BloomJoins.Layout(
-      path, "l_orderkey"))
-    graft.plans.BloomJoins.register(graft.plans.BloomJoins.Layout(
-      path, "l_partkey"))
-    graft.plans.BloomJoins.install(s)
-    try {
+    withRule(s, classOf[RewriteToBloomPrunedJoin]) {
+      graft.plans.BloomJoins.register(graft.plans.BloomJoins.Layout(
+        path, "l_orderkey"))
+      graft.plans.BloomJoins.register(graft.plans.BloomJoins.Layout(
+        path, "l_partkey"))
       val fact = s.read.parquet(path)
       val dim = Tables.lineitem(s, dir)
         .orderBy(col("l_extendedprice").desc, col("l_orderkey"),
@@ -1030,16 +897,7 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         fact("l_orderkey") === dim("k1") &&
           fact("l_partkey") === dim("k2")) // the PLAIN two-key spelling
       val totalFiles = s.read.parquet(s"$path/_bloomindex").count()
-      val factFiles = joined.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if f.location.rootPaths.exists(_.toString.contains(
-                  "join_bloom_composite")) =>
-              f.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val factFiles = filesRead(joined, "join_bloom_composite")
       require(factFiles > 0 && factFiles < totalFiles,
         s"join_bloom_pruned_composite: expected the two-key RULE to skip " +
           s"files ($factFiles of $totalFiles)")
@@ -1048,9 +906,6 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
           dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 6)
             .as("revenue"))
         .localCheckpoint()
-    } finally {
-      graft.plans.BloomJoins.uninstall(s)
-      graft.plans.BloomJoins.unregister(path)
     }
   }
 
@@ -1075,10 +930,7 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
       .write.mode("overwrite").parquet(path)
     graft.sources.ZoneMap.write(s, path, Seq("doc_id"))
     // registration arrives via the writer's self-description + discovery
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.BloomJoins.install(s)
-    try {
+    withRule(s, classOf[RewriteToBloomPrunedJoin]) {
       val f = s.read.parquet(path)
       val dim = docs.orderBy(col("doc_id")).limit(8)
         .select(col("doc_id").as("id"))
@@ -1086,23 +938,11 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
       val totalFiles = s.read.parquet(s"$path/_zonemap").count()
-      val factFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if f.location.rootPaths.exists(_.toString.contains(
-                  "join_zone_pruned")) =>
-              f.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val factFiles = filesRead(q, "join_zone_pruned")
       require(factFiles > 0 && factFiles < totalFiles,
         s"join_zone_pruned_range: expected the dim [min,max] to zone-skip " +
           s"files ($factFiles of $totalFiles)")
       q.localCheckpoint()
-    } finally {
-      graft.plans.BloomJoins.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -1133,10 +973,7 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
     graft.sources.ZoneMap.write(s, path, Seq("n_chars"))
     // registrations arrive via the writers' self-description: clear the
     // registries to the fresh-session state and let DISCOVERY fill them
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.BloomJoins.install(s)
-    try {
+    withRule(s, classOf[RewriteToBloomPrunedJoin]) {
       val f = s.read.parquet(path).where(col("n_chars") >= 300L)
       // the dim reads the ORIGINAL table (same rows), so the file-count
       // REQUIRE below measures the fact layout alone
@@ -1147,23 +984,11 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
       val totalFiles = s.read.parquet(s"$path/_zonemap").count()
-      val factFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if f.location.rootPaths.exists(_.toString.contains(
-                  "join_bloom_zone")) =>
-              f.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val factFiles = filesRead(q, "join_bloom_zone")
       require(factFiles > 0 && factFiles < totalFiles,
         s"join_bloom_zone_composed: expected the composed rule to skip " +
           s"files ($factFiles of $totalFiles)")
       q.localCheckpoint()
-    } finally {
-      graft.plans.BloomJoins.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 }

@@ -1067,7 +1067,7 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
       .outputMode("update")
       .option("checkpointLocation", s"$base/checkpoint")
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(300000)
+    awaitDrained(q)
     val ids = s.table(qname).orderBy(desc("version")).limit(1)
       .select(explode(col("docIds")).as("doc_id"))
     graft.functions.CorpusOps.sampleWeightedK(

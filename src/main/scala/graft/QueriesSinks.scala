@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.cdc.CdcEnvelope
 import graft.operators.{Batching, Enrichment, Filters, PartitionKeys}
 import graft.functions.{Dedup, Multimodal, Similarity, TextFunctions => TF}
+import graft.plans.{RewriteToBloomPrunedJoin, RewriteToMetaAggregate, RewriteToSummary}
 
 /** Serializer / sink round-trips (SURVEY §2.3 T1-T7 + §2.8) and the quality/layout entries that ride the sink root.
   *
@@ -743,33 +744,18 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       // (registries + discovery cache cleared) REQUIREs the pruning to
       // arrive purely through catalog DISCOVERY — zero register() calls
       graft.sources.ZoneMap.write(s, path, Seq("value"))
-      graft.plans.BloomJoins.clear()
-      graft.plans.GraftCatalog.clearCache()
-      graft.plans.BloomJoins.install(s)
-      try {
+      withRule(s, classOf[RewriteToBloomPrunedJoin]) {
         val q = s.read.parquet(path)
           .where(col("value") >= 100.0 && col("value") <= 200.0) // PLAIN
           .agg(count(lit(1)).as("n_events"),
             countDistinct(col("user_id")).as("n_users"),
             dsum(col("value")).as("sum_value"))
         val totalFiles = s.read.parquet(s"$path/_zonemap").count()
-        val factFiles = q.queryExecution.optimizedPlan.collect {
-          case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            r.relation match {
-              case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                  if f.location.rootPaths.exists(_.toString.contains(
-                    "layout_zonemap_auto_range")) =>
-                f.location.inputFiles.length.toLong
-              case _ => 0L
-            }
-        }.sum
+        val factFiles = filesRead(q, "layout_zonemap_auto_range")
         require(factFiles > 0 && factFiles < totalFiles,
           s"layout_zonemap_auto_range: expected the RULE to skip files " +
             s"($factFiles of $totalFiles)")
         q.localCheckpoint()
-      } finally {
-        graft.plans.BloomJoins.uninstall(s)
-        graft.plans.BloomJoins.clear()
       }
   }
 
@@ -797,32 +783,17 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       expectedItemsPerFile = 100000, fpp = 0.01)
     val ids = docs.select(col("doc_id")).orderBy(col("doc_id")).limit(5)
       .collect().map(_.getLong(0)).toSeq
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.BloomJoins.install(s)
-    try {
+    withRule(s, classOf[RewriteToBloomPrunedJoin]) {
       val q = s.read.parquet(path)
         .where(col("doc_id").isin(ids: _*)) // the PLAIN spelling
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
       val totalFiles = s.read.parquet(s"$path/_bloomindex").count()
-      val factFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if f.location.rootPaths.exists(_.toString.contains(
-                  "layout_bloom_auto_pl")) =>
-              f.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val factFiles = filesRead(q, "layout_bloom_auto_pl")
       require(factFiles > 0 && factFiles < totalFiles,
         s"layout_bloom_auto_pointlookup: expected DISCOVERY of the " +
           s"self-written catalog to skip files ($factFiles of $totalFiles)")
       q.localCheckpoint()
-    } finally {
-      graft.plans.BloomJoins.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -852,32 +823,17 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       path, "doc_id"))
     graft.plans.GraftCatalog.save(s, path)
     // the fresh-session state: registries and discovery memory emptied
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.BloomJoins.install(s)
-    try {
+    withRule(s, classOf[RewriteToBloomPrunedJoin]) {
       val q = s.read.parquet(path)
         .where(col("doc_id").isin(ids: _*)) // the PLAIN spelling
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
       val totalFiles = s.read.parquet(s"$path/_bloomindex").count()
-      val factFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if f.location.rootPaths.exists(_.toString.contains(
-                  "layout_catalog_fs")) =>
-              f.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val factFiles = filesRead(q, "layout_catalog_fs")
       require(factFiles > 0 && factFiles < totalFiles,
         s"layout_catalog_fresh_session: expected DISCOVERY to let the " +
           s"rule skip files ($factFiles of $totalFiles)")
       q.localCheckpoint()
-    } finally {
-      graft.plans.BloomJoins.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -901,10 +857,7 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       .repartitionByRange(8, col("doc_id"))
       .write.mode("overwrite").parquet(path)
     graft.sources.ZoneMap.write(s, path, Seq("doc_id", "n_chars"))
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.MetaAgg.install(s)
-    try {
+    withRule(s, classOf[RewriteToMetaAggregate]) {
       val fired0 = graft.plans.MetaAgg.served.get()
       val q = s.read.parquet(path).agg(
         count(lit(1)).as("n_docs"),
@@ -914,25 +867,12 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
         count(col("n_chars")).as("chars_cnt"),
         min(col("doc_id")).as("min_doc"),
         max(col("doc_id")).as("max_doc"))
-      val dataFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if f.location.rootPaths.exists(p =>
-                  p.toString.contains("agg_meta_profile") &&
-                    !p.toString.contains("_zonemap")) =>
-              f.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val dataFiles = filesRead(q, "agg_meta_profile")
       require(graft.plans.MetaAgg.served.get() > fired0 && dataFiles == 0L,
         s"agg_meta_profile: expected a manifest-only plan " +
           s"(fired=${graft.plans.MetaAgg.served.get() - fired0}, " +
           s"dataFiles=$dataFiles)")
       q.localCheckpoint()
-    } finally {
-      graft.plans.MetaAgg.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -956,10 +896,7 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       Tables.events(s, dir).repartitionByRange(16, col("ts"))
         .write.mode("overwrite").parquet(path)
       graft.sources.ZoneMap.write(s, path, Seq("ts", "user_id", "value"))
-      graft.plans.BloomJoins.clear()
-      graft.plans.GraftCatalog.clearCache()
-      graft.plans.MetaAgg.install(s)
-      try {
+      withRule(s, classOf[RewriteToMetaAggregate]) {
         val fired0 = graft.plans.MetaAgg.served.get()
         val q = s.read.parquet(path)
           .where(col("ts") >= lit("2024-01-08 00:00:00").cast("timestamp") &&
@@ -969,25 +906,12 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
             min(col("value")).as("value_min"),
             max(col("value")).as("value_max"))
         val totalFiles = s.read.parquet(s"$path/_zonemap").count()
-        val dataFiles = q.queryExecution.optimizedPlan.collect {
-          case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            r.relation match {
-              case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                  if f.location.rootPaths.exists(p =>
-                    p.toString.contains("agg_meta_range") &&
-                      !p.toString.contains("_zonemap")) =>
-                f.location.inputFiles.length.toLong
-              case _ => 0L
-            }
-        }.sum
+        val dataFiles = filesRead(q, "agg_meta_range")
         require(graft.plans.MetaAgg.served.get() > fired0 &&
             dataFiles < totalFiles,
           s"agg_meta_range: expected boundary-only scanning " +
             s"($dataFiles of $totalFiles)")
         q.localCheckpoint()
-      } finally {
-        graft.plans.MetaAgg.uninstall(s)
-        graft.plans.BloomJoins.clear()
       }
   }
 
@@ -1009,10 +933,7 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       .repartitionByRange(8, col("lang"), col("doc_id"))
       .write.mode("overwrite").parquet(path)
     graft.sources.ZoneMap.write(s, path, Seq("lang", "n_chars", "doc_id"))
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.MetaAgg.install(s)
-    try {
+    withRule(s, classOf[RewriteToMetaAggregate]) {
       val fired0 = graft.plans.MetaAgg.served.get()
       val q = s.read.parquet(path).groupBy(col("lang")).agg(
         count(lit(1)).as("n_docs"),
@@ -1020,25 +941,12 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
         min(col("n_chars")).as("min_chars"),
         max(col("n_chars")).as("max_chars"))
       val totalFiles = s.read.parquet(s"$path/_zonemap").count()
-      val dataFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if f.location.rootPaths.exists(p =>
-                  p.toString.contains("agg_meta_grouped") &&
-                    !p.toString.contains("_zonemap")) =>
-              f.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val dataFiles = filesRead(q, "agg_meta_grouped")
       require(graft.plans.MetaAgg.served.get() > fired0 &&
           dataFiles < totalFiles,
         s"agg_meta_grouped: expected homogeneous files served from the " +
           s"manifest ($dataFiles of $totalFiles)")
       q.localCheckpoint()
-    } finally {
-      graft.plans.MetaAgg.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -1063,10 +971,7 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
     Tables.events(s, dir).repartitionByRange(16, col("ts"))
       .write.mode("overwrite").parquet(path)
     graft.sources.ZoneMap.write(s, path, Seq("ts", "user_id", "value"))
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.MetaAgg.install(s)
-    try {
+    withRule(s, classOf[RewriteToMetaAggregate]) {
       val fired0 = graft.plans.MetaAgg.served.get()
       val q = s.read.parquet(path)
         .groupBy(to_date(date_trunc("week", col("ts"))).as("wk"))
@@ -1075,25 +980,12 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
           min(col("value")).as("value_min"),
           max(col("value")).as("value_max"))
       val totalFiles = s.read.parquet(s"$path/_zonemap").count()
-      val dataFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if f.location.rootPaths.exists(p =>
-                  p.toString.contains("agg_meta_grouped_expr") &&
-                    !p.toString.contains("_zonemap")) =>
-              f.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val dataFiles = filesRead(q, "agg_meta_grouped_expr")
       require(graft.plans.MetaAgg.served.get() > fired0 &&
           dataFiles < totalFiles,
         s"agg_meta_grouped_expr: expected week-homogeneous files served " +
           s"from the manifest ($dataFiles of $totalFiles)")
       q.localCheckpoint()
-    } finally {
-      graft.plans.MetaAgg.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -1112,27 +1004,14 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       .repartitionByRange(16, col("lang"), col("doc_id"))
       .write.mode("overwrite").parquet(path)
     graft.sources.ZoneMap.write(s, path, Seq("lang"))
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.MetaAgg.install(s)
-    try {
+    withRule(s, classOf[RewriteToMetaAggregate]) {
       val fired0 = graft.plans.MetaAgg.served.get()
       val qd = s.read.parquet(path).select(col("lang")).distinct()
       val qc = s.read.parquet(path)
         .agg(countDistinct(col("lang")).as("n_langs"))
       val nLangs = qc.collect().head.getLong(0)
       val totalFiles = s.read.parquet(s"$path/_zonemap").count()
-      val dataFiles = qd.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if f.location.rootPaths.exists(p =>
-                  p.toString.contains("agg_meta_distinct") &&
-                    !p.toString.contains("_zonemap")) =>
-              f.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val dataFiles = filesRead(qd, "agg_meta_distinct")
       require(graft.plans.MetaAgg.served.get() - fired0 >= 2 &&
           dataFiles < totalFiles,
         s"agg_meta_distinct: expected distinct values served from the " +
@@ -1140,9 +1019,6 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       require(nLangs == qd.count(),
         "count(DISTINCT lang) must agree with the distinct row set")
       qd.localCheckpoint()
-    } finally {
-      graft.plans.MetaAgg.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -1170,10 +1046,7 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       .write.mode("overwrite").parquet(path)
     graft.sources.ZoneMap.write(s, path,
       Seq("event_type", "ts", "value"))
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.MetaAgg.install(s)
-    try {
+    withRule(s, classOf[RewriteToMetaAggregate]) {
       val fired0 = graft.plans.MetaAgg.servedJoin.get()
       val dim = Tables.events(s, dir)
         .where(col("event_type").isin("purchase", "signup"))
@@ -1184,25 +1057,12 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
         .agg(count(lit(1)).as("n_events"),
           min(col("value")).as("v_min"))
       val totalFiles = s.read.parquet(s"$path/_zonemap").count()
-      val dataFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case fr: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if fr.location.rootPaths.exists(p =>
-                  p.toString.contains("agg_meta_join_dim_grp") &&
-                    !p.toString.contains("_zonemap")) =>
-              fr.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val dataFiles = filesRead(q, "agg_meta_join_dim_grp")
       require(graft.plans.MetaAgg.servedJoin.get() > fired0 &&
           dataFiles < totalFiles,
         s"agg_meta_join_dim_grouped: expected grouped dim-join serving " +
           s"($dataFiles of $totalFiles)")
       q.localCheckpoint()
-    } finally {
-      graft.plans.MetaAgg.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -1232,10 +1092,7 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       .write.mode("overwrite").parquet(path)
     graft.sources.ZoneMap.write(s, path,
       Seq("event_type", "user_id", "value"))
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.MetaAgg.install(s)
-    try {
+    withRule(s, classOf[RewriteToMetaAggregate]) {
       val fired0 = graft.plans.MetaAgg.servedJoin.get()
       val dim = Tables.events(s, dir)
         .where(col("event_type").isin("purchase", "signup"))
@@ -1247,26 +1104,13 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
           min(col("value")).as("v_min"),
           max(col("value")).as("v_max"))
       val totalFiles = s.read.parquet(s"$path/_zonemap").count()
-      val dataFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case fr: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if fr.location.rootPaths.exists(p =>
-                  p.toString.contains("agg_meta_join_dim") &&
-                    !p.toString.contains("_zonemap")) =>
-              fr.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val dataFiles = filesRead(q, "agg_meta_join_dim")
       require(graft.plans.MetaAgg.servedJoin.get() > fired0 &&
           dataFiles < totalFiles,
         s"agg_meta_join_dim: expected key-homogeneous files served under " +
           s"the join ($dataFiles of $totalFiles)\n" +
           q.queryExecution.optimizedPlan.toString)
       q.localCheckpoint()
-    } finally {
-      graft.plans.MetaAgg.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -1300,10 +1144,7 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       .write.mode("overwrite").parquet(path)
     graft.sources.ZoneMap.write(s, path,
       Seq("event_type", "category", "user_id", "value"))
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.MetaAgg.install(s)
-    try {
+    withRule(s, classOf[RewriteToMetaAggregate]) {
       val fired0 = graft.plans.MetaAgg.servedJoin.get()
       val d1 = Tables.events(s, dir)
         .where(col("event_type").isin("purchase", "signup", "click"))
@@ -1319,26 +1160,13 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
           min(col("value")).as("v_min"),
           max(col("value")).as("v_max"))
       val totalFiles = s.read.parquet(s"$path/_zonemap").count()
-      val dataFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case fr: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if fr.location.rootPaths.exists(p =>
-                  p.toString.contains("agg_meta_join_star") &&
-                    !p.toString.contains("_zonemap")) =>
-              fr.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val dataFiles = filesRead(q, "agg_meta_join_star")
       require(graft.plans.MetaAgg.servedJoin.get() > fired0 &&
           dataFiles < totalFiles,
         s"agg_meta_join_star: expected key-homogeneous files served under " +
           s"the star ($dataFiles of $totalFiles)\n" +
           q.queryExecution.optimizedPlan.toString)
       q.localCheckpoint()
-    } finally {
-      graft.plans.MetaAgg.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -1358,35 +1186,19 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
     Tables.events(s, dir).repartition(2)
       .write.mode("overwrite").partitionBy("event_type").parquet(path)
     graft.sources.ZoneMap.write(s, path, Seq("user_id", "value"))
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.MetaAgg.install(s)
-    try {
+    withRule(s, classOf[RewriteToMetaAggregate]) {
       val fired0 = graft.plans.MetaAgg.served.get()
       val q = s.read.parquet(path).groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           count(col("user_id")).as("users_cnt"),
           min(col("value")).as("v_min"),
           max(col("value")).as("v_max"))
-      val dataFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case fr: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if fr.location.rootPaths.exists(p =>
-                  p.toString.contains("agg_meta_grouped_part") &&
-                    !p.toString.contains("_zonemap")) =>
-              fr.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val dataFiles = filesRead(q, "agg_meta_grouped_part")
       require(graft.plans.MetaAgg.served.get() > fired0 && dataFiles == 0L,
         s"agg_meta_grouped_part: expected partition-column groups served " +
           s"from the manifest alone ($dataFiles files read)\n" +
           q.queryExecution.optimizedPlan.toString)
       q.localCheckpoint()
-    } finally {
-      graft.plans.MetaAgg.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -1422,15 +1234,11 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
         .as("rank50"),
       (count(when(col("value") <= p99, 1)) / count(col("value")))
         .as("rank99")).head()
-    require(n == exact.getAs[Long]("n"),
-      "n_rows rides the exact zone tier")
-    require(math.abs(exact.getAs[Double]("rank50") - 0.5) <= 0.033 &&
-        math.abs(exact.getAs[Double]("rank99") - 0.99) <= 0.033,
-      s"KLL rank contract violated: rank(p50)=${exact.getAs[Double]("rank50")}" +
-        s", rank(p99)=${exact.getAs[Double]("rank99")}")
     val exactDu = exact.getAs[Long]("du")
-    require(math.abs(du - exactDu).toDouble / exactDu <= 0.05,
-      s"HLL estimate off: $du vs $exactDu")
+    // n_rows rides the exact zone tier
+    sketchGate("agg_meta_sketch_profile", n, exact.getAs[Long]("n"),
+      Seq(0.5 -> exact.getAs[Double]("rank50"),
+        0.99 -> exact.getAs[Double]("rank99")), du, exactDu)
     // the deliverable row: the manifest-served profile beside the exact
     // yardsticks it was gated against
     import s.implicits._
@@ -1462,10 +1270,7 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       .write.mode("overwrite").parquet(path)
     graft.sources.ZoneMap.write(s, path,
       Seq("event_type", "user_id", "value"))
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.MetaAgg.install(s)
-    try {
+    withRule(s, classOf[RewriteToMetaAggregate]) {
       val fired0 = graft.plans.MetaAgg.servedJoin.get()
       val dim = Tables.events(s, dir)
         .where(col("event_type").isin("purchase", "error"))
@@ -1477,26 +1282,13 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
           min(col("value")).as("v_min"),
           max(col("value")).as("v_max"))
       val totalFiles = s.read.parquet(s"$path/_zonemap").count()
-      val dataFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case fr: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if fr.location.rootPaths.exists(p =>
-                  p.toString.contains("agg_meta_join_semi") &&
-                    !p.toString.contains("_zonemap")) =>
-              fr.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val dataFiles = filesRead(q, "agg_meta_join_semi")
       require(graft.plans.MetaAgg.servedJoin.get() > fired0 &&
           dataFiles < totalFiles,
         s"agg_meta_join_semi: expected key-homogeneous files served under " +
           s"the semi join ($dataFiles of $totalFiles)\n" +
           q.queryExecution.optimizedPlan.toString)
       q.localCheckpoint()
-    } finally {
-      graft.plans.MetaAgg.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -1516,34 +1308,18 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
     Tables.events(s, dir).repartition(2)
       .write.mode("overwrite").partitionBy("event_type").parquet(path)
     graft.sources.ZoneMap.write(s, path, Seq("user_id", "value"))
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.MetaAgg.install(s)
-    try {
+    withRule(s, classOf[RewriteToMetaAggregate]) {
       val fired0 = graft.plans.MetaAgg.served.get()
       val q = s.read.parquet(path)
         .where(col("event_type").isin("purchase", "click"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"), min(col("value")).as("v_min"))
-      val dataFiles = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case fr: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if fr.location.rootPaths.exists(p =>
-                  p.toString.contains("agg_meta_part_filter") &&
-                    !p.toString.contains("_zonemap")) =>
-              fr.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val dataFiles = filesRead(q, "agg_meta_part_filter")
       require(graft.plans.MetaAgg.served.get() > fired0 && dataFiles == 0L,
         s"agg_meta_part_filter: expected partition-filtered groups served " +
           s"from the manifest alone ($dataFiles files read)\n" +
           q.queryExecution.optimizedPlan.toString)
       q.localCheckpoint()
-    } finally {
-      graft.plans.MetaAgg.uninstall(s)
-      graft.plans.BloomJoins.clear()
     }
   }
 
@@ -1582,16 +1358,10 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
         .as("rank50"),
       (count(when(col("value") <= p99, 1)) / count(col("value")))
         .as("rank99")).head()
-    require(n == exact.getAs[Long]("n"),
-      s"semi-join n_rows must be exact: $n vs ${exact.getAs[Long]("n")}")
-    require(math.abs(exact.getAs[Double]("rank50") - 0.5) <= 0.033 &&
-        math.abs(exact.getAs[Double]("rank99") - 0.99) <= 0.033,
-      s"KLL rank contract violated under the semi-join: " +
-        s"rank(p50)=${exact.getAs[Double]("rank50")}, " +
-        s"rank(p99)=${exact.getAs[Double]("rank99")}")
     val exactDu = exact.getAs[Long]("du")
-    require(math.abs(du - exactDu).toDouble / exactDu <= 0.05,
-      s"HLL estimate off under the semi-join: $du vs $exactDu")
+    sketchGate("agg_meta_sketch_semijoin", n, exact.getAs[Long]("n"),
+      Seq(0.5 -> exact.getAs[Double]("rank50"),
+        0.99 -> exact.getAs[Double]("rank99")), du, exactDu)
     import s.implicits._
     Seq((n, p50, p99, du, exactDu))
       .toDF("n_rows", "value_p50", "value_p99",
@@ -1624,38 +1394,8 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
       // would otherwise each re-run the whole manifest merge + boundary
       // scan
       .localCheckpoint()
-    // the group SET must match exactly — a silently dropped or invented
-    // group would survive the join-based per-group comparison below
-    val profTypes = prof.select("et").collect().map(_.getString(0)).toSet
-    val exactTypes = ev.select("event_type").distinct().collect()
-      .map(_.getString(0)).toSet
-    require(profTypes == exactTypes,
-      s"agg_meta_sketch_by: group sets differ — " +
-        s"missing ${exactTypes -- profTypes}, spurious ${profTypes -- exactTypes}")
-    val gated = ev.join(broadcast(prof), ev("event_type") === col("et"))
-      .groupBy(col("et"), col("n_rows"), col("value_p50"),
-        col("user_id_approx_distinct"))
-      .agg(count(lit(1)).as("n_exact"),
-        countDistinct(col("user_id")).as("du_exact"),
-        (count(when(col("value") <= col("value_p50"), 1)) /
-          count(col("value"))).as("rank50"))
-    val rows = gated.collect()
-    require(rows.nonEmpty, "agg_meta_sketch_by: no groups came back")
-    rows.foreach { r =>
-      val et = r.getAs[String]("et")
-      require(r.getAs[Long]("n_rows") == r.getAs[Long]("n_exact"),
-        s"[$et] per-group n_rows must be exact: " +
-          s"${r.getAs[Long]("n_rows")} vs ${r.getAs[Long]("n_exact")}")
-      require(math.abs(r.getAs[Double]("rank50") - 0.5) <= 0.033,
-        s"[$et] KLL rank contract violated: ${r.getAs[Double]("rank50")}")
-      val du = r.getAs[Long]("user_id_approx_distinct")
-      val duE = r.getAs[Long]("du_exact")
-      require(math.abs(du - duE).toDouble / duE <= 0.05,
-        s"[$et] HLL estimate off: $du vs $duE")
-    }
-    gated.select(col("et").as("event_type"), col("n_rows"),
-      col("value_p50"), col("user_id_approx_distinct"),
-      col("du_exact").as("exact_users"))
+    gateGroups("agg_meta_sketch_by", prof, "et", ev, "event_type",
+      tinyGroups = false)
   }
 
   register("agg_meta_sketch_semijoin_by", None) { (s, dir) =>
@@ -1692,42 +1432,10 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
         col("value_p50"), col("user_id_approx_distinct"))
       // materialize once (group-set check + gated join both read it)
       .localCheckpoint()
-    val matching = ev.where(col("event_type").isin("purchase", "click"))
-    // the group SET must match exactly — a silently dropped or invented
-    // day would survive a join-only comparison
-    val profDays = prof.select("d").collect().map(_.getString(0)).toSet
-    val exactDays = matching.select("day").distinct().collect()
-      .map(_.getString(0)).toSet
-    require(profDays == exactDays,
-      s"agg_meta_sketch_semijoin_by: group sets differ — " +
-        s"missing ${exactDays -- profDays}, spurious ${profDays -- exactDays}")
-    val gated = matching.join(broadcast(prof), matching("day") === col("d"))
-      .groupBy(col("d"), col("n_rows"), col("value_p50"),
-        col("user_id_approx_distinct"))
-      .agg(count(lit(1)).as("n_exact"),
-        countDistinct(col("user_id")).as("du_exact"),
-        (count(when(col("value") <= col("value_p50"), 1)) /
-          count(col("value"))).as("rank50"))
-    val rows = gated.collect()
-    require(rows.nonEmpty, "agg_meta_sketch_semijoin_by: no groups came back")
-    rows.foreach { r =>
-      val d = r.getAs[String]("d")
-      require(r.getAs[Long]("n_rows") == r.getAs[Long]("n_exact"),
-        s"[$d] per-group n_rows over MATCHING rows must be exact: " +
-          s"${r.getAs[Long]("n_rows")} vs ${r.getAs[Long]("n_exact")}")
-      // + 1/n: a tiny group's EXACT median is itself ceil(n/2)/n — up to
-      // one item-rank off the nominal 0.5 (sf0.001 days carry ~10 rows)
-      require(math.abs(r.getAs[Double]("rank50") - 0.5) <=
-          0.033 + 1.0 / r.getAs[Long]("n_exact"),
-        s"[$d] KLL rank contract violated: ${r.getAs[Double]("rank50")}")
-      val du = r.getAs[Long]("user_id_approx_distinct")
-      val duE = r.getAs[Long]("du_exact")
-      require(math.abs(du - duE).toDouble / duE <= 0.05,
-        s"[$d] HLL estimate off: $du vs $duE")
-    }
-    gated.select(col("d").as("day"), col("n_rows"),
-      col("value_p50"), col("user_id_approx_distinct"),
-      col("du_exact").as("exact_users"))
+    // sf0.001 days carry ~10 rows: tiny groups
+    gateGroups("agg_meta_sketch_semijoin_by", prof, "d",
+      ev.where(col("event_type").isin("purchase", "click")), "day",
+      tinyGroups = true)
   }
 
   register("agg_meta_sketch_banded", None) { (s, dir) =>
@@ -1758,38 +1466,9 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
         col("value_p50"), col("user_id_approx_distinct"))
       // materialize once (group-set check + gated join both read it)
       .localCheckpoint()
-    val matching = ev.where(col("value") >= lo && col("value") <= hi)
-    val profDays = prof.select("d").collect().map(_.getString(0)).toSet
-    val exactDays = matching.select("day").distinct().collect()
-      .map(_.getString(0)).toSet
-    require(profDays == exactDays,
-      s"agg_meta_sketch_banded: group sets differ — " +
-        s"missing ${exactDays -- profDays}, spurious ${profDays -- exactDays}")
-    val gated = matching.join(broadcast(prof), matching("day") === col("d"))
-      .groupBy(col("d"), col("n_rows"), col("value_p50"),
-        col("user_id_approx_distinct"))
-      .agg(count(lit(1)).as("n_exact"),
-        countDistinct(col("user_id")).as("du_exact"),
-        (count(when(col("value") <= col("value_p50"), 1)) /
-          count(col("value"))).as("rank50"))
-    val rows = gated.collect()
-    require(rows.nonEmpty, "agg_meta_sketch_banded: no groups came back")
-    rows.foreach { r =>
-      val d = r.getAs[String]("d")
-      require(r.getAs[Long]("n_rows") == r.getAs[Long]("n_exact"),
-        s"[$d] per-group n_rows over BAND rows must be exact: " +
-          s"${r.getAs[Long]("n_rows")} vs ${r.getAs[Long]("n_exact")}")
-      require(math.abs(r.getAs[Double]("rank50") - 0.5) <=
-          0.033 + 1.0 / r.getAs[Long]("n_exact"),
-        s"[$d] KLL rank contract violated: ${r.getAs[Double]("rank50")}")
-      val du = r.getAs[Long]("user_id_approx_distinct")
-      val duE = r.getAs[Long]("du_exact")
-      require(math.abs(du - duE).toDouble / duE <= 0.05,
-        s"[$d] HLL estimate off: $du vs $duE")
-    }
-    gated.select(col("d").as("day"), col("n_rows"),
-      col("value_p50"), col("user_id_approx_distinct"),
-      col("du_exact").as("exact_users"))
+    gateGroups("agg_meta_sketch_banded", prof, "d",
+      ev.where(col("value") >= lo && col("value") <= hi), "day",
+      tinyGroups = true)
   }
 
   register("agg_meta_topk_by", Some(
@@ -1929,31 +1608,15 @@ private[graft] trait QueriesSinks { this: QueryDomain =>
         nBuckets = 8, batchId = i, describeView = Some(view))
     }
     // the fresh-session state: registries and discovery memory emptied
-    graft.plans.SummaryViews.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.SummaryViews.install(s)
-    try {
+    withRule(s, classOf[RewriteToSummary]) {
       val q = s.read.parquet(baseCopy)
         .groupBy("lang")
         .agg(sum(col("n_chars")).as("sum_chars"),
           count(lit(1)).as("n_docs"))
-      val readsState = q.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              f.location.rootPaths.exists(p =>
-                p.toString.contains("agg_mv_catalog_state") &&
-                  p.toString.endsWith("/state"))
-            case _ => false
-          }
-      }.exists(identity)
-      require(readsState,
+      require(readsState(q, "agg_mv_catalog_state"),
         "agg_mv_rewrite_catalog: expected DISCOVERY of the fold-written " +
           "catalog to route the aggregate onto the summary")
       q.localCheckpoint()
-    } finally {
-      graft.plans.SummaryViews.uninstall(s)
-      graft.plans.SummaryViews.clear()
     }
   }
 

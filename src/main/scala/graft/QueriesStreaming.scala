@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.cdc.CdcEnvelope
 import graft.operators.{Batching, Enrichment, Filters, PartitionKeys}
 import graft.functions.{Dedup, Multimodal, Similarity, TextFunctions => TF}
+import graft.plans.{RewriteToBloomPrunedJoin, RewriteToMetaAggregate}
 
 /** Streaming runtime entries (SURVEY §7.2): the same feed through readStream → CdcPipeline → destination, verified by the batch oracle.
   *
@@ -26,11 +27,6 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
   // ==========================================================================
 
 
-  private val streamDDL =
-    "operation string, database string, collection string, " +
-      "cluster_time timestamp, document_key string, full_document string, " +
-      "resume_token string, event_id long, user_id long, value double"
-
   register("stream_pipeline_roundtrip", Some(
     """SELECT 'c_' || CAST(user_id % 8 AS VARCHAR) AS collection,
       |  count(*) AS n_events, count(DISTINCT event_id) AS n_ids,
@@ -39,21 +35,14 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
       |GROUP BY 1""".stripMargin)) { (s, dir) =>
     import graft.streaming._
     val tag = dir.replaceAll("[^0-9.]", "")
-    val base = s"$sinkRoot/stream-pipeline-$tag"
-    val src = sharedStreamSource(s, dir)
     // fresh checkpoint/output per invocation => deterministic full replay
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    Seq("checkpoint", "out").foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/$d"), true))
-    val dest = new FileDestination(s"$base/out", graft.sources.OutFormat.Jsonl,
-      graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.CollectionBased)
-    val cfg = PipelineConfig(sourceDir = src, schemaDDL = streamDDL,
-      checkpointDir = s"$base/checkpoint", queryName = s"stream-rt-$tag",
-      triggerInterval = None, // AvailableNow: drain-and-stop
-      transform = df => graft.operators.Filters
-        .byOperations(df, Seq("purchase", "signup")))
-    val q = CdcPipeline.start(s, cfg, dest)
-    q.awaitTermination(300000)
+    val dest = drain(s, s"$sinkRoot/stream-pipeline-$tag",
+        sharedStreamSource(s, dir), s"stream-rt-$tag",
+        transform = df => graft.operators.Filters
+          .byOperations(df, Seq("purchase", "signup"))) { out =>
+      new FileDestination(out, graft.sources.OutFormat.Jsonl,
+        graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.CollectionBased)
+    }
     dest.readBack(s, Some(streamDDL))
       .groupBy("collection")
       .agg(count(lit(1)).as("n_events"),
@@ -77,51 +66,27 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
     // discovery-driven pruning all sit under one gate.
     val tag = dir.replaceAll("[^0-9.]", "")
     val base = s"$sinkRoot/stream-catalog-$tag"
-    val src = sharedStreamSource(s, dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    Seq("checkpoint", "out").foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/$d"), true))
+    drain(s, base, sharedStreamSource(s, dir), s"stream-cat-$tag") { out =>
+      new FileDestination(out, graft.sources.OutFormat.Parquet,
+        graft.sources.OutCompression.Snappy,
+        graft.operators.KeyStrategy.CollectionBased,
+        bloomIndexCols = Seq("event_id"),
+        bloomExpectedItemsPerFile = 200000)
+    }
     val out = s"$base/out"
-    val dest = new FileDestination(out, graft.sources.OutFormat.Parquet,
-      graft.sources.OutCompression.Snappy,
-      graft.operators.KeyStrategy.CollectionBased,
-      bloomIndexCols = Seq("event_id"),
-      bloomExpectedItemsPerFile = 200000)
-    val cfg = PipelineConfig(sourceDir = src, schemaDDL = streamDDL,
-      checkpointDir = s"$base/checkpoint", queryName = s"stream-cat-$tag",
-      triggerInterval = None) // AvailableNow: drain-and-stop
-    val q = CdcPipeline.start(s, cfg, dest)
-    q.awaitTermination(300000)
     // the fresh-session state: registries + discovery memory emptied —
     // only the catalog the SINK wrote can make the query prune
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.BloomJoins.install(s)
-    try {
+    withRule(s, classOf[RewriteToBloomPrunedJoin]) {
       val qq = s.read.parquet(out)
         .where(col("event_id").isin(1L, 2L, 3L, 4L, 5L))
         .select(col("event_id"), col("operation"), col("user_id"))
         .orderBy("event_id")
       val totalFiles = s.read.parquet(s"$out/_bloomindex").count()
-      val factFiles = qq.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if f.location.rootPaths.exists(_.toString.contains(
-                  "stream-catalog")) =>
-              f.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val factFiles = filesRead(qq, "stream-catalog")
       require(factFiles > 0 && factFiles < totalFiles,
         s"stream_catalog_pointlookup: the sink-written catalog must let a " +
           s"fresh session prune ($factFiles of $totalFiles files)")
       qq.localCheckpoint()
-    } finally {
-      graft.plans.BloomJoins.uninstall(s)
-      graft.plans.BloomJoins.clear()
-      graft.plans.GraftCatalog.clearCache()
     }
   }
 
@@ -148,53 +113,28 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
     // the moment the batch commits.
     val tag = dir.replaceAll("[^0-9.]", "")
     val base = s"$sinkRoot/stream-metapart-$tag"
-    val src = sharedStreamSource(s, dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    Seq("checkpoint", "out").foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/$d"), true))
+    drain(s, base, sharedStreamSource(s, dir), s"stream-mp-$tag") { out =>
+      new FileDestination(out, graft.sources.OutFormat.Parquet,
+        graft.sources.OutCompression.Snappy,
+        graft.operators.KeyStrategy.CollectionBased,
+        zoneMapCols = Seq("event_id", "user_id"))
+    }
     val out = s"$base/out"
-    val dest = new FileDestination(out, graft.sources.OutFormat.Parquet,
-      graft.sources.OutCompression.Snappy,
-      graft.operators.KeyStrategy.CollectionBased,
-      zoneMapCols = Seq("event_id", "user_id"))
-    val cfg = PipelineConfig(sourceDir = src, schemaDDL = streamDDL,
-      checkpointDir = s"$base/checkpoint", queryName = s"stream-mp-$tag",
-      triggerInterval = None) // AvailableNow: drain-and-stop
-    val q = CdcPipeline.start(s, cfg, dest)
-    q.awaitTermination(300000)
     // fresh-session state: only the catalog the SINK wrote can register
     // the zone layouts that admit the serving rule
-    graft.plans.BloomJoins.clear()
-    graft.plans.GraftCatalog.clearCache()
-    graft.plans.MetaAgg.install(s)
-    try {
+    withRule(s, classOf[RewriteToMetaAggregate]) {
       val fired0 = graft.plans.MetaAgg.served.get()
       val qq = s.read.parquet(out).groupBy(col("collection"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("user_id")).as("sum_users"),
           min(col("event_id")).as("min_id"),
           max(col("event_id")).as("max_id"))
-      val dataFiles = qq.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case fr: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-                if fr.location.rootPaths.exists(p =>
-                  p.toString.contains("stream-metapart") &&
-                    !p.toString.contains("_zonemap")) =>
-              fr.location.inputFiles.length.toLong
-            case _ => 0L
-          }
-      }.sum
+      val dataFiles = filesRead(qq, "stream-metapart")
       require(graft.plans.MetaAgg.served.get() > fired0 && dataFiles == 0L,
         s"stream_meta_grouped_part: expected the stream-maintained " +
           s"manifest to serve the partition groups with zero data files " +
           s"($dataFiles read)\n" + qq.queryExecution.optimizedPlan.toString)
       qq.localCheckpoint()
-    } finally {
-      graft.plans.MetaAgg.uninstall(s)
-      graft.plans.BloomJoins.clear()
-      graft.plans.GraftCatalog.clearCache()
     }
   }
 
@@ -235,25 +175,19 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
         .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").json(src)
       markStaged(s, src) // seal only once source AND sentinel are on disk
     }
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    Seq("checkpoint", "out").foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/$d"), true))
-    val dest = new FileDestination(s"$base/out", graft.sources.OutFormat.Jsonl,
-      graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.Flat)
-    val cfg = PipelineConfig(sourceDir = src, schemaDDL = streamDDL,
-      checkpointDir = s"$base/checkpoint", queryName = s"stream-win-$tag",
-      triggerInterval = None,
-      // keyed state at this feed volume is MBs: 8 fat state stores beat 32
-      // per-trigger store open/commit cycles (see PipelineConfig scaladoc)
-      statePartitions = Some(8), // AvailableNow: drain, then evict closed state
-      transform = df => df
-        .withWatermark("cluster_time", "0 seconds")
-        .groupBy(window(col("cluster_time"), "1 hour").as("w"), col("operation"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("w.start").as("window_start"), col("operation"),
-          col("n_events")))
-    val q = CdcPipeline.start(s, cfg, dest)
-    q.awaitTermination(300000)
+    val dest = drain(s, base, src, s"stream-win-$tag",
+        // keyed state at this feed volume is MBs: 8 fat state stores beat 32
+        // per-trigger store open/commit cycles (see PipelineConfig scaladoc)
+        statePartitions = Some(8), // AvailableNow: drain, then evict closed state
+        transform = df => df
+          .withWatermark("cluster_time", "0 seconds")
+          .groupBy(window(col("cluster_time"), "1 hour").as("w"), col("operation"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("w.start").as("window_start"), col("operation"),
+            col("n_events"))) { out =>
+      new FileDestination(out, graft.sources.OutFormat.Jsonl,
+        graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.Flat)
+    }
     dest.readBack(s,
         Some("window_start timestamp, operation string, n_events long"))
       .filter(col("operation") =!= sentinel)
@@ -282,40 +216,33 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
     // cast(ts as long) and DuckDB's date_diff('second') both count whole
     // seconds (verified identical over every matched pair).
     val tag = dir.replaceAll("[^0-9.]", "")
-    val base = s"$sinkRoot/stream-ssjoin-$tag"
-    val src = sharedStreamSource(s, dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    Seq("checkpoint", "out").foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/$d"), true))
-    val dest = new FileDestination(s"$base/out", graft.sources.OutFormat.Jsonl,
-      graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.Flat)
-    val cfg = PipelineConfig(sourceDir = src, schemaDDL = streamDDL,
-      checkpointDir = s"$base/checkpoint", queryName = s"stream-ssj-$tag",
-      triggerInterval = None,
-      // keyed state at this feed volume is MBs: 8 fat state stores beat 32
-      // per-trigger store open/commit cycles (see PipelineConfig scaladoc)
-      statePartitions = Some(8), // AvailableNow: drain-and-stop
-      transform = df => {
-        val views = df.filter(col("operation") === "view")
-          .select(col("user_id").as("v_user"), col("event_id").as("view_event"),
-            col("cluster_time").as("view_time"))
-          .withWatermark("view_time", "0 seconds")
-        val buys = df.filter(col("operation") === "purchase")
-          .select(col("user_id").as("p_user"),
-            col("event_id").as("purchase_event"),
-            col("cluster_time").as("purchase_time"))
-          .withWatermark("purchase_time", "0 seconds")
-        views.join(buys, expr(
-          """v_user = p_user AND
-            |purchase_time >= view_time AND
-            |purchase_time < view_time + INTERVAL 30 MINUTES""".stripMargin))
-          .select(col("v_user").as("user_id"), col("view_event"),
-            col("purchase_event"),
-            (col("purchase_time").cast("long") - col("view_time").cast("long"))
-              .as("secs_to_purchase"))
-      })
-    val q = CdcPipeline.start(s, cfg, dest)
-    q.awaitTermination(300000)
+    val dest = drain(s, s"$sinkRoot/stream-ssjoin-$tag",
+        sharedStreamSource(s, dir), s"stream-ssj-$tag",
+        // keyed state at this feed volume is MBs: 8 fat state stores beat 32
+        // per-trigger store open/commit cycles (see PipelineConfig scaladoc)
+        statePartitions = Some(8),
+        transform = df => {
+          val views = df.filter(col("operation") === "view")
+            .select(col("user_id").as("v_user"), col("event_id").as("view_event"),
+              col("cluster_time").as("view_time"))
+            .withWatermark("view_time", "0 seconds")
+          val buys = df.filter(col("operation") === "purchase")
+            .select(col("user_id").as("p_user"),
+              col("event_id").as("purchase_event"),
+              col("cluster_time").as("purchase_time"))
+            .withWatermark("purchase_time", "0 seconds")
+          views.join(buys, expr(
+            """v_user = p_user AND
+              |purchase_time >= view_time AND
+              |purchase_time < view_time + INTERVAL 30 MINUTES""".stripMargin))
+            .select(col("v_user").as("user_id"), col("view_event"),
+              col("purchase_event"),
+              (col("purchase_time").cast("long") - col("view_time").cast("long"))
+                .as("secs_to_purchase"))
+        }) { out =>
+      new FileDestination(out, graft.sources.OutFormat.Jsonl,
+        graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.Flat)
+    }
     dest.readBack(s, Some("user_id long, view_event long, " +
         "purchase_event long, secs_to_purchase long"))
       .select(col("user_id"), col("view_event"), col("purchase_event"),
@@ -366,7 +293,7 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
       .option("checkpointLocation", s"$base/checkpoint")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(300000)
+    awaitDrained(q)
     graft.operators.Quality.psiFromCounts(refCounts, s.table(qname))
       .orderBy(col("col_name"))
   }
@@ -406,37 +333,31 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
       }
       markStaged(s, src)
     }
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    Seq("checkpoint", "out").foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/$d"), true))
-    val dest = new FileDestination(s"$base/out", graft.sources.OutFormat.Jsonl,
-      graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.Flat)
-    val cfg = PipelineConfig(sourceDir = src, schemaDDL = streamDDL,
-      checkpointDir = s"$base/checkpoint", queryName = s"stream-ssjo-$tag",
-      triggerInterval = None,
-      // keyed state at this feed volume is MBs: 8 fat state stores beat 32
-      // per-trigger store open/commit cycles (see PipelineConfig scaladoc)
-      statePartitions = Some(8),
-      transform = df => {
-        val views = df.filter(col("operation") === "view")
-          .select(col("user_id").as("v_user"), col("event_id").as("view_event"),
-            col("cluster_time").as("view_time"))
-          .withWatermark("view_time", "0 seconds")
-        val buys = df.filter(col("operation") === "purchase")
-          .select(col("user_id").as("p_user"),
-            col("event_id").as("purchase_event"),
-            col("cluster_time").as("purchase_time"))
-          .withWatermark("purchase_time", "0 seconds")
-        views.join(buys, expr(
-          """v_user = p_user AND
-            |purchase_time >= view_time AND
-            |purchase_time < view_time + INTERVAL 30 MINUTES""".stripMargin),
-          "left_outer")
-          .select(col("v_user").as("user_id"), col("view_event"),
-            col("purchase_event"))
-      })
-    val q = CdcPipeline.start(s, cfg, dest)
-    q.awaitTermination(300000)
+    val dest = drain(s, base, src, s"stream-ssjo-$tag",
+        // keyed state at this feed volume is MBs: 8 fat state stores beat 32
+        // per-trigger store open/commit cycles (see PipelineConfig scaladoc)
+        statePartitions = Some(8),
+        transform = df => {
+          val views = df.filter(col("operation") === "view")
+            .select(col("user_id").as("v_user"), col("event_id").as("view_event"),
+              col("cluster_time").as("view_time"))
+            .withWatermark("view_time", "0 seconds")
+          val buys = df.filter(col("operation") === "purchase")
+            .select(col("user_id").as("p_user"),
+              col("event_id").as("purchase_event"),
+              col("cluster_time").as("purchase_time"))
+            .withWatermark("purchase_time", "0 seconds")
+          views.join(buys, expr(
+            """v_user = p_user AND
+              |purchase_time >= view_time AND
+              |purchase_time < view_time + INTERVAL 30 MINUTES""".stripMargin),
+            "left_outer")
+            .select(col("v_user").as("user_id"), col("view_event"),
+              col("purchase_event"))
+        }) { out =>
+      new FileDestination(out, graft.sources.OutFormat.Jsonl,
+        graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.Flat)
+    }
     dest.readBack(s,
         Some("user_id long, view_event long, purchase_event long"))
       .filter(col("user_id") >= 0)
@@ -483,26 +404,20 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
         .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").json(src)
       markStaged(s, src)
     }
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    Seq("checkpoint", "out").foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/$d"), true))
-    val dest = new FileDestination(s"$base/out", graft.sources.OutFormat.Jsonl,
-      graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.Flat)
-    val cfg = PipelineConfig(sourceDir = src, schemaDDL = streamDDL,
-      checkpointDir = s"$base/checkpoint", queryName = s"stream-sess-$tag",
-      triggerInterval = None,
-      // keyed state at this feed volume is MBs: 8 fat state stores beat 32
-      // per-trigger store open/commit cycles (see PipelineConfig scaladoc)
-      statePartitions = Some(8),
-      transform = df => df
-        .withWatermark("cluster_time", "0 seconds")
-        .groupBy(col("user_id"),
-          session_window(col("cluster_time"), "10 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-        .select(col("user_id"), col("w.start").as("session_start"),
-          col("w.end").as("session_end"), col("n_events"), col("sum_value")))
-    val q = CdcPipeline.start(s, cfg, dest)
-    q.awaitTermination(300000)
+    val dest = drain(s, base, src, s"stream-sess-$tag",
+        // keyed state at this feed volume is MBs: 8 fat state stores beat 32
+        // per-trigger store open/commit cycles (see PipelineConfig scaladoc)
+        statePartitions = Some(8),
+        transform = df => df
+          .withWatermark("cluster_time", "0 seconds")
+          .groupBy(col("user_id"),
+            session_window(col("cluster_time"), "10 minutes").as("w"))
+          .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
+          .select(col("user_id"), col("w.start").as("session_start"),
+            col("w.end").as("session_end"), col("n_events"), col("sum_value"))) { out =>
+      new FileDestination(out, graft.sources.OutFormat.Jsonl,
+        graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.Flat)
+    }
     dest.readBack(s, Some("user_id long, session_start timestamp, " +
         "session_end timestamp, n_events long, sum_value double"))
       .filter(col("user_id") >= 0)
@@ -528,23 +443,16 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
     // cdc_enrich_join SQL — streaming enrichment must match batch
     // enrichment row for row.
     val tag = dir.replaceAll("[^0-9.]", "")
-    val base = s"$sinkRoot/stream-enrich-$tag"
-    val src = sharedStreamSource(s, dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    Seq("checkpoint", "out").foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$base/$d"), true))
     val dim = Tables.customer(s, dir).select("c_custkey", "c_mktsegment")
-    val dest = new FileDestination(s"$base/out", graft.sources.OutFormat.Jsonl,
-      graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.Flat)
-    val cfg = PipelineConfig(sourceDir = src, schemaDDL = streamDDL,
-      checkpointDir = s"$base/checkpoint", queryName = s"stream-enr-$tag",
-      triggerInterval = None,
-      transform = df => graft.operators.Enrichment
-        .enrich(df, dim, col("user_id") === col("c_custkey"))
-        .select(col("c_mktsegment").as("mktsegment"), col("user_id"),
-          col("value")))
-    val q = CdcPipeline.start(s, cfg, dest)
-    q.awaitTermination(300000)
+    val dest = drain(s, s"$sinkRoot/stream-enrich-$tag",
+        sharedStreamSource(s, dir), s"stream-enr-$tag",
+        transform = df => graft.operators.Enrichment
+          .enrich(df, dim, col("user_id") === col("c_custkey"))
+          .select(col("c_mktsegment").as("mktsegment"), col("user_id"),
+            col("value"))) { out =>
+      new FileDestination(out, graft.sources.OutFormat.Jsonl,
+        graft.sources.OutCompression.Gzip, graft.operators.KeyStrategy.Flat)
+    }
     dest.readBack(s, Some("mktsegment string, user_id long, value double"))
       .groupBy("mktsegment")
       .agg(count(lit(1)).as("n_events"),

@@ -1,9 +1,13 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.cdc.CdcEnvelope
+import graft.plans.{BloomJoins, GraftCatalog, PlanShapes, SummaryViews}
+import graft.streaming.{CdcPipeline, Destination, PipelineConfig}
 
 /** Where catalog sinks and test fixtures write: the build's `target` dir,
   * passed to forked JVMs as `-Dgraft.outRoot` by build.sbt, else
@@ -12,6 +16,9 @@ private[graft] object OutRoot {
   val dir: String = sys.props.getOrElse("graft.outRoot",
     new java.io.File("target").getAbsolutePath)
 }
+
+/** One parquet relation a plan reads: its root paths and listed files. */
+private[graft] final case class Scan(roots: Seq[String], files: Seq[String])
 
 /** The shared surface under the domain-sliced query catalog: the
   * registry the [[Queries]] traits write into, plus the helpers used
@@ -37,6 +44,124 @@ private[graft] trait QueryDomain {
     sum(c.cast(s"decimal(38,$scale)")).cast("double")
 
   protected val sinkRoot = s"${OutRoot.dir}/graft-out"
+
+  /** The parquet relations `q`'s optimized plan reads, the manifest
+    * sidecars (`_zonemap`, `_bloomindex`) excluded: what a rule-proof
+    * entry's REQUIRE counts to show the rewrite fired. */
+  protected def scans(q: DataFrame): Seq[Scan] =
+    q.queryExecution.optimizedPlan.collect { case r: LogicalRelation => r.relation }
+      .collect { case f: HadoopFsRelation => f.location }
+      .map(l => Scan(l.rootPaths.map(_.toString), l.inputFiles.toSeq))
+      .filter(_.roots.exists(p =>
+        !p.contains("/_zonemap") && !p.contains("/_bloomindex")))
+
+  /** Data files `q` reads from relations rooted under a path containing
+    * `tag`. Counts the file listing, not the root paths: a directory
+    * scan the rule left alone has one root over all its files. */
+  protected def filesRead(q: DataFrame, tag: String): Long =
+    scans(q).filter(_.roots.exists(_.contains(tag))).map(_.files.length.toLong).sum
+
+  /** Whether `q` reads the `state` dir of a summary under a path containing `tag`. */
+  protected def readsState(q: DataFrame, tag: String): Boolean =
+    scans(q).exists(_.roots.exists(p => p.contains(tag) && p.endsWith("/state")))
+
+  /** Run `body` with one of [[PlanShapes.rules]] installed, on the state
+    * a fresh session starts from: the in-memory BloomJoins/SummaryViews
+    * registrations and the GraftCatalog discovery memory are dropped
+    * before (a rewrite can only come from what `body` registers or what
+    * discovery finds) and again after, with the rule uninstalled. */
+  protected def withRule[T](s: SparkSession, rule: Class[_])(body: => T): T = {
+    def forget(): Unit = {
+      BloomJoins.clear(); SummaryViews.clear(); GraftCatalog.clearCache()
+    }
+    forget()
+    PlanShapes.install(s, rule)
+    try body
+    finally { PlanShapes.uninstall(s, rule); forget() }
+  }
+
+  protected val streamDDL =
+    "operation string, database string, collection string, " +
+      "cluster_time timestamp, document_key string, full_document string, " +
+      "resume_token string, event_id long, user_id long, value double"
+
+  /** One AvailableNow run of the CdcPipeline over `src` into fresh
+    * `<base>/checkpoint` and `<base>/out` dirs (`dest` builds the
+    * destination over the out dir), awaited through [[awaitDrained]].
+    * Returns the destination. */
+  protected def drain[D <: Destination](s: SparkSession, base: String,
+      src: String, queryName: String, statePartitions: Option[Int] = None,
+      transform: DataFrame => DataFrame = identity)(dest: String => D): D = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+    Seq("checkpoint", "out").foreach(d =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$base/$d"), true))
+    val d = dest(s"$base/out")
+    awaitDrained(CdcPipeline.start(s, PipelineConfig(sourceDir = src,
+      schemaDDL = streamDDL, checkpointDir = s"$base/checkpoint",
+      queryName = queryName, triggerInterval = None,
+      statePartitions = statePartitions, transform = transform), d))
+    d
+  }
+
+  /** Wait for an AvailableNow query to finish. One still running after
+    * 300 s is stopped and fails the entry: reading its sink would hash a
+    * half-written output. */
+  protected def awaitDrained(q: StreamingQuery): Unit =
+    if (!q.awaitTermination(300000)) {
+      q.stop()
+      throw new IllegalStateException(
+        s"stream ${q.name} did not drain within 300 s")
+    }
+
+  /** The manifest sketch tier's contract against exact answers: row
+    * count exact, KLL rank error within 2·1.65% of each nominal quantile
+    * (plus `slack`), HLL relative error within 5% (lgK=12). `ranks` pairs
+    * each nominal quantile with the exact rank of its estimate. */
+  protected def sketchGate(what: String, n: Long, exactN: Long,
+      ranks: Seq[(Double, Double)], du: Long, exactDu: Long,
+      slack: Double = 0.0): Unit = {
+    require(n == exactN, s"$what: n_rows must be exact: $n vs $exactN")
+    ranks.foreach { case (q, r) =>
+      require(math.abs(r - q) <= 0.033 + slack,
+        s"$what: KLL rank contract violated: rank(p${(q * 100).round})=$r")
+    }
+    require(math.abs(du - exactDu).toDouble / exactDu <= 0.05,
+      s"$what: HLL estimate off: $du vs $exactDu")
+  }
+
+  /** Gate a grouped sketch profile — columns `profKey`, n_rows,
+    * value_p50, user_id_approx_distinct — against `rows` grouped by
+    * `rowKey`. The group SET must match exactly (a dropped or invented
+    * group would survive the per-group join), then every group passes
+    * [[sketchGate]]. `tinyGroups` widens the rank bound by 1/n: a tiny
+    * group's exact median is itself ceil(n/2)/n, up to one item rank off
+    * 0.5. Returns the gated groups beside their exact distinct counts. */
+  protected def gateGroups(what: String, prof: DataFrame, profKey: String,
+      rows: DataFrame, rowKey: String, tinyGroups: Boolean): DataFrame = {
+    val profKeys = prof.select(profKey).collect().map(_.getString(0)).toSet
+    val exactKeys = rows.select(rowKey).distinct().collect()
+      .map(_.getString(0)).toSet
+    require(profKeys == exactKeys, s"$what: group sets differ — " +
+      s"missing ${exactKeys -- profKeys}, spurious ${profKeys -- exactKeys}")
+    val gated = rows.join(broadcast(prof), rows(rowKey) === col(profKey))
+      .groupBy(col(profKey), col("n_rows"), col("value_p50"),
+        col("user_id_approx_distinct"))
+      .agg(count(lit(1)).as("n_exact"),
+        countDistinct(col("user_id")).as("du_exact"),
+        (count(when(col("value") <= col("value_p50"), 1)) /
+          count(col("value"))).as("rank50"))
+    val groups = gated.collect()
+    require(groups.nonEmpty, s"$what: no groups came back")
+    groups.foreach { r =>
+      val nExact = r.getAs[Long]("n_exact")
+      sketchGate(s"$what [${r.getAs[String](profKey)}]", r.getAs[Long]("n_rows"),
+        nExact, Seq(0.5 -> r.getAs[Double]("rank50")),
+        r.getAs[Long]("user_id_approx_distinct"), r.getAs[Long]("du_exact"),
+        slack = if (tinyGroups) 1.0 / nExact else 0.0)
+    }
+    gated.select(col(profKey).as(rowKey), col("n_rows"), col("value_p50"),
+      col("user_id_approx_distinct"), col("du_exact").as("exact_users"))
+  }
 
   // shared verbatim by quality_drift_psi AND its streaming leg
   // stream_drift_psi: the incremental monitor must read exactly what the

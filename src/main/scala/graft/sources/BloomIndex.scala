@@ -48,14 +48,9 @@ object BloomIndex {
   /** Per-file Bloom aggregate: Catalyst's own `BloomFilterAggregate` over
     * the null-guarded string-image hash. `expectedItems`/`fpp` size the
     * fixed bitmap exactly as `BloomFilter.create` would. */
-  private def bloomAgg(c: String, expectedItems: Long, fpp: Double): Column = {
-    val bits = BloomFilter.optimalNumOfBits(math.max(expectedItems, 1L), fpp)
-    val key = when(col(c).isNotNull, xxhash64(col(c).cast("string")))
-    GraftBridge.column(new BloomFilterAggregate(
-        GraftBridge.expression(key),
-        Literal(math.max(expectedItems, 1L)), Literal(bits))
-      .toAggregateExpression())
-  }
+  private def bloomAgg(c: String, expectedItems: Long, fpp: Double): Column =
+    bloomAggBits(c, expectedItems,
+      BloomFilter.optimalNumOfBits(math.max(expectedItems, 1L), fpp))
 
   private def statsFor(df: DataFrame, cols: Seq[String], rootAbs: String,
                        expectedItems: Long, fpp: Double): DataFrame = {
@@ -201,9 +196,7 @@ object BloomIndex {
   private def matchingRows(spark: SparkSession, path: String, c: String,
                            values: Seq[Any], parts: Seq[String]): DataFrame = {
     require(values.nonEmpty, "bloom probe needs at least one value")
-    val m = spark.read.parquet(s"$path/_bloomindex")
-    val sharded =
-      if (parts.isEmpty) m else m.filter(col("part_dir").isin(parts: _*))
+    val sharded = Manifests.shards(spark, path, "_bloomindex", parts)
     val hit = values.map(v => probe(col(s"${c}_bloom"), keyOf(v)))
       .reduce(_ || _)
     sharded.filter(hit)
@@ -310,10 +303,8 @@ object BloomIndex {
         hs.exists(bf.mightContainLong)
       }
     }
-    val m = spark.read.parquet(s"$path/_bloomindex")
-    val sharded =
-      if (parts.isEmpty) m else m.filter(col("part_dir").isin(parts: _*))
-    sharded.filter(probeSet(col(s"${c}_bloom")))
+    Manifests.shards(spark, path, "_bloomindex", parts)
+      .filter(probeSet(col(s"${c}_bloom")))
       .select("part_dir", "file").sort("part_dir", "file")
       .collect().map(_.getString(1)).toSeq
   }

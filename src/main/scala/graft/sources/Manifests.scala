@@ -63,6 +63,14 @@ private[graft] object Manifests {
         _ => new java.util.concurrent.atomic.AtomicLong(0L))
       .set(v)
 
+  /** The rows of the `manifest` (`_zonemap`, `_bloomindex`) of `path`,
+    * only the `parts` shards when any are named. */
+  def shards(spark: SparkSession, path: String, manifest: String,
+             parts: Seq[String]): DataFrame = {
+    val m = spark.read.parquet(s"$path/$manifest")
+    if (parts.isEmpty) m else m.filter(col("part_dir").isin(parts: _*))
+  }
+
   def fsFor(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

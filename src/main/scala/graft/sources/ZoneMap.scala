@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,12 +40,6 @@ object ZoneMap {
     * manifest rows dropped because their files vanished (a replayed batch
     * directory was overwritten, or a compaction rewrote the layout). */
   final case class UpdateDelta(added: Long, reaped: Long)
-
-  private def fsFor(spark: SparkSession, path: String): (FileSystem, Path) =
-    Manifests.fsFor(spark, path)
-
-  private def partDirCol(rootAbs: String): Column =
-    Manifests.partDirCol(rootAbs)
 
   /** Types whose per-file SUM is recorded in the manifest: exactly the
     * types where re-aggregating file sums is bit-identical to summing the
@@ -222,7 +216,7 @@ object ZoneMap {
     df.groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("built_ansi", lit(ansiNow(df.sparkSession)))
-      .withColumn("part_dir", partDirCol(rootAbs))
+      .withColumn("part_dir", Manifests.partDirCol(rootAbs))
   }
 
   /** One pass: per data file, per indexed column — min/max/null count.
@@ -230,7 +224,7 @@ object ZoneMap {
     * part_dir` (the shard key). */
   def build(spark: SparkSession, path: String, cols: Seq[String],
             sketchCols: Seq[String] = Nil): DataFrame = {
-    val (_, root) = fsFor(spark, path)
+    val (_, root) = Manifests.fsFor(spark, path)
     statsFor(spark.read.parquet(path), cols, root.toUri.getPath, sketchCols)
   }
 
@@ -245,7 +239,7 @@ object ZoneMap {
 
   private[graft] def manifestExists(spark: SparkSession,
                                     path: String): Boolean = {
-    val (fs, root) = fsFor(spark, path)
+    val (fs, root) = Manifests.fsFor(spark, path)
     fs.exists(new Path(root, "_zonemap"))
   }
 
@@ -265,7 +259,7 @@ object ZoneMap {
   def update(spark: SparkSession, path: String,
              cols: Seq[String],
              sketchCols: Seq[String] = Nil): UpdateDelta = {
-    val (fs, root) = fsFor(spark, path)
+    val (fs, root) = Manifests.fsFor(spark, path)
     val rootAbs = root.toUri.getPath
     // the effective sketch tier is the UNION of what the caller asks for
     // and what the manifest already carries: an existing tier is
@@ -429,7 +423,7 @@ object ZoneMap {
         sketchCols = sketchCols)
       return
     }
-    val (_, root) = fsFor(spark, path)
+    val (_, root) = Manifests.fsFor(spark, path)
     val rootAbs = root.toUri.getPath
     val abs = dirs.map(d =>
       if (d == ".") root.toString else new Path(root, d).toString)
@@ -464,9 +458,7 @@ object ZoneMap {
                                            lo: Option[Any], hi: Option[Any],
                                            parts: Seq[String] = Nil)
       : Seq[String] = {
-    val m = spark.read.parquet(s"$path/_zonemap")
-    val sharded =
-      if (parts.isEmpty) m else m.filter(col("part_dir").isin(parts: _*))
+    val sharded = Manifests.shards(spark, path, "_zonemap", parts)
     val loC = lo.map(v => col(s"${c}_max") >= lit(v)).getOrElse(lit(true))
     val hiC = hi.map(v => col(s"${c}_min") <= lit(v)).getOrElse(lit(true))
     sharded.filter(col(s"${c}_min").isNotNull && loC && hiC)
@@ -476,10 +468,9 @@ object ZoneMap {
 
   private def zoneFilter(spark: SparkSession, path: String, c: String,
                          lo: Any, hi: Any, parts: Seq[String]): DataFrame = {
-    val m = spark.read.parquet(s"$path/_zonemap")
-    val sharded = if (parts.isEmpty) m else m.filter(col("part_dir").isin(parts: _*))
-    sharded.filter(col(s"${c}_min").isNotNull &&
-      col(s"${c}_max") >= lit(lo) && col(s"${c}_min") <= lit(hi))
+    Manifests.shards(spark, path, "_zonemap", parts)
+      .filter(col(s"${c}_min").isNotNull &&
+        col(s"${c}_max") >= lit(lo) && col(s"${c}_min") <= lit(hi))
   }
 
   /** Range-predicate read through the manifest: scan ONLY candidate

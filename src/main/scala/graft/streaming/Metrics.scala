@@ -14,8 +14,13 @@ import scala.jdk.CollectionConverters._
 object GraftMetrics {
   private val counters = new ConcurrentHashMap[String, LongAdder]()
   private val gauges = new ConcurrentHashMap[String, java.lang.Double]()
-  private val histoCount = new ConcurrentHashMap[String, LongAdder]()
-  private val histoSum = new ConcurrentHashMap[String, DoubleAdder]()
+  /** One series' count and sum, created together: a scrape never sees a
+    * count without its sum. */
+  private final class Histo {
+    val count = new LongAdder
+    val sum = new DoubleAdder
+  }
+  private val histos = new ConcurrentHashMap[String, Histo]()
 
   private def key(name: String, labels: Seq[(String, String)]): String =
     if (labels.isEmpty) name
@@ -43,14 +48,14 @@ object GraftMetrics {
     Option(gauges.get(key(name, labels))).map(_.doubleValue()).getOrElse(0.0)
 
   def observe(name: String, v: Double, labels: (String, String)*): Unit = {
-    val k = key(name, labels)
-    histoCount.computeIfAbsent(k, _ => new LongAdder).increment()
-    histoSum.computeIfAbsent(k, _ => new DoubleAdder).add(v)
+    val h = histos.computeIfAbsent(key(name, labels), _ => new Histo)
+    h.count.increment()
+    h.sum.add(v)
   }
   def histogramCount(name: String, labels: (String, String)*): Long =
-    Option(histoCount.get(key(name, labels))).map(_.sum()).getOrElse(0L)
+    Option(histos.get(key(name, labels))).map(_.count.sum()).getOrElse(0L)
   def histogramSum(name: String, labels: (String, String)*): Double =
-    Option(histoSum.get(key(name, labels))).map(_.sum()).getOrElse(0.0)
+    Option(histos.get(key(name, labels))).map(_.sum.sum()).getOrElse(0.0)
 
   /** Text exposition (Prometheus-style) — the equivalent of the reference's
     * /metrics endpoint payload. One `# TYPE` line heads each metric family.
@@ -63,11 +68,11 @@ object GraftMetrics {
       .map { case (k, v) => split(k)._1 -> s"$k ${v.sum()}" }
     val gs = gauges.asScala.toSeq
       .map { case (k, v) => split(k)._1 -> s"$k $v" }
-    val hs = histoCount.asScala.toSeq.flatMap { case (k, v) =>
+    val hs = histos.asScala.toSeq.flatMap { case (k, h) =>
       // the suffix belongs to the metric name, before the label set
       val (name, labels) = split(k)
-      Seq(name -> s"${name}_count$labels ${v.sum()}",
-        name -> s"${name}_sum$labels ${histoSum.get(k).sum()}")
+      Seq(name -> s"${name}_count$labels ${h.count.sum()}",
+        name -> s"${name}_sum$labels ${h.sum.sum()}")
     }
     Seq("counter" -> cs, "gauge" -> gs, "summary" -> hs).flatMap {
       case (typ, samples) =>
@@ -77,7 +82,7 @@ object GraftMetrics {
     }.mkString("\n")
   }
 
-  def reset(): Unit = { counters.clear(); gauges.clear(); histoCount.clear(); histoSum.clear() }
+  def reset(): Unit = { counters.clear(); gauges.clear(); histos.clear() }
 
   /** Pre-register every reference metric name so a scrape shows the full
     * surface at 0 before traffic arrives — the exporter behavior of the
@@ -94,10 +99,7 @@ object GraftMetrics {
     Seq(ActiveCollections, PipelineStatus, BatchQueueSize)
       .foreach(n => gauges.putIfAbsent(n, 0.0))
     Seq(BatchSize, BatchDuration, WriteDuration, WriteBytes, StreamLag)
-      .foreach { n =>
-        histoCount.computeIfAbsent(n, _ => new LongAdder)
-        histoSum.computeIfAbsent(n, _ => new DoubleAdder)
-      }
+      .foreach(n => histos.computeIfAbsent(n, _ => new Histo))
   }
 
   // Metric names, verbatim from metrics.rs:112-227

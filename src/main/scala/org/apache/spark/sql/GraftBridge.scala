@@ -25,6 +25,12 @@ object GraftBridge {
                         key: String): Unit =
     sc.conf.remove(key)
 
+  /** `SparkContext.listenerBus` is `private[spark]`: block until every
+    * posted event has reached its listeners, before reading what they
+    * recorded. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** `Dataset.ofRows` is `private[sql]`; optimizer rules that must
     * EXECUTE a sub-plan (the BloomJoins dim-key collect) wrap it here. */
   def ofRows(spark: SparkSession,

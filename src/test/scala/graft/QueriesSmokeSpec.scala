@@ -20,6 +20,24 @@ class QueriesSmokeSpec extends SparkSpec {
       val n = df.count()
       assert(df.schema.fields.nonEmpty, s"$name: empty schema")
       if (!mayBeEmpty(name)) assert(n > 0, s"$name: returned 0 rows")
+      val left = spark.experimental.extraOptimizations.filter(r =>
+        graft.plans.PlanShapes.rules.exists(_._1.isInstance(r)))
+      assert(left.isEmpty, s"$name: left rules installed: ${left.map(_.ruleName)}")
+    }
+  }
+
+  test("rule-proof entries start from and leave no rule registrations") {
+    import graft.plans.{BloomJoins, SummaryViews}
+    // one entry per rule: bloom/zone pruning, manifest serving, summary views
+    for (name <- Seq("layout_bloom_auto_pointlookup", "agg_meta_profile",
+        "agg_mv_rewrite")) {
+      // stale registrations an earlier caller left behind
+      BloomJoins.register(BloomJoins.Layout(s"$outRoot/stale-fact", "k"))
+      SummaryViews.register(SummaryViews.View(s"$outRoot/stale-base",
+        s"$outRoot/stale-state", Seq("k"), Set.empty, None))
+      assert(SparkEntry.queries(name)(spark, sfTiny).count() > 0)
+      assert(BloomJoins.isEmpty && SummaryViews.isEmpty,
+        s"$name left rule registrations behind")
     }
   }
 

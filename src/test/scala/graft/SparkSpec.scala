@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession shared by every suite (sbt runs suites in one forked
@@ -61,7 +60,7 @@ abstract class SparkSpec extends AnyFunSuite {
     try body
     finally {
       sc.clearJobGroup()
-      ListenerBusBridge.drain(sc)
+      GraftBridge.drainListeners(sc)
       sc.removeSparkListener(listener)
     }
     tasks.toMap

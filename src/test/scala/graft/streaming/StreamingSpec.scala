@@ -497,6 +497,50 @@ class StreamingSpec extends SparkSpec {
     } finally spark.streams.removeListener(listener)
   }
 
+  test("a /metrics render racing the first observation of new series never throws") {
+    // render lists every series and reads its count and sum: a series
+    // whose count existed before its sum made a racing scrape throw. The
+    // writers cycle through 512 label sets each and the renders reset
+    // every few scrapes, so every label set is created again and again
+    // while renders stay quick.
+    GraftMetrics.reset()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writers = (0 until 2).map { w =>
+      new Thread(() => {
+        var i = 0L
+        while (!stop.get()) {
+          GraftMetrics.observe(GraftMetrics.BatchSize, 1.0,
+            "series" -> s"$w-${i % 512}")
+          i += 1
+        }
+      })
+    }
+    writers.foreach(_.start())
+    var thrown: Option[Throwable] = None
+    try {
+      var renders = 0
+      while (renders < 5000 && thrown.isEmpty) {
+        try GraftMetrics.render()
+        catch { case e: Exception => thrown = Some(e) }
+        renders += 1
+        if (renders % 3 == 0) GraftMetrics.reset()
+      }
+    } finally {
+      stop.set(true)
+      writers.foreach(_.join())
+    }
+    assert(thrown.isEmpty, s"render threw while series were being created: $thrown")
+    // every series of the final scrape carries both its samples
+    val lines = GraftMetrics.render().split("\n").toSeq
+    def series(sfx: String): Set[String] = lines.collect {
+      case l if l.startsWith(GraftMetrics.BatchSize + sfx + "{") =>
+        l.substring(l.indexOf('{'), l.indexOf('}') + 1)
+    }.toSet
+    assert(series("_count").nonEmpty)
+    assert(series("_count") === series("_sum"))
+    GraftMetrics.reset()
+  }
+
   test("terminal write failure feeds events_failed_total and error status (§2.11)") {
     GraftMetrics.reset()
     val listener = new MetricsListener

@@ -14,6 +14,15 @@ so that run-to-run noise does not count as a difference:
   - call sites      `at CdcPipeline.scala:325` -> `at CdcPipeline.scala:N`
   - temp paths      `/tmp/...`, `/var/folders/...` -> `<tmp>`
   - UUIDs           -> `<uuid>`
+  - runtime stage statistics `Statistics(sizeInBytes=..., rowCount=...)`
+                    -> `Statistics(N)` (AQE measures them as it runs)
+  - observation ids `CollectMetrics <uuid>, [...], 3845` -> `..., N`
+  - compaction scratch dirs `.compact-tmp/1f2be7` -> `.compact-tmp/<tmp>`
+  - object identity hashes `[[[F@55326912`, `Foo$$Lambda$97/0x7fc1@43ab7ca`
+                    -> `[[[F@<obj>`, `Foo$$Lambda@<obj>`
+  - the dumping checkout's output root, named on the dump's first line
+    (`OutRoot: <dir>`)  -> `<outRoot>`, so dumps from two checkouts
+    compare
 
 Prints a unified diff per differing query. Exits 1 when any plan
 differs or a query is dumped in one directory only, 0 otherwise.
@@ -31,10 +40,18 @@ RULES = [
     (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[N]"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),
+    (re.compile(r"Statistics\(sizeInBytes=[^)]*\)"), "Statistics(N)"),
+    (re.compile(r"(CollectMetrics .*), \d+$", re.M), r"\1, N"),
+    (re.compile(r"\.compact-tmp/[0-9a-f]+"), ".compact-tmp/<tmp>"),
+    (re.compile(r"Lambda\$\d+/0x[0-9a-f]+"), "Lambda"),
+    (re.compile(r"(?<=[\w;$])@[0-9a-f]+\b"), "@<obj>"),
 ]
 
 
 def normalise(text):
+    first = text.split("\n", 1)[0]
+    if first.startswith("OutRoot: "):
+        text = text.replace(first[len("OutRoot: "):], "<outRoot>")
     for pattern, repl in RULES:
         text = pattern.sub(repl, text)
     return text
