@@ -1053,6 +1053,7 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
       Tables.documents(s, dir)
         .select("doc_id", "source", "text", "n_chars")
         .repartition(4).write.mode("overwrite").json(src)
+      orderPartFiles(s, src)
       markStaged(s, src)
     }
     fs.delete(new org.apache.hadoop.fs.Path(s"$base/checkpoint"), true)

@@ -231,7 +231,25 @@ private[graft] trait QueryDomain {
         .drop("update_description")
         .repartition(4).write.mode("overwrite")
         .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").json(path)
+      orderPartFiles(s, path)
       true
+    }
+  }
+
+  /** Give the `part-*` files under `path` distinct mtimes, ascending in
+    * name order and all older than anything written later (sentinel
+    * rows). A file source admits files oldest first, and one job writes
+    * its parts with equal mtimes, so under `maxFilesPerTrigger` the split
+    * into triggers would otherwise be arbitrary. */
+  protected def orderPartFiles(s: SparkSession, path: String): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(path))
+      .filter(_.getPath.getName.startsWith("part-")).sortBy(_.getPath.getName)
+    if (parts.nonEmpty) {
+      val t0 = parts.map(_.getModificationTime).min
+      parts.zipWithIndex.foreach { case (st, i) =>
+        fs.setTimes(st.getPath, t0 - (parts.length - i) * 1000L, -1L)
+      }
     }
   }
 

@@ -203,10 +203,15 @@ object CdcPipeline {
   /** Wire source → transform → destination and start the query.
     * The foreachBatch body is the flush path (pipeline.rs:1721-1786):
     * write with retry/backoff, then metrics; offset commit (the "save
-    * resume token" step) happens in the engine after this returns. */
+    * resume token" step) happens in the engine after this returns.
+    * Local paths are served by [[graft.io.NioLocalFileSystem]] (installed
+    * here when the native Hadoop library is absent): the query's own
+    * session carries its confs into every trigger's checkpoint logs and
+    * sink writes. */
   def start(spark: SparkSession, cfg: PipelineConfig,
             destination: Destination): StreamingQuery = {
     import GraftMetrics._
+    graft.io.NioLocalFileSystem.install(spark)
     val logLineCache =
       new java.util.concurrent.ConcurrentHashMap[String, Long]()
     val transformed = cfg.transform(source(spark, cfg))
@@ -323,7 +328,8 @@ object CdcPipeline {
       case None     => writer.trigger(Trigger.AvailableNow())
     }
     val confs = providerConfs(cfg.stateStoreProvider) ++
-      cfg.statePartitions.map(n => PartitionsConfKey -> n.toString)
+      cfg.statePartitions.map(n => PartitionsConfKey -> n.toString) ++
+      graft.io.NioLocalFileSystem.confs
     startWithConfs(spark, confs)(triggered.start())
   }
 

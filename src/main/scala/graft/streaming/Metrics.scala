@@ -116,6 +116,9 @@ object GraftMetrics {
   val ActiveCollections = "rigatoni_active_collections"
   val PipelineStatus = "rigatoni_pipeline_status" // 0 stopped, 1 running, 2 error
   val BatchQueueSize = "rigatoni_batch_queue_size" // UNIT: unadmitted source FILES per query here, buffered EVENTS per collection in the reference — see CdcPipeline.stagedFileCount
+  /** graft-native: each streaming trigger's phase times
+    * (`progress.durationMs`), labelled by query and phase. */
+  val TriggerPhase = "graft_trigger_phase_seconds"
 }
 
 /** StreamingQueryListener bridging Structured Streaming progress to the
@@ -147,6 +150,11 @@ final class MetricsListener extends StreamingQueryListener {
     add(EventsProcessed, p.numInputRows, "query" -> q)
     observe(BatchSize, p.numInputRows.toDouble, "query" -> q)
     observe(BatchDuration, p.batchDuration / 1000.0, "query" -> q)
+    // the trigger's phases (latestOffset, walCommit, addBatch,
+    // commitOffsets, …) as the engine timed them
+    p.durationMs.asScala.foreach { case (phase, ms) =>
+      observe(TriggerPhase, ms / 1000.0, "query" -> q, "phase" -> phase)
+    }
     // change_stream_lag_seconds (metrics.rs:191) for watermarked queries:
     // processing time minus the newest event time this batch carried. (The
     // pipeline write path also feeds this for non-watermarked envelopes,

@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.hadoop.util.ShutdownHookManager
+import org.apache.spark.TaskFailedReason
+import scala.jdk.CollectionConverters._
 
 /** One SparkSession shared by every suite (sbt runs suites in one forked
   * JVM; spinning a session per suite would dominate test time). */
@@ -21,6 +25,7 @@ object SparkTestSession {
         graft.streaming.CdcPipeline.RocksDBProvider)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    PostMortem.watch(s.sparkContext)
     s
   }
   /** Root every spec writes its output under ([[graft.OutRoot]]). */
@@ -29,6 +34,60 @@ object SparkTestSession {
   val sfTiny = "/root/testdata/sf0.001"
   /** Correctness scale (what the driver's DuckDB gate runs at). */
   val sfSmall = "/root/testdata/sf0.01"
+}
+
+/** Why a red run went red: the first failed task, the first uncaught
+  * error and who stopped the shared context, printed as one `post-mortem:`
+  * line when the test JVM exits. A failure that cascades ("SparkContext
+  * has been shutdown" in every later suite) otherwise only shows its
+  * cascade. */
+object PostMortem {
+  private val firstTaskFailure = new AtomicReference[String]()
+  private val fatal = new AtomicReference[String]()
+  private val contextStop = new AtomicReference[String]()
+
+  private def oneLine(s: String): String =
+    s.linesIterator.take(2).mkString(" | ").take(400)
+
+  def watch(sc: org.apache.spark.SparkContext): Unit = {
+    sc.addSparkListener(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = e.reason match {
+        case r: TaskFailedReason => firstTaskFailure.compareAndSet(null,
+          s"stage ${e.stageId} task ${e.taskInfo.index}: ${oneLine(r.toErrorString)}")
+        case _ => ()
+      }
+      // posted from inside SparkContext.stop: the stopping thread's stack
+      // names the caller
+      override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+        val context = classOf[org.apache.spark.SparkContext].getName
+        def isStop(f: StackTraceElement) =
+          f.getClassName == context && f.getMethodName == "stop"
+        val caller = Thread.getAllStackTraces.asScala.collectFirst {
+          case (t, st) if st.exists(isStop) =>
+            val below = st.dropWhile(!isStop(_)).dropWhile(_.getClassName == context)
+            s"thread ${t.getName} via ${below.take(3).mkString(" < ")}"
+        }.getOrElse("stopping thread not found")
+        contextStop.compareAndSet(null,
+          s"exit code ${e.exitCode.getOrElse("none")}, $caller")
+      }
+    })
+    val previous = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler { (t: Thread, err: Throwable) =>
+      fatal.compareAndSet(null, s"thread ${t.getName}: ${oneLine(err.toString)}")
+      if (previous != null) previous.uncaughtException(t, err)
+      else err.printStackTrace()
+    }
+    // ahead of Spark's own shutdown hooks (Hadoop priority 40), so the
+    // context stop that ends every run is not reported as a cause
+    ShutdownHookManager.get().addShutdownHook(() => println(line()), 50)
+  }
+
+  def line(): String = {
+    def show(v: AtomicReference[String], none: String) = Option(v.get).getOrElse(none)
+    s"post-mortem: first task failure: ${show(firstTaskFailure, "none")}; " +
+      s"uncaught error: ${show(fatal, "none")}; " +
+      s"context stop: ${show(contextStop, "not stopped")}"
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -432,6 +432,10 @@ class StreamingSpec extends SparkSpec {
         "query" -> "metrics-q") === n)
       assert(GraftMetrics.histogramCount(GraftMetrics.BatchSize,
         "query" -> "metrics-q") >= 1)
+      // the trigger phases cdcbench reads: both triggers wrote the offset WAL
+      assert(GraftMetrics.histogramCount(GraftMetrics.TriggerPhase,
+        "query" -> "metrics-q", "phase" -> "walCommit") >= 1,
+        "no walCommit phase series")
       assert(GraftMetrics.histogramSum(GraftMetrics.WriteBytes,
         "destination_type" -> "file") > 0.0, "write bytes not observed")
       // change_stream_lag_seconds: fed per batch from the newest event time
