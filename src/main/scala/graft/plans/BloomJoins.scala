@@ -1,15 +1,16 @@
 package graft.plans
 
 import org.apache.spark.sql.{GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, NamedExpression, PlanExpression, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Expression, PlanExpression}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, Join, LocalLimit, LocalRelation, LogicalPlan, Project, Sample, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.sources.{BloomIndex, Manifests}
+import graft.sources.ZoneMap.{ColIn, ColRange, ZonePred}
 
 /** Bloom-pruned star joins as an OPTIMIZER rule — the ergonomics tier on
   * top of [[graft.sources.BloomIndex.prunedJoin]], the same move
@@ -230,6 +231,30 @@ object BloomJoins {
   private[graft] def zoneLayoutsFor(path: String): Seq[ZoneLayout] =
     zones.get(path)
 
+  /** A scan of exactly `files` (non-empty) standing in for `rel`: every
+    * column re-aliased under `rel`'s output id and type, so parents never
+    * see the substitution; None when a column is missing. The read is
+    * anchored at `rel`'s single `root` ([[singleRootOf]], the directory
+    * every file lives under), so a Hive layout keeps its directory-derived
+    * partition columns. A subset of the directories infers its own
+    * partition TYPES (all `__HIVE_DEFAULT_PARTITION__` infers as VOID):
+    * such a column is cast back to the type the parents were planned
+    * with. */
+  private[plans] def scanOf(spark: SparkSession, rel: LogicalRelation,
+                            files: Seq[String],
+                            root: String): Option[LogicalPlan] = {
+    val scan = Manifests.batchedRead(spark, files.iterator,
+      basePath = Some(root)).get.queryExecution.analyzed
+    val byName = scan.output.map(a => a.name -> a).toMap
+    if (!rel.output.forall(o => byName.contains(o.name))) None
+    else Some(Project(rel.output.map { o =>
+      val a = byName(o.name)
+      Alias(if (a.dataType == o.dataType) a
+        else Cast(a, o.dataType, Option(SQLConf.get.sessionLocalTimeZone)),
+        o.name)(exprId = o.exprId)
+    }, scan))
+  }
+
   /** Install on an existing session, in [[PlanShapes.rules]] order. */
   def install(spark: SparkSession): Unit =
     PlanShapes.install(spark, classOf[RewriteToBloomPrunedJoin])
@@ -243,7 +268,7 @@ object BloomJoins {
   * dimKeyᵢ))` with the fact side landing on a registered parquet layout —
   * composite keys probe per column and intersect candidate sets. */
 final case class RewriteToBloomPrunedJoin(spark: SparkSession)
-    extends Rule[LogicalPlan] with PredicateHelper {
+    extends Rule[LogicalPlan] {
 
   import BloomJoins._
 
@@ -297,41 +322,38 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
       } finally inRule.set(false)
     }
 
-  /** Literal values a top-level conjunct pins `key` to — the smallest
-    * such list (any pinning conjunct yields a sound candidate superset).
-    * NULL literals are dropped: `key = NULL` / `IN (…, NULL)` never
-    * match rows, so they need no candidate files. */
-  private def pinnedValues(cond: Expression,
-                           key: AttributeReference): Option[Seq[Any]] = {
-    val toScala = CatalystTypeConverters.createToScalaConverter(key.dataType)
-    val lists = splitConjunctivePredicates(cond).flatMap {
-      case EqualTo(a: AttributeReference, l: Literal)
-          if a.exprId == key.exprId => Some(Seq(l.value))
-      case EqualTo(l: Literal, a: AttributeReference)
-          if a.exprId == key.exprId => Some(Seq(l.value))
-      case In(a: AttributeReference, vs)
-          if a.exprId == key.exprId &&
-            vs.forall(_.isInstanceOf[Literal]) =>
-        Some(vs.map(_.asInstanceOf[Literal].value))
-      case InSet(a: AttributeReference, hset)
-          if a.exprId == key.exprId => Some(hset.toSeq)
-      case _ => None
+  /** The literal zone predicates among the top-level conjuncts of
+    * `conds` on `rel`'s own attributes ([[PlanShapes.zonePreds]], no
+    * rename map: a condition above a rename never matches the relation's
+    * output — a missed opportunity, never a wrong prune). */
+  private def literalPreds(conds: Seq[Expression],
+                           rel: LogicalRelation): Seq[ZonePred] =
+    PlanShapes.zonePreds(conds, Map.empty, rel.output).flatten
+
+  /** Literal values a conjunct pins column `c` to (`c IN (…)`, or
+    * `c = v` — the point range) — the smallest such list (any pinning
+    * conjunct yields a sound candidate superset). NULL literals are
+    * dropped: `c = NULL` / `IN (…, NULL)` never match rows, so they need
+    * no candidate files. */
+  private def pinnedValues(preds: Seq[ZonePred],
+                           c: String): Option[Seq[Any]] = {
+    val lists = preds.collect {
+      case ColIn(`c`, vs) => vs
+      case ColRange(`c`, Some(v), Some(_)) => Seq(v.value)
     }
     if (lists.isEmpty) None
-    else Some(lists.minBy(_.length)
-      .filter(_ != null).map(toScala))
+    else Some(lists.minBy(_.length).filter(_ != null))
   }
 
   /** Candidate-file sets from LITERAL pins on bloom-registered columns:
     * one entry per (registered column × pinning conjunct set); None =
     * that leg refused (too wide, probe failure) and contributes nothing.
     * Only when EVERY leg refuses does the caller's rewrite refuse. */
-  private def bloomLiteralSets(cond: Expression, rel: LogicalRelation,
+  private def bloomLiteralSets(preds: Seq[ZonePred],
                                ls: Seq[Layout]): Seq[Option[Seq[String]]] =
     for {
       l <- ls
-      key <- rel.output.find(a => a.name == l.col).toSeq
-      values <- pinnedValues(cond, key).toSeq
+      values <- pinnedValues(preds, l.col).toSeq
     } yield {
       if (values.length > l.maxKeys) None
       else if (values.isEmpty)
@@ -354,12 +376,11 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
 
   /** Candidate-file sets from RANGE/equality bounds on zone-registered
     * columns, same refusal semantics as [[bloomLiteralSets]]. */
-  private def zoneRangeSets(cond: Expression, rel: LogicalRelation,
+  private def zoneRangeSets(preds: Seq[ZonePred],
                             zls: Seq[ZoneLayout]): Seq[Option[Seq[String]]] =
     for {
       zl <- zls
-      key <- rel.output.find(_.name == zl.col).toSeq
-      (lo, hi) <- rangeBounds(cond, key)
+      (lo, hi) <- rangeBounds(preds, zl.col)
     } yield {
       val ck = ("zone", norm(zl.factPath), zl.col,
         graft.sources.Manifests.manifestVersion(zl.factPath, "_zonemap"),
@@ -383,15 +404,14 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
   private def tryPruneFilter(fl: Filter, cond: Expression,
                              rel: LogicalRelation): Option[LogicalPlan] =
     singleRootOf(spark, rel).flatMap { root =>
-      val ls = layoutsFor(root)
+      val preds = literalPreds(Seq(cond), rel)
       val zls = zoneLayoutsFor(root)
-      if (zls.exists(zl => rel.output.find(_.name == zl.col)
-          .exists(key => nullComparison(cond, key))))
+      if (zls.exists(zl => nullComparison(preds, zl.col)))
         // a NULL comparison on a zoned column keeps no rows: exact empty
         Some(fl.copy(child = LocalRelation(rel.output)))
       else {
-        val probed = (bloomLiteralSets(cond, rel, ls) ++
-          zoneRangeSets(cond, rel, zls)).flatten
+        val probed = (bloomLiteralSets(preds, layoutsFor(root)) ++
+          zoneRangeSets(preds, zls)).flatten
         if (probed.isEmpty) None
         else swappedScan(rel,
             probed.map(_.toSet).reduce(_ intersect _).toSeq.sorted,
@@ -648,10 +668,9 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
       // bloom-registered columns and ranges on zone-registered columns
       // contribute their candidate sets to the SAME intersection — the
       // `dim ⋈ fact WHERE fact.day BETWEEN …` shape skips by both legs
-      val filterSets = conds.reduceOption(And).toSeq.flatMap { c =>
-        bloomLiteralSets(c, rel, layoutsFor(root)) ++
-          zoneRangeSets(c, rel, zoneLayoutsFor(root))
-      }.flatten
+      val preds = literalPreds(conds, rel)
+      val filterSets = (bloomLiteralSets(preds, layoutsFor(root)) ++
+        zoneRangeSets(preds, zoneLayoutsFor(root))).flatten
       swappedScan(rel,
         (joinSets ++ filterSets).map(_.toSet).reduce(_ intersect _)
           .toSeq.sorted,
@@ -675,83 +694,32 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
       }
     }.mkString(";")
 
-  /** Does any top-level conjunct compare `key` to a NULL literal (either
+  /** Does any conjunct compare column `c` to a NULL literal (either
     * side)? Such a conjunct evaluates to NULL on every row — the Filter
     * keeps nothing — so the pruned scan may collapse to the exact empty
     * answer without relying on downstream null semantics. (The main
     * optimizer's NullPropagation usually folds this shape away before the
     * rule runs; the rule stays explicit about it regardless.) */
-  private def nullComparison(cond: Expression,
-                             key: AttributeReference): Boolean =
-    splitConjunctivePredicates(cond).exists {
-      case GreaterThan(a: AttributeReference, Literal(null, _))
-        if a.exprId == key.exprId => true
-      case LessThan(a: AttributeReference, Literal(null, _))
-        if a.exprId == key.exprId => true
-      case GreaterThanOrEqual(a: AttributeReference, Literal(null, _))
-        if a.exprId == key.exprId => true
-      case LessThanOrEqual(a: AttributeReference, Literal(null, _))
-        if a.exprId == key.exprId => true
-      case EqualTo(a: AttributeReference, Literal(null, _))
-        if a.exprId == key.exprId => true
-      case GreaterThan(Literal(null, _), a: AttributeReference)
-        if a.exprId == key.exprId => true
-      case LessThan(Literal(null, _), a: AttributeReference)
-        if a.exprId == key.exprId => true
-      case GreaterThanOrEqual(Literal(null, _), a: AttributeReference)
-        if a.exprId == key.exprId => true
-      case LessThanOrEqual(Literal(null, _), a: AttributeReference)
-        if a.exprId == key.exprId => true
-      case EqualTo(Literal(null, _), a: AttributeReference)
-        if a.exprId == key.exprId => true
+  private def nullComparison(preds: Seq[ZonePred], c: String): Boolean =
+    preds.exists {
+      case ColRange(`c`, lo, hi) => (lo ++ hi).exists(_.value == null)
       case _ => false
     }
 
-  /** (lo, hi) interval bounds a top-level conjunct pins `key` into —
-    * None = open on that side. Strict bounds map to the closed interval
-    * (a sound candidate superset; the Filter above is exact). NULL
-    * literals never match a range comparison and are skipped SYMMETRICALLY
-    * (either side of the comparison — a left-side `lit(null) > col` must
-    * not leak a `Some(null)` bound into the zone probe); the
-    * [[nullComparison]] check above already collapsed the scan. */
-  private def rangeBounds(cond: Expression, key: AttributeReference)
-      : Seq[(Option[Any], Option[Any])] = {
-    val toScala = CatalystTypeConverters.createToScalaConverter(key.dataType)
-    def v(l: Literal): Any = toScala(l.value)
-    splitConjunctivePredicates(cond).flatMap {
-      case _ @ (GreaterThan(_, Literal(null, _)) |
-                LessThan(_, Literal(null, _)) |
-                GreaterThanOrEqual(_, Literal(null, _)) |
-                LessThanOrEqual(_, Literal(null, _)) |
-                EqualTo(_, Literal(null, _)) |
-                GreaterThan(Literal(null, _), _) |
-                LessThan(Literal(null, _), _) |
-                GreaterThanOrEqual(Literal(null, _), _) |
-                LessThanOrEqual(Literal(null, _), _) |
-                EqualTo(Literal(null, _), _)) => None
-      case GreaterThan(a: AttributeReference, l: Literal)
-          if a.exprId == key.exprId => Some((Some(v(l)), None))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal)
-          if a.exprId == key.exprId => Some((Some(v(l)), None))
-      case LessThan(a: AttributeReference, l: Literal)
-          if a.exprId == key.exprId => Some((None, Some(v(l))))
-      case LessThanOrEqual(a: AttributeReference, l: Literal)
-          if a.exprId == key.exprId => Some((None, Some(v(l))))
-      case GreaterThan(l: Literal, a: AttributeReference)
-          if a.exprId == key.exprId => Some((None, Some(v(l))))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference)
-          if a.exprId == key.exprId => Some((None, Some(v(l))))
-      case LessThan(l: Literal, a: AttributeReference)
-          if a.exprId == key.exprId => Some((Some(v(l)), None))
-      case LessThanOrEqual(l: Literal, a: AttributeReference)
-          if a.exprId == key.exprId => Some((Some(v(l)), None))
-      case EqualTo(a: AttributeReference, l: Literal)
-          if a.exprId == key.exprId => Some((Some(v(l)), Some(v(l))))
-      case EqualTo(l: Literal, a: AttributeReference)
-          if a.exprId == key.exprId => Some((Some(v(l)), Some(v(l))))
-      case _ => None
+  /** (lo, hi) interval bounds a conjunct pins column `c` into — None =
+    * open on that side. Strict bounds map to the closed interval (a sound
+    * candidate superset; the Filter above is exact). NULL literals never
+    * match a range comparison and are skipped (on either side of the
+    * comparison — a left-side `lit(null) > col` must not leak a
+    * `Some(null)` bound into the zone probe); the [[nullComparison]]
+    * check already collapsed the scan. */
+  private def rangeBounds(preds: Seq[ZonePred], c: String)
+      : Seq[(Option[Any], Option[Any])] =
+    preds.collect {
+      case ColRange(`c`, lo, hi) if (lo.nonEmpty || hi.nonEmpty) &&
+          !(lo ++ hi).exists(_.value == null) =>
+        (lo.map(_.value), hi.map(_.value))
     }
-  }
 
   /** A scan of exactly `files`, re-aliased under `rel`'s original output
     * ids (parents never see the substitution); empty file list collapses
@@ -761,30 +729,10 @@ final case class RewriteToBloomPrunedJoin(spark: SparkSession)
     * out-of-process rewrite) refuses to prune instead of failing the
     * whole query at planning time. */
   private def swappedScan(rel: LogicalRelation, files: Seq[String],
-                          root: String, leg: String): Option[LogicalPlan] = {
+                          root: String, leg: String): Option[LogicalPlan] =
     if (files.isEmpty) Some(LocalRelation(rel.output))
-    else try {
-      // anchor the candidate-file read at the layout root so a
-      // HIVE-PARTITIONED layout (the FileDestination batch_id=/collection=
-      // shape) keeps its directory-derived partition columns — without
-      // basePath the pruned scan would lose them and the schema guard
-      // below would refuse every partitioned layout. `root` is the
-      // relation's SINGLE root ([[BloomJoins.singleRootOf]]), by
-      // construction the directory every candidate file lives under.
-      val scan = graft.sources.Manifests
-        .batchedRead(spark, files.iterator, basePath = Some(root))
-        .get.queryExecution.analyzed
-      val byName = scan.output.map(a => a.name -> a).toMap
-      // every original column must exist in the pruned scan (same
-      // files, same schema) — refuse on any surprise
-      if (!rel.output.forall(o => byName.contains(o.name))) None
-      else {
-        val restored: Seq[NamedExpression] = rel.output.map(o =>
-          Alias(byName(o.name), o.name)(exprId = o.exprId))
-        Some(Project(restored, scan))
-      }
-    } catch { case e: Exception =>
+    else try scanOf(spark, rel, files, root)
+    catch { case e: Exception =>
       refused(root, leg, e); None
     }
-  }
 }

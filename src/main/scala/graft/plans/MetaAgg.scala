@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, Ceil, EqualTo, ExprId, Expression, Floor, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, LessThan, LessThanOrEqual, Literal, NamedExpression, PredicateHelper, Substring, TruncDate, TruncTimestamp, Year}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, Ceil, EqualTo, ExprId, Expression, Floor, Literal, NamedExpression, Substring, TruncDate, TruncTimestamp, Year}
 import org.apache.spark.sql.catalyst.expressions.EvalMode
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftSemi}
@@ -12,6 +12,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.Manifests.normPath
+import graft.sources.ZoneMap
+import graft.sources.ZoneMap.{ColIn, ColRange, ZonePred}
 
 /** Manifest-served aggregates — the optimizer tier over
   * [[graft.sources.ZoneMap.metaProfile]], and the third rewrite rule in
@@ -170,24 +172,6 @@ object MetaAgg {
                                            f: Option[Expression],
                                            monotone: Boolean)
 
-  /** One WHERE conjunct's zone contribution. */
-  private[plans] sealed trait ZonePred { def c: String }
-  /** An optionally-open interval on a zone column, with STRICTNESS kept
-    * (the covered test needs it: a file with `c_min == lo` is fully
-    * covered by `c >= lo` but not `c > lo`). */
-  private[plans] final case class Bound(value: Any, inclusive: Boolean)
-  private[plans] final case class ColRange(c: String, lo: Option[Bound],
-                                    hi: Option[Bound]) extends ZonePred
-  /** A literal IN-list on a zone column (also what the optimizer infers
-    * onto the fact side of a join against a filtered dim). A file is
-    * COVERED only when single-valued on a listed value (between two
-    * listed values other values may hide); it is a CANDIDATE when any
-    * listed value falls inside its zone. NULL literals drop: `x IN (v,
-    * NULL)` filters exactly like `x IN (v)`. */
-  private[plans] final case class ColIn(c: String,
-                                        values: Seq[Any]) extends ZonePred
-
-
   /** Install on an existing session, in [[PlanShapes.rules]] order:
     * behind the summary-view rewrite, ahead of the scan-pruning rule. */
   def install(spark: SparkSession): Unit =
@@ -201,10 +185,10 @@ object MetaAgg {
   * `Aggregate` whose child unwraps (through attribute/rename Projects
   * and Filters) to a single zone-registered parquet relation. */
 final case class RewriteToMetaAggregate(spark: SparkSession)
-    extends Rule[LogicalPlan] with PredicateHelper {
+    extends Rule[LogicalPlan] {
 
   import BloomJoins.{cachedProbe, refused, Probed, RefusedTransient, RefusedWide}
-  import MetaAgg.{Bound, ColIn, ColRange, CountCol, CountStar, DistinctCount, GroupKey, MaxCol, MinCol, Spec, SumCol, ZonePred}
+  import MetaAgg.{CountCol, CountStar, DistinctCount, GroupKey, MaxCol, MinCol, Spec, SumCol}
 
   /** The plan-time manifest collects execute queries WHILE this rule is
     * running; their optimization must not re-enter the rule. */
@@ -258,12 +242,9 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     case _ => None
   }
 
-  private def sumableType(dt: DataType): Boolean =
-    graft.sources.ZoneMap.sumable(dt)
-
   /** The relation's Hive partition columns — per-file homogeneous by
     * construction, servable as GROUPINGS without zones ([[serve]]'s
-    * `withPartStats` synthesizes their statistics from `part_dir`). */
+    * `mStats` synthesizes their statistics from `part_dir`). */
   private def partitionColsOf(rel: LogicalRelation): Set[String] =
     rel.relation match {
       case hfs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
@@ -271,79 +252,27 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
       case _ => Set.empty
     }
 
-  /** Parse every WHERE conjunct as a literal comparison on a zone column;
-    * ALL conjuncts must parse or the whole rule refuses (one undecidable
-    * conjunct means no file can be certified fully covered). NULL-literal
-    * comparisons refuse here — [[RewriteToBloomPrunedJoin]]'s Filter leg
-    * already collapses those scans. Several conjuncts on one column each
-    * stay their own [[ColRange]]; the covered/candidate tests AND over
-    * all of them, which IS the interval intersection. */
+  /** Parse every WHERE conjunct as a literal comparison on a zone column
+    * ([[PlanShapes.zonePreds]]); ALL conjuncts must parse or the whole
+    * rule refuses (one undecidable conjunct means no file can be
+    * certified fully covered). NULL-literal comparisons refuse here —
+    * [[RewriteToBloomPrunedJoin]]'s Filter leg already collapses those
+    * scans. NULL IN-list members drop: `x IN (v, NULL)` filters exactly
+    * like `x IN (v)`, and an all-NULL list is the empty [[ColIn]], which
+    * covers no file and admits no candidate. Several conjuncts on one
+    * column each stay their own predicate; the covered/candidate tests
+    * AND over all of them, which IS the interval intersection. */
   private def parseConds(conds: Seq[Expression], zcols: Set[String],
                          defs: Map[ExprId, Expression],
                          rel: LogicalRelation): Option[Seq[ZonePred]] = {
-    def zc(e: Expression): Option[String] =
-      relCol(e, defs, rel).filter(zcols.contains)
-    def litV(l: Literal): Option[Any] = Option(l.value)
-    val parsed: Seq[Option[ZonePred]] = conds.flatMap(splitConjunctivePredicates).map {
-      case In(a: AttributeReference, vs)
-          if vs.forall(_.isInstanceOf[Literal]) =>
-        // NULL literals drop (they only ever yield NULL, filtered anyway);
-        // an all-NULL list matches nothing — the empty ColIn covers no
-        // file and admits no candidate, which is exactly that semantics
-        zc(a).map(c => ColIn(c,
-          vs.collect { case l: Literal if l.value != null =>
-            scalaV(a, l.value) }))
-      case InSet(a: AttributeReference, hset) =>
-        zc(a).map(c => ColIn(c,
-          hset.toSeq.filter(_ != null).map(scalaV(a, _))))
-      case IsNotNull(a: AttributeReference) =>
-        // the optimizer infers IsNotNull beside every range conjunct; on a
-        // zone column it maps to the unbounded range (covered = zero
-        // nulls, candidate = any non-null value)
-        zc(a).map(c => ColRange(c, None, None))
-      case GreaterThan(a: AttributeReference, l: Literal) =>
-        for (c <- zc(a); v <- litV(l))
-          yield ColRange(c, Some(Bound(scalaV(a, v), false)), None)
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-        for (c <- zc(a); v <- litV(l))
-          yield ColRange(c, Some(Bound(scalaV(a, v), true)), None)
-      case LessThan(a: AttributeReference, l: Literal) =>
-        for (c <- zc(a); v <- litV(l))
-          yield ColRange(c, None, Some(Bound(scalaV(a, v), false)))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-        for (c <- zc(a); v <- litV(l))
-          yield ColRange(c, None, Some(Bound(scalaV(a, v), true)))
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        for (c <- zc(a); v <- litV(l))
-          yield ColRange(c, Some(Bound(scalaV(a, v), true)),
-            Some(Bound(scalaV(a, v), true)))
-      case GreaterThan(l: Literal, a: AttributeReference) =>
-        for (c <- zc(a); v <- litV(l))
-          yield ColRange(c, None, Some(Bound(scalaV(a, v), false)))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-        for (c <- zc(a); v <- litV(l))
-          yield ColRange(c, None, Some(Bound(scalaV(a, v), true)))
-      case LessThan(l: Literal, a: AttributeReference) =>
-        for (c <- zc(a); v <- litV(l))
-          yield ColRange(c, Some(Bound(scalaV(a, v), false)), None)
-      case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-        for (c <- zc(a); v <- litV(l))
-          yield ColRange(c, Some(Bound(scalaV(a, v), true)), None)
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        for (c <- zc(a); v <- litV(l))
-          yield ColRange(c, Some(Bound(scalaV(a, v), true)),
-            Some(Bound(scalaV(a, v), true)))
-      case _ => None
-    }
-    if (parsed.exists(_.isEmpty)) None else Some(parsed.map(_.get))
+    val parsed = PlanShapes.zonePreds(conds, defs, rel.output).map(
+      _.filter(p => zcols.contains(p.c)).flatMap {
+        case r: ColRange if (r.lo ++ r.hi).exists(_.value == null) => None
+        case i: ColIn => Some(i.copy(values = i.values.filter(_ != null)))
+        case r => Some(r)
+      })
+    if (parsed.exists(_.isEmpty)) None else Some(parsed.flatten)
   }
-
-  /** Literal values cross the manifest-query boundary as Columns —
-    * convert catalyst-internal representations (UTF8String, Decimal) to
-    * the Scala form `lit()` accepts. */
-  private def scalaV(a: AttributeReference, v: Any): Any =
-    org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(a.dataType)(v)
 
   /** Value → stable cache-key string: Array[Byte] (a BinaryType bound)
     * stringifies by CONTENT, not identity — an identity image would make
@@ -726,7 +655,7 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
               relCol(m.child, defs, rel).filter(zcols.contains).map(MinCol)
             case m: Max =>
               relCol(m.child, defs, rel).filter(zcols.contains).map(MaxCol)
-            case s: Sum if sumableType(s.child.dataType) &&
+            case s: Sum if ZoneMap.sumable(s.child.dataType) &&
                 s.evalContext.evalMode != EvalMode.TRY =>
               // TRY sums return NULL on overflow — a semantics the
               // composed per-file sums cannot replicate; LEGACY (wraps)
@@ -800,7 +729,7 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     // is homogeneous per file BY CONSTRUCTION (every row in a file shares
     // its directory's value), and `part_dir` is already a manifest
     // column — so GROUP BY on a partition column serves from the manifest
-    // with zero zone configuration. [[withPartStats]] synthesizes its
+    // with zero zone configuration. [[ZoneMap.withPartStats]] synthesizes its
     // per-file statistics from the directory name, and the schema check
     // below treats those synthetic names as present.
     val partCols: Set[String] = partitionColsOf(rel)
@@ -809,6 +738,7 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     val partBases: Set[String] =
       (groupCols.map(_.base) ++ ranges.map(_.c) ++ joinKeyCols)
         .filter(partCols.contains).toSet
+    def zone(c: String) = Seq(s"${c}_min", s"${c}_max", s"${c}_nulls")
     val needed: Seq[String] = specs.flatMap {
       case CountStar => Nil
       case CountCol(c) => Seq(s"${c}_nulls")
@@ -819,48 +749,16 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
         // a pre-upgrade manifest refuses until its next rebuild
         (if (ansi && integral(c)) Seq("built_ansi") else Nil)
       case GroupKey(_) => Nil
-      case DistinctCount(c) => Seq(s"${c}_min", s"${c}_max", s"${c}_nulls")
-    } ++ ranges.filterNot(r => partBases(r.c)).flatMap(r =>
-      Seq(s"${r.c}_min", s"${r.c}_max", s"${r.c}_nulls")) ++
-      groupCols.filterNot(g => partBases(g.base)).flatMap(g =>
-        Seq(s"${g.base}_min", s"${g.base}_max", s"${g.base}_nulls")) ++
-      joinKeyCols.filterNot(partBases).flatMap(k =>
-        Seq(s"${k}_min", s"${k}_max", s"${k}_nulls"))
+      case DistinctCount(c) => zone(c)
+    } ++ (ranges.map(_.c) ++ groupCols.map(_.base) ++ joinKeyCols)
+      .filterNot(partBases).flatMap(zone)
     if (!needed.forall(fields.contains)) return None
 
-    // Synthesize per-file statistics for partition-derived grouping
-    // columns from `part_dir`: min = max = the parsed value, nulls = 0
-    // (or n_rows for the __HIVE_DEFAULT_PARTITION__ null group — Spark
-    // writes null AND empty-string partition values as that default dir,
-    // so a real partition level NEVER extracts as ""). A raw value
-    // carrying a '%' escape is NOT decoded here (Hive path-escaping is
-    // not plain URL decoding — a wrong decode would be a silent wrong
-    // group value): such files get nulls = -1, which fails BOTH
-    // homogeneity disjuncts, keeps the file a CANDIDATE under partition
-    // predicates, and routes it to the raw-scan leg, where Spark's own
-    // partition parsing supplies the value — exact answers either way.
-    // An EMPTY extraction gets the same nulls = -1 routing: it means the
-    // `key=` segment is missing from part_dir — a shard key derived from
-    // a root the encoder mishandled, or an escaped column NAME the
-    // pattern can't see — and serving it as the NULL group (or excluding
-    // it under a predicate) would be a silent wrong answer, while the
-    // raw-scan leg stays exact at the cost of scanning that exotic file.
-    def withPartStats(df: DataFrame): DataFrame =
-      partBases.foldLeft(df) { (d, p) =>
-        val dt = rel.output.find(_.name == p).map(_.dataType)
-          .getOrElse(StringType)
-        val raw = regexp_extract(col("part_dir"),
-          "(?:^|/)" + java.util.regex.Pattern.quote(p) + "=([^/]*)", 1)
-        val nullish = raw === "__HIVE_DEFAULT_PARTITION__"
-        val unknown = raw.contains("%") || raw === ""
-        val v = when(nullish || unknown, lit(null)).otherwise(raw).cast(dt)
-        d.withColumn(s"${p}_min", v)
-          .withColumn(s"${p}_max", v)
-          .withColumn(s"${p}_nulls",
-            when(nullish, col("n_rows"))
-              .otherwise(when(unknown, lit(-1L)).otherwise(lit(0L))))
-      }
-    def mStats: DataFrame = withPartStats(mSnap)
+    // partition-derived columns' statistics, synthesized from part_dir
+    def mStats: DataFrame = partBases.foldLeft(mSnap) { (d, p) =>
+      ZoneMap.withPartStats(d, p, rel.output.find(_.name == p)
+        .map(_.dataType).getOrElse(StringType))
+    }
 
     // SUM validity: on a mixed-schema manifest (an out-of-process append
     // beside pre-`_sum` rows) the old files' sums read as NULL and a
@@ -937,51 +835,13 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     if (!manifestSet.subsetOf(listingByNorm.keySet)) return None // stale
     val unknown = listing.filterNot(f => manifestSet.contains(normF(f)))
 
-    // zone tests per parsed predicate, strictness-aware
-    def coveredTest(p: ZonePred): Column = p match {
-      case r: ColRange =>
-        val base = col(s"${r.c}_nulls") === 0L
-        val loT = r.lo.fold(lit(true))(b =>
-          if (b.inclusive) col(s"${r.c}_min") >= lit(b.value)
-          else col(s"${r.c}_min") > lit(b.value))
-        val hiT = r.hi.fold(lit(true))(b =>
-          if (b.inclusive) col(s"${r.c}_max") <= lit(b.value)
-          else col(s"${r.c}_max") < lit(b.value))
-        base && loT && hiT
-      case i: ColIn =>
-        // only a SINGLE-VALUED file on a listed value is covered: a zone
-        // spanning two listed values may hide unlisted values between
-        if (i.values.isEmpty) lit(false)
-        else col(s"${i.c}_nulls") === 0L &&
-          col(s"${i.c}_min") === col(s"${i.c}_max") &&
-          col(s"${i.c}_min").isin(i.values: _*)
-    }
-    def candidateTest(p: ZonePred): Column = {
-      val base = p match {
-        case r: ColRange =>
-          val nn = col(s"${r.c}_min").isNotNull // all-NULL zones never match
-          val loT = r.lo.fold(lit(true))(b =>
-            if (b.inclusive) col(s"${r.c}_max") >= lit(b.value)
-            else col(s"${r.c}_max") > lit(b.value))
-          val hiT = r.hi.fold(lit(true))(b =>
-            if (b.inclusive) col(s"${r.c}_min") <= lit(b.value)
-            else col(s"${r.c}_min") < lit(b.value))
-          nn && loT && hiT
-        case i: ColIn =>
-          if (i.values.isEmpty) lit(false)
-          else col(s"${i.c}_min").isNotNull &&
-            i.values.map(v => col(s"${i.c}_min") <= lit(v) &&
-              col(s"${i.c}_max") >= lit(v)).reduce(_ || _)
-      }
-      // a partition value this rule refused to decode (percent-escaped —
-      // synthetic nulls = -1) has UNKNOWN bounds: the file must stay a
-      // candidate (scan raw, Spark's own parser decides) — excluding it
-      // would silently drop its rows
-      if (partBases(p.c)) (col(s"${p.c}_nulls") === -1L) || base else base
-    }
-    val covered = ranges.map(coveredTest)
+    // zone tests per parsed predicate, strictness-aware; a partition
+    // value this rule refused to decode (synthetic nulls = -1) has
+    // UNKNOWN bounds: the file must stay a candidate (scan raw, Spark's
+    // own parser decides) — excluding it would silently drop its rows
+    val covered = ranges.map(ZoneMap.covered)
       .reduceOption(_ && _).getOrElse(lit(true))
-    val candidate = ranges.map(candidateTest)
+    val candidate = ranges.map(p => ZoneMap.candidate(p, partBases(p.c)))
       .reduceOption(_ && _).getOrElse(lit(true))
     // grouped serving additionally demands each file be HOMOGENEOUS in
     // every grouping: one value throughout (zero nulls, min == max — or,
@@ -990,14 +850,12 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     // NULL group / the f(NULL) group) — only then do the file's
     // statistics belong to a single output group
     val homog = legsCols.distinct.map { g =>
-      val sameValue = g.f match {
-        case Some(f) if g.monotone =>
-          fOver(f, col(s"${g.base}_min")) <=>
-            fOver(f, col(s"${g.base}_max"))
-        case _ => col(s"${g.base}_min") === col(s"${g.base}_max")
+      val oneValue = g.f match {
+        case Some(f) if g.monotone => col(s"${g.base}_nulls") === 0L &&
+          (fOver(f, col(s"${g.base}_min")) <=> fOver(f, col(s"${g.base}_max")))
+        case _ => ZoneMap.singleValued(g.base)
       }
-      (col(s"${g.base}_nulls") === 0L && sameValue) ||
-        col(s"${g.base}_nulls") === col("n_rows")
+      oneValue || col(s"${g.base}_nulls") === col("n_rows")
     }.reduceOption(_ && _).getOrElse(lit(true))
 
     // dim-join mode: a file serves only when HOMOGENEOUS in every join
@@ -1007,8 +865,7 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     // an ANTI key keeps null rows (no match = kept), so all-null files
     // under an anti-only key fall to the raw-scan leg instead, where the
     // replayed anti join keeps them
-    val joinHomog = joinKeyCols.map(k =>
-        col(s"${k}_nulls") === 0L && col(s"${k}_min") === col(s"${k}_max"))
+    val joinHomog = joinKeyCols.map(ZoneMap.singleValued)
       .reduceOption(_ && _).getOrElse(lit(true))
     val exclKeyCols = joinDims.filter(_.joinType != LeftAnti)
       .flatMap(_.keys.map(_._1)).distinct
@@ -1073,11 +930,9 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     def aliasN(i: Int) = s"a$i"
     def gAlias(j: Int) = s"g$j"
     val gValsRaw: Seq[Column] = legsCols.map { g =>
-      // the file's single base value: NULL for an all-null zone, else the
-      // zone min (== every value under strict homogeneity; under the
-      // monotone test any representative gives the same f-value)
-      val v = when(col(s"${g.base}_nulls") === col("n_rows"), lit(null))
-        .otherwise(col(s"${g.base}_min"))
+      // the file's single base value (under the monotone test the zone
+      // min is as good a representative as any: same f-value)
+      val v = ZoneMap.soleValue(g.base)
       g.f.fold(v)(f => fOver(f, v))
     }
     val gVals: Seq[Column] = gValsRaw.zipWithIndex.map { case (c, j) =>
@@ -1100,6 +955,23 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
         Aggregate(lp.output, lp.output, lp))
     }
     val mBase = mStats.filter(servableM)
+    // join manifest rows to every dim on the zones' single key values
+    // (`__zm_<k>_min`): a served file's rows all share the key values, so
+    // they share one FATE per dim — inner multiplies by the match count,
+    // semi keeps once iff matched, anti keeps once iff unmatched, exactly
+    // what the same join type does to the manifest row. `gateOnly` turns
+    // inner dims into semi gates (a value set is multiplicity-free).
+    def joinedToDims(df: DataFrame, gateOnly: Boolean): DataFrame =
+      joinDims.foldLeft(df) { (d, jd) =>
+        val cond = jd.keys.map { case (k, _, dk) =>
+          col(s"__zm_${k}_min") === GraftBridge.column(dk)
+        }.reduce(_ && _)
+        d.join(GraftBridge.ofRows(spark, jd.dimPlan), cond, jd.joinType match {
+          case LeftAnti => "left_anti"
+          case LeftSemi => "left_semi"
+          case _ => if (gateOnly) "left_semi" else "inner"
+        })
+      }
     val mleg =
       if (joinDims.nonEmpty && distinctMode) {
         // DISTINCT shapes under dim joins: the output value set is
@@ -1113,16 +985,8 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
         val mPre = mBase.select(
           gValsRaw.zipWithIndex.map { case (c, j) => c.as(gAlias(j)) } ++
             keyMins.map(c => col(c).as(s"__zm_$c")): _*)
-        val gated = joinDims.foldLeft(mPre) { (df, jd) =>
-          val dimDF = GraftBridge.ofRows(spark, jd.dimPlan)
-          val cond = jd.keys.map { case (k, _, dk) =>
-            col(s"__zm_${k}_min") === GraftBridge.column(dk)
-          }.reduce(_ && _)
-          df.join(dimDF, cond,
-            if (jd.joinType == LeftAnti) "left_anti" else "left_semi")
-        }
-        distinctOf(gated.select(legsCols.indices.map(j =>
-          col(gAlias(j))): _*))
+        distinctOf(joinedToDims(mPre, gateOnly = true)
+          .select(legsCols.indices.map(j => col(gAlias(j))): _*))
       } else if (joinDims.nonEmpty) {
         // join the SERVED manifest rows against each dim on the zones'
         // single key values: each dim match stands for the whole file, so
@@ -1140,21 +1004,7 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
           c.as(s"__zm_g$j") }
         val mPre = mBase.select(gPre ++ statCols.distinct.map(c =>
           col(c).as(s"__zm_$c")): _*)
-        val joined = joinDims.foldLeft(mPre) { (df, jd) =>
-          val dimDF = GraftBridge.ofRows(spark, jd.dimPlan)
-          val cond = jd.keys.map { case (k, _, dk) =>
-            col(s"__zm_${k}_min") === GraftBridge.column(dk)
-          }.reduce(_ && _)
-          // a served file's rows all share the key values, so they share
-          // one FATE per dim: inner multiplies by the match count, semi
-          // keeps once iff matched, anti keeps once iff unmatched —
-          // exactly what the same join type does to the manifest row
-          df.join(dimDF, cond, jd.joinType match {
-            case LeftSemi => "left_semi"
-            case LeftAnti => "left_anti"
-            case _ => "inner"
-          })
-        }
+        val joined = joinedToDims(mPre, gateOnly = false)
         val jAggs: Seq[Column] = specs.zipWithIndex.collect {
           case (CountStar, i) => sum(col("__zm_n_rows")).as(aliasN(i))
           case (CountCol(c), i) =>
@@ -1179,16 +1029,10 @@ final case class RewriteToMetaAggregate(spark: SparkSession)
     val combined: DataFrame =
       if (scanFiles.isEmpty) mleg
       else {
-        val scan = graft.sources.Manifests
-          .batchedRead(spark, scanFiles.iterator, basePath = Some(root))
-          .get.queryExecution.analyzed
-        val byName = scan.output.map(a => a.name -> a).toMap
-        if (!rel.output.forall(o => byName.contains(o.name))) return None
-        val restored: Seq[NamedExpression] = rel.output.map(o =>
-          Alias(byName(o.name), o.name)(exprId = o.exprId))
+        val scan = BloomJoins.scanOf(spark, rel, scanFiles, root)
+          .getOrElse(return None)
         val filtered = conds.reduceOption(And)
-          .map(c => Filter(c, Project(restored, scan)): LogicalPlan)
-          .getOrElse(Project(restored, scan))
+          .map(c => Filter(c, scan): LogicalPlan).getOrElse(scan)
         // dim-join mode: the raw-scanned files replay the ORIGINAL joins
         // (rebuilt on the restored fact attributes, inner-first — the
         // original association) before aggregating

@@ -1,18 +1,21 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, ExprId, Expression, PredicateHelper}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, EqualTo, ExprId, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.sources
 
 import graft.sources.Manifests.normPath
+import graft.sources.ZoneMap.{Bound, ColIn, ColRange, ZonePred}
 
 /** The plan-shape layer under the three optimizer rules
   * ([[RewriteToSummary]], [[RewriteToMetaAggregate]],
   * [[RewriteToBloomPrunedJoin]]): one Project/Filter walk with alias
-  * resolution, one equi-join parse, one path-keyed registry and one rule
-  * order. Conjunct splitting is Catalyst's own
-  * `PredicateHelper.splitConjunctivePredicates`. */
+  * resolution, one equi-join parse, one literal-conjunct parse, one
+  * path-keyed registry and one rule order. Conjunct splitting is
+  * Catalyst's own `PredicateHelper.splitConjunctivePredicates`, literal
+  * comparisons go through Spark's data-source filter translator. */
 object PlanShapes extends PredicateHelper {
 
   /** A Project/Filter stack stripped down to the first other node.
@@ -81,6 +84,39 @@ object PlanShapes extends PredicateHelper {
       case _ => None
     }
     if (pairs.exists(_.isEmpty)) None else Some(pairs.flatten)
+  }
+
+  /** Each conjunct of `conds`, `defs` inlined, as a literal zone
+    * predicate on an `output` column — None for any other conjunct. Only
+    * conjuncts referencing `output` attributes (by exprId) parse, so a
+    * filter above a rename never prunes through a same-named column.
+    * Spark's data-source filter translator reads the comparison, each
+    * attribute renamed to its ordinal first (it refuses dotted names).
+    * NULL literals stay visible: each rule keeps its own NULL policy. */
+  def zonePreds(conds: Seq[Expression], defs: Map[ExprId, Expression],
+                output: Seq[Attribute]): Seq[Option[ZonePred]] = {
+    val ordinal = output.map(_.exprId).zipWithIndex.toMap
+    def name(a: String) = output(a.toInt).name
+    conds.flatMap(splitConjunctivePredicates).map { e =>
+      val inlined = inline(e, defs)
+      if (!inlined.references.forall(a => ordinal.contains(a.exprId))) None
+      else GraftBridge.translateFilter(inlined.transform {
+          case a: AttributeReference => a.withName(ordinal(a.exprId).toString)
+        }).collect {
+        case sources.EqualTo(a, v) =>
+          ColRange(name(a), Some(Bound(v, true)), Some(Bound(v, true)))
+        case sources.GreaterThan(a, v) =>
+          ColRange(name(a), Some(Bound(v, false)), None)
+        case sources.GreaterThanOrEqual(a, v) =>
+          ColRange(name(a), Some(Bound(v, true)), None)
+        case sources.LessThan(a, v) =>
+          ColRange(name(a), None, Some(Bound(v, false)))
+        case sources.LessThanOrEqual(a, v) =>
+          ColRange(name(a), None, Some(Bound(v, true)))
+        case sources.In(a, vs) => ColIn(name(a), vs.toSeq)
+        case sources.IsNotNull(a) => ColRange(name(a), None, None)
+      }
+    }
   }
 
   /** Entries registered per normalized path, unique per path by `subKey`:

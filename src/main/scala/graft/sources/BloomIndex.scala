@@ -219,16 +219,10 @@ object BloomIndex {
     * arm per shard. */
   def prunedRead(spark: SparkSession, path: String, c: String,
                  values: Seq[Any], parts: Seq[String] = Nil): DataFrame = {
-    val matching = matchingRows(spark, path, c, values, parts)
-    val predicate = col(c).isin(values: _*)
-    val files = matching.select("part_dir", "file")
-      .sort("part_dir", "file").toLocalIterator()
-    Manifests.batchedRead(spark,
-        scala.jdk.CollectionConverters.IteratorHasAsScala(files)
-          .asScala.map(_.getString(1)),
-        basePath = Some(path)) // keep Hive partition columns (if any)
+    Manifests.readListed(spark, matchingRows(spark, path, c, values, parts),
+        path)
       .getOrElse(spark.read.parquet(path).limit(0))
-      .filter(predicate)
+      .filter(col(c).isin(values: _*))
   }
 
   /** Dim-driven JOIN with fact-side FILE skipping — a runtime filter

@@ -24,7 +24,7 @@ private[graft] object Manifests {
   /** In-process manifest VERSION per (layout root, manifest kind), bumped
     * by every write path ([[ZoneMap]]/[[BloomIndex]] write / update /
     * refreshShards) — the invalidation stamp for plan-time probe caches
-    * ([[graft.plans.BloomJoins]]), mirroring
+    * ([[graft.plans.BloomJoins]]); kind `state` is
     * [[graft.streaming.BucketedStateTable.stateVersion]]. Staleness
     * contract is the same one: the maintaining writer runs in THIS
     * process; an out-of-process writer does not bump (and could not keep
@@ -157,6 +157,17 @@ private[graft] object Manifests {
     if (buf.nonEmpty) arms += read(buf.toSeq)
     arms.reduceOption(_ unionByName _)
   }
+
+  /** [[batchedRead]] of the data files a manifest slice lists, anchored
+    * at the layout root `path` (keeps Hive partition columns): the slice's
+    * `file` column streams to the driver in (part_dir, file) order — one
+    * manifest job, driver memory one batch wide. */
+  private[graft] def readListed(spark: SparkSession, rows: DataFrame,
+                                path: String): Option[DataFrame] =
+    batchedRead(spark, scala.jdk.CollectionConverters.IteratorHasAsScala(
+        rows.select("part_dir", "file").sort("part_dir", "file")
+          .toLocalIterator()).asScala.map(_.getString(1)),
+      basePath = Some(path))
 
   def listDataFiles(fs: FileSystem, dir: Path): Seq[Path] =
     fs.listStatus(dir).toSeq.flatMap { st =>

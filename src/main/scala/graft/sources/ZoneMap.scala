@@ -59,6 +59,115 @@ object ZoneMap {
       case _ => false
     }
 
+  // ------------------------------------------------------ zone predicates
+
+  /** A literal predicate on column `c`, as the zone tests read it: parsed
+    * from WHERE conjuncts ([[graft.plans.PlanShapes.zonePreds]]) or an API
+    * band. A [[Bound]] value may be null (a NULL literal); each caller
+    * decides what that means. */
+  private[graft] sealed trait ZonePred { def c: String }
+  private[graft] final case class Bound(value: Any, inclusive: Boolean)
+  /** An optionally-open interval with STRICTNESS kept (a file with
+    * `c_min == lo` is covered by `c >= lo` but not by `c > lo`). `c = v`
+    * is the closed point range; both ends open is `c IS NOT NULL`. */
+  private[graft] final case class ColRange(c: String, lo: Option[Bound],
+                                           hi: Option[Bound]) extends ZonePred
+  private[graft] final case class ColIn(c: String,
+                                        values: Seq[Any]) extends ZonePred
+
+  /** `v` on the passing side of an optional lower (`lower`) or upper
+    * bound. */
+  private def beyond(v: Column, b: Option[Bound], lower: Boolean): Column =
+    b.fold(lit(true)) { b =>
+      if (lower) { if (b.inclusive) v >= lit(b.value) else v > lit(b.value) }
+      else if (b.inclusive) v <= lit(b.value) else v < lit(b.value)
+    }
+
+  /** Every row of a file passes `p`, read off its manifest row: zero
+    * nulls in `p.c` (a null row fails every comparison) and the zone
+    * inside the predicate. An IN-list covers only a SINGLE-VALUED file on
+    * a listed value — a zone spanning two listed values may hide unlisted
+    * values between them. */
+  private[graft] def covered(p: ZonePred): Column = p match {
+    case r: ColRange => col(s"${r.c}_nulls") === 0L &&
+      beyond(col(s"${r.c}_min"), r.lo, lower = true) &&
+      beyond(col(s"${r.c}_max"), r.hi, lower = false)
+    case i: ColIn =>
+      if (i.values.isEmpty) lit(false)
+      else singleValued(i.c) && col(s"${i.c}_min").isin(i.values: _*)
+  }
+
+  /** Some row of a file may pass `p`: its zone intersects the predicate
+    * (all-NULL zones never do — the comparisons are null-rejecting).
+    * `unknownBounds`: the column's statistics may be synthesized with
+    * `nulls = -1` ([[withPartStats]]); such a file's bounds are UNKNOWN,
+    * so it stays a candidate and is scanned, never excluded. */
+  private[graft] def candidate(p: ZonePred,
+                               unknownBounds: Boolean = false): Column = {
+    val nn = col(s"${p.c}_min").isNotNull
+    val base = p match {
+      case r: ColRange => nn &&
+        beyond(col(s"${r.c}_max"), r.lo, lower = true) &&
+        beyond(col(s"${r.c}_min"), r.hi, lower = false)
+      case i: ColIn =>
+        if (i.values.isEmpty) lit(false)
+        else nn && i.values.map(v => col(s"${i.c}_min") <= lit(v) &&
+          col(s"${i.c}_max") >= lit(v)).reduce(_ || _)
+    }
+    if (unknownBounds) (col(s"${p.c}_nulls") === -1L) || base else base
+  }
+
+  /** Every row of a file holds the same non-null value of `c`. */
+  private[graft] def singleValued(c: String): Column =
+    col(s"${c}_nulls") === 0L && col(s"${c}_min") === col(s"${c}_max")
+
+  /** A homogeneous file's one value of `c`: NULL for an all-NULL zone,
+    * else the zone min. */
+  private[graft] def soleValue(c: String): Column =
+    when(col(s"${c}_nulls") === col("n_rows"), lit(null))
+      .otherwise(col(s"${c}_min"))
+
+  /** Per-file statistics for Hive partition column `p` of type `dt`,
+    * synthesized from the manifest's `part_dir`: min = max = the parsed
+    * value, nulls = 0 — or n_rows for the `__HIVE_DEFAULT_PARTITION__`
+    * null group (Spark writes null AND empty-string partition values as
+    * that default dir, so a real partition level never extracts as "").
+    * A value carrying a '%' escape is NOT decoded (Hive path-escaping is
+    * not plain URL decoding), and an EMPTY extraction means the `p=`
+    * segment is missing (a damaged shard key, an escaped column NAME):
+    * both get nulls = -1, which fails every homogeneity and covered test
+    * and keeps the file a [[candidate]] under `unknownBounds` — scanned
+    * raw, where Spark's own partition parsing supplies the value. */
+  private[graft] def withPartStats(m: DataFrame, p: String,
+                                   dt: org.apache.spark.sql.types.DataType)
+      : DataFrame = {
+    val raw = partDirValue(p)
+    val nullish = raw === "__HIVE_DEFAULT_PARTITION__"
+    val unknown = raw.contains("%") || raw === ""
+    val v = when(nullish || unknown, lit(null)).otherwise(raw).cast(dt)
+    m.withColumn(s"${p}_min", v)
+      .withColumn(s"${p}_max", v)
+      .withColumn(s"${p}_nulls",
+        when(nullish, col("n_rows"))
+          .otherwise(when(unknown, lit(-1L)).otherwise(lit(0L))))
+  }
+
+  private def partDirValue(p: String): Column =
+    regexp_extract(col("part_dir"),
+      "(?:^|/)" + java.util.regex.Pattern.quote(p) + "=([^/]*)", 1)
+
+  /** An API band `(c, lo, hi)`: the closed range `lo <= c <= hi`. */
+  private def bandRange(b: (String, Any, Any)): ColRange =
+    ColRange(b._1, Some(Bound(b._2, true)), Some(Bound(b._3, true)))
+
+  /** The rows of `df` inside every band — the exact predicate a boundary
+    * scan re-applies (zones are necessary, not sufficient). */
+  private def withinBands(df: DataFrame,
+                          bands: Seq[(String, Any, Any)]): DataFrame =
+    bands.map(bandRange).map(r => beyond(df.col(r.c), r.lo, lower = true) &&
+        beyond(df.col(r.c), r.hi, lower = false))
+      .reduceOption(_ && _).map(df.filter).getOrElse(df)
+
   // ------------------------------------------------- per-file sketch tier
 
   /** Sketch parameters are FIXED so sketches written by any maintenance
@@ -458,20 +567,17 @@ object ZoneMap {
                                            lo: Option[Any], hi: Option[Any],
                                            parts: Seq[String] = Nil)
       : Seq[String] = {
-    val sharded = Manifests.shards(spark, path, "_zonemap", parts)
-    val loC = lo.map(v => col(s"${c}_max") >= lit(v)).getOrElse(lit(true))
-    val hiC = hi.map(v => col(s"${c}_min") <= lit(v)).getOrElse(lit(true))
-    sharded.filter(col(s"${c}_min").isNotNull && loC && hiC)
+    Manifests.shards(spark, path, "_zonemap", parts)
+      .filter(candidate(ColRange(c, lo.map(Bound(_, true)),
+        hi.map(Bound(_, true)))))
       .select("part_dir", "file").sort("part_dir", "file")
       .collect().map(_.getString(1)).toSeq
   }
 
   private def zoneFilter(spark: SparkSession, path: String, c: String,
-                         lo: Any, hi: Any, parts: Seq[String]): DataFrame = {
+                         lo: Any, hi: Any, parts: Seq[String]): DataFrame =
     Manifests.shards(spark, path, "_zonemap", parts)
-      .filter(col(s"${c}_min").isNotNull &&
-        col(s"${c}_max") >= lit(lo) && col(s"${c}_min") <= lit(hi))
-  }
+      .filter(candidate(bandRange((c, lo, hi))))
 
   /** Range-predicate read through the manifest: scan ONLY candidate
     * files, then re-apply the exact predicate (zones are necessary, not
@@ -485,16 +591,9 @@ object ZoneMap {
     * to those shards. */
   def prunedRead(spark: SparkSession, path: String, c: String,
                  lo: Any, hi: Any, parts: Seq[String] = Nil): DataFrame = {
-    val matching = zoneFilter(spark, path, c, lo, hi, parts)
-    val predicate = col(c) >= lit(lo) && col(c) <= lit(hi)
-    val files = matching.select("part_dir", "file")
-      .sort("part_dir", "file").toLocalIterator()
-    Manifests.batchedRead(spark,
-        scala.jdk.CollectionConverters.IteratorHasAsScala(files)
-          .asScala.map(_.getString(1)),
-        basePath = Some(path)) // keep Hive partition columns (if any)
-      .getOrElse(spark.read.parquet(path).limit(0))
-      .filter(predicate)
+    withinBands(Manifests.readListed(spark,
+        zoneFilter(spark, path, c, lo, hi, parts), path)
+      .getOrElse(spark.read.parquet(path).limit(0)), Seq((c, lo, hi)))
   }
 
   /** Answer table-level `count / min / max / null-count` aggregates from
@@ -667,11 +766,9 @@ object ZoneMap {
     * in part_dir). A column that extracts empty from EVERY part_dir is
     * genuinely not a partition level and refuses loudly (lumping the
     * layout into one NULL group would be a silent wrong answer); a
-    * PARTIAL empty extraction — a damaged or exotically-encoded
-    * shard-key subset — routes those files to the caller's boundary leg
-    * via `nulls = -1` (the same discipline as the optimizer rule and as
-    * percent-escaped values): degraded cost, never a refused layout or
-    * a wrong group. */
+    * PARTIAL empty extraction routes those files to the caller's
+    * boundary leg ([[withPartStats]]): degraded cost, never a refused
+    * layout or a wrong group. */
   private def withSynthStats(spark: SparkSession, path: String,
                              m: DataFrame, fields: Set[String],
                              statCols: Seq[String]): DataFrame =
@@ -688,19 +785,10 @@ object ZoneMap {
             case _: org.apache.spark.sql.AnalysisException =>
               org.apache.spark.sql.types.StringType
           }
-        val raw = regexp_extract(col("part_dir"),
-          "(?:^|/)" + java.util.regex.Pattern.quote(gc) + "=([^/]*)", 1)
-        require(d.filter(raw =!= "").limit(1).count() > 0L,
+        require(d.filter(partDirValue(gc) =!= "").limit(1).count() > 0L,
           s"'$gc' is neither zone-indexed nor a partition level " +
             s"of this layout — add it to the zone map's cols")
-        val nullish = raw === "__HIVE_DEFAULT_PARTITION__"
-        val unknown = raw.contains("%") || raw === ""
-        val v = when(nullish || unknown, lit(null)).otherwise(raw).cast(dt)
-        d.withColumn(s"${gc}_min", v)
-          .withColumn(s"${gc}_max", v)
-          .withColumn(s"${gc}_nulls",
-            when(nullish, col("n_rows"))
-              .otherwise(when(unknown, lit(-1L)).otherwise(lit(0L))))
+        withPartStats(d, gc, dt)
       }
     }
 
@@ -775,37 +863,26 @@ object ZoneMap {
     // OR all-NULL (the SQL NULL group); the gate key strictly (all-NULL
     // files match NOTHING — excluded from both legs, null never equals).
     // A band (closed range predicate, ANDed) splits files three ways:
-    // fully COVERED (every row passes — zero nulls required, since a
-    // null row fails a range predicate) serve whole, DISJOINT (no row
-    // can pass; all-NULL included — range comparisons are
-    // null-rejecting) are excluded from both legs, anything else —
+    // [[covered]] files serve whole, files that are no [[candidate]]
+    // (disjoint or all-NULL) are excluded from both legs, anything else —
     // partial overlap, some-null files, unknown bounds (nulls = -1) —
     // scans raw with the exact predicate re-applied.
-    def groupHomog(c: String): Column = (col(s"${c}_nulls") === 0L &&
-        col(s"${c}_min") === col(s"${c}_max")) ||
-      col(s"${c}_nulls") === col("n_rows")
-    val keyHomog = gate.map { case (k, _, _) =>
-      col(s"${k}_nulls") === 0L && col(s"${k}_min") === col(s"${k}_max") }
-    def covered(b: (String, Any, Any)): Column =
-      col(s"${b._1}_nulls") === 0L &&
-        col(s"${b._1}_min") >= lit(b._2) && col(s"${b._1}_max") <= lit(b._3)
-    def disjoint(b: (String, Any, Any)): Column =
-      col(s"${b._1}_max") < lit(b._2) || col(s"${b._1}_min") > lit(b._3) ||
-        col(s"${b._1}_nulls") === col("n_rows")
-    // three-valued logic, resolved DELIBERATELY: a file with unknown
-    // bounds (synthesized nulls = -1 leaves min/max NULL, making a band
-    // comparison NULL) must land on the BOUNDARY leg — a NULL verdict is
-    // "can't prove it serves, can't prove it's excluded", and only a
-    // definite TRUE may serve or exclude. Without the coalesce a NULL
-    // `excluded` would fail BOTH legs' filters and silently drop the
-    // file's rows.
+    def groupHomog(c: String): Column =
+      singleValued(c) || col(s"${c}_nulls") === col("n_rows")
+    val keyHomog = gate.map { case (k, _, _) => singleValued(k) }
+    val ranges = bands.map(bandRange)
+    // only a definite TRUE may serve or exclude: a NULL verdict (a NULL
+    // band literal) falls to the BOUNDARY leg, where the exact predicate
+    // decides. Without the coalesce a NULL `excluded` would fail BOTH
+    // legs' filters and silently drop the file's rows.
     val excluded = coalesce(
       (gate.map { case (k, _, _) =>
-          col(s"${k}_nulls") === col("n_rows") } ++ bands.map(disjoint))
+          col(s"${k}_nulls") === col("n_rows") } ++
+        ranges.map(r => !candidate(r, unknownBounds = true)))
         .reduceOption(_ || _).getOrElse(lit(false)),
       lit(false))
     val servedCond = coalesce(
-      (groupCols.map(groupHomog) ++ keyHomog ++ bands.map(covered))
+      (groupCols.map(groupHomog) ++ keyHomog ++ ranges.map(covered))
         .reduceOption(_ && _).getOrElse(lit(true)),
       lit(false))
     val keys = gate.map { case (_, dim, dimKey) =>
@@ -819,9 +896,6 @@ object ZoneMap {
           .join(ks, col(s"${k}_min") === col("__graft_dim_key"), "left_semi")
       case _ => mg.filter(servedCond && !excluded)
     }
-    def gVal(c: String): Column =
-      when(col(s"${c}_nulls") === col("n_rows"), lit(null))
-        .otherwise(col(s"${c}_min"))
     val servedBlobs = {
       val aggs: Seq[Column] =
         (if (groupCols.isEmpty) coalesce(sum(col("n_rows")), lit(0L))
@@ -845,24 +919,16 @@ object ZoneMap {
                else Nil)
           }
       servedRows.groupBy(groupCols.zipWithIndex.map { case (c, i) =>
-          gVal(c).as(s"__g$i") }: _*)
+          soleValue(c).as(s"__g$i") }: _*)
         .agg(aggs.head, aggs.tail: _*)
     }
     // leg 2 — boundary files scan raw, their (matching) rows grouped by
     // the real columns and re-sketched at the SAME k/lgK so the blobs
     // merge losslessly with the manifest's
-    val boundary = mg.filter(!servedCond && !excluded)
-      .select("part_dir", "file").sort("part_dir", "file").toLocalIterator()
-    val rawBlobs = Manifests.batchedRead(spark,
-        scala.jdk.CollectionConverters.IteratorHasAsScala(boundary)
-          .asScala.map(_.getString(1)),
-        basePath = Some(path))
+    val rawBlobs = Manifests.readListed(spark,
+        mg.filter(!servedCond && !excluded), path)
       .map { df =>
-        // exact band predicate re-applied — zones are necessary, not
-        // sufficient, on partially-overlapping files
-        val banded = bands.map(b =>
-            df.col(b._1) >= lit(b._2) && df.col(b._1) <= lit(b._3))
-          .reduceOption(_ && _).map(df.filter).getOrElse(df)
+        val banded = withinBands(df, bands)
         val gated = (gate, keys) match {
           case (Some((k, _, _)), Some(ks)) =>
             banded.join(ks, banded.col(k) === col("__graft_dim_key"),
@@ -983,33 +1049,20 @@ object ZoneMap {
     def scopeSketch(bands: Seq[(String, Any, Any)]): DataFrame = {
       val mg = withSynthStats(spark, path, m, fields,
         bands.map(_._1).distinct)
-      def covered(b: (String, Any, Any)): Column =
-        col(s"${b._1}_nulls") === 0L &&
-          col(s"${b._1}_min") >= lit(b._2) &&
-          col(s"${b._1}_max") <= lit(b._3)
-      def disjoint(b: (String, Any, Any)): Column =
-        col(s"${b._1}_max") < lit(b._2) ||
-          col(s"${b._1}_min") > lit(b._3) ||
-          col(s"${b._1}_nulls") === col("n_rows")
-      val servedCond = coalesce(bands.map(covered)
+      val ranges = bands.map(bandRange)
+      val servedCond = coalesce(ranges.map(covered)
         .reduceOption(_ && _).getOrElse(lit(true)), lit(false))
-      val excluded = coalesce(bands.map(disjoint)
-        .reduceOption(_ || _).getOrElse(lit(false)), lit(false))
+      val excluded = coalesce(
+        ranges.map(r => !candidate(r, unknownBounds = true))
+          .reduceOption(_ || _).getOrElse(lit(false)), lit(false))
       val served = mg.filter(servedCond).agg(
         coalesce(sum(col("n_rows")), lit(0L)).as("__n"),
         graft.functions.Sketches.thetaUnion(col(s"${c}_tht"), ThetaLgK)
           .as("__sk"))
-      val boundary = mg.filter(!servedCond && !excluded)
-        .select("part_dir", "file").sort("part_dir", "file")
-        .toLocalIterator()
-      val raw = Manifests.batchedRead(spark,
-          scala.jdk.CollectionConverters.IteratorHasAsScala(boundary)
-            .asScala.map(_.getString(1)),
-          basePath = Some(path))
+      val raw = Manifests.readListed(spark,
+          mg.filter(!servedCond && !excluded), path)
         .map { df =>
-          val pass = bands.map(b =>
-              df.col(b._1) >= lit(b._2) && df.col(b._1) <= lit(b._3))
-            .reduceOption(_ && _).map(df.filter).getOrElse(df)
+          val pass = withinBands(df, bands)
           pass.agg(count(lit(1)).as("__n"),
             graft.functions.Sketches.thetaSketch(pass.col(c), ThetaLgK)
               .as("__sk"))

@@ -62,22 +62,19 @@ private[graft] object BucketedStateTable {
   def stateDir(path: String): String = s"$path/state"
 
   /** In-process state-mutation counter per table path, bumped by every
-    * [[fold]] that actually rewrites buckets. Consumers that cache anything
-    * derived from the state files ([[graft.plans.SummaryViews]]'s resolved
-    * scan plan) compare versions instead of touching the filesystem — a
-    * pure-memory staleness check, correct under the same single-writer-per-
-    * path-per-process contract fold itself assumes. A writer in ANOTHER
-    * process does not bump this (the cache consumer documents that).
-    * Keyed by [[Manifests.normPath]], so every spelling of a path agrees. */
-  private val versions =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
+    * [[fold]] that actually rewrites buckets: the
+    * [[Manifests.manifestVersion]] counter under kind `state`. Consumers
+    * that cache anything derived from the state files
+    * ([[graft.plans.SummaryViews]]'s resolved scan plan) compare versions
+    * instead of touching the filesystem — a pure-memory staleness check,
+    * correct under the same single-writer-per-path-per-process contract
+    * fold itself assumes. A writer in ANOTHER process does not bump this
+    * (the cache consumer documents that). */
   def stateVersion(path: String): Long =
-    Option(versions.get(Manifests.normPath(path))).fold(0L)(_.longValue)
+    Manifests.manifestVersion(path, "state")
 
   private def bumpVersion(path: String): Unit =
-    versions.merge(Manifests.normPath(path), java.lang.Long.valueOf(1L),
-      (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
+    Manifests.bumpManifestVersion(path, "state")
 
   private def marker(path: String, batchId: Long) =
     new Path(s"$path/_applied/batch-$batchId")

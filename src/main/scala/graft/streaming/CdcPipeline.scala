@@ -246,8 +246,7 @@ object CdcPipeline {
             Seq(unix_micros(max(col("cluster_time"))).as("max_event_us"))
           else Nil) ++ Seq(
             // count (not sum): an empty batch must read as 0, never NULL
-            count(when(isInvalidate, lit(1))).as("n_invalidate"),
-            count(lit(1)).as("n_total"))
+            count(when(isInvalidate, lit(1))).as("n_invalidate"))
         val observed = batch.observe(obs, metricCols.head, metricCols.tail: _*)
         val live =
           if (cfg.invalidateOps.isEmpty) observed else observed.filter(!isInvalidate)

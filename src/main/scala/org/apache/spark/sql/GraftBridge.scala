@@ -31,6 +31,13 @@ object GraftBridge {
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** `DataSourceStrategy.translateFilter` is `protected[sql]`: the
+    * optimizer rules read literal conjuncts through Spark's own
+    * data-source filter translator (top-level columns only). */
+  def translateFilter(e: Expression): Option[sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e,
+      supportNestedPredicatePushdown = false)
+
   /** `Dataset.ofRows` is `private[sql]`; optimizer rules that must
     * EXECUTE a sub-plan (the BloomJoins dim-key collect) wrap it here. */
   def ofRows(spark: SparkSession,

@@ -829,4 +829,26 @@ class BloomJoinsSpec extends SparkSpec
       if (fs.exists(stash)) { fs.delete(mdir, true); fs.rename(stash, mdir) }
     }
   }
+
+  test("a filter above a projection that swaps two column names prunes " +
+      "by attribute, never by name") {
+    val zpath = s"$root/zfact-swap"
+    Tables.documents(spark, sfTiny).select("doc_id", "n_chars")
+      .repartitionByRange(8, col("doc_id"))
+      .write.mode("overwrite").parquet(zpath)
+    graft.sources.ZoneMap.write(spark, zpath, Seq("doc_id", "n_chars"))
+    BloomJoins.registerZone(BloomJoins.ZoneLayout(zpath, "doc_id"))
+    BloomJoins.registerZone(BloomJoins.ZoneLayout(zpath, "n_chars"))
+    try {
+      def z = spark.read.parquet(zpath)
+      // a value of relation n_chars, which the renamed "doc_id" holds; a
+      // read by NAME would probe relation doc_id's zones for it
+      val v = z.select(max(col("n_chars"))).head().getLong(0)
+      def q() = z.select(col("doc_id").as("n_chars"),
+          col("n_chars").as("doc_id"))
+        .where(col("doc_id") === v)
+      val got = sortedRows(q())
+      assert(got.nonEmpty && got === withoutRule(sortedRows(q())))
+    } finally BloomJoins.unregisterZone(zpath)
+  }
 }

@@ -1511,4 +1511,68 @@ class MetaAggSpec extends SparkSpec
       assert(df.collect().head.getLong(0) === 41L)
     } finally BloomJoins.uninstall(spark)
   }
+
+  test("a filter above a projection that swaps two column names prunes " +
+      "by attribute, never by name") {
+    // renamed k is "n" and renamed n is "k": the filter pins relation k
+    // to 30 (one row, n NULL there); read by NAME it would pin relation
+    // n to 30 and find no row
+    def q() = fact.select(col("k").as("n"), col("n").as("k"))
+      .where(col("n") === 30L)
+      .agg(count(lit(1)).as("c"), count(col("k")).as("ck"),
+        max(col("n")).as("mx"))
+    val (df, _) = servedBy(q())
+    val got = df.collect().toSeq
+    assert(got === withoutRule(q().collect().toSeq))
+    assert(got === Seq(Row(1L, 0L, 30L)))
+  }
+
+  test("range bounds with the literal on the LEFT keep their strictness") {
+    // 30 < k <= 74: file [25,49] is a boundary, [50,74] is covered
+    val (rows, files) = assertParity(
+      fact.where(lit(30L) < col("k") && lit(74L) >= col("k"))
+        .agg(count(lit(1)).as("c"), min(col("k")).as("mn"),
+          max(col("k")).as("mx")))
+    assert(files === 1L)
+    assert(rows === Seq(Row(44L, 31L, 74L)))
+  }
+
+  test("a served GROUP BY on a Hive partition column runs as compiled " +
+      "code, with no fallback to the interpreted path") {
+    val hp = s"$root/hivepart-codegen"
+    fs.delete(new org.apache.hadoop.fs.Path(hp), true)
+    (0 until 90).map(i =>
+        (i.toLong, if (i % 30 == 29) None else Some(s"p${i / 30}")))
+      .toDF("k", "p").repartition(1)
+      .write.partitionBy("p").parquet(hp)
+    ZoneMap.write(spark, hp, Seq("k"), updateCatalog = false)
+    BloomJoins.registerZone(BloomJoins.ZoneLayout(hp, "k"))
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false") // a compile error fails the query
+    try {
+      def f = spark.read.parquet(hp)
+      // a bare partition key, a key derived from it, and either one under
+      // a zone-range predicate (boundary files scan raw)
+      Seq[() => DataFrame](
+        () => f.groupBy(col("p"))
+          .agg(count(lit(1)).as("c"), sum(col("k")).as("sk")),
+        () => f.groupBy(substring(col("p"), 1, 1).as("pp"))
+          .agg(count(lit(1)).as("c")),
+        () => f.where(col("k") >= 30L).groupBy(col("p"))
+          .agg(count(lit(1)).as("c")),
+        () => f.where(col("k") >= 30L)
+          .groupBy(substring(col("p"), 1, 1).as("pp"))
+          .agg(count(lit(1)).as("c"))
+      ).foreach { q =>
+        val (df, fired) = servedBy(q())
+        assert(fired === 1L, df.queryExecution.optimizedPlan.toString)
+        assert(df.collect().toSeq.sortBy(_.mkString("|")) ===
+          withoutRule(q().collect().toSeq.sortBy(_.mkString("|"))))
+      }
+    } finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      BloomJoins.unregisterZone(hp)
+    }
+  }
 }
