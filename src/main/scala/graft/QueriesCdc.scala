@@ -295,7 +295,8 @@ private[graft] trait QueriesCdc { this: QueryDomain =>
       // dead across batches. The oracle is the one-shot latest-per-key
       // replay (same as cdc_materialize_state): incremental == one-shot
       // is the replica-correctness claim under the hash gate. State is
-      // hash-bucketed parquet; each batch rewrites only touched buckets.
+      // hash-bucketed parquet: the first batch writes the base, the next
+      // two append generations, and the read merges base ∪ generations.
       val env = envelope(s, dir).select(col("user_id"), col("operation"),
         col("cluster_time"), col("event_id"), col("value"))
       val path = s"$sinkRoot/cdc_replica_table-${

@@ -549,29 +549,15 @@ object Dedup {
     * same min-wise statistical properties as a random permutation family. */
   private def perm(h: Column, i: Int): Column = xxhash64(h, lit(i))
 
-  /** k-wide MinHash signature from a distinct shingle-hash array.
-    * Scan-local: one aggregate() per hash function, no shuffle.
-    *
-    * NOTE: higher-order functions run interpreted (outside whole-stage
-    * codegen), so this column form costs k interpreted passes per row —
-    * fine for ad-hoc use, but the bulk path is [[minhashSignatures]],
-    * which computes the same signatures through codegen'd hash
-    * aggregation (measured ~20× faster on the bench corpus). */
-  def minhashSignature(shingleHashes: Column, k: Int): Column =
-    when(size(shingleHashes) > 0,
-      array((0 until k).map { i =>
-        aggregate(shingleHashes, lit(Long.MaxValue),
-          (acc, h) => least(acc, perm(h, i)))
-      }: _*))
-      .otherwise(array((0 until k).map(i => lit(-1L - i)): _*))
-
   /** Bulk MinHash: one (doc_id, sig) row per document, computed as
     * explode(shingles) → groupBy(doc_id) with k codegen'd `min` aggregates
     * — the whole pipeline stays inside whole-stage codegen and partial
     * (map-side) aggregation, which is the shape that scales: the shuffle
     * carries one k-wide row per document, never the shingles. Documents
-    * with no shingles (fewer than n tokens) get the same sentinel
-    * signature as [[minhashSignature]].
+    * with no shingles (fewer than n tokens) get the sentinel signature
+    * (-1, -2, …, -k). Codegen'd aggregation throughout: a per-row
+    * `aggregate()` per hash function would run k interpreted passes
+    * (measured ~20× slower on the bench corpus).
     */
   def minhashSignatures(docs: DataFrame, shingleN: Int, k: Int,
                         idCol: String = "doc_id",
@@ -661,9 +647,9 @@ object Dedup {
   /** 64-bit SimHash from token hashes: per-bit majority vote over xxhash64
     * of each token, built entirely from column expressions (no UDF).
     *
-    * NOTE: like [[minhashSignature]], this column form runs 64 interpreted
-    * higher-order passes per row; the bulk path is [[simhashes]] (same
-    * values, codegen'd aggregation). */
+    * NOTE: this column form runs 64 interpreted higher-order passes per
+    * row; the bulk path is [[simhashes]] (same values, codegen'd
+    * aggregation). */
   def simhash(text: Column): Column = {
     val hashes = transform(TextFunctions.tokens(text), w => xxhash64(w))
     val n = size(hashes)

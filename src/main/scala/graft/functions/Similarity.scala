@@ -15,28 +15,16 @@ import org.apache.spark.sql.functions._
   *    hash to sign-pattern buckets, candidates are bucket-local.
   * Hot paths run codegen'd: the pairwise scorer through a native Catalyst
   * expression ([[cosineFast]]), bucket computation through explode +
-  * hash-aggregation; the zip_with/aggregate column forms remain for
-  * ad-hoc use and are proven equal in SimilaritySpec.
+  * hash-aggregation. SimilaritySpec checks both against interpreted
+  * zip_with/aggregate reference forms.
   */
 object Similarity {
 
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
-
-  def cosine(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val nn = norm(a) * norm(b)
-    when(nn > 0, d / nn).otherwise(lit(0.0))
-  }
-
-  /** Codegen'd cosine (native Catalyst expression, bit-identical to
-    * [[cosine]]) — used by the pairwise scorers, where the similarity is
-    * the |corpus|·|queries| inner loop and interpreted HOFs dominate. */
+  /** Codegen'd cosine (native Catalyst expression, bit-identical to the
+    * `zip_with`/`aggregate` form SimilaritySpec checks it against; 0.0 for
+    * a zero-norm input) — used by the pairwise scorers, where the
+    * similarity is the |corpus|·|queries| inner loop and interpreted HOFs
+    * dominate. */
   def cosineFast(a: Column, b: Column): Column =
     graft.functions.expressions.VectorExpressions.cosineNative(a, b)
 
@@ -181,45 +169,17 @@ object Similarity {
 
   // --- random-hyperplane LSH ------------------------------------------------
 
-  /** Deterministic pseudo-random hyperplane component for (plane j, dim i):
-    * ±1 from the parity of xxhash64(j, i). A full avalanche hash is
-    * essential here — an earlier xor/add construction had the property that
-    * bit 0 depended only on the parities of i and j, collapsing every
-    * hyperplane onto plane 0 or its complement (~1 bit of bucket entropy).
-    * xxhash64 mixes carries through all bits, so planes are independent. */
-  private def planeSign(j: Int, i: Column): Column =
-    when(pmod(xxhash64(lit(j), i), lit(2L)) === 0L, lit(1.0)).otherwise(lit(-1.0))
-
-  /** Sign bit of `vec · plane_planeIdx`, packed at `bitPos`, using
-    * index-addressed aggregation. Plane identity (planeIdx) and packing
-    * position (bitPos) are distinct: multi-table bucketing uses globally
-    * unique planes but packs every table's bucket into bits [0, nPlanes). */
-  private def planeBit(vec: Column, planeIdx: Int, bitPos: Int): Column = {
-    val d = aggregate(
-      zip_with(vec, sequence(lit(0L), size(vec).cast("long") - 1L),
-        (x, i) => x.cast("double") * planeSign(planeIdx, i)),
-      lit(0.0), (acc, v) => acc + v)
-    when(d >= 0, lit(1L << bitPos)).otherwise(lit(0L))
-  }
-
-  /** LSH bucket id for one hash table: `nPlanes` hyperplane sign bits.
-    * `table` seeds a disjoint plane family per table (plane index is
-    * globally unique: table*nPlanes + j).
-    *
-    * Column form for ad-hoc use; [[lshTopK]] computes the same buckets via
-    * the codegen'd bulk path (higher-order functions run interpreted, and
-    * nTables×nPlanes of them per row dominated the ANN bench). */
-  def lshBucket(vec: Column, nPlanes: Int = 16, table: Int = 0): Column =
-    (0 until nPlanes).map(j => planeBit(vec, table * nPlanes + j, j))
-      .reduce((a, b) => a.bitwiseOR(b))
-
   /** Bulk bucket computation: posexplode the vector once, evaluate every
     * (table, plane) dot product as a codegen'd conditional sum in ONE hash
     * aggregation (map-side partial agg; the shuffle carries
     * nTables·nPlanes doubles per vector, never the vector stream), then
-    * pack sign bits into per-table buckets. Bit-identical to
-    * [[lshBucket]] (same xxhash64-seeded planes, same ≥0 sign rule;
-    * SimilaritySpec asserts equality). */
+    * pack sign bits into per-table buckets. Plane p (globally unique:
+    * table*nPlanes + j, packed at bit j) is ±1 at dimension i by the
+    * parity of xxhash64(p, i) — a full avalanche hash: an earlier xor/add
+    * construction made bit 0 depend only on the parities of i and p,
+    * collapsing every plane onto plane 0 or its complement. A bit is set
+    * when the dot product is ≥ 0. SimilaritySpec checks the buckets
+    * against a column-expression reference. */
   private def bulkBuckets(df: DataFrame, nPlanes: Int, nTables: Int,
                           idCol: String, vecCol: String): DataFrame = {
     val nP = nTables * nPlanes

@@ -16,10 +16,10 @@ import org.apache.spark.sql.types._
   * expression generates a tight primitive `for` loop via `doGenCode`, so
   * the scorer stays inside whole-stage codegen with zero allocations.
   *
-  * Semantics are IDENTICAL to `Similarity.cosine` (same left-to-right
-  * double accumulation, norms over each full array, 0.0 for zero-norm
-  * inputs) — SimilaritySpec asserts bit-equality on real data — INCLUDING
-  * degenerate shapes, in the HOF form's exact precedence: a zero norm
+  * Semantics are IDENTICAL to the `zip_with`/`aggregate` cosine (same
+  * left-to-right double accumulation, norms over each full array, 0.0 for
+  * zero-norm inputs) — SimilaritySpec asserts bit-equality on real data —
+  * INCLUDING degenerate shapes, in the HOF form's exact precedence: a zero norm
   * product yields 0.0 FIRST (its `when(nn > 0, …).otherwise(0.0)` fires
   * before the null dot is consulted, even for mismatched lengths), and
   * only then do unequal lengths with live norms return NULL (the

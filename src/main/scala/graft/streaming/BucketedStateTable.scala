@@ -9,9 +9,13 @@ import graft.sources.Manifests
 
 /** The SHARED exactly-once bucketed-state-table protocol behind
   * [[IncrementalAgg]] (running aggregates) and [[ReplicaTable]] (CDC
-  * last-writer-wins replica) — one implementation of the fold skeleton
-  * both previously hand-rolled, so there is exactly one crash-window
-  * analysis to maintain. Each fold does its work once:
+  * last-writer-wins replica). A table is a BASE (`state/`, parquet
+  * hash-bucketed by key) plus, for an idempotent merge, append-only
+  * GENERATIONS (`gens/gen=<id>`, the bucket kept as a data column). One
+  * crash-window analysis covers both write paths.
+  *
+  * [[fold]] — copy-on-write of the touched buckets, per-trigger cost
+  * O(touched state). Each fold does its work once:
   *
   *  1. `_applied/batch-<id>` marker checked FIRST — a fully-committed
   *     replay returns without touching state;
@@ -40,36 +44,72 @@ import graft.sources.Manifests
   *  8. both materializations (delta and merged) released when the fold
   *     returns, on every path.
   *
+  * [[append]] — merge-on-read, per-trigger cost O(delta) plus an amortized
+  * compaction. Only for a `reduce` that is associative, commutative and
+  * idempotent (`reduce(x ∪ x) = reduce(x)`, e.g. a per-key max):
+  *
+  *  1. marker checked first, as above;
+  *  2. the reduced delta is written as generation `gens/gen=<batchId>` by a
+  *     dynamic partition overwrite of that one generation, so a replay
+  *     rewrites its own generation (`DedupIndex.append`'s pattern); state
+  *     version bumped;
+  *  3. once [[MaxGenerations]] generations are listed, [[compact]] runs on
+  *     the same trigger;
+  *  4. marker written last.
+  *
+  * Readers merge base ∪ generations with the same `reduce`. A compaction
+  * is [[fold]] (batch id -1: no marker, no guard) of `reduce(listed
+  * generations)` into the base, then the deletion of exactly the
+  * generations it listed. Its crash windows:
+  *  - before the fold's write: nothing changed; the generations stay and
+  *    the next compaction lists them again;
+  *  - inside the fold's write (some buckets swapped), or between the write
+  *    and the last generation delete: the base already holds the rows of
+  *    generations that are still listed. Readers and the next compaction
+  *    merge them in again, which changes nothing because the merge is
+  *    idempotent — a read gives the same rows before and after the crash,
+  *    and the next compaction converges;
+  *  - between the compaction and the trigger's marker: the replay rewrites
+  *    a generation whose rows the base already holds — a no-op again.
+  *
+  * The bound is a constant, not a knob: at 8, a read between triggers is
+  * one base scan plus at most 7 delta-sized generation scans merged in one
+  * shuffle, and each compaction's whole-table rewrite is spread over 8
+  * triggers. Sums ([[IncrementalAgg]]) are not idempotent and stay on
+  * [[fold]].
+  *
   * Nothing is `persist()`ed on the state path, so the write's cache
   * refresh has nothing to relist.
   *
-  * The residual window is a crash inside a single bucket-partition commit
-  * (the file-move step of dynamic partition overwrite) — the same
+  * The residual window is a crash inside a single partition commit (the
+  * file-move step of dynamic partition overwrite) — the same
   * no-transaction-log caveat [[graft.sources.Compaction]] states;
   * exactly-once dir swaps belong to a table format. Single-writer per
-  * state path, like any foreachBatch sink.
-  *
-  * [[graft.functions.DedupIndex]].append deliberately does NOT ride this
-  * protocol: its generations are append-only and partitioned BY the
-  * batch id itself (`gen=<batchId>`), so the dynamic partition overwrite
-  * IS the idempotence — there is no merge with prior state, hence no
-  * marker and no crash window beyond the partition swap. */
+  * state path, like any foreachBatch sink. With `batchId < 0` a
+  * generation takes the highest listed id + 1, so do not mix such calls
+  * with engine batch ids on one table: a later batch id could overwrite
+  * that generation. */
 private[graft] object BucketedStateTable {
 
   val BucketCol = "__bucket"
   val AppliedCol = "__applied_batch"
+  private val GenCol = "gen"
+
+  /** Listed generations at which [[append]] compacts (see above). */
+  val MaxGenerations = 8
 
   def stateDir(path: String): String = s"$path/state"
+  private def gensDir(path: String): String = s"$path/gens"
 
   /** In-process state-mutation counter per table path, bumped by every
-    * [[fold]] that actually rewrites buckets: the
-    * [[Manifests.manifestVersion]] counter under kind `state`. Consumers
-    * that cache anything derived from the state files
-    * ([[graft.plans.SummaryViews]]'s resolved scan plan) compare versions
-    * instead of touching the filesystem — a pure-memory staleness check,
-    * correct under the same single-writer-per-path-per-process contract
-    * fold itself assumes. A writer in ANOTHER process does not bump this
-    * (the cache consumer documents that). */
+    * write that changes what a reader sees (bucket rewrite, generation
+    * append, compaction): the [[Manifests.manifestVersion]] counter under
+    * kind `state`. Consumers that cache anything derived from the state
+    * files ([[graft.plans.SummaryViews]]'s resolved scan plan) compare
+    * versions instead of touching the filesystem — a pure-memory staleness
+    * check, correct under the same single-writer-per-path-per-process
+    * contract the writes assume. A writer in ANOTHER process does not bump
+    * this (the cache consumer documents that). */
   def stateVersion(path: String): Long =
     Manifests.manifestVersion(path, "state")
 
@@ -98,6 +138,22 @@ private[graft] object BucketedStateTable {
   def hasState(fs: FileSystem, path: String): Boolean =
     bucketDirs(fs, path).nonEmpty
 
+  /** The text of the table's `<path>/<name>` sidecar, if it exists. */
+  def record(fs: FileSystem, path: String, name: String): Option[String] = {
+    val p = new Path(s"$path/$name")
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    }
+  }
+
+  def writeRecord(fs: FileSystem, path: String, name: String,
+                  text: String): Unit = {
+    val out = fs.create(new Path(s"$path/$name"), true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
   /** Pin the table's bucket count: record it on the first fold (`_buckets`,
     * next to `_schema.ddl`), refuse a different one afterwards. [[bucketOf]]
     * depends on the count and a fold reads only the buckets its delta
@@ -107,34 +163,46 @@ private[graft] object BucketedStateTable {
     * only — callers run it before building any Spark plan. */
   def pinBuckets(spark: SparkSession, path: String, nBuckets: Int): Unit = {
     val fs = fsFor(spark, path)
-    val rec = new Path(s"$path/_buckets")
     def refuse(state: String) = throw new IllegalArgumentException(
       s"state table $path $state; nBuckets=$nBuckets would put existing " +
         "keys in other buckets and duplicate them")
-    if (fs.exists(rec)) {
-      val in = fs.open(rec)
-      val recorded =
-        try new String(in.readAllBytes(), "UTF-8").trim.toInt finally in.close()
-      if (recorded != nBuckets) refuse(s"was built with nBuckets=$recorded")
-    } else {
-      val top = bucketDirs(fs, path).maxOption.getOrElse(-1)
-      if (top >= nBuckets) refuse(s"holds bucket $top")
-      val out = fs.create(rec, true)
-      try out.write(nBuckets.toString.getBytes("UTF-8")) finally out.close()
+    record(fs, path, "_buckets").map(_.trim.toInt) match {
+      case Some(recorded) =>
+        if (recorded != nBuckets) refuse(s"was built with nBuckets=$recorded")
+      case None =>
+        val top = bucketDirs(fs, path).maxOption.getOrElse(-1)
+        if (top >= nBuckets) refuse(s"holds bucket $top")
+        writeRecord(fs, path, "_buckets", nBuckets.toString)
     }
   }
 
   /** Bucket ids with a dir under the state dir (one driver-side list). */
-  private def bucketDirs(fs: FileSystem, path: String): Set[Int] = {
-    val s = new Path(stateDir(path))
-    if (!fs.exists(s)) Set.empty
-    else fs.listStatus(s).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith(s"$BucketCol=") =>
-        n.stripPrefix(s"$BucketCol=").toInt }.toSet
+  private def bucketDirs(fs: FileSystem, path: String): Set[Int] =
+    listed(fs, stateDir(path), BucketCol).map(_.toInt).toSet
+
+  /** Generation ids under the generations dir, ascending (one driver-side
+    * list). */
+  def generations(fs: FileSystem, path: String): Seq[Long] =
+    listed(fs, gensDir(path), GenCol).map(_.toLong).sorted
+
+  /** Values `v` of the `<col>=v` dirs directly under `dir`. */
+  private def listed(fs: FileSystem, dir: String, col: String): Seq[String] = {
+    val d = new Path(dir)
+    if (!fs.exists(d)) Nil
+    else fs.listStatus(d).iterator.map(_.getPath.getName)
+      .collect { case n if n.startsWith(s"$col=") =>
+        n.stripPrefix(s"$col=") }.toSeq
   }
 
+  /** The rows of the listed generations, as [[append]] wrote them. */
+  def readGenerations(spark: SparkSession, path: String,
+                      gens: Seq[Long]): DataFrame =
+    spark.read.option("basePath", gensDir(path))
+      .parquet(gens.map(g => s"${gensDir(path)}/$GenCol=$g"): _*)
+      .drop(GenCol)
+
   /** Fold one bucketed delta into the persisted state table under the
-    * protocol above.
+    * copy-on-write protocol above.
     *
     * `delta` must already carry [[BucketCol]] (use [[bucketOf]]) and be
     * reduced to whatever per-key shape the merge expects. `merge(oldSlice,
@@ -156,14 +224,8 @@ private[graft] object BucketedStateTable {
       val touched = bucketsOf(d)
       if (touched.isEmpty) { commit(fs, path, batchId); return }
 
-      if (schemaSidecar) {
-        val schemaPath = new Path(s"$path/_schema.ddl")
-        if (!fs.exists(schemaPath)) {
-          val out = fs.create(schemaPath, true)
-          out.write(d.schema.toDDL.getBytes("UTF-8"))
-          out.close()
-        }
-      }
+      if (schemaSidecar && record(fs, path, "_schema.ddl").isEmpty)
+        writeRecord(fs, path, "_schema.ddl", d.schema.toDDL)
 
       val sPath = stateDir(path)
       val existing = bucketDirs(fs, path)
@@ -218,6 +280,45 @@ private[graft] object BucketedStateTable {
         commit(fs, path, batchId)
       } finally release(merged)
     } finally release(d)
+  }
+
+  /** Append one bucketed delta as a generation under the merge-on-read
+    * protocol above, compacting on the trigger that lists
+    * [[MaxGenerations]]. `delta` is already `reduce`d and carries
+    * [[BucketCol]]; `reduce` must be idempotent. Callers fold the first
+    * delta of a table into the base with [[fold]]. */
+  def append(spark: SparkSession, path: String, delta: DataFrame,
+             batchId: Long, reduce: DataFrame => DataFrame): Unit = {
+    val fs = fsFor(spark, path)
+    if (alreadyApplied(fs, path, batchId)) return
+    val id =
+      if (batchId >= 0) batchId
+      else generations(fs, path).lastOption.fold(0L)(_ + 1L)
+    delta.withColumn(GenCol, lit(id))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(GenCol)
+      .parquet(gensDir(path))
+    bumpVersion(path)
+    if (generations(fs, path).length >= MaxGenerations)
+      compact(spark, path, reduce)
+    commit(fs, path, batchId)
+  }
+
+  /** Fold every listed generation into the base, then delete exactly those
+    * generations (nothing to do without any). [[append]] calls it at the
+    * bound; a writer about to bypass [[append]] calls it first. */
+  def compact(spark: SparkSession, path: String,
+              reduce: DataFrame => DataFrame): Unit = {
+    val fs = fsFor(spark, path)
+    val gens = generations(fs, path)
+    if (gens.nonEmpty) {
+      fold(spark, path, reduce(readGenerations(spark, path, gens)), -1L,
+        merge = (old, d) => reduce(old.unionByName(d)))
+      gens.foreach(g =>
+        fs.delete(new Path(s"${gensDir(path)}/$GenCol=$g"), true))
+      bumpVersion(path)
+    }
   }
 
   private val ListingThresholdKey =

@@ -30,7 +30,10 @@ import org.apache.spark.sql.functions._
   * last, per-bucket `__applied_batch` guard healing the
   * overwrite-to-marker crash window — sums are NOT idempotent, so the
   * guard is load-bearing here). See [[BucketedStateTable]] for the full
-  * analysis and the residual caveat. */
+  * analysis and the residual caveat. Unlike [[ReplicaTable]] this stays
+  * copy-on-write, with no generations: [[graft.plans.SummaryViews]] scans
+  * the state dir raw, and re-summing a generation that a crashed
+  * compaction already folded in would count it twice. */
 object IncrementalAgg {
 
   /** Fold one batch of deltas into the persisted aggregate.

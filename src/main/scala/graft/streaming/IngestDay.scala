@@ -29,11 +29,12 @@ import graft.operators.Quality
   *     when constructed with `zoneMapCols`).
   *
   * Every leg keys on batchId (DLQ/primary batch dirs, index generation,
-  * replica marker), so a replayed micro-batch converges instead of
-  * double-appending — the chain inherits exactly-once end-to-end from its
-  * parts. Per-batch cost is O(batch) + O(touched state): the index is
-  * scanned never shuffled (DedupIndex), the replica rewrites only touched
-  * buckets (BucketedStateTable), the sink appends one batch dir.
+  * replica generation and marker), so a replayed micro-batch converges
+  * instead of double-appending — the chain inherits exactly-once
+  * end-to-end from its parts. Per-batch cost is O(batch) plus the
+  * replica's amortized compaction: the index is scanned never shuffled
+  * (DedupIndex), the replica appends one generation (BucketedStateTable),
+  * the sink appends one batch dir.
   * IngestDaySpec proves the streamed chain equals the same chain driven
   * batch-by-batch, and that a replayed batch changes nothing. */
 object IngestDay {

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persisted CDC REPLICA maintenance — "apply the change stream to a
   * table": each key's row in the parquet state reflects its LATEST
@@ -15,21 +17,24 @@ import org.apache.spark.sql.functions._
   * downstream consumers (rigatoni dumps event FILES; consumers must
   * re-derive current state per query).
   *
-  * Same state layout and batch protocol as [[IncrementalAgg]] — both ride
-  * the shared [[BucketedStateTable]] fold — with different merge
-  * semantics: hash-bucketed parquet keyed by `keyCols`, each batch
-  *   1. reduces to its newest row per key (one keyed aggregate — ties and
-  *      ordering decided by `versionCols`, compared lexicographically as
-  *      a struct);
-  *   2. reads ONLY the touched buckets, keeps the per-key max of
-  *      (old row, batch row) — last-writer-wins across restarts and
-  *      out-of-order batches;
-  *   3. drops keys whose winning row is delete-class, and dynamically
-  *      overwrites exactly the touched buckets.
-  * Exactly-once via [[BucketedStateTable]]'s marker + per-bucket
-  * applied-batch guard (for THIS merge the guard is belt-and-braces —
-  * max-merge is idempotent, replaying onto an already-swapped bucket
-  * re-derives the same rows). Per-trigger cost O(touched state).
+  * Same state layout as [[IncrementalAgg]] — both ride the shared
+  * [[BucketedStateTable]] — with different merge semantics: hash-bucketed
+  * parquet keyed by `keyCols`. Each batch reduces to its newest row per
+  * key (one keyed aggregate — ties and ordering decided by `versionCols`,
+  * compared lexicographically as a struct). That per-key max is
+  * idempotent, so with retained tombstones (the default) the replica is
+  * merge-on-read: a batch only APPENDS its reduced delta as a generation
+  * ([[BucketedStateTable.append]]) — per-trigger cost O(delta), with no
+  * read of the base — and every [[BucketedStateTable.MaxGenerations]]th
+  * trigger compacts the generations into the buckets, an amortized
+  * whole-table rewrite. [[read]] takes the same per-key max over base ∪
+  * generations, last-writer-wins across restarts and out-of-order
+  * batches. `tombstones = false` folds copy-on-write instead (reads ONLY
+  * the touched buckets, drops delete-winners, overwrites those buckets),
+  * because its promise is that no delete marker is left behind; it
+  * compacts any pending generations first. Exactly-once via
+  * [[BucketedStateTable]]'s marker, generation overwrite and idempotent
+  * merge.
   *
   * A delete arriving BEFORE its insert (out-of-order feed) wins if its
   * version is newer — the tombstone persists as absence only when the
@@ -38,19 +43,23 @@ import org.apache.spark.sql.functions._
   * one divergence from an infinite-retention changelog: a tombstoned
   * key's absence carries no version, so a LATE row older than the delete
   * would re-insert if it arrives in a later batch after the delete's
-  * batch already landed. Closing that needs retained tombstones;
-  * `tombstoneRetention` keeps delete markers as hidden rows for exactly
-  * that window (0 = drop immediately, the compact default). */
+  * batch already landed. Closing that needs retained tombstones, which
+  * `tombstones = true` keeps as hidden rows. */
 object ReplicaTable {
 
   private val TombstoneCol = "__tombstone"
+  /** `<path>/_columns`, next to `_buckets`: the key and version columns,
+    * recorded on the first fold so [[read]] can merge generations. */
+  private val ColumnsRecord = "_columns"
+  private val mapper = new ObjectMapper()
 
   /** Fold one batch of CDC rows into the replica.
     *
     * `deleteWhen` marks delete-class rows; `versionCols` order versions
     * (newest wins; make the tuple total, e.g. event time + event id).
     * `tombstones = true` retains delete markers (hidden from [[read]])
-    * so late rows older than a delete stay dead across batches. */
+    * so late rows older than a delete stay dead across batches. Key and
+    * version columns, like `nBuckets`, are pinned by the first fold. */
   def applyBatch(spark: SparkSession, path: String, batch: DataFrame,
                  keyCols: Seq[String], versionCols: Seq[String],
                  deleteWhen: Column, nBuckets: Int = 64,
@@ -59,53 +68,102 @@ object ReplicaTable {
       "applyBatch needs key and version columns")
     require(nBuckets >= 1, s"nBuckets must be >= 1 (got $nBuckets)")
     BucketedStateTable.pinBuckets(spark, path, nBuckets)
-    val bucketCol = BucketedStateTable.BucketCol
-    val tagged = batch.withColumn(TombstoneCol, deleteWhen)
-    val dataCols = tagged.columns.filterNot(keyCols.contains)
-    // newest row per key within the batch: one keyed max over
-    // struct(version..., payload...) — struct ordering is lexicographic
-    // on the version prefix, so the payload tail never decides a winner
-    // between distinct versions. The bucket rides as a group key (it is
-    // a function of the key columns), never in the payload struct.
-    def reduceLatest(df: DataFrame): DataFrame =
-      df.groupBy((keyCols :+ bucketCol).map(col): _*)
-        .agg(max(struct((versionCols ++
-          dataCols.filterNot(versionCols.contains)).map(col): _*))
-          .as("__row"))
-        .select((keyCols :+ bucketCol).map(col) :+ col("__row.*"): _*)
-    val d = reduceLatest(tagged.withColumn(bucketCol,
-      BucketedStateTable.bucketOf(keyCols, nBuckets)))
-    // schema sidecar: the replica can legitimately become EMPTY (every
-    // key deleted), and a parquet dir with no data files cannot answer
-    // "what is the table's schema" on read — fold writes the DDL once
-    BucketedStateTable.fold(spark, path, d, batchId,
-      merge = (old, dlt) => {
-        val m = reduceLatest(old.unionByName(dlt))
-        // drop delete-winners unless tombstones are retained (only the
-        // tombstones=false path can empty a bucket; fold clears it)
-        if (tombstones) m else m.filter(!col(TombstoneCol))
-      },
-      schemaSidecar = true)
+    val fs = BucketedStateTable.fsFor(spark, path)
+    pinColumns(fs, path, keyCols, versionCols)
+    val latest = reduceLatest(keyCols, versionCols) _
+    val d = latest(batch.withColumn(TombstoneCol, deleteWhen)
+      .withColumn(BucketedStateTable.BucketCol,
+        BucketedStateTable.bucketOf(keyCols, nBuckets)))
+    if (tombstones && BucketedStateTable.hasState(fs, path))
+      BucketedStateTable.append(spark, path, d, batchId, latest)
+    else {
+      // the direct fold merges into the base alone: pending generations
+      // go in first
+      BucketedStateTable.compact(spark, path, latest)
+      // schema sidecar: the replica can legitimately become EMPTY (every
+      // key deleted), and a parquet dir with no data files cannot answer
+      // "what is the table's schema" on read — fold writes the DDL once
+      BucketedStateTable.fold(spark, path, d, batchId,
+        merge = (old, dlt) => {
+          val m = latest(old.unionByName(dlt))
+          // drop delete-winners unless tombstones are retained (only the
+          // tombstones=false path can empty a bucket; fold clears it)
+          if (tombstones) m else m.filter(!col(TombstoneCol))
+        },
+        schemaSidecar = true)
+    }
   }
 
-  /** The current replica (tombstoned keys absent, bookkeeping dropped).
-    * An all-deleted replica reads as an empty frame with the table's
-    * schema (from the `_schema` sidecar), not an error. */
+  /** Newest row per key: one keyed max over struct(version...,
+    * payload...) — struct ordering is lexicographic on the version
+    * prefix, so the payload tail never decides a winner between distinct
+    * versions. The bucket rides as a group key (it is a function of the
+    * key columns), never in the payload struct. Associative, commutative
+    * and idempotent — what [[BucketedStateTable.append]] needs. */
+  private def reduceLatest(keyCols: Seq[String], versionCols: Seq[String])
+                          (df: DataFrame): DataFrame = {
+    val groupCols = keyCols :+ BucketedStateTable.BucketCol
+    val payload = df.columns.filterNot(c => groupCols.contains(c) ||
+      versionCols.contains(c) || c == BucketedStateTable.AppliedCol)
+    df.groupBy(groupCols.map(col): _*)
+      .agg(max(struct((versionCols ++ payload).map(col): _*)).as("__row"))
+      .select(groupCols.map(col) :+ col("__row.*"): _*)
+  }
+
+  /** Record the key and version columns on the first fold; refuse other
+    * ones afterwards — [[read]] would merge generations under the wrong
+    * identity. Driver-side file I/O only, before any Spark plan. */
+  private def pinColumns(fs: FileSystem, path: String, keyCols: Seq[String],
+                         versionCols: Seq[String]): Unit =
+    recordedColumns(fs, path) match {
+      case None =>
+        BucketedStateTable.writeRecord(fs, path, ColumnsRecord,
+          mapper.writeValueAsString(Array(keyCols.toArray, versionCols.toArray)))
+      case Some(rec) if rec != (keyCols, versionCols) =>
+        def show(c: Seq[String]) = c.mkString("[", ", ", "]")
+        throw new IllegalArgumentException(
+          s"replica $path was built with key columns ${show(rec._1)} and " +
+            s"version columns ${show(rec._2)}; key columns ${show(keyCols)} " +
+            s"and version columns ${show(versionCols)} would merge its rows " +
+            "under another identity")
+      case _ => ()
+    }
+
+  private def recordedColumns(fs: FileSystem, path: String)
+      : Option[(Seq[String], Seq[String])] =
+    BucketedStateTable.record(fs, path, ColumnsRecord).map { text =>
+      val cols = mapper.readValue(text, classOf[Array[Array[String]]])
+      (cols(0).toSeq, cols(1).toSeq)
+    }
+
+  /** The current replica (tombstoned keys absent, bookkeeping dropped):
+    * the per-key newest row of base ∪ generations, or a plain scan of the
+    * base when no generation is pending. Never writes. An all-deleted
+    * replica reads as an empty frame with the table's schema (from the
+    * `_schema` sidecar), not an error. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val fs = BucketedStateTable.fsFor(spark, path)
     val base =
       if (BucketedStateTable.hasState(fs, path))
         spark.read.parquet(BucketedStateTable.stateDir(path))
       else {
-        val in = fs.open(new Path(s"$path/_schema.ddl"))
-        val ddl = new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        in.close()
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
+        val ddl = BucketedStateTable.record(fs, path, "_schema.ddl").getOrElse(
+          throw new java.io.FileNotFoundException(s"$path/_schema.ddl"))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          StructType.fromDDL(ddl))
       }
-    base.filter(!col(TombstoneCol)).drop(TombstoneCol,
+    val gens = BucketedStateTable.generations(fs, path)
+    val rows =
+      if (gens.isEmpty) base
+      else {
+        val (keyCols, versionCols) = recordedColumns(fs, path).getOrElse(
+          throw new IllegalStateException(
+            s"replica $path has generations but no $ColumnsRecord record"))
+        reduceLatest(keyCols, versionCols)(
+          base.drop(BucketedStateTable.AppliedCol)
+            .unionByName(BucketedStateTable.readGenerations(spark, path, gens)))
+      }
+    rows.filter(!col(TombstoneCol)).drop(TombstoneCol,
       BucketedStateTable.BucketCol, BucketedStateTable.AppliedCol)
   }
 }

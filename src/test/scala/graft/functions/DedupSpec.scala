@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.{SparkSpec, Tables}
+import graft.functions.ReferenceForms.minhashSignature
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -317,7 +318,7 @@ class DedupSpec extends SparkSpec {
     val bulk = Dedup.minhashSignatures(docs, shingleN = 3, k = 16)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val colForm = docs.select(col("doc_id"),
-      Dedup.minhashSignature(TextFunctions.shingleHashes(col("text"), 3), 16)
+      minhashSignature(TextFunctions.shingleHashes(col("text"), 3), 16)
         .as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(bulk === colForm)
@@ -329,7 +330,7 @@ class DedupSpec extends SparkSpec {
       TextExpressions.minhashSignatureNative(
         TextFunctions.shingleHashes(col("text"), 3), 16).as("sig"))
     val hof = docs.select(col("doc_id"),
-      Dedup.minhashSignature(TextFunctions.shingleHashes(col("text"), 3), 16)
+      minhashSignature(TextFunctions.shingleHashes(col("text"), 3), 16)
         .as("sig"))
     val a = native.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val b = hof.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -351,7 +352,7 @@ class DedupSpec extends SparkSpec {
   test("native SignatureAgreement equals the zip_with form and stays in codegen") {
     import graft.functions.expressions.VectorExpressions
     val sigs = docs.select(col("doc_id"),
-      Dedup.minhashSignature(TextFunctions.shingleHashes(col("text"), 3), 16)
+      minhashSignature(TextFunctions.shingleHashes(col("text"), 3), 16)
         .as("sig"))
     val pairs = sigs.as("a").crossJoin(sigs.limit(5).as("b"))
       .filter(col("a.doc_id") < col("b.doc_id"))

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.{SparkSpec, Tables}
+import graft.functions.ReferenceForms.{cosine, lshBucket}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -16,7 +17,7 @@ class SimilaritySpec extends SparkSpec {
       (Seq(1.0f, 0.0f), Seq(0.0f, 1.0f)),
       (Seq(0.0f, 0.0f), Seq(1.0f, 1.0f))) // zero vector -> 0.0 (not NaN)
       .toDF("a", "b")
-    val got = df.select(Similarity.cosine(col("a"), col("b"))).as[Double].collect()
+    val got = df.select(cosine(col("a"), col("b"))).as[Double].collect()
     assert(math.abs(got(0) - 1.0) < 1e-12)
     assert(math.abs(got(1)) < 1e-12)
     assert(got(2) === 0.0)
@@ -71,7 +72,7 @@ class SimilaritySpec extends SparkSpec {
     val pairs = emb.as("a").crossJoin(emb.limit(20).as("b"))
       .select(col("a.embedding").as("x"), col("b.embedding").as("y"))
     val both = pairs.select(
-      Similarity.cosine(col("x"), col("y")).as("hof"),
+      cosine(col("x"), col("y")).as("hof"),
       Similarity.cosineFast(col("x"), col("y")).as("native"))
     val diff = both.filter(col("hof") =!= col("native")).count()
     assert(diff === 0, s"$diff pairs differ between HOF and native cosine")
@@ -91,7 +92,7 @@ class SimilaritySpec extends SparkSpec {
     // plausible depressed similarity (dot over the short prefix)
     val df = Seq((Seq(1f, 2f, 3f), Seq(1f, 2f))).toDF("x", "y")
     val native = df.select(Similarity.cosineFast(col("x"), col("y"))).head()
-    val hof = df.select(Similarity.cosine(col("x"), col("y"))).head()
+    val hof = df.select(cosine(col("x"), col("y"))).head()
     assert(native.isNullAt(0), "native cosine scored a mismatched pair")
     assert(hof.isNullAt(0), "HOF cosine scored a mismatched pair")
     // equal-length pairs are unaffected
@@ -103,7 +104,7 @@ class SimilaritySpec extends SparkSpec {
     val zeroNorm = Seq((Seq(0f, 0f), Seq(1f, 2f, 3f))).toDF("x", "y")
     val zn = zeroNorm.select(
       Similarity.cosineFast(col("x"), col("y")).as("native"),
-      Similarity.cosine(col("x"), col("y")).as("hof")).head()
+      cosine(col("x"), col("y")).as("hof")).head()
     assert(!zn.isNullAt(0) && zn.getDouble(0) === 0.0)
     assert(!zn.isNullAt(1) && zn.getDouble(1) === 0.0)
   }
@@ -115,7 +116,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.Row
     val sample = emb.limit(50)
     val colForm = sample.select(col("vec_id") +: (0 until 3).map(t =>
-        Similarity.lshBucket(col("embedding"), 5, t).as(s"b$t")): _*)
+        lshBucket(col("embedding"), 5, t).as(s"b$t")): _*)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     // reach the private bulk path through lshTopK's plan is awkward;
     // instead verify via reflection-free route: identical candidates when
@@ -499,7 +500,7 @@ class SimilaritySpec extends SparkSpec {
     // brute force through the interpreted column cosine (independent path)
     val want = corpus.select(col("vec_id"), col("embedding").as("cv"))
       .crossJoin(bench.select(col("embedding").as("bv")))
-      .select(col("vec_id"), Similarity.cosine(col("cv"), col("bv")).as("cs"))
+      .select(col("vec_id"), cosine(col("cv"), col("bv")).as("cs"))
       .groupBy("vec_id").agg(max("cs").as("m"))
       .filter(col("m") >= 0.3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -395,7 +395,9 @@ class MetaAggSpec extends SparkSpec
     assert(rows0.length === 91) // 90 non-null n values + the NULL group
   }
 
-  test("an all-NULL group zone serves as the SQL NULL group") {
+  /** Two files, one with g = 1 and one with g all NULL, zoned on k and
+    * g: (re)built by every test that reads it, so each runs on its own. */
+  private def nullGroupLayout(): String = {
     val ng = s"$root/nullgroup"
     fs.delete(new org.apache.hadoop.fs.Path(ng), true)
     Seq((1L, Some(1L)), (2L, Some(1L))).toDF("k", "g")
@@ -405,6 +407,11 @@ class MetaAggSpec extends SparkSpec
     ZoneMap.write(spark, ng, Seq("k", "g"), updateCatalog = false)
     BloomJoins.registerZone(BloomJoins.ZoneLayout(ng, "k"))
     BloomJoins.registerZone(BloomJoins.ZoneLayout(ng, "g"))
+    ng
+  }
+
+  test("an all-NULL group zone serves as the SQL NULL group") {
+    val ng = nullGroupLayout()
     val (df, fired) = servedBy(
       spark.read.parquet(ng).groupBy(col("g"))
         .agg(count(lit(1)).as("c"), sum(col("k")).as("sk")))
@@ -845,7 +852,7 @@ class MetaAggSpec extends SparkSpec
     assert(withoutRule(q().collect().head) === r)
     // anti semantics on NULL keys: no match means KEPT — the all-null-g
     // file must contribute its rows (via the raw leg), never be excluded
-    val ng = s"$root/nullgroup" // built by the null-group test above
+    val ng = nullGroupLayout()
     val gdim = Seq((1L, "a")).toDF("gk", "tag")
     val nf = spark.read.parquet(ng)
     def qa() = nf.join(gdim, nf("g") === gdim("gk"), "left_anti")

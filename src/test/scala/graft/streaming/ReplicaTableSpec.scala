@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class ReplicaTableSpec extends SparkSpec {
   import spark.implicits._
@@ -107,8 +108,16 @@ class ReplicaTableSpec extends SparkSpec {
           .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
           .map(f => f.getName -> f.lastModified()).toMap).toMap
     val pre = files()
-    ReplicaTable.applyBatch(spark, path, df((1L, 100L, "upsert", "v2")),
-      Seq("key"), Seq("ver"), col("op") === "delete", nBuckets, batchId = 1)
+    def update(id: Long): Unit =
+      ReplicaTable.applyBatch(spark, path, df((1L, 100L, "upsert", "v2")),
+        Seq("key"), Seq("ver"), col("op") === "delete", nBuckets, batchId = id)
+    update(1)
+    assert(files() === pre, "an appended generation rewrites no base bucket")
+    assert(generations(path) === Seq("gen=1"))
+    // the same update under later batch ids, up to the compaction bound:
+    // the compaction rewrites only the bucket the updates touch
+    (2L to BucketedStateTable.MaxGenerations).foreach(update)
+    assert(generations(path).isEmpty, "the bound-reaching fold compacts")
     val post = files()
     assert(post.keySet.count(b => post(b) != pre(b)) === 1,
       "exactly one bucket should be rewritten")
@@ -116,6 +125,10 @@ class ReplicaTableSpec extends SparkSpec {
       .filter(col("key") === 1L).collect()
     assert(got.length === 1 && got.head.getString(3) === "v2")
   }
+
+  private def generations(path: String): Seq[String] =
+    Option(new java.io.File(s"$path/gens").listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("gen=")).sorted
 
   private def stateRows(path: String) =
     spark.read.parquet(BucketedStateTable.stateDir(path))
@@ -208,5 +221,148 @@ class ReplicaTableSpec extends SparkSpec {
     assert(files.length === nBuckets && files.forall(_ == 1))
     val got = ReplicaTable.read(spark, path)
     assert(got.count() === 2000L && got.filter(col("ver") =!= 2L).isEmpty)
+  }
+
+  /** Last-writer-wins over every row ever applied, deletes absent. */
+  private def latestPerKey(rows: Seq[(Long, Long, String, String)]) =
+    rows.groupBy(_._1).values.map(_.maxBy(_._2))
+      .filter(_._3 != "delete").map(_.productIterator.mkString("|")).toSet
+
+  private def replicaRows(path: String) =
+    ReplicaTable.read(spark, path).collect().map(_.mkString("|")).toSet
+
+  // 40 keys, 8 versions each, 1 in 7 a delete; batch b holds the rows
+  // with version % 9 == b — versions interleave across batches
+  private val history = for (k <- 1L to 40L; v <- 1L to 8L) yield
+    (k, v * 10 + k % 3, if ((k + v) % 7 == 0) "delete" else "upsert", s"p$k.$v")
+  private def batchRows(b: Long) = history.filter(_._2 % 9 == b)
+
+  private def applyHistory(path: String, id: Long,
+                           rows: Seq[(Long, Long, String, String)]): Unit =
+    ReplicaTable.applyBatch(spark, path, df(rows: _*), Seq("key"),
+      Seq("ver"), col("op") === "delete", nBuckets = 4, batchId = id)
+
+  /** Every file under `dir`: relative path -> (size, mtime). */
+  private def tree(dir: String): Map[String, (Long, Long)] = {
+    val root = new java.io.File(dir)
+    org.apache.commons.io.FileUtils.listFiles(root, null, true).iterator()
+      .asScala.map(f => root.toPath.relativize(f.toPath).toString ->
+        (f.length(), f.lastModified())).toMap
+  }
+
+  test("a non-compacting fold appends a generation: <= 2 jobs, no state " +
+      "file written, input evaluated once") {
+    val path = freshPath("append-shape")
+    def batch(ver: Long) = spark.range(1, 2001).select(col("id").as("key"),
+      lit(ver).as("ver"), lit("upsert").as("op"),
+      concat(lit("p"), col("id").cast("string")).as("payload"))
+    ReplicaTable.applyBatch(spark, path, batch(1L), Seq("key"), Seq("ver"),
+      col("op") === "delete", 64, batchId = 0)
+    val before = tree(s"$path/state")
+    val evaluated = spark.sparkContext.longAccumulator("append-input-rows")
+    val tick = udf((k: Long) => { evaluated.add(1L); k }).asNondeterministic()
+    val input = batch(2L).filter(col("key") <= 500L)
+      .withColumn("key", tick(col("key")))
+    val jobs = jobTasks {
+      ReplicaTable.applyBatch(spark, path, input, Seq("key"), Seq("ver"),
+        col("op") === "delete", 64, batchId = 1)
+    }
+    assert(jobs.nonEmpty && jobs.size <= 2, s"jobs: $jobs")
+    assert(tree(s"$path/state") === before, "the base must not be written")
+    assert(evaluated.value === 500L,
+      "the input batch must be evaluated once per row")
+    assert(generations(path) === Seq("gen=1"))
+    val got = ReplicaTable.read(spark, path)
+    assert(got.count() === 2000L &&
+      got.filter(col("ver") === 2L).count() === 500L)
+  }
+
+  test("the fold that reaches the generation bound compacts; reads agree " +
+      "with the one-shot latest-per-key oracle before and after") {
+    val path = freshPath("compact")
+    val bound = BucketedStateTable.MaxGenerations
+    (0L until bound).foreach(b => applyHistory(path, b, batchRows(b)))
+    assert(generations(path).length === bound - 1)
+    val want = latestPerKey((0L until bound).flatMap(batchRows))
+    val before = replicaRows(path)
+    assert(before === want)
+    // one more generation, of rows already applied: the bound is reached,
+    // the compaction runs, and the replica must read the same
+    val baseBefore = tree(s"$path/state")
+    applyHistory(path, bound, batchRows(bound - 1))
+    assert(generations(path).isEmpty, "compaction must delete its generations")
+    assert(tree(s"$path/state") !== baseBefore, "compaction rewrites the base")
+    assert(replicaRows(path) === before)
+    // the rest of the history lands on the compacted base
+    applyHistory(path, bound + 1, batchRows(bound))
+    assert(replicaRows(path) === latestPerKey(history))
+  }
+
+  test("a crash between the compaction fold and the generation deletes " +
+      "leaves reads unchanged; the next compaction converges") {
+    val bound = BucketedStateTable.MaxGenerations
+    def upToBound(path: String): Unit = {
+      (0L until bound).foreach(b => applyHistory(path, b, batchRows(b)))
+      applyHistory(path, bound, batchRows(bound - 1))
+    }
+    val clean = freshPath("crash-compact-clean")
+    upToBound(clean)
+    val crashed = freshPath("crash-compact")
+    (0L until bound).foreach(b => applyHistory(crashed, b, batchRows(b)))
+    val saved = s"${crashed}-saved-gens"
+    val fs = BucketedStateTable.fsFor(spark, crashed)
+    fs.delete(new org.apache.hadoop.fs.Path(saved), true)
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$crashed/gens"), new java.io.File(saved))
+    applyHistory(crashed, bound, batchRows(bound - 1))
+    assert(generations(crashed).isEmpty)
+    // the crash: every generation the compaction listed is still there
+    // (gen=<bound> held the same rows as gen=<bound - 1>), and the
+    // trigger's marker was never written
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(saved), new java.io.File(s"$crashed/gens"))
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$saved/gen=${bound - 1}"),
+      new java.io.File(s"$crashed/gens/gen=$bound"))
+    assert(fs.delete(
+      new org.apache.hadoop.fs.Path(s"$crashed/_applied/batch-$bound"), false))
+    assert(generations(crashed).length === bound)
+    assert(replicaRows(crashed) === replicaRows(clean))
+    // the engine replays the batch: its generation is rewritten, the
+    // bound is reached again, and the re-merge changes nothing
+    applyHistory(crashed, bound, batchRows(bound - 1))
+    assert(generations(crashed).isEmpty)
+    assert(stateRows(crashed) === stateRows(clean))
+    assert(replicaRows(crashed) === replicaRows(clean))
+    assert(replicaRows(clean) ===
+      latestPerKey((0L until bound).flatMap(batchRows)))
+  }
+
+  test("changed key or version columns are refused before any Spark job " +
+      "runs") {
+    val path = freshPath("columns")
+    def apply(keys: Seq[String], versions: Seq[String], id: Long): Unit =
+      ReplicaTable.applyBatch(spark, path,
+        df((1L to 20L).map(k => (k, id, "upsert", s"p$k")): _*), keys,
+        versions, col("op") === "delete", 4, batchId = id)
+    apply(Seq("key"), Seq("ver"), 0)
+    apply(Seq("key"), Seq("ver"), 1)
+    val before = replicaRows(path)
+    val gensBefore = generations(path)
+    Seq(Seq("key", "op") -> Seq("ver"), Seq("key") -> Seq("ver", "payload"),
+        Seq("payload") -> Seq("ver")).foreach { case (keys, versions) =>
+      var err: IllegalArgumentException = null
+      val jobs = jobTasks {
+        err = intercept[IllegalArgumentException](apply(keys, versions, 2))
+      }
+      assert(jobs.isEmpty, s"refusal ran Spark jobs: $jobs")
+      assert(err.getMessage.contains("key columns [key] and version " +
+        "columns [ver]"), err.getMessage)
+    }
+    assert(generations(path) === gensBefore)
+    assert(replicaRows(path) === before)
+    apply(Seq("key"), Seq("ver"), 2)
+    assert(ReplicaTable.read(spark, path).filter(col("ver") === 2L)
+      .count() === 20L)
   }
 }
