@@ -628,11 +628,13 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
       graft.operators.KeyStrategy.Flat)
     val stream = s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = IngestDay.run(stream, s"$base/index", s"$base/replica",
-        primary, dlq, checks = Seq(Quality.NotNull("text"),
-          Quality.InRange("n_chars", 60, 1e12)), threshold = 0.5)
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow()).start()
+    val q = CdcPipeline.startWithConfs(s, Map.empty) {
+      IngestDay.run(stream, s"$base/index", s"$base/replica",
+          primary, dlq, checks = Seq(Quality.NotNull("text"),
+            Quality.InRange("n_chars", 60, 1e12)), threshold = 0.5)
+        .option("checkpointLocation", s"$base/checkpoint")
+        .trigger(Trigger.AvailableNow()).start()
+    }
     q.awaitTermination()
     // a destination whose every batch was empty leaves only _SUCCESS
     // markers — no parquet files to infer from; count that as 0
@@ -1064,10 +1066,12 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
     val snaps = graft.streaming.StreamingSample
       .weightedK(stream, k = 100, weightCol = "n_chars")
     val qname = s"stream_wsample_${tag.replace(".", "_")}"
-    val q = snaps.writeStream.queryName(qname).format("memory")
-      .outputMode("update")
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow()).start()
+    val q = graft.streaming.CdcPipeline.startWithConfs(s, Map.empty) {
+      snaps.writeStream.queryName(qname).format("memory")
+        .outputMode("update")
+        .option("checkpointLocation", s"$base/checkpoint")
+        .trigger(Trigger.AvailableNow()).start()
+    }
     awaitDrained(q)
     val ids = s.table(qname).orderBy(desc("version")).limit(1)
       .select(explode(col("docIds")).as("doc_id"))

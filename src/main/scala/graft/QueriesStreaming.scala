@@ -286,13 +286,15 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
       .psiMelted(stream, cols, bounds, 10)
       .groupBy(col("col_name"), col("bucket")).agg(count(lit(1)).as("n"))
     val qname = s"stream_drift_psi_${tag.replace(".", "_")}"
-    val q = curCounts.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .option("checkpointLocation", s"$base/checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val q = graft.streaming.CdcPipeline.startWithConfs(s, Map.empty) {
+      curCounts.writeStream
+        .outputMode("complete")
+        .format("memory")
+        .queryName(qname)
+        .option("checkpointLocation", s"$base/checkpoint")
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
     awaitDrained(q)
     graft.operators.Quality.psiFromCounts(refCounts, s.table(qname))
       .orderBy(col("col_name"))

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.sources.Manifests
 
@@ -194,12 +195,16 @@ private[graft] object BucketedStateTable {
         n.stripPrefix(s"$col=") }.toSeq
   }
 
-  /** The rows of the listed generations, as [[append]] wrote them. */
-  def readGenerations(spark: SparkSession, path: String,
-                      gens: Seq[Long]): DataFrame =
-    spark.read.option("basePath", gensDir(path))
+  /** The rows of the listed generations, as [[append]] wrote them. With
+    * the deltas' `schema` the read skips parquet's schema-inference job;
+    * without it, the schema is inferred from the files. */
+  def readGenerations(spark: SparkSession, path: String, gens: Seq[Long],
+                      schema: Option[StructType] = None): DataFrame = {
+    val r = spark.read.option("basePath", gensDir(path))
+    schema.fold(r)(r.schema)
       .parquet(gens.map(g => s"${gensDir(path)}/$GenCol=$g"): _*)
       .drop(GenCol)
+  }
 
   /** Fold one bucketed delta into the persisted state table under the
     * copy-on-write protocol above.
@@ -213,10 +218,19 @@ private[graft] object BucketedStateTable {
     * merge must return the old slice's rows unchanged (step 4). Callers
     * pin the bucket count first ([[pinBuckets]]). `schemaSidecar` writes a
     * one-time `_schema.ddl` next to the state so an emptied table still
-    * answers reads with its schema ([[ReplicaTable.read]]). */
+    * answers reads with its schema ([[ReplicaTable.read]]).
+    *
+    * `stateIsDeltaShaped` declares that the base's files hold exactly the
+    * delta's columns and types plus [[AppliedCol]], so the old slice is
+    * read with that schema and no parquet schema-inference job runs
+    * ([[IncrementalAgg]]'s decimal sums widen per fold, so it infers).
+    * `mayEmpty = false` declares that the merge returns a row for every
+    * key of its inputs, so no touched bucket can empty and the
+    * emptied-bucket collect (step 6) is skipped. */
   def fold(spark: SparkSession, path: String, delta: DataFrame,
            batchId: Long, merge: (DataFrame, DataFrame) => DataFrame,
-           schemaSidecar: Boolean = false): Unit = {
+           schemaSidecar: Boolean = false, stateIsDeltaShaped: Boolean = false,
+           mayEmpty: Boolean = true): Unit = {
     val fs = fsFor(spark, path)
     if (alreadyApplied(fs, path, batchId)) return
     val d = delta.localCheckpoint()
@@ -234,7 +248,9 @@ private[graft] object BucketedStateTable {
         if (dirs.isEmpty) d.limit(0).withColumn(AppliedCol, lit(-1L))
         else CdcPipeline.withConfs(spark,
             Map(ListingThresholdKey -> dirs.length.toString)) {
-          spark.read.option("basePath", sPath).parquet(dirs.toIndexedSeq: _*)
+          val r = spark.read.option("basePath", sPath)
+          (if (stateIsDeltaShaped) r.schema(d.schema.add(AppliedCol, LongType))
+           else r).parquet(dirs.toIndexedSeq: _*)
         }
       // the crash-window guard, in-plan: buckets whose state already
       // records this batchId were swapped by an attempt that crashed
@@ -269,7 +285,9 @@ private[graft] object BucketedStateTable {
         // dynamic overwrite replaces only partitions PRESENT in the written
         // frame — a touched bucket whose every row the merge dropped writes
         // nothing and would silently keep its stale rows. Clear it.
-        val emptied = touched.filterNot(bucketsOf(merged).toSet)
+        val emptied =
+          if (mayEmpty) touched.filterNot(bucketsOf(merged).toSet)
+          else Array.empty[Int]
         emptied.foreach { b =>
           fs.delete(new Path(s"$sPath/$BucketCol=$b"), true)
         }
@@ -301,20 +319,27 @@ private[graft] object BucketedStateTable {
       .parquet(gensDir(path))
     bumpVersion(path)
     if (generations(fs, path).length >= MaxGenerations)
-      compact(spark, path, reduce)
+      compact(spark, path, reduce, delta.schema)
     commit(fs, path, batchId)
   }
 
   /** Fold every listed generation into the base, then delete exactly those
     * generations (nothing to do without any). [[append]] calls it at the
-    * bound; a writer about to bypass [[append]] calls it first. */
+    * bound; a writer about to bypass [[append]] calls it first. `schema`
+    * is the reduced deltas' schema (what [[append]] writes, [[BucketCol]]
+    * included): the generations and the base are read with it, so the
+    * compaction runs no schema-inference job. A per-key `reduce` over a
+    * non-empty group always yields a row, so no bucket can empty and the
+    * emptied-bucket collect is skipped. */
   def compact(spark: SparkSession, path: String,
-              reduce: DataFrame => DataFrame): Unit = {
+              reduce: DataFrame => DataFrame, schema: StructType): Unit = {
     val fs = fsFor(spark, path)
     val gens = generations(fs, path)
     if (gens.nonEmpty) {
-      fold(spark, path, reduce(readGenerations(spark, path, gens)), -1L,
-        merge = (old, d) => reduce(old.unionByName(d)))
+      fold(spark, path,
+        reduce(readGenerations(spark, path, gens, Some(schema))), -1L,
+        merge = (old, d) => reduce(old.unionByName(d)),
+        stateIsDeltaShaped = true, mayEmpty = false)
       gens.foreach(g =>
         fs.delete(new Path(s"${gensDir(path)}/$GenCol=$g"), true))
       bumpVersion(path)

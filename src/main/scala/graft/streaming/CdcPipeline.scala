@@ -91,12 +91,14 @@ object CdcPipeline {
   private val PartitionsConfKey = "spark.sql.shuffle.partitions"
 
   /** Run `body` with the given session confs set, restoring the previous
-    * values after. The lock serializes every scoped change, so a query
-    * start never captures another caller's temporary settings. */
+    * values after: a key the session had not set is unset again, not
+    * pinned to its default. The lock serializes every scoped change, so a
+    * query start never captures another caller's temporary settings. */
   private[graft] def withConfs[T](spark: SparkSession,
                                   confs: Map[String, String])(body: => T): T =
     confLock.synchronized {
-      val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      val explicit = spark.conf.getAll
+      val prev = confs.keys.map(k => k -> explicit.get(k)).toMap
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try body
       finally prev.foreach {
@@ -109,9 +111,34 @@ object CdcPipeline {
     * query only. The streaming engine clones the session inside `start()`
     * (and then persists state-relevant confs in the checkpoint's offset-log
     * metadata), so the confs are set just around the start call and
-    * restored after ([[withConfs]]). */
+    * restored after ([[withConfs]]).
+    *
+    * Every start also runs the query's jobs in the executors' shared
+    * default session, so plan code compiled by one query is reused by the
+    * next. Spark 4.1 isolates each session's artifacts by default
+    * (`spark.sql.artifact.isolation.enabled`): the cloned session gets a
+    * new session UUID, its jobs carry a new `JobArtifactState`, and each
+    * executor builds a new isolated session with its own class loader.
+    * Spark's codegen cache is keyed by class loader and code, so every
+    * query start would recompile every generated class and run it
+    * JIT-cold. When the calling session holds no session-scoped artifacts
+    * (no added jars, Python includes or REPL class files) that isolation
+    * has nothing to isolate, and the key is set to `false` for the start;
+    * the clone keeps the value after the parent's is restored. A session
+    * that holds artifacts, or that set the key itself, keeps Spark's
+    * behaviour unchanged. Confs passed in `confs` win over this one. */
   def startWithConfs(spark: SparkSession, confs: Map[String, String])(
-      doStart: => StreamingQuery): StreamingQuery = withConfs(spark, confs)(doStart)
+      doStart: => StreamingQuery): StreamingQuery =
+    withConfs(spark, sharedSessionConfs(spark) ++ confs)(doStart)
+
+  private val IsolationConfKey = "spark.sql.artifact.isolation.enabled"
+
+  /** The artifact-isolation conf of [[startWithConfs]]: empty when the
+    * session holds artifacts or set the key itself. */
+  private def sharedSessionConfs(spark: SparkSession): Map[String, String] =
+    if (spark.conf.getAll.contains(IsolationConfKey) ||
+        org.apache.spark.sql.GraftBridge.holdsArtifacts(spark)) Map.empty
+    else Map(IsolationConfKey -> "false")
 
   /** [[startWithConfs]] specialized to the state-store provider (plus
     * changelog checkpointing when that provider is RocksDB). */
@@ -207,7 +234,9 @@ object CdcPipeline {
     * Local paths are served by [[graft.io.NioLocalFileSystem]] (installed
     * here when the native Hadoop library is absent): the query's own
     * session carries its confs into every trigger's checkpoint logs and
-    * sink writes. */
+    * sink writes. Started through [[startWithConfs]], so a session without
+    * artifacts runs the query without artifact isolation and reuses the
+    * plan code earlier queries compiled. */
   def start(spark: SparkSession, cfg: PipelineConfig,
             destination: Destination): StreamingQuery = {
     import GraftMetrics._

@@ -79,7 +79,7 @@ object ReplicaTable {
     else {
       // the direct fold merges into the base alone: pending generations
       // go in first
-      BucketedStateTable.compact(spark, path, latest)
+      BucketedStateTable.compact(spark, path, latest, d.schema)
       // schema sidecar: the replica can legitimately become EMPTY (every
       // key deleted), and a parquet dir with no data files cannot answer
       // "what is the table's schema" on read — fold writes the DDL once

@@ -25,6 +25,22 @@ object GraftBridge {
                         key: String): Unit =
     sc.conf.remove(key)
 
+  /** `SparkSession.artifactManager` is `private[sql]`: whether the session
+    * holds session-scoped artifacts (added jars, Python includes, REPL
+    * class files) that artifact isolation keeps apart from other
+    * sessions. */
+  def holdsArtifacts(spark: SparkSession): Boolean = {
+    val am = spark.asInstanceOf[classic.SparkSession].artifactManager
+    am.getAddedJars.nonEmpty || am.getPythonIncludes.nonEmpty ||
+      artifact.GraftArtifacts.holdsClasses(am)
+  }
+
+  /** `JobArtifactSet` is `private[spark]`: the artifact session the
+    * current thread's jobs run in on the executors (None: their shared
+    * default session). */
+  def jobArtifactSession(): Option[String] =
+    org.apache.spark.JobArtifactSet.getCurrentJobArtifactState.map(_.uuid)
+
   /** `SparkContext.listenerBus` is `private[spark]`: block until every
     * posted event has reached its listeners, before reading what they
     * recorded. */
@@ -55,5 +71,19 @@ object GraftBridge {
     val registry = spark.asInstanceOf[classic.SparkSession]
       .sessionState.functionRegistry
     fns.foreach { case (id, info, b) => registry.registerFunction(id, info, b) }
+  }
+}
+
+package artifact {
+  /** `ArtifactManager.classDir` is `protected[artifact]`. */
+  private[sql] object GraftArtifacts {
+    /** Whether the session's REPL class dir holds any class file. */
+    def holdsClasses(am: ArtifactManager): Boolean = {
+      val dir = am.classDir
+      java.nio.file.Files.isDirectory(dir) && {
+        val entries = java.nio.file.Files.list(dir)
+        try entries.findAny().isPresent finally entries.close()
+      }
+    }
   }
 }

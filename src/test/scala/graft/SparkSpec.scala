@@ -100,28 +100,48 @@ abstract class SparkSpec extends AnyFunSuite {
     * this thread (tagged by a job group, so other queries' jobs don't
     * count). */
   def jobTasks(body: => Unit): Map[Int, Int] = {
-    val sc = spark.sparkContext
-    val group = s"jobTasks-${java.util.UUID.randomUUID()}"
     val stageJob = scala.collection.concurrent.TrieMap[Int, Int]()
     val tasks = scala.collection.concurrent.TrieMap[Int, Int]()
-    val listener = new SparkListener {
+    inJobGroup(inGroup => new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) {
+        if (inGroup(e)) {
           tasks.putIfAbsent(e.jobId, 0)
           e.stageIds.foreach(stageJob.put(_, e.jobId))
         }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         stageJob.get(e.stageId).foreach(j => tasks.put(j, tasks(j) + 1))
-    }
-    sc.addSparkListener(listener)
+    })(body)
+    tasks.toMap
+  }
+
+  /** Job id → (task count, RDD names) of each of its stages, for every
+    * Spark job `body` starts on this thread. */
+  def jobStages(body: => Unit): Map[Int, Seq[(Int, Seq[String])]] = {
+    val jobs = scala.collection.concurrent.TrieMap[Int, Seq[(Int, Seq[String])]]()
+    inJobGroup(inGroup => new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (inGroup(e)) jobs.put(e.jobId,
+          e.stageInfos.map(st => (st.numTasks, st.rddInfos.map(_.name))))
+    })(body)
+    jobs.toMap
+  }
+
+  /** Run `body` under a fresh job group with the listener attached; the
+    * listener is built from a test for jobs of that group. */
+  private def inJobGroup(
+      listener: (SparkListenerJobStart => Boolean) => SparkListener)(
+      body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val l = listener(e => Option(e.properties).exists(
+      _.getProperty("spark.jobGroup.id") == group))
+    sc.addSparkListener(l)
     sc.setJobGroup(group, group)
     try body
     finally {
       sc.clearJobGroup()
       GraftBridge.drainListeners(sc)
-      sc.removeSparkListener(listener)
+      sc.removeSparkListener(l)
     }
-    tasks.toMap
   }
 }

@@ -365,4 +365,30 @@ class ReplicaTableSpec extends SparkSpec {
     assert(ReplicaTable.read(spark, path).filter(col("ver") === 2L)
       .count() === 20L)
   }
+
+  test("the compacting fold runs <= 9 jobs, none of them a 1-task parquet " +
+      "schema-inference job") {
+    val path = freshPath("compact-jobs")
+    val bound = BucketedStateTable.MaxGenerations
+    def batch(ver: Long) = spark.range(1, 2001).select(col("id").as("key"),
+      lit(ver).as("ver"), lit("upsert").as("op"),
+      concat(lit("p"), col("id").cast("string")).as("payload"))
+    def apply(id: Long): Unit =
+      ReplicaTable.applyBatch(spark, path, batch(id), Seq("key"), Seq("ver"),
+        col("op") === "delete", 64, batchId = id)
+    (0L until bound).foreach(apply)
+    assert(generations(path).length === bound - 1)
+    val jobs = jobStages(apply(bound))
+    assert(generations(path).isEmpty, "the bound-reaching fold compacts")
+    // parquet schema inference is a parallelized list of footers, read by
+    // one task
+    val schemaJobs = jobs.filter { case (_, stages) =>
+      stages.map(_._1).sum == 1 &&
+        stages.exists(_._2.contains("ParallelCollectionRDD"))
+    }
+    assert(schemaJobs.isEmpty, s"schema-inference jobs: $schemaJobs of $jobs")
+    assert(jobs.size <= 9, s"${jobs.size} jobs: $jobs")
+    val got = ReplicaTable.read(spark, path)
+    assert(got.count() === 2000L && got.filter(col("ver") =!= bound).isEmpty)
+  }
 }

@@ -1542,4 +1542,74 @@ class StreamingSpec extends SparkSpec {
       SummaryViews.unregister(src)
     }
   }
+
+  test("back-to-back AvailableNow drains: the second compiles no plan class") {
+    // each start clones the session; without artifact isolation the clone's
+    // jobs run in the executors' shared session, whose class loader keys
+    // Spark's codegen cache, so the second drain reuses every class
+    val (src, _, _) = fresh("codegen-reuse")
+    stageSource(src, parts = 4)
+    def drain(i: Int): Unit = {
+      val (_, ckpt, out) = fresh(s"codegen-reuse-$i")
+      val dest = new FileDestination(out, OutFormat.Jsonl, OutCompression.None,
+        KeyStrategy.CollectionBased)
+      val q = CdcPipeline.start(spark, cfg(src, ckpt, "codegen-reuse"), dest)
+      assert(q.awaitTermination(120000) && q.exception.isEmpty)
+    }
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    drain(1)
+    val before = compiles.getCount
+    drain(2)
+    assert(compiles.getCount === before,
+      "the second identical drain recompiled generated classes")
+    assert(!spark.conf.getAll.contains("spark.sql.artifact.isolation.enabled"),
+      "the scoped isolation conf must not stay set on the session")
+  }
+
+  test("a session holding an artifact, or setting the isolation key " +
+      "itself, keeps artifact isolation for its query") {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val (src, _, _) = fresh("isolation")
+    stageSource(src, parts = 2)
+    /** The artifact session each batch's jobs carry (None: the executors'
+      * shared default session). */
+    def artifactSessions(session: org.apache.spark.sql.SparkSession,
+                         tag: String): Set[Option[String]] = {
+      val (_, ckpt, _) = fresh(s"isolation-$tag")
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Option[String]]()
+      val dest = new Destination {
+        def writeBatch(df: DataFrame, batchId: Long): Unit = {
+          seen.add(org.apache.spark.sql.GraftBridge.jobArtifactSession())
+          df.count()
+        }
+        def metadata: DestinationMetadata =
+          DestinationMetadata("artifact-probe", supportsTransactions = false)
+      }
+      val q = CdcPipeline.start(session, cfg(src, ckpt, s"isolation-$tag"), dest)
+      assert(q.awaitTermination(120000) && q.exception.isEmpty)
+      seen.asScala.toSet
+    }
+    assert(artifactSessions(spark, "plain") === Set(None))
+
+    val jar = new java.io.File(s"$root/isolation/probe.jar")
+    val out = new java.util.jar.JarOutputStream(new java.io.FileOutputStream(jar))
+    try {
+      out.putNextEntry(new java.util.zip.ZipEntry("graft-artifact.txt"))
+      out.write("probe".getBytes("UTF-8"))
+    } finally out.close()
+    val withJar = spark.newSession()
+    withJar.addArtifact(jar.getAbsolutePath)
+    val jarSessions = artifactSessions(withJar, "jar")
+    assert(jarSessions.size === 1 && jarSessions.head.nonEmpty,
+      s"a session holding a jar lost its isolation: $jarSessions")
+    assert(!withJar.conf.getAll.contains(key))
+
+    val explicit = spark.newSession()
+    explicit.conf.set(key, "true")
+    val explicitSessions = artifactSessions(explicit, "explicit")
+    assert(explicitSessions.size === 1 && explicitSessions.head.nonEmpty,
+      s"a session that set $key lost its isolation: $explicitSessions")
+    assert(explicit.conf.get(key) === "true")
+  }
 }
