@@ -45,23 +45,26 @@ import graft.sources.Manifests
   *  8. both materializations (delta and merged) released when the fold
   *     returns, on every path.
   *
-  * [[append]] — merge-on-read, per-trigger cost O(delta) plus an amortized
+  * [[append]] — merge-on-read, per-trigger cost O(batch) plus an amortized
   * compaction. Only for a `reduce` that is associative, commutative and
   * idempotent (`reduce(x ∪ x) = reduce(x)`, e.g. a per-key max):
   *
   *  1. marker checked first, as above;
-  *  2. the reduced delta is written as generation `gens/gen=<batchId>` by a
-  *     dynamic partition overwrite of that one generation, so a replay
-  *     rewrites its own generation (`DedupIndex.append`'s pattern); state
-  *     version bumped;
+  *  2. the TAGGED delta — the batch's rows carrying [[BucketCol]], not
+  *     reduced — is written as generation `gens/gen=<batchId>` by the
+  *     scan's own tasks (one job: no shuffle, no aggregate), a dynamic
+  *     partition overwrite of that one generation, so a replay rewrites
+  *     its own generation (`DedupIndex.append`'s pattern); state version
+  *     bumped;
   *  3. once [[MaxGenerations]] generations are listed, [[compact]] runs on
   *     the same trigger;
   *  4. marker written last.
   *
-  * Readers merge base ∪ generations with the same `reduce`. A compaction
-  * is [[fold]] (batch id -1: no marker, no guard) of `reduce(listed
-  * generations)` into the base, then the deletion of exactly the
-  * generations it listed. Its crash windows:
+  * Readers merge base ∪ generations with the same `reduce`; because it is
+  * idempotent, duplicate keys inside a generation change no result. A
+  * compaction is [[fold]] (batch id -1: no marker, no guard) of
+  * `reduce(listed generations)` into the base, then the deletion of
+  * exactly the generations it listed. Its crash windows:
   *  - before the fold's write: nothing changed; the generations stay and
   *    the next compaction lists them again;
   *  - inside the fold's write (some buckets swapped), or between the write
@@ -74,7 +77,7 @@ import graft.sources.Manifests
   *    a generation whose rows the base already holds — a no-op again.
   *
   * The bound is a constant, not a knob: at 8, a read between triggers is
-  * one base scan plus at most 7 delta-sized generation scans merged in one
+  * one base scan plus at most 7 batch-sized generation scans merged in one
   * shuffle, and each compaction's whole-table rewrite is spread over 8
   * triggers. Sums ([[IncrementalAgg]]) are not idempotent and stay on
   * [[fold]].
@@ -94,6 +97,9 @@ private[graft] object BucketedStateTable {
 
   val BucketCol = "__bucket"
   val AppliedCol = "__applied_batch"
+  /** `<path>/_schema.ddl`: the delta's schema, written by the first
+    * `schemaSidecar` [[fold]]. */
+  val SchemaRecord = "_schema.ddl"
   private val GenCol = "gen"
 
   /** Listed generations at which [[append]] compacts (see above). */
@@ -238,8 +244,8 @@ private[graft] object BucketedStateTable {
       val touched = bucketsOf(d)
       if (touched.isEmpty) { commit(fs, path, batchId); return }
 
-      if (schemaSidecar && record(fs, path, "_schema.ddl").isEmpty)
-        writeRecord(fs, path, "_schema.ddl", d.schema.toDDL)
+      if (schemaSidecar && record(fs, path, SchemaRecord).isEmpty)
+        writeRecord(fs, path, SchemaRecord, d.schema.toDDL)
 
       val sPath = stateDir(path)
       val existing = bucketDirs(fs, path)
@@ -300,11 +306,13 @@ private[graft] object BucketedStateTable {
     } finally release(d)
   }
 
-  /** Append one bucketed delta as a generation under the merge-on-read
+  /** Append one tagged delta as a generation under the merge-on-read
     * protocol above, compacting on the trigger that lists
-    * [[MaxGenerations]]. `delta` is already `reduce`d and carries
-    * [[BucketCol]]; `reduce` must be idempotent. Callers fold the first
-    * delta of a table into the base with [[fold]]. */
+    * [[MaxGenerations]]. `delta` carries [[BucketCol]] and every column
+    * `reduce` reads, but is NOT reduced: readers and the compaction reduce
+    * it, and `reduce` must be idempotent, so duplicate keys change no
+    * result. Callers fold the first delta of a table into the base with
+    * [[fold]]. */
   def append(spark: SparkSession, path: String, delta: DataFrame,
              batchId: Long, reduce: DataFrame => DataFrame): Unit = {
     val fs = fsFor(spark, path)
@@ -326,11 +334,11 @@ private[graft] object BucketedStateTable {
   /** Fold every listed generation into the base, then delete exactly those
     * generations (nothing to do without any). [[append]] calls it at the
     * bound; a writer about to bypass [[append]] calls it first. `schema`
-    * is the reduced deltas' schema (what [[append]] writes, [[BucketCol]]
-    * included): the generations and the base are read with it, so the
-    * compaction runs no schema-inference job. A per-key `reduce` over a
-    * non-empty group always yields a row, so no bucket can empty and the
-    * emptied-bucket collect is skipped. */
+    * is the tagged deltas' schema (what [[append]] writes, [[BucketCol]]
+    * included): the generations are read with it by column name, the base
+    * with its `reduce`d form, so the compaction runs no schema-inference
+    * job. A per-key `reduce` over a non-empty group always yields a row,
+    * so no bucket can empty and the emptied-bucket collect is skipped. */
   def compact(spark: SparkSession, path: String,
               reduce: DataFrame => DataFrame, schema: StructType): Unit = {
     val fs = fsFor(spark, path)

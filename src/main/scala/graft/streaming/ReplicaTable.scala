@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Persisted CDC REPLICA maintenance — "apply the change stream to a
   * table": each key's row in the parquet state reflects its LATEST
@@ -19,22 +19,24 @@ import org.apache.spark.sql.types.StructType
   *
   * Same state layout as [[IncrementalAgg]] — both ride the shared
   * [[BucketedStateTable]] — with different merge semantics: hash-bucketed
-  * parquet keyed by `keyCols`. Each batch reduces to its newest row per
-  * key (one keyed aggregate — ties and ordering decided by `versionCols`,
-  * compared lexicographically as a struct). That per-key max is
-  * idempotent, so with retained tombstones (the default) the replica is
-  * merge-on-read: a batch only APPENDS its reduced delta as a generation
-  * ([[BucketedStateTable.append]]) — per-trigger cost O(delta), with no
-  * read of the base — and every [[BucketedStateTable.MaxGenerations]]th
-  * trigger compacts the generations into the buckets, an amortized
-  * whole-table rewrite. [[read]] takes the same per-key max over base ∪
-  * generations, last-writer-wins across restarts and out-of-order
-  * batches. `tombstones = false` folds copy-on-write instead (reads ONLY
-  * the touched buckets, drops delete-winners, overwrites those buckets),
-  * because its promise is that no delete marker is left behind; it
-  * compacts any pending generations first. Exactly-once via
-  * [[BucketedStateTable]]'s marker, generation overwrite and idempotent
-  * merge.
+  * parquet keyed by `keyCols`. A key's row is its newest version (one
+  * keyed aggregate — ties and ordering decided by `versionCols`, compared
+  * lexicographically as a struct). That per-key max is idempotent, so
+  * with retained tombstones (the default) the replica is merge-on-read: a
+  * batch only APPENDS its raw rows, tagged with the tombstone flag and
+  * the bucket, as a generation ([[BucketedStateTable.append]]) — one
+  * scan-side write job per trigger, no shuffle, no aggregate, no read of
+  * the base — and every [[BucketedStateTable.MaxGenerations]]th trigger
+  * compacts the generations into the buckets, reducing them first, an
+  * amortized whole-table rewrite. [[read]] takes the same per-key max
+  * over base ∪ generations, last-writer-wins across restarts and
+  * out-of-order batches. The first fold, and every `tombstones = false`
+  * fold, reduces the batch and folds it copy-on-write instead (reads ONLY
+  * the touched buckets, overwrites those buckets; `tombstones = false`
+  * also drops delete-winners, because its promise is that no delete
+  * marker is left behind); it compacts any pending generations first.
+  * Exactly-once via [[BucketedStateTable]]'s marker, generation overwrite
+  * and idempotent merge.
   *
   * A delete arriving BEFORE its insert (out-of-order feed) wins if its
   * version is newer — the tombstone persists as absence only when the
@@ -71,19 +73,21 @@ object ReplicaTable {
     val fs = BucketedStateTable.fsFor(spark, path)
     pinColumns(fs, path, keyCols, versionCols)
     val latest = reduceLatest(keyCols, versionCols) _
-    val d = latest(batch.withColumn(TombstoneCol, deleteWhen)
+    val tagged = batch.withColumn(TombstoneCol, deleteWhen)
       .withColumn(BucketedStateTable.BucketCol,
-        BucketedStateTable.bucketOf(keyCols, nBuckets)))
+        BucketedStateTable.bucketOf(keyCols, nBuckets))
+    // the generation holds the batch's rows unreduced: compaction and read
+    // reduce them anyway, so the scan's own tasks write it, no shuffle
     if (tombstones && BucketedStateTable.hasState(fs, path))
-      BucketedStateTable.append(spark, path, d, batchId, latest)
+      BucketedStateTable.append(spark, path, tagged, batchId, latest)
     else {
       // the direct fold merges into the base alone: pending generations
       // go in first
-      BucketedStateTable.compact(spark, path, latest, d.schema)
+      BucketedStateTable.compact(spark, path, latest, tagged.schema)
       // schema sidecar: the replica can legitimately become EMPTY (every
       // key deleted), and a parquet dir with no data files cannot answer
       // "what is the table's schema" on read — fold writes the DDL once
-      BucketedStateTable.fold(spark, path, d, batchId,
+      BucketedStateTable.fold(spark, path, latest(tagged), batchId,
         merge = (old, dlt) => {
           val m = latest(old.unionByName(dlt))
           // drop delete-winners unless tombstones are retained (only the
@@ -139,19 +143,25 @@ object ReplicaTable {
   /** The current replica (tombstoned keys absent, bookkeeping dropped):
     * the per-key newest row of base ∪ generations, or a plain scan of the
     * base when no generation is pending. Never writes. An all-deleted
-    * replica reads as an empty frame with the table's schema (from the
-    * `_schema` sidecar), not an error. */
+    * replica reads as an empty frame with the table's schema, not an
+    * error. Base and generations are read with the schema the first fold
+    * records (`_schema.ddl`: the reduced rows' columns, which are the
+    * generations' columns too; the base adds the applied-batch column),
+    * so a read runs no parquet schema-inference job; only a table without
+    * the record infers. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val fs = BucketedStateTable.fsFor(spark, path)
+    val schema = BucketedStateTable.record(fs, path,
+      BucketedStateTable.SchemaRecord).map(StructType.fromDDL)
     val base =
-      if (BucketedStateTable.hasState(fs, path))
-        spark.read.parquet(BucketedStateTable.stateDir(path))
-      else {
-        val ddl = BucketedStateTable.record(fs, path, "_schema.ddl").getOrElse(
-          throw new java.io.FileNotFoundException(s"$path/_schema.ddl"))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          StructType.fromDDL(ddl))
-      }
+      if (BucketedStateTable.hasState(fs, path)) {
+        val r = spark.read
+        schema.fold(r)(s =>
+          r.schema(s.add(BucketedStateTable.AppliedCol, LongType)))
+          .parquet(BucketedStateTable.stateDir(path))
+      } else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        schema.getOrElse(throw new java.io.FileNotFoundException(
+          s"$path/${BucketedStateTable.SchemaRecord}")))
     val gens = BucketedStateTable.generations(fs, path)
     val rows =
       if (gens.isEmpty) base
@@ -160,8 +170,8 @@ object ReplicaTable {
           throw new IllegalStateException(
             s"replica $path has generations but no $ColumnsRecord record"))
         reduceLatest(keyCols, versionCols)(
-          base.drop(BucketedStateTable.AppliedCol)
-            .unionByName(BucketedStateTable.readGenerations(spark, path, gens)))
+          base.drop(BucketedStateTable.AppliedCol).unionByName(
+            BucketedStateTable.readGenerations(spark, path, gens, schema)))
       }
     rows.filter(!col(TombstoneCol)).drop(TombstoneCol,
       BucketedStateTable.BucketCol, BucketedStateTable.AppliedCol)

@@ -391,4 +391,86 @@ class ReplicaTableSpec extends SparkSpec {
     val got = ReplicaTable.read(spark, path)
     assert(got.count() === 2000L && got.filter(col("ver") =!= bound).isEmpty)
   }
+
+  test("a plain trigger is one Spark job with no shuffle: the scan's tasks " +
+      "write its rows, unreduced, as the generation") {
+    val path = freshPath("one-job")
+    def batch(ver: Long, n: Long) = spark.range(1, n + 1).select(
+      col("id").as("key"), lit(ver).as("ver"), lit("upsert").as("op"),
+      concat(lit("p"), col("id").cast("string")).as("payload"))
+    ReplicaTable.applyBatch(spark, path, batch(1L, 2000L), Seq("key"),
+      Seq("ver"), col("op") === "delete", 64, batchId = 0)
+    val before = tree(s"$path/state")
+    val evaluated = spark.sparkContext.longAccumulator("one-job-input-rows")
+    val tick = udf((k: Long) => { evaluated.add(1L); k }).asNondeterministic()
+    // keys 1..10 twice in the batch, at versions 2 and 3
+    val input = batch(2L, 500L).union(batch(3L, 10L))
+      .withColumn("key", tick(col("key")))
+    val jobs = jobStages {
+      ReplicaTable.applyBatch(spark, path, input, Seq("key"), Seq("ver"),
+        col("op") === "delete", 64, batchId = 1)
+    }
+    assert(jobs.size === 1, s"${jobs.size} jobs: $jobs")
+    assert(jobs.values.forall(_.size == 1), s"a job has a shuffle stage: $jobs")
+    assert(evaluated.value === 510L,
+      "the input batch must be evaluated once per row")
+    assert(tree(s"$path/state") === before, "the base must not be written")
+    assert(generations(path) === Seq("gen=1"))
+    val gen = spark.read.parquet(s"$path/gens/gen=1")
+      .select("key", "ver").as[(Long, Long)].collect()
+    assert(gen.sorted.toSeq ===
+      ((1L to 500L).map((_, 2L)) ++ (1L to 10L).map((_, 3L))).sorted,
+      "the generation must hold every input row")
+    val got = ReplicaTable.read(spark, path)
+    assert(got.count() === 2000L &&
+      got.filter(col("ver") === 3L).count() === 10L &&
+      got.filter(col("ver") === 2L).count() === 490L)
+  }
+
+  test("several versions of one key in a batch, and a pending generation " +
+      "in the reduced column order, read and compact to the oracle") {
+    val path = freshPath("format")
+    val seed = (1L to 20L).map(k => (k, 1L, "upsert", s"a$k"))
+    applyHistory(path, 0, seed)
+    // key 21: insert, update, delete, re-insert in ONE batch; key 2's
+    // newest there is its delete
+    val multi = Seq((21L, 2L, "upsert", "b21"), (21L, 3L, "upsert", "c21"),
+      (21L, 4L, "delete", "d21"), (21L, 5L, "upsert", "e21"),
+      (2L, 2L, "upsert", "b2"), (2L, 3L, "delete", "c2"))
+    applyHistory(path, 1, multi)
+    // a generation as the per-trigger reduce wrote it: one row per key,
+    // columns (keys, __bucket, versions, payload, __tombstone); it revives
+    // key 2 and holds a row older than key 5's
+    val pending = Seq((2L, 9L, "upsert", "g2"), (3L, 7L, "upsert", "g3"),
+      (4L, 7L, "delete", "g4"), (5L, 0L, "upsert", "late5"))
+    df(pending: _*)
+      .withColumn("__tombstone", col("op") === "delete")
+      .withColumn(BucketedStateTable.BucketCol,
+        BucketedStateTable.bucketOf(Seq("key"), 4))
+      .select("key", BucketedStateTable.BucketCol, "ver", "op", "payload",
+        "__tombstone")
+      .write.mode("overwrite").parquet(s"$path/gens/gen=2")
+    assert(generations(path) === Seq("gen=1", "gen=2"))
+    val want = latestPerKey(seed ++ multi ++ pending)
+    assert(replicaRows(path) === want)
+    // the same batch replayed under new ids until the bound compacts
+    (3L to BucketedStateTable.MaxGenerations).foreach(applyHistory(path, _, multi))
+    assert(generations(path).isEmpty, "the bound-reaching fold compacts")
+    assert(replicaRows(path) === want)
+  }
+
+  test("a read with pending generations runs no 1-task parquet " +
+      "schema-inference job") {
+    val path = freshPath("read-jobs")
+    (0L until 3L).foreach(b => applyHistory(path, b, batchRows(b)))
+    assert(generations(path).length === 2)
+    var rows = Set.empty[String]
+    val jobs = jobStages { rows = replicaRows(path) }
+    assert(rows === latestPerKey((0L until 3L).flatMap(batchRows)))
+    val schemaJobs = jobs.filter { case (_, stages) =>
+      stages.map(_._1).sum == 1 &&
+        stages.exists(_._2.contains("ParallelCollectionRDD"))
+    }
+    assert(schemaJobs.isEmpty, s"schema-inference jobs: $schemaJobs of $jobs")
+  }
 }
