@@ -110,6 +110,9 @@ object Bench {
     // printed AFTER spark.stop() so no late Spark output can land between
     // the JSON and the end of the program's own stdout
     println(json)
+    // then one short summary line: a stdout tail of 2000 chars, sbt's
+    // trailing lines included, still ends with a whole JSON line
+    println(s"""{"metric":"total","value":${jnum(total)},"fixed_cost_total":${jnum(fixedTotal)},"per_row_total":${jnum(perRowTotal)},"entries":${results.size},"errors":${errors.size}}""")
     if (errors.nonEmpty) sys.exit(1)
   }
 }

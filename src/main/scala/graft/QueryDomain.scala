@@ -61,9 +61,12 @@ private[graft] trait QueryDomain {
   protected def filesRead(q: DataFrame, tag: String): Long =
     scans(q).filter(_.roots.exists(_.contains(tag))).map(_.files.length.toLong).sum
 
-  /** Whether `q` reads the `state` dir of a summary under a path containing `tag`. */
+  /** Whether `q` reads state files (`<path>/state/__bucket=<b>/…`, the
+    * files a summary's snapshot names) of a summary under a path
+    * containing `tag`. */
   protected def readsState(q: DataFrame, tag: String): Boolean =
-    scans(q).exists(_.roots.exists(p => p.contains(tag) && p.endsWith("/state")))
+    scans(q).exists(_.files.exists(f =>
+      f.contains(tag) && f.contains("/state/__bucket=")))
 
   /** Run `body` with one of [[PlanShapes.rules]] installed, on the state
     * a fresh session starts from: the in-memory BloomJoins/SummaryViews

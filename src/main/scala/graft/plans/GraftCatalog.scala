@@ -247,26 +247,8 @@ object GraftCatalog {
         BloomJoins.refused(root, "catalog-merge", e)
       }
     }
-    // per-write temp name: concurrent writers must not truncate each
-    // other's in-flight temp (the rename below is the only shared step).
-    // Unique names LEAK on failure where the old fixed name self-overwrote,
-    // so any incomplete attempt deletes its own temp on the way out.
-    val tmp = new Path(rootPath,
-      s".$FileName.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    var renamed = false
-    try {
-      val out = fs.create(tmp, true)
-      try out.write(mapper.writerWithDefaultPrettyPrinter()
-        .writeValueAsBytes(doc))
-      finally out.close()
-      renameOverwrite(spark, fs, tmp, target)
-      renamed = true
-    } finally {
-      if (!renamed) {
-        try fs.delete(tmp, false)
-        catch { case _: Exception => () } // best effort; original error wins
-      }
-    }
+    graft.sources.Manifests.replaceAtomically(spark, target.toString,
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(doc))
     testAfterRename() // spec-only hook: simulates a cross-process racer
     // this session has by definition "attempted" the root — and found it
     attempted.put(normPath(root), java.lang.Long.MAX_VALUE)
@@ -315,25 +297,6 @@ object GraftCatalog {
       .filterNot(haveZone)
       .foreach(c => BloomJoins.registerZone(BloomJoins.ZoneLayout(root, c)))
     save(spark, root)
-  }
-
-  /** Atomic rename onto a possibly-existing target: FileContext rename
-    * with OVERWRITE where the filesystem supports it (readers always see
-    * either the old or the new catalog); fall back to delete+rename only
-    * where FileContext is unavailable. */
-  private def renameOverwrite(spark: SparkSession,
-                              fs: org.apache.hadoop.fs.FileSystem,
-                              tmp: Path, target: Path): Unit = {
-    try {
-      val ctx = org.apache.hadoop.fs.FileContext.getFileContext(
-        target.toUri, spark.sparkContext.hadoopConfiguration)
-      ctx.rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        fs.delete(target, false)
-        if (!fs.rename(tmp, target))
-          throw new java.io.IOException(s"catalog rename failed: $target")
-    }
   }
 
   private def strArr(n: ObjectNode, field: String, vs: Seq[String]): Unit = {

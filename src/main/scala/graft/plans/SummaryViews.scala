@@ -135,9 +135,9 @@ object SummaryViews {
   /** Resolved summary-scan plan per registered view, keyed by state path and
     * stamped with [[BucketedStateTable.stateVersion]] at resolve time.
     * Optimization of the Nth query over a view costs a MEMORY version
-    * compare, not a filesystem listing: the plan (and the `FileIndex`
-    * inside its `HadoopFsRelation`) re-resolves only after an
-    * `IncrementalAgg.applyDelta` fold actually rewrote state buckets.
+    * compare, not a snapshot read: the plan (the scan over the snapshot's
+    * files, [[BucketedStateTable.base]]) re-resolves only after an
+    * `IncrementalAgg.applyDelta` fold actually committed a snapshot.
     * Staleness contract (same one as the view registration itself): the
     * maintaining pipeline runs in THIS process; an out-of-process writer
     * does not bump the version, exactly as it could not keep the summary
@@ -145,8 +145,8 @@ object SummaryViews {
   private val planCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, LogicalPlan)]()
 
-  /** Test spy: how many times a state dir was actually resolved (listed +
-    * analyzed) rather than served from [[planCache]]. Atomic — concurrent
+  /** Test spy: how many times a state dir was actually resolved (snapshot
+    * read + analyzed) rather than served from [[planCache]]. Atomic — concurrent
     * query optimizations increment it from multiple threads. */
   private[graft] val stateResolves =
     new java.util.concurrent.atomic.AtomicLong(0L)
@@ -155,12 +155,11 @@ object SummaryViews {
     * fresh expression ids (`MultiInstanceRelation.newInstance`) over the
     * shared `HadoopFsRelation`, so two rewrites landing in one plan tree
     * cannot collide on attribute identity while still sharing the cached
-    * file listing. Only `MultiInstanceRelation` plans are cached at all —
+    * snapshot scan. Only `MultiInstanceRelation` plans are cached at all —
     * anything else cannot mint fresh ids, so it is re-resolved per use
     * (fresh analysis = fresh exprIds) rather than served verbatim. */
   private[plans] def statePlan(spark: SparkSession,
                                view: View): Option[LogicalPlan] = {
-    val dir = BucketedStateTable.stateDir(view.statePath)
     val key = normPath(view.statePath)
     val ver = BucketedStateTable.stateVersion(view.statePath)
     val base = Option(planCache.get(key)) match {
@@ -171,7 +170,8 @@ object SummaryViews {
           // state absent/unreadable: refuse (exact, via the base), retry
           // next query — but surface the cause on the metrics registry so
           // a CORRUPTED summary doesn't silently un-optimize every query
-          try Some(spark.read.parquet(dir).queryExecution.analyzed)
+          try Some(BucketedStateTable.base(spark, view.statePath)
+            .queryExecution.analyzed)
           catch { case e: Exception =>
             BloomJoins.refused(view.statePath, "summary-state", e); None }
         resolved.foreach { p =>
@@ -488,9 +488,9 @@ final case class RewriteToSummary(spark: SparkSession)
       case a: AttributeReference if !defs.contains(a.exprId) => a
     }
 
-    // the summary side: resolved parquet scan of the state dir, from the
-    // version-stamped plan cache (the bucket/guard bookkeeping columns
-    // prune away — nothing below references them)
+    // the summary side: resolved parquet scan of the state snapshot, from
+    // the version-stamped plan cache (the bucket bookkeeping column prunes
+    // away — nothing below references it)
     val stateOpt =
       if (!condOk || !factFiltersOk || !groupingsOk) None
       else SummaryViews.statePlan(spark, view)

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path,
+  UnsupportedFileSystemException}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -75,6 +76,39 @@ private[graft] object Manifests {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     (fs, fs.makeQualified(p))
+  }
+
+  /** Replace the file `target` with `bytes` atomically: readers see the
+    * old file or the new one, never a partial write. The bytes go to a
+    * uniquely named temp beside the target (concurrent writers never
+    * truncate each other's temp), which is renamed over it — FileContext
+    * rename with OVERWRITE where the filesystem supports it, delete +
+    * rename only where FileContext is unavailable. An attempt that fails
+    * deletes its own temp. */
+  def replaceAtomically(spark: SparkSession, target: String,
+                        bytes: Array[Byte]): Unit = {
+    val (fs, dst) = fsFor(spark, target)
+    val tmp = new Path(dst.getParent,
+      s".${dst.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    var renamed = false
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      try FileContext.getFileContext(dst.toUri,
+          spark.sparkContext.hadoopConfiguration)
+        .rename(tmp, dst, Options.Rename.OVERWRITE)
+      catch { case _: UnsupportedFileSystemException =>
+        fs.delete(dst, false)
+        if (!fs.rename(tmp, dst))
+          throw new java.io.IOException(s"rename failed: $dst")
+      }
+      renamed = true
+    } finally {
+      if (!renamed) {
+        try fs.delete(tmp, false)
+        catch { case _: Exception => () } // best effort; original error wins
+      }
+    }
   }
 
   /** Derive the manifest shard key from the data-file path column `file`:

@@ -216,9 +216,10 @@ final class DeadLetterDestination(
   * base from that summary, closing the loop: CDC feed → O(touched keys)
   * maintenance per trigger → O(keys) dashboard reads, with the 100 TB base
   * never re-scanned. Replay-idempotence comes from
-  * [[BucketedStateTable]]'s per-batch guard rather than the file sink's
-  * batch-dir overwrite — sums are NOT idempotent, so the guard is
-  * load-bearing under foreachBatch's at-least-once contract. `deltas`
+  * [[BucketedStateTable]]'s snapshot commit, which records the batch id,
+  * rather than the file sink's batch-dir overwrite — sums are NOT
+  * idempotent, so a replay under foreachBatch's at-least-once contract
+  * must find its batch committed or not at all. `deltas`
   * maps the envelope micro-batch to the ADDITIVE delta frame (signed
   * contributions — see [[IncrementalAgg.applyDelta]], including its
   * decimal-widening and append-only-extrema caveats). */

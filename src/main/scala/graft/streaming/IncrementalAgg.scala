@@ -17,23 +17,23 @@ import org.apache.spark.sql.functions._
   * `applyDelta`:
   *   1. pre-aggregates the batch to one row per key (map-side combined —
   *      the shuffle carries keys, not events);
-  *   2. reads ONLY the buckets the batch touches (partition pruning on
-  *      the bucket dirs — a batch touching 3 of 1024 buckets reads 3);
-  *   3. re-sums old + delta and dynamic-partition-OVERWRITES exactly
-  *      those buckets.
+  *   2. reads ONLY the buckets the batch touches (the snapshot's files
+  *      of those buckets — a batch touching 3 of 1024 buckets reads 3);
+  *   3. re-sums old + delta, writes those buckets' replacements and
+  *      commits them in one atomic snapshot.
   * Per-trigger cost is therefore O(touched state), not O(total state) and
   * not O(history). Size `nBuckets` so one bucket's state fits a task
   * comfortably; more buckets = finer pruning and smaller rewrites.
   *
   * Exactly-once under foreachBatch's at-least-once contract via the
-  * shared [[BucketedStateTable]] protocol (marker checked first / written
-  * last, per-bucket `__applied_batch` guard healing the
-  * overwrite-to-marker crash window — sums are NOT idempotent, so the
-  * guard is load-bearing here). See [[BucketedStateTable]] for the full
-  * analysis and the residual caveat. Unlike [[ReplicaTable]] this stays
-  * copy-on-write, with no generations: [[graft.plans.SummaryViews]] scans
-  * the state dir raw, and re-summing a generation that a crashed
-  * compaction already folded in would count it twice. */
+  * shared [[BucketedStateTable]] protocol: the marker is checked first
+  * and written last, and a fold lands by one atomic snapshot commit that
+  * records its batch id — a replay after a crash either finds the old
+  * snapshot (and applies the batch once) or its own (and applies
+  * nothing). Sums are NOT idempotent, so that commit is what keeps a
+  * replay from double-counting. See [[BucketedStateTable]] for the crash
+  * windows. Unlike [[ReplicaTable]] this stays copy-on-write, with no
+  * generations: [[graft.plans.SummaryViews]] scans the base alone. */
 object IncrementalAgg {
 
   /** Fold one batch of deltas into the persisted aggregate.
@@ -41,7 +41,7 @@ object IncrementalAgg {
     * `delta`: any frame holding `keyCols` plus ADDITIVE `sumCols`
     * (already-signed contributions) and optional `minCols`/`maxCols`
     * (per-key extrema candidates, merged by re-min/re-max). `batchId >=
-    * 0` engages the replay guard; pass -1 for unguarded batch use.
+    * 0` makes a replay of that batch a no-op; pass -1 for batch use.
     *
     * Extrema columns are exact only for APPEND-ONLY feeds: a sum can
     * absorb a delete as `−v`, but a min cannot un-see a retracted value
@@ -74,7 +74,8 @@ object IncrementalAgg {
       "sum/min/max columns must be distinct state columns (stage a copy " +
         "of the source column per role)")
     require(nBuckets >= 1, s"nBuckets must be >= 1 (got $nBuckets)")
-    BucketedStateTable.pinBuckets(spark, path, nBuckets)
+    val layout = BucketedStateTable.Layout(nBuckets)
+    BucketedStateTable.pin(spark, path, layout)
     def reAgg(df: DataFrame): DataFrame = {
       val aggs = sumCols.map(c => sum(col(c)).as(c)) ++
         minCols.map(c => min(col(c)).as(c)) ++
@@ -85,7 +86,7 @@ object IncrementalAgg {
     val d = reAgg(delta.withColumn(BucketedStateTable.BucketCol,
       BucketedStateTable.bucketOf(keyCols, nBuckets)))
     BucketedStateTable.fold(spark, path, d, batchId,
-      merge = (old, dlt) => reAgg(old.unionByName(dlt)))
+      merge = (old, dlt) => reAgg(old.unionByName(dlt)), layout)
     // after the fold: the catalog only ever points at state that exists.
     // A failed catalog write must NOT fail the fold (the state already
     // landed; the sink would otherwise crash a streaming batch over an
@@ -106,6 +107,5 @@ object IncrementalAgg {
 
   /** The current aggregate table (bookkeeping columns dropped). */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(BucketedStateTable.stateDir(path))
-      .drop(BucketedStateTable.BucketCol, BucketedStateTable.AppliedCol)
+    BucketedStateTable.base(spark, path).drop(BucketedStateTable.BucketCol)
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.FileSystem
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Persisted CDC REPLICA maintenance — "apply the change stream to a
   * table": each key's row in the parquet state reflects its LATEST
@@ -32,11 +29,11 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * over base ∪ generations, last-writer-wins across restarts and
   * out-of-order batches. The first fold, and every `tombstones = false`
   * fold, reduces the batch and folds it copy-on-write instead (reads ONLY
-  * the touched buckets, overwrites those buckets; `tombstones = false`
-  * also drops delete-winners, because its promise is that no delete
-  * marker is left behind); it compacts any pending generations first.
-  * Exactly-once via [[BucketedStateTable]]'s marker, generation overwrite
-  * and idempotent merge.
+  * the touched buckets, writes their replacements and commits them in
+  * one snapshot; `tombstones = false` also drops delete-winners, because
+  * its promise is that no delete marker is left behind); it compacts any
+  * pending generations first. Exactly-once via [[BucketedStateTable]]'s
+  * marker, snapshot commit, generation overwrite and idempotent merge.
   *
   * A delete arriving BEFORE its insert (out-of-order feed) wins if its
   * version is newer — the tombstone persists as absence only when the
@@ -50,10 +47,6 @@ import org.apache.spark.sql.types.{LongType, StructType}
 object ReplicaTable {
 
   private val TombstoneCol = "__tombstone"
-  /** `<path>/_columns`, next to `_buckets`: the key and version columns,
-    * recorded on the first fold so [[read]] can merge generations. */
-  private val ColumnsRecord = "_columns"
-  private val mapper = new ObjectMapper()
 
   /** Fold one batch of CDC rows into the replica.
     *
@@ -69,32 +62,28 @@ object ReplicaTable {
     require(keyCols.nonEmpty && versionCols.nonEmpty,
       "applyBatch needs key and version columns")
     require(nBuckets >= 1, s"nBuckets must be >= 1 (got $nBuckets)")
-    BucketedStateTable.pinBuckets(spark, path, nBuckets)
-    val fs = BucketedStateTable.fsFor(spark, path)
-    pinColumns(fs, path, keyCols, versionCols)
+    val layout = BucketedStateTable.Layout(nBuckets, keyCols, versionCols)
+    val committed = BucketedStateTable.pin(spark, path, layout).isDefined
     val latest = reduceLatest(keyCols, versionCols) _
     val tagged = batch.withColumn(TombstoneCol, deleteWhen)
       .withColumn(BucketedStateTable.BucketCol,
         BucketedStateTable.bucketOf(keyCols, nBuckets))
     // the generation holds the batch's rows unreduced: compaction and read
     // reduce them anyway, so the scan's own tasks write it, no shuffle
-    if (tombstones && BucketedStateTable.hasState(fs, path))
+    if (tombstones && committed)
       BucketedStateTable.append(spark, path, tagged, batchId, latest)
     else {
       // the direct fold merges into the base alone: pending generations
       // go in first
-      BucketedStateTable.compact(spark, path, latest, tagged.schema)
-      // schema sidecar: the replica can legitimately become EMPTY (every
-      // key deleted), and a parquet dir with no data files cannot answer
-      // "what is the table's schema" on read — fold writes the DDL once
+      BucketedStateTable.compact(spark, path, latest)
       BucketedStateTable.fold(spark, path, latest(tagged), batchId,
         merge = (old, dlt) => {
           val m = latest(old.unionByName(dlt))
           // drop delete-winners unless tombstones are retained (only the
-          // tombstones=false path can empty a bucket; fold clears it)
+          // tombstones=false path can empty a bucket)
           if (tombstones) m else m.filter(!col(TombstoneCol))
         },
-        schemaSidecar = true)
+        layout)
     }
   }
 
@@ -107,73 +96,31 @@ object ReplicaTable {
   private def reduceLatest(keyCols: Seq[String], versionCols: Seq[String])
                           (df: DataFrame): DataFrame = {
     val groupCols = keyCols :+ BucketedStateTable.BucketCol
-    val payload = df.columns.filterNot(c => groupCols.contains(c) ||
-      versionCols.contains(c) || c == BucketedStateTable.AppliedCol)
+    val payload = df.columns.filterNot(c =>
+      groupCols.contains(c) || versionCols.contains(c))
     df.groupBy(groupCols.map(col): _*)
       .agg(max(struct((versionCols ++ payload).map(col): _*)).as("__row"))
       .select(groupCols.map(col) :+ col("__row.*"): _*)
   }
 
-  /** Record the key and version columns on the first fold; refuse other
-    * ones afterwards — [[read]] would merge generations under the wrong
-    * identity. Driver-side file I/O only, before any Spark plan. */
-  private def pinColumns(fs: FileSystem, path: String, keyCols: Seq[String],
-                         versionCols: Seq[String]): Unit =
-    recordedColumns(fs, path) match {
-      case None =>
-        BucketedStateTable.writeRecord(fs, path, ColumnsRecord,
-          mapper.writeValueAsString(Array(keyCols.toArray, versionCols.toArray)))
-      case Some(rec) if rec != (keyCols, versionCols) =>
-        def show(c: Seq[String]) = c.mkString("[", ", ", "]")
-        throw new IllegalArgumentException(
-          s"replica $path was built with key columns ${show(rec._1)} and " +
-            s"version columns ${show(rec._2)}; key columns ${show(keyCols)} " +
-            s"and version columns ${show(versionCols)} would merge its rows " +
-            "under another identity")
-      case _ => ()
-    }
-
-  private def recordedColumns(fs: FileSystem, path: String)
-      : Option[(Seq[String], Seq[String])] =
-    BucketedStateTable.record(fs, path, ColumnsRecord).map { text =>
-      val cols = mapper.readValue(text, classOf[Array[Array[String]]])
-      (cols(0).toSeq, cols(1).toSeq)
-    }
-
   /** The current replica (tombstoned keys absent, bookkeeping dropped):
-    * the per-key newest row of base ∪ generations, or a plain scan of the
-    * base when no generation is pending. Never writes. An all-deleted
-    * replica reads as an empty frame with the table's schema, not an
-    * error. Base and generations are read with the schema the first fold
-    * records (`_schema.ddl`: the reduced rows' columns, which are the
-    * generations' columns too; the base adds the applied-batch column),
-    * so a read runs no parquet schema-inference job; only a table without
-    * the record infers. */
+    * the per-key newest row of base ∪ generations, or the base alone when
+    * no generation is pending. Never writes. Base and generations are
+    * read with the schema the snapshot records, by the key and version
+    * columns it records, so a read runs no listing or schema-inference
+    * job; an all-deleted replica reads as an empty frame with that
+    * schema. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val fs = BucketedStateTable.fsFor(spark, path)
-    val schema = BucketedStateTable.record(fs, path,
-      BucketedStateTable.SchemaRecord).map(StructType.fromDDL)
-    val base =
-      if (BucketedStateTable.hasState(fs, path)) {
-        val r = spark.read
-        schema.fold(r)(s =>
-          r.schema(s.add(BucketedStateTable.AppliedCol, LongType)))
-          .parquet(BucketedStateTable.stateDir(path))
-      } else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        schema.getOrElse(throw new java.io.FileNotFoundException(
-          s"$path/${BucketedStateTable.SchemaRecord}")))
+    val snap = BucketedStateTable.current(fs, path)
+    val base = BucketedStateTable.scan(spark, path, snap)
     val gens = BucketedStateTable.generations(fs, path)
     val rows =
       if (gens.isEmpty) base
-      else {
-        val (keyCols, versionCols) = recordedColumns(fs, path).getOrElse(
-          throw new IllegalStateException(
-            s"replica $path has generations but no $ColumnsRecord record"))
-        reduceLatest(keyCols, versionCols)(
-          base.drop(BucketedStateTable.AppliedCol).unionByName(
-            BucketedStateTable.readGenerations(spark, path, gens, schema)))
-      }
-    rows.filter(!col(TombstoneCol)).drop(TombstoneCol,
-      BucketedStateTable.BucketCol, BucketedStateTable.AppliedCol)
+      else reduceLatest(snap.layout.keyCols, snap.layout.versionCols)(
+        base.unionByName(
+          BucketedStateTable.readGenerations(spark, path, gens, snap)))
+    rows.filter(!col(TombstoneCol))
+      .drop(TombstoneCol, BucketedStateTable.BucketCol)
   }
 }

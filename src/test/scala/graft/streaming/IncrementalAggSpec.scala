@@ -102,7 +102,8 @@ class IncrementalAggSpec extends SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_applied/batch-1")))
   }
 
-  test("partially-swapped crash: replay applies only the unswapped buckets") {
+  test("crash before the snapshot rename: reads see batch 0, the replay " +
+      "lands once, no orphan file") {
     val path = freshPath("crash-partial")
     val nBuckets = 4
     // two keys living in DIFFERENT buckets
@@ -113,23 +114,37 @@ class IncrementalAggSpec extends SparkSpec {
     val kB = (2L to 50L).find(k => bucketOf(k) != bucketOf(kA)).get
     val batch0 = Seq((kA, 100L), (kB, 200L)).toDF("key", "v")
     val batch1 = Seq((kA, 7L), (kB, 11L)).toDF("key", "v")
+    def dataFiles(): Int = org.apache.commons.io.FileUtils
+      .listFiles(new java.io.File(s"$path/state"), Array("parquet"), true).size
     IncrementalAgg.applyDelta(spark, path, batch0, Seq("key"), Seq("v"),
       nBuckets = nBuckets, batchId = 0)
-    // simulate batch 1 crashing mid-commit: kA's bucket swapped (state
-    // records batch 1), kB's bucket still at batch 0, no marker
-    IncrementalAgg.applyDelta(spark, path, batch1.filter(col("key") === kA),
-      Seq("key"), Seq("v"), nBuckets = nBuckets, batchId = 1)
+    // simulate batch 1 crashing before its snapshot rename: its new files
+    // sit in both bucket dirs next to batch 0's, batch 0's snapshot is
+    // current, no marker
+    val saved = s"$path-saved"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(saved))
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(path), new java.io.File(saved))
+    IncrementalAgg.applyDelta(spark, path, batch1, Seq("key"), Seq("v"),
+      nBuckets = nBuckets, batchId = 1)
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(saved), new java.io.File(path))
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new org.apache.hadoop.fs.Path(s"$path/_applied/batch-1"),
       false))
+    assert(dataFiles() === 4)
+    assert(IncrementalAgg.read(spark, path)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      Map(kA -> 100L, kB -> 200L), "a read must see batch 0's snapshot only")
     // the replay carries the FULL batch 1
     IncrementalAgg.applyDelta(spark, path, batch1, Seq("key"), Seq("v"),
       nBuckets = nBuckets, batchId = 1)
     val got = IncrementalAgg.read(spark, path)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(kA -> 107L, kB -> 211L),
-      s"partial-swap replay must skip kA's bucket and apply kB's: $got")
+      s"the replay must apply batch 1 exactly once: $got")
+    assert(dataFiles() === 2, "the crashed attempt's files must be deleted")
   }
 
   test("a changed nBuckets is refused before any Spark job runs") {
