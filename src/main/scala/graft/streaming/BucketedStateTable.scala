@@ -18,76 +18,71 @@ import graft.sources.Manifests
 /** The SHARED exactly-once bucketed-state-table protocol behind
   * [[IncrementalAgg]] (running aggregates) and [[ReplicaTable]] (CDC
   * last-writer-wins replica). A table is a BASE (`state/__bucket=<b>/`,
-  * parquet hash-bucketed by key) committed by one JSON `<path>/_snapshot`
-  * plus, for an idempotent merge, append-only GENERATIONS
-  * (`gens/gen=<id>`, the bucket kept as a data column).
+  * parquet hash-bucketed by key) plus, for an idempotent merge, pending
+  * GENERATIONS (`gens/gen=<id>`, the bucket kept as a data column).
   *
-  * The snapshot is the base: its batch id, the [[Layout]] the table was
-  * built with, the state schema and each bucket's live files (paths
-  * relative to the table path, so a copied table reads the same). Readers
-  * scan exactly those files ([[scan]]) — no listing job, no schema
-  * inference, and a file the snapshot does not name is never read. A
-  * commit replaces the snapshot atomically
-  * ([[Manifests.replaceAtomically]]), so a fold lands whole or not at all.
+  * One JSON `<path>/_snapshot` is the table's only commit record: the
+  * highest batch id committed, the [[Layout]] the table was built with,
+  * the state schema, each bucket's live files (paths relative to the
+  * table path, so a copied table reads the same) and the ids of the
+  * pending generations. Readers scan exactly what it names ([[scan]],
+  * [[readGenerations]]) — no listing job, no schema inference, and a file
+  * or generation dir it does not name is never read. A commit replaces
+  * the snapshot atomically ([[Manifests.replaceAtomically]]), so a fold,
+  * an append or a compaction lands whole or not at all.
+  *
+  * Replay rule (that of Spark's `FileStreamSink`): the snapshot's batch id
+  * is a high-water mark — a commit records `max(previous, batchId)` — so
+  * [[fold]] and [[append]] of a batch with `0 <= batchId <= snapshot's`
+  * return at once, only bumping the state version. A negative batch id
+  * (batch callers) always applies.
   *
   * [[fold]] — copy-on-write of the touched buckets, per-trigger cost
   * O(touched state):
   *
-  *  1. the `_applied/batch-<id>` marker checked FIRST — a fully-committed
-  *     replay returns without touching state; a snapshot that already
-  *     carries this batch id (committed, marker lost) only gets its marker
-  *     and a version bump;
-  *  2. the caller's reduced delta is materialized ONCE (`localCheckpoint`)
+  *  1. the caller's reduced delta is materialized ONCE (`localCheckpoint`)
   *     — the touched-bucket collect and the merge both read that copy, so
   *     the batch's source plan runs once per fold;
-  *  3. the snapshot's files of the touched buckets are read back; the
+  *  2. the snapshot's files of the touched buckets are read back; the
   *     caller's merge over (old slice, delta) is clustered by bucket into
   *     `min(touched, shuffle partitions)` tasks and APPENDED into the same
   *     bucket dirs — new uniquely named files, one per bucket, nothing
   *     overwritten;
-  *  4. the next snapshot (untouched buckets kept, touched ones pointing at
+  *  3. the next snapshot (untouched buckets kept, touched ones pointing at
   *     the new files, emptied ones dropped) is committed, and the state
   *     version bumped;
-  *  5. every data file of the touched dirs that the snapshot does not name
+  *  4. every data file of the touched dirs that the snapshot does not name
   *     — the superseded files and any crashed attempt's — is deleted, and
-  *     emptied dirs with them;
-  *  6. the marker is written LAST.
-  *
-  * Crash windows: before the snapshot rename, the new files sit unnamed
-  * in the bucket dirs — readers and the replay see the previous snapshot,
-  * and the replay's step 5 deletes them. After it, the replay finds the
-  * batch id in the snapshot (step 1); superseded files it left go when
-  * their bucket is next folded.
+  *     emptied dirs with them.
   *
   * [[append]] — merge-on-read, per-trigger cost O(batch) plus an amortized
   * compaction. Only for a `reduce` that is associative, commutative and
   * idempotent (`reduce(x ∪ x) = reduce(x)`, e.g. a per-key max):
   *
-  *  1. marker checked first, as above;
-  *  2. the TAGGED delta — the batch's rows carrying [[BucketCol]], not
-  *     reduced — is written as generation `gens/gen=<batchId>` by the
-  *     scan's own tasks (one job: no shuffle, no aggregate), a dynamic
-  *     partition overwrite of that one generation, so a replay rewrites
-  *     its own generation (`DedupIndex.append`'s pattern); state version
-  *     bumped;
-  *  3. once [[MaxGenerations]] generations are listed, [[compact]] runs on
-  *     the same trigger;
-  *  4. marker written last.
+  *  1. the TAGGED delta — the batch's rows carrying [[BucketCol]], not
+  *     reduced — is written as generation `gens/gen=<id>` by the scan's own
+  *     tasks (one job: no shuffle, no aggregate), a dynamic partition
+  *     overwrite of that one generation. The id is one past the snapshot's
+  *     batch id and every generation it names, so consecutive engine
+  *     batches write `gen=<batchId>`;
+  *  2. if the write created that dir (an empty batch may create none), a
+  *     snapshot naming it is committed and the state version bumped;
+  *  3. once the snapshot names [[MaxGenerations]] generations, [[compact]]
+  *     runs on the same trigger.
   *
-  * Readers merge base ∪ generations with the same `reduce`; because it is
-  * idempotent, duplicate keys inside a generation change no result. A
-  * compaction is [[fold]] (batch id -1: no marker) of
-  * `reduce(listed generations)` into the base, then the deletion of
-  * exactly the generations it listed. Its crash windows:
-  *  - before the fold's snapshot commit: the base is unchanged; the
-  *    generations stay and the next compaction lists them again;
-  *  - between the commit and the last generation delete: the base already
-  *    holds the rows of generations that are still listed. Readers and the
-  *    next compaction merge them in again, which changes nothing because
-  *    the merge is idempotent — a read gives the same rows before and
-  *    after the crash, and the next compaction converges;
-  *  - between the compaction and the trigger's marker: the replay rewrites
-  *    a generation whose rows the base already holds — a no-op again.
+  * Readers merge base ∪ named generations with the same `reduce`. A
+  * compaction is [[fold]] (batch id -1) of `reduce(named generations)`
+  * into the base, committing a snapshot that names no generation, then
+  * the deletion of `gens/` outright.
+  *
+  * Crash windows, the same two for every commit: before the snapshot
+  * rename nothing changed — readers see the previous snapshot, a replay
+  * redoes the work (rewriting its generation, or deleting the crashed
+  * fold's files in step 4), and a compaction that did not commit runs
+  * again on the next append. After it, the replay is at the high-water
+  * mark and returns; the leftovers (superseded base files, absorbed
+  * generation dirs) are unnamed, never read, and removed by the next fold
+  * of their bucket or the next compaction.
   *
   * The bound is a constant, not a knob: at 8, a read between triggers is
   * one base scan plus at most 7 batch-sized generation scans merged in one
@@ -97,16 +92,14 @@ import graft.sources.Manifests
   *
   * Nothing is `persist()`ed on the state path, so the write's cache
   * refresh has nothing to relist. Single-writer per state path, like any
-  * foreachBatch sink. With `batchId < 0` a generation takes the highest
-  * listed id + 1, so do not mix such calls with engine batch ids on one
-  * table: a later batch id could overwrite that generation. */
+  * foreachBatch sink. */
 private[graft] object BucketedStateTable {
 
   val BucketCol = "__bucket"
   private val GenCol = "gen"
   private val BucketSchema = new StructType().add(BucketCol, IntegerType)
 
-  /** Listed generations at which [[append]] compacts (see above). */
+  /** Named generations at which [[append]] compacts (see above). */
   val MaxGenerations = 8
 
   def stateDir(path: String): String = s"$path/state"
@@ -121,34 +114,43 @@ private[graft] object BucketedStateTable {
   final case class Layout(nBuckets: Int, keyCols: Seq[String] = Nil,
                           versionCols: Seq[String] = Nil)
 
-  /** One committed base: the batch id of the fold that committed it (-1
-    * for a compaction), the table's layout, the state files' schema
-    * ([[BucketCol]] excluded: it is the partition dir) and each bucket's
-    * live files, relative to the table path. */
+  /** One commit: the highest batch id committed (-1 while only batch
+    * callers committed), the table's layout, the state
+    * files' schema ([[BucketCol]] excluded: it is the partition dir), each
+    * bucket's live files, relative to the table path, and the pending
+    * generations' ids, ascending. */
   final case class Snapshot(batchId: Long, layout: Layout, schema: StructType,
-                            files: Map[Int, Seq[String]])
+                            files: Map[Int, Seq[String]],
+                            generations: Seq[Long])
 
   private val mapper = new ObjectMapper()
 
-  /** The table's committed snapshot; None before its first fold. */
+  /** The table's committed snapshot; None before its first fold. A
+    * snapshot missing a field is refused by name rather than read with a
+    * default: a replica's absent generation list would silently drop its
+    * pending changes. */
   def snapshot(fs: FileSystem, path: String): Option[Snapshot] = {
     val p = new Path(snapshotFile(path))
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
       val doc = try mapper.readTree(in) finally in.close()
+      def field(name: String): JsonNode = Option(doc.get(name)).getOrElse(
+        throw new IllegalStateException(
+          s"state table snapshot $p has no `$name` field"))
       def strs(n: JsonNode) = n.elements.asScala.map(_.asText).toSeq
-      Some(Snapshot(doc.get("batchId").asLong,
-        Layout(doc.get("nBuckets").asInt, strs(doc.get("keyCols")),
-          strs(doc.get("versionCols"))),
-        StructType.fromDDL(doc.get("schema").asText),
-        doc.get("files").properties.asScala
-          .map(e => e.getKey.toInt -> strs(e.getValue)).toMap))
+      Some(Snapshot(field("batchId").asLong,
+        Layout(field("nBuckets").asInt, strs(field("keyCols")),
+          strs(field("versionCols"))),
+        StructType.fromDDL(field("schema").asText),
+        field("files").properties.asScala
+          .map(e => e.getKey.toInt -> strs(e.getValue)).toMap,
+        field("generations").elements.asScala.map(_.asLong).toSeq))
     }
   }
 
   private def commitSnapshot(spark: SparkSession, path: String,
-                             s: Snapshot): Unit =
+                             s: Snapshot): Unit = {
     Manifests.replaceAtomically(spark, snapshotFile(path),
       mapper.writeValueAsBytes(Map[String, AnyRef](
         "batchId" -> Long.box(s.batchId),
@@ -157,25 +159,35 @@ private[graft] object BucketedStateTable {
         "versionCols" -> s.layout.versionCols.asJava,
         "schema" -> s.schema.toDDL,
         "files" -> s.files.map { case (b, fs) => b.toString -> fs.asJava }
-          .asJava).asJava))
+          .asJava,
+        "generations" -> s.generations.map(Long.box).asJava).asJava))
+    bumpVersion(path)
+  }
 
   /** In-process state-mutation counter per table path, bumped by every
-    * write that changes what a reader sees (snapshot commit, generation
-    * append, compaction): the [[Manifests.manifestVersion]] counter under
-    * kind `state`. Consumers that cache anything derived from the state
-    * files ([[graft.plans.SummaryViews]]'s resolved scan plan) compare
-    * versions instead of touching the filesystem — a pure-memory staleness
-    * check, correct under the same single-writer-per-path-per-process
-    * contract the writes assume. A writer in ANOTHER process does not bump
-    * this (the cache consumer documents that). */
+    * snapshot commit and every replay that finds its batch committed:
+    * the [[Manifests.manifestVersion]] counter under kind `state`.
+    * Consumers that cache anything derived from the state files
+    * ([[graft.plans.SummaryViews]]'s resolved scan plan) compare versions
+    * instead of touching the filesystem — a pure-memory staleness check,
+    * correct under the same single-writer-per-path-per-process contract
+    * the writes assume. A writer in ANOTHER process does not bump this
+    * (the cache consumer documents that). */
   def stateVersion(path: String): Long =
     Manifests.manifestVersion(path, "state")
 
   private def bumpVersion(path: String): Unit =
     Manifests.bumpManifestVersion(path, "state")
 
-  private def marker(path: String, batchId: Long) =
-    new Path(s"$path/_applied/batch-$batchId")
+  /** Whether `snap` already holds batch `batchId` (see the replay rule
+    * above). A replay bumps the version: the attempt that committed the
+    * batch may have crashed before the caches saw its commit. */
+  private def replayed(path: String, snap: Option[Snapshot],
+                       batchId: Long): Boolean = {
+    val done = batchId >= 0 && snap.exists(batchId <= _.batchId)
+    if (done) bumpVersion(path)
+    done
+  }
 
   def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -184,15 +196,10 @@ private[graft] object BucketedStateTable {
   def bucketOf(keyCols: Seq[String], nBuckets: Int): Column =
     pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets.toLong)).cast("int")
 
-  def alreadyApplied(fs: FileSystem, path: String, batchId: Long): Boolean =
-    batchId >= 0 && fs.exists(marker(path, batchId))
-
-  def commit(fs: FileSystem, path: String, batchId: Long): Unit =
-    if (batchId >= 0) { fs.create(marker(path, batchId), true).close() }
-
   /** The table's snapshot, once `layout` is checked against the one it
     * was built with: another one is refused. Driver-side file I/O only —
-    * callers run it before building any Spark plan. */
+    * callers run it before building any Spark plan, and hand the snapshot
+    * to [[fold]], [[append]] or [[compact]]. */
   def pin(spark: SparkSession, path: String,
           layout: Layout): Option[Snapshot] = {
     val snap = snapshot(fsFor(spark, path), path)
@@ -242,64 +249,53 @@ private[graft] object BucketedStateTable {
   }
 
   /** The table's snapshot, which must exist. */
-  def current(fs: FileSystem, path: String): Snapshot =
-    snapshot(fs, path).getOrElse(
+  def current(spark: SparkSession, path: String): Snapshot =
+    snapshot(fsFor(spark, path), path).getOrElse(
       throw new java.io.FileNotFoundException(snapshotFile(path)))
 
   /** [[scan]] of the table's current snapshot. */
   def base(spark: SparkSession, path: String): DataFrame =
-    scan(spark, path, current(fsFor(spark, path), path))
+    scan(spark, path, current(spark, path))
 
-  /** Generation ids under the generations dir, ascending (one driver-side
-    * list). */
-  def generations(fs: FileSystem, path: String): Seq[Long] = {
-    val d = new Path(gensDir(path))
-    if (!fs.exists(d)) Nil
-    else fs.listStatus(d).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith(s"$GenCol=") =>
-        n.stripPrefix(s"$GenCol=").toLong }.toSeq.sorted
-  }
+  private def genDir(path: String, id: Long): String =
+    s"${gensDir(path)}/$GenCol=$id"
 
-  /** The rows of the listed generations, as [[append]] wrote them, read
-    * by column name with the snapshot's schema plus [[BucketCol]] — no
-    * schema-inference job. */
-  def readGenerations(spark: SparkSession, path: String, gens: Seq[Long],
+  /** The rows of the generations `snap` names, as [[append]] wrote them,
+    * read by column name with the snapshot's schema plus [[BucketCol]] —
+    * no schema-inference job. */
+  def readGenerations(spark: SparkSession, path: String,
                       snap: Snapshot): DataFrame =
     spark.read.option("basePath", gensDir(path))
       .schema(snap.schema.add(BucketCol, IntegerType))
-      .parquet(gens.map(g => s"${gensDir(path)}/$GenCol=$g"): _*)
+      .parquet(snap.generations.map(genDir(path, _)): _*)
       .drop(GenCol)
 
   /** Data files directly under `dir`; none when it does not exist. */
   private def dataFiles(fs: FileSystem, dir: Path): Seq[Path] =
     if (!fs.exists(dir)) Nil else Manifests.listDataFiles(fs, dir)
 
-  /** Fold one bucketed delta into the persisted state table under the
-    * copy-on-write protocol above.
+  /** Fold one bucketed delta into the base `snap` commits (None before the
+    * table's first fold) under the copy-on-write protocol above; the
+    * snapshot current afterwards.
     *
     * `delta` must already carry [[BucketCol]] (use [[bucketOf]]) and be
     * reduced to whatever per-key shape the merge expects. `merge(oldSlice,
     * delta)` sees the state's columns plus [[BucketCol]] and returns the
     * touched buckets' full replacement rows, still carrying [[BucketCol]];
     * rows it drops disappear from state, and a bucket it empties is
-    * dropped from the snapshot. Callers [[pin]] the `layout` first; the
-    * first fold records it. */
-  def fold(spark: SparkSession, path: String, delta: DataFrame,
-           batchId: Long, merge: (DataFrame, DataFrame) => DataFrame,
-           layout: Layout): Unit = {
+    * dropped from the snapshot. The commit keeps the generations `snap`
+    * names. Callers [[pin]] the `layout` first; the first fold records
+    * it. */
+  def fold(spark: SparkSession, path: String, snap: Option[Snapshot],
+           delta: DataFrame, batchId: Long,
+           merge: (DataFrame, DataFrame) => DataFrame,
+           layout: Layout): Option[Snapshot] = {
+    if (replayed(path, snap, batchId)) return snap
     val fs = fsFor(spark, path)
-    if (alreadyApplied(fs, path, batchId)) return
-    val snap = snapshot(fs, path)
-    if (batchId >= 0 && snap.exists(_.batchId == batchId)) {
-      // committed by an attempt that crashed before its marker
-      bumpVersion(path)
-      commit(fs, path, batchId)
-      return
-    }
     val d = delta.localCheckpoint()
     try {
       val touched = bucketsOf(d)
-      if (touched.isEmpty) { commit(fs, path, batchId); return }
+      if (touched.isEmpty) return snap
       val dirs = touched.map(b =>
         b -> new Path(s"${stateDir(path)}/$BucketCol=$b")).toMap
       // the touched buckets' files before the write: the snapshot's and
@@ -318,61 +314,62 @@ private[graft] object BucketedStateTable {
         b -> dataFiles(fs, dir).filterNot(before)
           .map(f => s"state/$BucketCol=$b/${f.getName}")
       }.filter(_._2.nonEmpty)
-      commitSnapshot(spark, path, Snapshot(batchId, layout,
+      val high = snap.fold(batchId)(s => math.max(s.batchId, batchId))
+      val next = Snapshot(high, layout,
         StructType(merged.schema.filter(_.name != BucketCol)).toNullable,
-        snap.fold(Map.empty[Int, Seq[String]])(_.files) -- touched ++ written))
-      bumpVersion(path)
+        snap.fold(Map.empty[Int, Seq[String]])(_.files) -- touched ++ written,
+        snap.fold(Seq.empty[Long])(_.generations))
+      commitSnapshot(spark, path, next)
       before.foreach(fs.delete(_, false))
       dirs.foreach { case (b, dir) =>
         if (!written.contains(b)) fs.delete(dir, true) }
-      commit(fs, path, batchId)
+      Some(next)
     } finally release(d)
   }
 
-  /** Append one tagged delta as a generation under the merge-on-read
-    * protocol above, compacting on the trigger that lists
-    * [[MaxGenerations]]. `delta` carries [[BucketCol]] and every column
-    * `reduce` reads, but is NOT reduced: readers and the compaction reduce
-    * it, and `reduce` must be idempotent, so duplicate keys change no
-    * result. Callers fold the first delta of a table into the base with
-    * [[fold]]. */
-  def append(spark: SparkSession, path: String, delta: DataFrame,
-             batchId: Long, reduce: DataFrame => DataFrame): Unit = {
-    val fs = fsFor(spark, path)
-    if (alreadyApplied(fs, path, batchId)) return
-    val id =
-      if (batchId >= 0) batchId
-      else generations(fs, path).lastOption.fold(0L)(_ + 1L)
+  /** Append one tagged delta as a generation onto the committed base
+    * `snap` under the merge-on-read protocol above, compacting on the
+    * trigger whose commit names [[MaxGenerations]]. `delta` carries
+    * [[BucketCol]] and every column `reduce` reads, but is NOT reduced:
+    * readers and the compaction reduce it, and `reduce` must be
+    * idempotent, so duplicate keys change no result. Callers fold the
+    * first delta of a table into the base with [[fold]]. */
+  def append(spark: SparkSession, path: String, snap: Snapshot,
+             delta: DataFrame, batchId: Long,
+             reduce: DataFrame => DataFrame): Unit = {
+    if (replayed(path, Some(snap), batchId)) return
+    val id = 1L + (snap.batchId +: snap.generations).max
     delta.withColumn(GenCol, lit(id))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(GenCol)
       .parquet(gensDir(path))
-    bumpVersion(path)
-    if (generations(fs, path).length >= MaxGenerations)
-      compact(spark, path, reduce)
-    commit(fs, path, batchId)
-  }
-
-  /** Fold every listed generation into the base, then delete exactly those
-    * generations (nothing to do without any). [[append]] calls it at the
-    * bound; a writer about to bypass [[append]] calls it first. The
-    * generations and the base are read with the snapshot's schema, so the
-    * compaction runs no schema-inference job. */
-  def compact(spark: SparkSession, path: String,
-              reduce: DataFrame => DataFrame): Unit = {
-    val fs = fsFor(spark, path)
-    val gens = generations(fs, path)
-    if (gens.nonEmpty) {
-      // a generation is only ever appended onto a committed base
-      val snap = current(fs, path)
-      fold(spark, path, reduce(readGenerations(spark, path, gens, snap)), -1L,
-        merge = (old, d) => reduce(old.unionByName(d)), snap.layout)
-      gens.foreach(g =>
-        fs.delete(new Path(s"${gensDir(path)}/$GenCol=$g"), true))
-      bumpVersion(path)
+    if (fsFor(spark, path).exists(new Path(genDir(path, id)))) {
+      val next = snap.copy(batchId = math.max(snap.batchId, batchId),
+        generations = snap.generations :+ id)
+      commitSnapshot(spark, path, next)
+      if (next.generations.length >= MaxGenerations)
+        compact(spark, path, next, reduce)
     }
   }
+
+  /** Fold every generation `snap` names into the base, committing a
+    * snapshot that names none, then delete `gens/` (with any unnamed
+    * leftovers); the snapshot current afterwards. [[append]] calls it at
+    * the bound; a writer about to bypass [[append]] calls it first. The
+    * generations and the base are read with the snapshot's schema, so the
+    * compaction runs no schema-inference job. */
+  def compact(spark: SparkSession, path: String, snap: Snapshot,
+              reduce: DataFrame => DataFrame): Snapshot =
+    if (snap.generations.isEmpty) snap
+    else {
+      // a named generation holds rows, so the fold commits
+      val next = fold(spark, path, Some(snap.copy(generations = Nil)),
+        reduce(readGenerations(spark, path, snap)), -1L,
+        merge = (old, d) => reduce(old.unionByName(d)), snap.layout)
+      fsFor(spark, path).delete(new Path(gensDir(path)), true)
+      next.get
+    }
 
   private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
 

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -340,7 +342,7 @@ object CdcPipeline {
             // row landed — fail the query without feeding the write-error
             // or events-failed counters
             throw inv
-          case t: Throwable =>
+          case NonFatal(t) =>
             inc(WriteErrors, "query" -> cfg.queryName,
               "error_type" -> SourceError.categoryOf(t))
             // events_failed_total (metrics.rs:118): every live row of a
@@ -377,7 +379,9 @@ object CdcPipeline {
     * error — [[SourceError]] (reference reconnect policy: labels, then
     * transient codes; 286 fatal) or [[DestinationError]] — so a fatal
     * classification buried under engine wrappers is honored as fatal
-    * instead of being restarted as "unknown". */
+    * instead of being restarted as "unknown". An interrupt or a fatal JVM
+    * error is never restarted: the query is stopped and the error
+    * rethrown. */
   def runWithRestart(spark: SparkSession, cfg: PipelineConfig,
                      destination: Destination, maxAttempts: Int = 3,
                      sleep: Long => Unit = Thread.sleep): Int = {
@@ -390,13 +394,11 @@ object CdcPipeline {
         q.awaitTermination()
         done = true // clean termination (AvailableNow drained, or stop())
       } catch {
-        case t: Throwable if SourceError.isRetryableFailure(t) &&
+        case NonFatal(t) if SourceError.isRetryableFailure(t) &&
           (maxAttempts == 0 || attempt < maxAttempts) =>
           GraftMetrics.inc(GraftMetrics.Retries, "query" -> cfg.queryName)
           sleep(cfg.retry.delayMs(attempt, seed = 17L))
-        case t: Throwable =>
-          throw t
-      }
+      } finally q.stop() // an interrupted wait leaves the query running
     }
     attempt
   }

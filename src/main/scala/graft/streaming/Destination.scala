@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.KeyStrategy
 import graft.sources.{OutCompression, OutFormat, Writers}
@@ -154,7 +156,7 @@ final class FileDestination(
       val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
       GraftMetrics.observe(GraftMetrics.WriteBytes,
         fs.getContentSummary(p).getLength.toDouble, "destination_type" -> "file")
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 
   override def close(): Unit = closed = true
@@ -216,10 +218,11 @@ final class DeadLetterDestination(
   * base from that summary, closing the loop: CDC feed → O(touched keys)
   * maintenance per trigger → O(keys) dashboard reads, with the 100 TB base
   * never re-scanned. Replay-idempotence comes from
-  * [[BucketedStateTable]]'s snapshot commit, which records the batch id,
-  * rather than the file sink's batch-dir overwrite — sums are NOT
-  * idempotent, so a replay under foreachBatch's at-least-once contract
-  * must find its batch committed or not at all. `deltas`
+  * [[BucketedStateTable]]'s snapshot commit, which records the highest
+  * batch id applied, rather than the file sink's batch-dir overwrite —
+  * sums are NOT idempotent, so a replay under foreachBatch's
+  * at-least-once contract must find its batch committed or not at all,
+  * and is skipped when it is at or below that batch id. `deltas`
   * maps the envelope micro-batch to the ADDITIVE delta frame (signed
   * contributions — see [[IncrementalAgg.applyDelta]], including its
   * decimal-widening and append-only-extrema caveats). */

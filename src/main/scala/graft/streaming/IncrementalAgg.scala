@@ -26,14 +26,14 @@ import org.apache.spark.sql.functions._
   * comfortably; more buckets = finer pruning and smaller rewrites.
   *
   * Exactly-once under foreachBatch's at-least-once contract via the
-  * shared [[BucketedStateTable]] protocol: the marker is checked first
-  * and written last, and a fold lands by one atomic snapshot commit that
-  * records its batch id — a replay after a crash either finds the old
-  * snapshot (and applies the batch once) or its own (and applies
-  * nothing). Sums are NOT idempotent, so that commit is what keeps a
-  * replay from double-counting. See [[BucketedStateTable]] for the crash
-  * windows. Unlike [[ReplicaTable]] this stays copy-on-write, with no
-  * generations: [[graft.plans.SummaryViews]] scans the base alone. */
+  * shared [[BucketedStateTable]] protocol: a fold lands by one atomic
+  * snapshot commit whose batch id is a high-water mark — a replay after a
+  * crash either finds the old snapshot (and applies the batch once) or
+  * one at or past its batch (and applies nothing). Sums are NOT
+  * idempotent, so that commit is what keeps a replay from double-counting.
+  * See [[BucketedStateTable]] for the crash windows. Unlike
+  * [[ReplicaTable]] this stays copy-on-write, with no generations:
+  * [[graft.plans.SummaryViews]] scans the base alone. */
 object IncrementalAgg {
 
   /** Fold one batch of deltas into the persisted aggregate.
@@ -41,7 +41,8 @@ object IncrementalAgg {
     * `delta`: any frame holding `keyCols` plus ADDITIVE `sumCols`
     * (already-signed contributions) and optional `minCols`/`maxCols`
     * (per-key extrema candidates, merged by re-min/re-max). `batchId >=
-    * 0` makes a replay of that batch a no-op; pass -1 for batch use.
+    * 0` makes a replay of that batch, or of any earlier one, a no-op;
+    * pass -1 for batch use.
     *
     * Extrema columns are exact only for APPEND-ONLY feeds: a sum can
     * absorb a delete as `−v`, but a min cannot un-see a retracted value
@@ -75,7 +76,7 @@ object IncrementalAgg {
         "of the source column per role)")
     require(nBuckets >= 1, s"nBuckets must be >= 1 (got $nBuckets)")
     val layout = BucketedStateTable.Layout(nBuckets)
-    BucketedStateTable.pin(spark, path, layout)
+    val snap = BucketedStateTable.pin(spark, path, layout)
     def reAgg(df: DataFrame): DataFrame = {
       val aggs = sumCols.map(c => sum(col(c)).as(c)) ++
         minCols.map(c => min(col(c)).as(c)) ++
@@ -85,7 +86,7 @@ object IncrementalAgg {
     }
     val d = reAgg(delta.withColumn(BucketedStateTable.BucketCol,
       BucketedStateTable.bucketOf(keyCols, nBuckets)))
-    BucketedStateTable.fold(spark, path, d, batchId,
+    BucketedStateTable.fold(spark, path, snap, d, batchId,
       merge = (old, dlt) => reAgg(old.unionByName(dlt)), layout)
     // after the fold: the catalog only ever points at state that exists.
     // A failed catalog write must NOT fail the fold (the state already

@@ -29,7 +29,7 @@ import graft.operators.Quality
   *     when constructed with `zoneMapCols`).
   *
   * Every leg keys on batchId (DLQ/primary batch dirs, index generation,
-  * replica generation and marker), so a replayed micro-batch converges
+  * the replica snapshot's batch id), so a replayed micro-batch converges
   * instead of double-appending — the chain inherits exactly-once
   * end-to-end from its parts. Per-batch cost is O(batch) plus the
   * replica's amortized compaction: the index is scanned never shuffled

@@ -33,7 +33,9 @@ import org.apache.spark.sql.functions._
   * one snapshot; `tombstones = false` also drops delete-winners, because
   * its promise is that no delete marker is left behind); it compacts any
   * pending generations first. Exactly-once via [[BucketedStateTable]]'s
-  * marker, snapshot commit, generation overwrite and idempotent merge.
+  * snapshot: one atomic commit per fold, append or compaction, which
+  * records the batch id a replay is skipped under and names the pending
+  * generations.
   *
   * A delete arriving BEFORE its insert (out-of-order feed) wins if its
   * version is newer — the tombstone persists as absence only when the
@@ -63,27 +65,30 @@ object ReplicaTable {
       "applyBatch needs key and version columns")
     require(nBuckets >= 1, s"nBuckets must be >= 1 (got $nBuckets)")
     val layout = BucketedStateTable.Layout(nBuckets, keyCols, versionCols)
-    val committed = BucketedStateTable.pin(spark, path, layout).isDefined
+    val snap = BucketedStateTable.pin(spark, path, layout)
     val latest = reduceLatest(keyCols, versionCols) _
     val tagged = batch.withColumn(TombstoneCol, deleteWhen)
       .withColumn(BucketedStateTable.BucketCol,
         BucketedStateTable.bucketOf(keyCols, nBuckets))
-    // the generation holds the batch's rows unreduced: compaction and read
-    // reduce them anyway, so the scan's own tasks write it, no shuffle
-    if (tombstones && committed)
-      BucketedStateTable.append(spark, path, tagged, batchId, latest)
-    else {
-      // the direct fold merges into the base alone: pending generations
-      // go in first
-      BucketedStateTable.compact(spark, path, latest)
-      BucketedStateTable.fold(spark, path, latest(tagged), batchId,
-        merge = (old, dlt) => {
-          val m = latest(old.unionByName(dlt))
-          // drop delete-winners unless tombstones are retained (only the
-          // tombstones=false path can empty a bucket)
-          if (tombstones) m else m.filter(!col(TombstoneCol))
-        },
-        layout)
+    snap match {
+      // the generation holds the batch's rows unreduced: compaction and
+      // read reduce them anyway, so the scan's own tasks write it, no
+      // shuffle
+      case Some(s) if tombstones =>
+        BucketedStateTable.append(spark, path, s, tagged, batchId, latest)
+      case _ =>
+        // the direct fold merges into the base alone: pending generations
+        // go in first
+        BucketedStateTable.fold(spark, path,
+          snap.map(BucketedStateTable.compact(spark, path, _, latest)),
+          latest(tagged), batchId,
+          merge = (old, dlt) => {
+            val m = latest(old.unionByName(dlt))
+            // drop delete-winners unless tombstones are retained (only the
+            // tombstones=false path can empty a bucket)
+            if (tombstones) m else m.filter(!col(TombstoneCol))
+          },
+          layout)
     }
   }
 
@@ -104,22 +109,20 @@ object ReplicaTable {
   }
 
   /** The current replica (tombstoned keys absent, bookkeeping dropped):
-    * the per-key newest row of base ∪ generations, or the base alone when
-    * no generation is pending. Never writes. Base and generations are
-    * read with the schema the snapshot records, by the key and version
-    * columns it records, so a read runs no listing or schema-inference
-    * job; an all-deleted replica reads as an empty frame with that
-    * schema. */
+    * the per-key newest row of base ∪ the generations the snapshot names,
+    * or the base alone when it names none. Never writes. Base and
+    * generations are read with the schema the snapshot records, by the
+    * key and version columns it records, so a read runs no listing or
+    * schema-inference job; an all-deleted replica reads as an empty frame
+    * with that schema. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val fs = BucketedStateTable.fsFor(spark, path)
-    val snap = BucketedStateTable.current(fs, path)
+    val snap = BucketedStateTable.current(spark, path)
     val base = BucketedStateTable.scan(spark, path, snap)
-    val gens = BucketedStateTable.generations(fs, path)
     val rows =
-      if (gens.isEmpty) base
+      if (snap.generations.isEmpty) base
       else reduceLatest(snap.layout.keyCols, snap.layout.versionCols)(
         base.unionByName(
-          BucketedStateTable.readGenerations(spark, path, gens, snap)))
+          BucketedStateTable.readGenerations(spark, path, snap)))
     rows.filter(!col(TombstoneCol))
       .drop(TombstoneCol, BucketedStateTable.BucketCol)
   }

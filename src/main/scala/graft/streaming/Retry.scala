@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 /** Exponential backoff with cap and ±10% deterministic jitter — the retry
   * policy every reference layer shares (pipeline.rs:1790-1868
   * write_with_retry; stream.rs:556-576 reconnect backoff; redis.rs:508-534).
@@ -33,8 +35,9 @@ object Retry {
     extends RuntimeException(s"gave up after $attempts attempts", cause)
 
   /** Run `f`, retrying retryable failures per `policy`; non-retryable
-    * errors propagate immediately (pipeline.rs:1850-1860). `onRetry` feeds
-    * the retries_total metric. */
+    * errors propagate immediately (pipeline.rs:1850-1860), and so do an
+    * interrupt and a fatal JVM error, whatever `isRetryable` says.
+    * `onRetry` feeds the retries_total metric. */
   def withBackoff[A](policy: Policy, seed: Long = 0L,
                      isRetryable: Throwable => Boolean = DestinationError.isRetryable,
                      onRetry: (Int, Throwable) => Unit = (_, _) => (),
@@ -44,7 +47,7 @@ object Retry {
       attempt += 1
       try return f
       catch {
-        case t: Throwable if isRetryable(t) && attempt <= policy.maxRetries =>
+        case NonFatal(t) if isRetryable(t) && attempt <= policy.maxRetries =>
           onRetry(attempt, t)
           // O7: a capacity/rate-limit signal carries the destination's own
           // retry_after hint (destination.rs:255-263) — honour it when it
@@ -55,7 +58,7 @@ object Retry {
             case _                             => 0L
           }
           sleep(math.max(policy.delayMs(attempt, seed), hinted))
-        case t: Throwable if isRetryable(t) =>
+        case NonFatal(t) if isRetryable(t) =>
           throw new RetriesExhausted(attempt, t)
       }
     }

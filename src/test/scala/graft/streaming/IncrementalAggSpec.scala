@@ -86,20 +86,18 @@ class IncrementalAggSpec extends SparkSpec {
       nBuckets = 4, batchId = 0)
     IncrementalAgg.applyDelta(spark, path, df, Seq("key"), Seq("v"),
       nBuckets = 4, batchId = 1)
-    // simulate the crash: batch 1's buckets are swapped but its marker
-    // never landed — the exact overwrite-to-marker gap
+    // simulate the crash: batch 1's snapshot is committed, and the attempt
+    // died before the engine committed its offsets
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$path/_applied/batch-1"),
-      false))
     IncrementalAgg.applyDelta(spark, path, df, Seq("key"), Seq("v"),
       nBuckets = 4, batchId = 1) // the engine's replay
     val got = IncrementalAgg.read(spark, path)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 20L, 2L -> 40L),
-      s"replay after a marker-less crash double-applied: $got")
-    // and the marker is now committed: one more replay is the fast path
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_applied/batch-1")))
+      s"replay after a committed-then-crashed attempt double-applied: $got")
+    // the snapshot records batch 1 as the last applied
+    assert(BucketedStateTable.snapshot(fs, path).map(_.batchId) === Some(1L))
   }
 
   test("crash before the snapshot rename: reads see batch 0, the replay " +
@@ -120,7 +118,7 @@ class IncrementalAggSpec extends SparkSpec {
       nBuckets = nBuckets, batchId = 0)
     // simulate batch 1 crashing before its snapshot rename: its new files
     // sit in both bucket dirs next to batch 0's, batch 0's snapshot is
-    // current, no marker
+    // current
     val saved = s"$path-saved"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(saved))
     org.apache.commons.io.FileUtils.copyDirectory(
@@ -129,10 +127,6 @@ class IncrementalAggSpec extends SparkSpec {
       nBuckets = nBuckets, batchId = 1)
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(saved), new java.io.File(path))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$path/_applied/batch-1"),
-      false))
     assert(dataFiles() === 4)
     assert(IncrementalAgg.read(spark, path)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===

@@ -113,8 +113,8 @@ class IngestDaySpec extends SparkSpec {
       s"$base/index", s"$base/replica", d.primary, d.dlq, checks,
       threshold = 0.5)
     assert(state() === before, "replay must be a no-op on every artifact")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$base/replica/_applied/batch-${batchSplits.size - 1}")))
+    assert(BucketedStateTable.snapshot(fs, s"$base/replica").map(_.batchId)
+      === Some((batchSplits.size - 1).toLong))
   }
 
   test("the sink's zone map answers a doc_id band exactly after the run") {

@@ -161,16 +161,25 @@ class ReplicaTableSpec extends SparkSpec {
     apply(once, upd, 1)
     val crashed = freshPath("crash-replay")
     apply(crashed, seed, 0)
-    // batch 1 crashed after swapping one bucket, before its marker
+    val seeded = replicaRows(crashed)
+    val saved = s"$crashed-saved"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(saved))
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(crashed), new java.io.File(saved))
+    // batch 1 crashed before its snapshot rename, after writing only the
+    // swapped bucket's rows: a partial gens/gen=1 on disk, the batch-0
+    // snapshot current
     apply(crashed, upd.filter(r => bucketOf(r._1) == swapped), 1)
-    val fs = BucketedStateTable.fsFor(spark, crashed)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$crashed/_applied/batch-1"),
-      false))
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(saved), new java.io.File(crashed))
+    assert(generations(crashed) === Seq("gen=1"))
+    assert(BucketedStateTable.current(spark, crashed).generations.isEmpty)
+    assert(replicaRows(crashed) === seeded, "the unnamed generation was read")
     apply(crashed, upd, 1) // the engine's replay carries the FULL batch
     assert(stateRows(crashed) === stateRows(once))
     assert(ReplicaTable.read(spark, crashed).collect().toSet ===
       ReplicaTable.read(spark, once).collect().toSet)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$crashed/_applied/batch-1")))
+    assert(BucketedStateTable.current(spark, crashed).batchId === 1L)
   }
 
   test("a changed nBuckets is refused before any Spark job runs") {
@@ -323,26 +332,35 @@ class ReplicaTableSpec extends SparkSpec {
       new java.io.File(s"$crashed/gens"), new java.io.File(saved))
     applyHistory(crashed, bound, batchRows(bound - 1))
     assert(generations(crashed).isEmpty)
-    // the crash: every generation the compaction listed is still there
-    // (gen=<bound> held the same rows as gen=<bound - 1>), and the
-    // trigger's marker was never written
+    // the crash: every generation the compaction absorbed is still there
+    // (gen=<bound> held the same rows as gen=<bound - 1>), named by no
+    // snapshot
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(saved), new java.io.File(s"$crashed/gens"))
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(s"$saved/gen=${bound - 1}"),
       new java.io.File(s"$crashed/gens/gen=$bound"))
-    assert(fs.delete(
-      new org.apache.hadoop.fs.Path(s"$crashed/_applied/batch-$bound"), false))
     assert(generations(crashed).length === bound)
     assert(replicaRows(crashed) === replicaRows(clean))
-    // the engine replays the batch: its generation is rewritten, the
-    // bound is reached again, and the re-merge changes nothing
+    assert(!ReplicaTable.read(spark, crashed).inputFiles
+      .exists(_.contains("/gens/")), "an unnamed generation was read")
+    // the engine replays the batch: it is at the high-water mark, so
+    // nothing runs and the orphans stay
     applyHistory(crashed, bound, batchRows(bound - 1))
-    assert(generations(crashed).isEmpty)
+    assert(generations(crashed).length === bound)
     assert(stateRows(crashed) === stateRows(clean))
     assert(replicaRows(crashed) === replicaRows(clean))
     assert(replicaRows(clean) ===
       latestPerKey((0L until bound).flatMap(batchRows)))
+    // the next compaction deletes them
+    (bound + 1L to 2L * bound).foreach { b =>
+      applyHistory(clean, b, batchRows(b - bound))
+      applyHistory(crashed, b, batchRows(b - bound))
+    }
+    assert(generations(crashed).isEmpty)
+    assert(stateRows(crashed) === stateRows(clean))
+    assert(replicaRows(crashed) === replicaRows(clean))
+    assert(replicaRows(clean) === latestPerKey(history))
   }
 
   test("a crash before the compaction's snapshot rename leaves reads " +
@@ -361,16 +379,14 @@ class ReplicaTableSpec extends SparkSpec {
     applyHistory(crashed, bound, batchRows(bound - 1))
     assert(generations(crashed).isEmpty)
     // the crash: the compaction's files sit in the bucket dirs next to the
-    // base it read, the snapshot before it is current, every generation it
-    // listed is still there (gen=<bound> held the same rows as
-    // gen=<bound - 1>), and the trigger's marker was never written
+    // base it read, the snapshot before the trigger is current, every
+    // generation it named is still there, and so is the trigger's own
+    // (gen=<bound>, holding the same rows as gen=<bound - 1>), unnamed
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(saved), new java.io.File(crashed))
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(s"$saved/gens/gen=${bound - 1}"),
       new java.io.File(s"$crashed/gens/gen=$bound"))
-    assert(fs.delete(
-      new org.apache.hadoop.fs.Path(s"$crashed/_applied/batch-$bound"), false))
     assert(generations(crashed).length === bound)
     assert(bucketFiles(crashed).values.forall(_ == 2))
     assert(replicaRows(crashed) === replicaRows(clean))
@@ -487,17 +503,21 @@ class ReplicaTableSpec extends SparkSpec {
     applyHistory(path, 1, multi)
     // a generation as the per-trigger reduce wrote it: one row per key,
     // columns (keys, __bucket, versions, payload, __tombstone); it revives
-    // key 2 and holds a row older than key 5's
+    // key 2 and holds a row older than key 5's. Appended as batch 2 (two
+    // generations: no compaction, so no reduce runs)
     val pending = Seq((2L, 9L, "upsert", "g2"), (3L, 7L, "upsert", "g3"),
       (4L, 7L, "delete", "g4"), (5L, 0L, "upsert", "late5"))
-    df(pending: _*)
-      .withColumn("__tombstone", col("op") === "delete")
-      .withColumn(BucketedStateTable.BucketCol,
-        BucketedStateTable.bucketOf(Seq("key"), 4))
-      .select("key", BucketedStateTable.BucketCol, "ver", "op", "payload",
-        "__tombstone")
-      .write.mode("overwrite").parquet(s"$path/gens/gen=2")
+    BucketedStateTable.append(spark, path,
+      BucketedStateTable.current(spark, path),
+      df(pending: _*)
+        .withColumn("__tombstone", col("op") === "delete")
+        .withColumn(BucketedStateTable.BucketCol,
+          BucketedStateTable.bucketOf(Seq("key"), 4))
+        .select("key", BucketedStateTable.BucketCol, "ver", "op", "payload",
+          "__tombstone"),
+      batchId = 2, reduce = identity)
     assert(generations(path) === Seq("gen=1", "gen=2"))
+    assert(BucketedStateTable.current(spark, path).generations === Seq(1L, 2L))
     val want = latestPerKey(seed ++ multi ++ pending)
     assert(replicaRows(path) === want)
     // the same batch replayed under new ids until the bound compacts
@@ -539,5 +559,106 @@ class ReplicaTableSpec extends SparkSpec {
     // parallelized collection of paths
     val listing = jobs.filter(_._2.exists(_._2.contains("ParallelCollectionRDD")))
     assert(listing.isEmpty, s"listing or schema jobs: $listing of $jobs")
+  }
+
+  /** Files under the table `path` that its snapshot does not account for:
+    * anything but `_snapshot`, a base file it names, a file of a generation
+    * it names, a dir's `_SUCCESS`, or the checksum of one of those. */
+  private def unaccounted(path: String): Set[String] = {
+    val snap = BucketedStateTable.current(spark, path)
+    val named = snap.files.values.flatten.toSet + "_snapshot"
+    def accounted(f: String): Boolean = named(f) ||
+      f == "_SUCCESS" || f.endsWith("/_SUCCESS") ||
+      snap.generations.exists(g => f.startsWith(s"gens/gen=$g/"))
+    val Checksum = """(.*/)?\.([^/]+)\.crc""".r
+    tree(path).keySet.filterNot {
+      case Checksum(dir, f) => accounted(Option(dir).getOrElse("") + f)
+      case f                => accounted(f)
+    }
+  }
+
+  test("a state table holds only its snapshot, the files it names and " +
+      "fewer than MaxGenerations generations; a replay below the " +
+      "high-water mark is a no-op") {
+    val bound = BucketedStateTable.MaxGenerations
+    val replica = freshPath("growth")
+    // 3 × bound + 1 triggers; batch 5 is empty
+    val triggers = 0L to 3L * bound
+    def rows(b: Long) = if (b == 5L) Nil else batchRows(b % 9)
+    def oracle(upTo: Long) =
+      latestPerKey(triggers.filter(_ <= upTo).flatMap(rows))
+    var compacted = false
+    triggers.foreach { b =>
+      applyHistory(replica, b, rows(b))
+      // from the batch after the empty one through the first compaction,
+      // which batch 9 runs: the 8th generation, its rows batch 0's again
+      if (b >= 6L && !compacted) {
+        assert(replicaRows(replica) === oracle(b), s"after batch $b")
+        compacted =
+          BucketedStateTable.current(spark, replica).generations.isEmpty
+        assert(compacted === (b == 9L), s"after batch $b")
+      }
+    }
+    assert(oracle(9L) === oracle(8L))
+    val snap = BucketedStateTable.current(spark, replica)
+    assert(snap.batchId === 3L * bound)
+    assert(snap.generations.length < bound)
+    assert(generations(replica).length === snap.generations.length)
+    assert(unaccounted(replica).isEmpty, unaccounted(replica).toString)
+    assert(replicaRows(replica) === latestPerKey(history))
+
+    val agg = freshPath("growth-agg")
+    (0L until 20L).foreach { b =>
+      IncrementalAgg.applyDelta(spark, agg,
+        Seq((b % 7, b), (b % 5 + 10, 1L)).toDF("key", "v"),
+        Seq("key"), Seq("v"), nBuckets = 4, batchId = b)
+    }
+    assert(BucketedStateTable.current(spark, agg).generations.isEmpty)
+    assert(unaccounted(agg).isEmpty, unaccounted(agg).toString)
+    assert(!new java.io.File(s"$agg/gens").exists())
+    def aggRows() = IncrementalAgg.read(spark, agg).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sums = aggRows()
+
+    // replays of earlier batch ids, carrying rows those batches never held
+    val (replicaTree, aggTree) = (tree(replica), tree(agg))
+    val replicaBefore = replicaRows(replica)
+    applyHistory(replica, 3L,
+      (1L to 40L).map(k => (k, 1000L, "upsert", "replayed")))
+    IncrementalAgg.applyDelta(spark, agg, Seq((1L, 1000L)).toDF("key", "v"),
+      Seq("key"), Seq("v"), nBuckets = 4, batchId = 7L)
+    assert(tree(replica) === replicaTree && tree(agg) === aggTree)
+    assert(replicaRows(replica) === replicaBefore)
+    assert(aggRows() === sums)
+  }
+
+  test("a snapshot without its generations or its files is refused by " +
+      "name before any Spark job runs") {
+    val path = freshPath("malformed")
+    (0L to 2L).foreach(b => applyHistory(path, b, batchRows(b)))
+    val fs = BucketedStateTable.fsFor(spark, path)
+    val file = new org.apache.hadoop.fs.Path(s"$path/_snapshot")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val committed = {
+      val in = fs.open(file)
+      try mapper.readTree(in) finally in.close()
+    }
+    Seq("generations", "files").foreach { field =>
+      val doc = committed
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].deepCopy()
+      doc.remove(field)
+      val out = fs.create(file, true)
+      try out.write(mapper.writeValueAsBytes(doc)) finally out.close()
+      var errs = Seq.empty[IllegalStateException]
+      val jobs = jobTasks {
+        errs = Seq(
+          intercept[IllegalStateException](ReplicaTable.read(spark, path)),
+          intercept[IllegalStateException](
+            applyHistory(path, 3L, batchRows(3L))))
+      }
+      assert(jobs.isEmpty, s"refusal ran Spark jobs: $jobs")
+      errs.foreach(e => assert(e.getMessage.contains("malformed/_snapshot") &&
+        e.getMessage.contains(s"`$field`"), e.getMessage))
+    }
   }
 }

@@ -374,6 +374,67 @@ class StreamingSpec extends SparkSpec {
     assert(mock.batches.map(_._2).sum === n, "restart lost events")
   }
 
+  test("an interrupt is never retried: withBackoff runs the body once, " +
+      "never sleeps and rethrows") {
+    val slept = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var calls = 0
+    intercept[InterruptedException] {
+      Retry.withBackoff(
+        Retry.Policy(maxRetries = 3, initialDelayMs = 1, maxDelayMs = 2),
+        sleep = slept += _) {
+        calls += 1
+        throw new InterruptedException("stopping")
+      }
+    }
+    assert(calls === 1 && slept.isEmpty, s"$calls calls, slept $slept")
+  }
+
+  test("an interrupted restart loop stops its query and rethrows, " +
+      "counting no retry") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    GraftMetrics.reset()
+    val (src, ckpt, _) = fresh("restart-interrupt")
+    stageSource(src, parts = 2)
+    val name = "restart_interrupt"
+    val mock = new MockDestination()
+    // a processing-time trigger: the query never terminates on its own
+    val c = cfg(src, ckpt, name).copy(triggerInterval = Some("50 milliseconds"))
+    val starts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (e.name == name) starts.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    var slept = 0
+    @volatile var failure: Throwable = null
+    val runner = new Thread(() =>
+      try CdcPipeline.runWithRestart(spark, c, mock, maxAttempts = 5,
+        sleep = _ => slept += 1)
+      catch { case t: Throwable => failure = t })
+    spark.streams.addListener(listener)
+    var leftRunning = true
+    try {
+      runner.start()
+      // the first batch landed, so the runner waits on the query
+      val deadline = System.currentTimeMillis + 120000
+      while (mock.batches.isEmpty && System.currentTimeMillis < deadline)
+        Thread.sleep(20)
+      assert(mock.batches.nonEmpty, "the query never ran a batch")
+      runner.interrupt()
+      runner.join(120000)
+      leftRunning = spark.streams.active.exists(_.name == name)
+    } finally {
+      spark.streams.active.filter(_.name == name).foreach(_.stop())
+      spark.streams.removeListener(listener)
+    }
+    assert(failure.isInstanceOf[InterruptedException], s"rethrew $failure")
+    assert(starts.get === 1 && slept === 0)
+    assert(GraftMetrics.counterTotal(GraftMetrics.Retries) === 0)
+    assert(!leftRunning, "the interrupted loop left its query running")
+  }
+
   test("graceful stop drains the in-flight batch; restart completes the feed (O8/A3)") {
     val (src, ckpt, out) = fresh("stop")
     val n = stageSource(src, parts = 8)
