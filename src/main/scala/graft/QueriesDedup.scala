@@ -539,7 +539,6 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
     // operator's output exactly, including pairs across micro-batches;
     // xxhash64 signatures keep it outside the SQL oracle like the batch
     // LSH entry.
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.documents(s, dir).schema
     // the fixture is one parquet FILE; the file stream source wants a
     // directory, so stream the parent with a glob pinned to this table
@@ -554,26 +553,12 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
       stream, shingleN = 3, k = 32, bands = 16, threshold = 0.2,
       maxBucketSize = graft.functions.Dedup.DefaultMaxBucketSize)
     val sink = s"stream_dedup_${dir.replaceAll("[^0-9]", "")}"
-    val ckpt = s"$sinkRoot/$sink-ckpt"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(ckpt), true)
     // bucket-membership state belongs off-heap at corpus scale: pin the
-    // RocksDB provider for this query (the same default CdcPipeline ships)
-    val q = graft.streaming.CdcPipeline.startWithConfs(
-      s, Map(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          graft.streaming.CdcPipeline.RocksDBProvider,
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-          "true",
-        // keyed state here is KBs-MBs: 8 fat state stores beat 32
-        // per-trigger store open/commit cycles (PipelineConfig scaladoc)
-        "spark.sql.shuffle.partitions" -> "8")) {
-      pairs.writeStream.queryName(sink).format("memory")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    s.table(sink)
+    // RocksDB provider for this query (the same default CdcPipeline
+    // ships); keyed state here is KBs-MBs, so 8 fat state stores beat 32
+    // per-trigger store open/commit cycles (PipelineConfig scaladoc)
+    drainToMemory(s, pairs, sink, s"$sinkRoot/$sink-ckpt", "append",
+        Some(graft.streaming.CdcPipeline.RocksDBProvider), Some(8))
       .groupBy(col("docA").as("doc_a"), col("docB").as("doc_b"))
       .agg(first(col("estJaccard")).as("est_jaccard"))
   }
@@ -628,14 +613,13 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
       graft.operators.KeyStrategy.Flat)
     val stream = s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = CdcPipeline.startWithConfs(s, Map.empty) {
+    awaitDrained(CdcPipeline.startQuery(s, None, None) {
       IngestDay.run(stream, s"$base/index", s"$base/replica",
           primary, dlq, checks = Seq(Quality.NotNull("text"),
             Quality.InRange("n_chars", 60, 1e12)), threshold = 0.5)
         .option("checkpointLocation", s"$base/checkpoint")
         .trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
+    })
     // a destination whose every batch was empty leaves only _SUCCESS
     // markers — no parquet files to infer from; count that as 0
     def countDest(p: String): Long = {
@@ -677,7 +661,6 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
     // bound, replay determinism) stay spec'd in StreamingQuotaSpec —
     // the oracle pins the single-trigger case end-to-end through the
     // real streaming runtime, state store included.
-    import org.apache.spark.sql.streaming.Trigger
     val schema = Tables.documents(s, dir).schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet")
@@ -685,24 +668,10 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
     val admitted = graft.streaming.StreamingQuota
       .admitByTokenBudget(stream, tokensPerGroup = 800)
     val sink = s"stream_quota_${dir.replaceAll("[^0-9]", "")}"
-    val ckpt = s"$sinkRoot/$sink-ckpt"
-    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    val q = graft.streaming.CdcPipeline.startWithConfs(
-      s, Map(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          graft.streaming.CdcPipeline.RocksDBProvider,
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-          "true",
-        // keyed state here is KBs-MBs: 8 fat state stores beat 32
-        // per-trigger store open/commit cycles (PipelineConfig scaladoc)
-        "spark.sql.shuffle.partitions" -> "8")) {
-      admitted.writeStream.queryName(sink).format("memory")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-    }
-    q.awaitTermination()
-    s.table(sink)
+    // keyed state here is KBs-MBs: 8 fat RocksDB state stores beat 32
+    // per-trigger store open/commit cycles (PipelineConfig scaladoc)
+    drainToMemory(s, admitted, sink, s"$sinkRoot/$sink-ckpt", "append",
+        Some(graft.streaming.CdcPipeline.RocksDBProvider), Some(8))
       .groupBy(col("group").as("source"))
       .agg(count(lit(1)).as("n_admitted"), sum(col("nTokens")).as("n_tokens"))
   }
@@ -1046,7 +1015,6 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
     // better draw). The final ids are decorated batch-side (identity
     // re-rank of exactly those 100 rows) — the STREAM made the
     // selection.
-    import org.apache.spark.sql.streaming.Trigger
     val tag = dir.replaceAll("[^0-9.]", "")
     val base = s"$sinkRoot/stream-wsample-$tag"
     val src = s"$base/source"
@@ -1058,7 +1026,6 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
       orderPartFiles(s, src)
       markStaged(s, src)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/checkpoint"), true)
     val stream = s.readStream
       .schema("doc_id long, source string, text string, n_chars long")
       .option("maxFilesPerTrigger", "2")
@@ -1066,14 +1033,8 @@ private[graft] trait QueriesDedup { this: QueryDomain =>
     val snaps = graft.streaming.StreamingSample
       .weightedK(stream, k = 100, weightCol = "n_chars")
     val qname = s"stream_wsample_${tag.replace(".", "_")}"
-    val q = graft.streaming.CdcPipeline.startWithConfs(s, Map.empty) {
-      snaps.writeStream.queryName(qname).format("memory")
-        .outputMode("update")
-        .option("checkpointLocation", s"$base/checkpoint")
-        .trigger(Trigger.AvailableNow()).start()
-    }
-    awaitDrained(q)
-    val ids = s.table(qname).orderBy(desc("version")).limit(1)
+    val ids = drainToMemory(s, snaps, qname, s"$base/checkpoint", "update")
+      .orderBy(desc("version")).limit(1)
       .select(explode(col("docIds")).as("doc_id"))
     graft.functions.CorpusOps.sampleWeightedK(
         Tables.documents(s, dir).join(ids, "doc_id"),

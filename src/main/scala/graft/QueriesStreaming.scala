@@ -265,12 +265,9 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
     // batch-side on the final counts. Oracle = the quality_drift_psi SQL
     // VERBATIM — the monitor's reading after draining the feed must
     // equal the batch reading exactly.
-    import org.apache.spark.sql.streaming.Trigger
     val tag = dir.replaceAll("[^0-9.]", "")
     val base = s"$sinkRoot/stream-drift-$tag"
     val src = sharedStreamSource(s, dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/checkpoint"), true)
     val cols = Seq("value", "user_id")
     val events = Tables.events(s, dir)
     val bounds = graft.operators.Quality.psiBounds(events, cols)
@@ -286,17 +283,8 @@ private[graft] trait QueriesStreaming { this: QueryDomain =>
       .psiMelted(stream, cols, bounds, 10)
       .groupBy(col("col_name"), col("bucket")).agg(count(lit(1)).as("n"))
     val qname = s"stream_drift_psi_${tag.replace(".", "_")}"
-    val q = graft.streaming.CdcPipeline.startWithConfs(s, Map.empty) {
-      curCounts.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(qname)
-        .option("checkpointLocation", s"$base/checkpoint")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    awaitDrained(q)
-    graft.operators.Quality.psiFromCounts(refCounts, s.table(qname))
+    graft.operators.Quality.psiFromCounts(refCounts,
+        drainToMemory(s, curCounts, qname, s"$base/checkpoint", "complete"))
       .orderBy(col("col_name"))
   }
 

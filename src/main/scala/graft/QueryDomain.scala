@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.cdc.CdcEnvelope
 import graft.plans.{BloomJoins, GraftCatalog, PlanShapes, SummaryViews}
@@ -104,6 +104,24 @@ private[graft] trait QueryDomain {
       queryName = queryName, triggerInterval = None,
       statePartitions = statePartitions, transform = transform), d))
     d
+  }
+
+  /** One AvailableNow run of `frame` into the memory table `name` over a
+    * fresh checkpoint `ckpt`, started through [[CdcPipeline.startQuery]]
+    * with the given state confs and awaited through [[awaitDrained]].
+    * Returns the table. */
+  protected def drainToMemory(s: SparkSession, frame: Dataset[_], name: String,
+      ckpt: String, outputMode: String,
+      stateStoreProvider: Option[String] = None,
+      statePartitions: Option[Int] = None): DataFrame = {
+    org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    awaitDrained(CdcPipeline.startQuery(s, stateStoreProvider, statePartitions) {
+      frame.writeStream.queryName(name).format("memory").outputMode(outputMode)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+    })
+    s.table(name)
   }
 
   /** Wait for an AvailableNow query to finish. One still running after

@@ -23,7 +23,11 @@ import scala.jdk.CollectionConverters._
   * value expands stays (`mapred-default.xml`'s
   * `mapreduce.reduce.shuffle.fetch.retry.enabled` is
   * `${yarn.nodemanager.recovery.enabled}`), and so does a yarn key set
-  * through `set`: every kept key reads as before. */
+  * through `set`: every kept key reads as before.
+  *
+  * `CdcPipeline.startQuery`, the start of every streaming query, runs
+  * [[install]], so every query's tasks get the lean conf whatever started
+  * earlier in the JVM. */
 object LeanHadoopConf {
 
   /** The default resource whose keys are dropped. */

@@ -145,8 +145,10 @@ object NioLocalFileSystem {
     * shipped to every task) and the JVM's FileSystem cache, which otherwise
     * keeps the instance cached at session creation. Sessions that already
     * exist see the classes only through their SQL confs ([[confs]]).
-    * `CdcPipeline.start` then makes that conf lean
-    * ([[LeanHadoopConf.install]]); these two keys stay in it. */
+    * `CdcPipeline.startQuery`, the start of every streaming query, runs it
+    * and sets [[confs]] on the session for the start; it then makes the
+    * context's conf lean ([[LeanHadoopConf.install]]), and these two keys
+    * stay in it. */
   def install(spark: SparkSession): Unit = if (confs.nonEmpty) {
     val conf = spark.sparkContext.hadoopConfiguration
     confs.foreach { case (k, v) => if (conf.get(k) != v) conf.set(k, v) }

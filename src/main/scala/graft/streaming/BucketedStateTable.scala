@@ -40,7 +40,7 @@ import graft.sources.Manifests
   * [[fold]] — copy-on-write of the touched buckets, per-trigger cost
   * O(touched state):
   *
-  *  1. the caller's reduced delta is materialized ONCE (`localCheckpoint`)
+  *  1. the caller's delta is materialized ONCE (`localCheckpoint`)
   *     — the touched-bucket collect and the merge both read that copy, so
   *     the batch's source plan runs once per fold;
   *  2. the snapshot's files of the touched buckets are read back; the
@@ -71,9 +71,10 @@ import graft.sources.Manifests
   *     runs on the same trigger.
   *
   * Readers merge base ∪ named generations with the same `reduce`. A
-  * compaction is [[fold]] (batch id -1) of `reduce(named generations)`
-  * into the base, committing a snapshot that names no generation, then
-  * the deletion of `gens/` outright.
+  * compaction is [[fold]] (batch id -1) of the named generations, as
+  * written, into the base — the merge `reduce(old ∪ generations)` is the
+  * one reduce — committing a snapshot that names no generation, then the
+  * deletion of `gens/` outright.
   *
   * Crash windows, the same two for every commit: before the snapshot
   * rename nothing changed — readers see the previous snapshot, a replay
@@ -278,9 +279,10 @@ private[graft] object BucketedStateTable {
     * table's first fold) under the copy-on-write protocol above; the
     * snapshot current afterwards.
     *
-    * `delta` must already carry [[BucketCol]] (use [[bucketOf]]) and be
-    * reduced to whatever per-key shape the merge expects. `merge(oldSlice,
-    * delta)` sees the state's columns plus [[BucketCol]] and returns the
+    * `delta` must already carry [[BucketCol]] (use [[bucketOf]]) and the
+    * columns `merge` reads; any per-key reduce is the merge's (a
+    * compaction hands over the raw generations). `merge(oldSlice, delta)`
+    * sees the state's columns plus [[BucketCol]] and returns the
     * touched buckets' full replacement rows, still carrying [[BucketCol]];
     * rows it drops disappear from state, and a bucket it empties is
     * dropped from the snapshot. The commit keeps the generations `snap`
@@ -339,11 +341,13 @@ private[graft] object BucketedStateTable {
              reduce: DataFrame => DataFrame): Unit = {
     if (replayed(path, Some(snap), batchId)) return
     val id = 1L + (snap.batchId +: snap.generations).max
-    delta.withColumn(GenCol, lit(id))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(GenCol)
-      .parquet(gensDir(path))
+    CallSite.named(spark.sparkContext, "BucketedStateTable.append") {
+      delta.withColumn(GenCol, lit(id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(GenCol)
+        .parquet(gensDir(path))
+    }
     if (fsFor(spark, path).exists(new Path(genDir(path, id)))) {
       val next = snap.copy(batchId = math.max(snap.batchId, batchId),
         generations = snap.generations :+ id)
@@ -357,15 +361,17 @@ private[graft] object BucketedStateTable {
     * snapshot that names none, then delete `gens/` (with any unnamed
     * leftovers); the snapshot current afterwards. [[append]] calls it at
     * the bound; a writer about to bypass [[append]] calls it first. The
-    * generations and the base are read with the snapshot's schema, so the
-    * compaction runs no schema-inference job. */
+    * generations go in as written: the merge reduces them with the
+    * touched buckets in one pass, `reduce` being idempotent. They and the
+    * base are read with the snapshot's schema, so the compaction runs no
+    * schema-inference job. */
   def compact(spark: SparkSession, path: String, snap: Snapshot,
               reduce: DataFrame => DataFrame): Snapshot =
     if (snap.generations.isEmpty) snap
-    else {
+    else CallSite.named(spark.sparkContext, "BucketedStateTable.compact") {
       // a named generation holds rows, so the fold commits
       val next = fold(spark, path, Some(snap.copy(generations = Nil)),
-        reduce(readGenerations(spark, path, snap)), -1L,
+        readGenerations(spark, path, snap), -1L,
         merge = (old, d) => reduce(old.unionByName(d)), snap.layout)
       fsFor(spark, path).delete(new Path(gensDir(path)), true)
       next.get

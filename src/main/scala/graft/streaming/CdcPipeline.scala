@@ -2,8 +2,8 @@ package graft.streaming
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Pipeline configuration, mirroring PipelineConfigBuilder's validated
   * surface (pipeline.rs:554-635). Count/time batching (A1/A2) map to the
@@ -79,7 +79,6 @@ object CdcPipeline {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   private val ProviderConfKey = "spark.sql.streaming.stateStore.providerClass"
-  private val confLock = new Object
 
   /** RocksDB changelog checkpointing: commit per-trigger DELTAS to the
     * checkpoint instead of a full store snapshot every commit — the
@@ -91,70 +90,62 @@ object CdcPipeline {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
   private val PartitionsConfKey = "spark.sql.shuffle.partitions"
+  private val IsolationConfKey = "spark.sql.artifact.isolation.enabled"
+  private val confLock = new Object
 
-  /** Run `body` with the given session confs set, restoring the previous
-    * values after: a key the session had not set is unset again, not
-    * pinned to its default. The lock serializes every scoped change, so a
-    * query start never captures another caller's temporary settings. */
-  private[graft] def withConfs[T](spark: SparkSession,
-                                  confs: Map[String, String])(body: => T): T =
-    confLock.synchronized {
-      val explicit = spark.conf.getAll
-      val prev = confs.keys.map(k => k -> explicit.get(k)).toMap
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
+  /** The one start of every streaming query graft runs: `doStart` builds
+    * and starts the query. Structured Streaming clones the session inside
+    * `start()` and pins its state confs into the checkpoint's offset-log
+    * metadata, so the start is where they are decided:
+    *
+    *  - the context serves `file:` paths with
+    *    [[graft.io.NioLocalFileSystem]] (when the native Hadoop library is
+    *    absent) and ships a lean Hadoop conf ([[graft.io.LeanHadoopConf]]);
+    *    both are JVM-global, installed here whatever started first;
+    *  - for the start only, the session carries `stateStoreProvider` (plus
+    *    changelog checkpointing when it is RocksDB), `statePartitions` as
+    *    `spark.sql.shuffle.partitions` (`None` keeps the session's value),
+    *    the filesystem's two `fs.*` keys, and
+    *    `spark.sql.artifact.isolation.enabled=false`.
+    *
+    * The last one runs the query's jobs in the executors' shared default
+    * session, so plan code compiled by one query is reused by the next.
+    * Spark 4.1 isolates each session's artifacts by default: the cloned
+    * session gets a new session UUID, its jobs carry a new
+    * `JobArtifactState`, and each executor builds a new isolated session
+    * with its own class loader. Spark's codegen cache is keyed by class
+    * loader and code, so every query start would recompile every generated
+    * class and run it JIT-cold. A session that holds session-scoped
+    * artifacts (added jars, Python includes or REPL class files), or that
+    * set the key itself, keeps Spark's behaviour.
+    *
+    * Afterwards the session's own confs are restored: a key it had not set
+    * is unset again, not pinned to its default. The lock serializes every
+    * start, so none captures another's temporary settings. */
+  def startQuery(spark: SparkSession, stateStoreProvider: Option[String],
+                 statePartitions: Option[Int])(
+      doStart: => StreamingQuery): StreamingQuery = confLock.synchronized {
+    graft.io.NioLocalFileSystem.install(spark)
+    graft.io.LeanHadoopConf.install(spark)
+    val explicit = spark.conf.getAll
+    val isolation =
+      if (explicit.contains(IsolationConfKey) ||
+          org.apache.spark.sql.GraftBridge.holdsArtifacts(spark)) Nil
+      else Seq(IsolationConfKey -> "false")
+    val confs = stateStoreProvider.toSeq.flatMap(p =>
+        (ProviderConfKey -> p) +:
+          (if (p == RocksDBProvider) Seq(ChangelogConfKey -> "true") else Nil)) ++
+      statePartitions.map(n => PartitionsConfKey -> n.toString) ++
+      graft.io.NioLocalFileSystem.confs ++ isolation
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try doStart
+    finally confs.foreach { case (k, _) =>
+      explicit.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None    => spark.conf.unset(k)
       }
     }
-
-  /** Start a streaming query with the given session confs pinned for THIS
-    * query only. The streaming engine clones the session inside `start()`
-    * (and then persists state-relevant confs in the checkpoint's offset-log
-    * metadata), so the confs are set just around the start call and
-    * restored after ([[withConfs]]).
-    *
-    * Every start also runs the query's jobs in the executors' shared
-    * default session, so plan code compiled by one query is reused by the
-    * next. Spark 4.1 isolates each session's artifacts by default
-    * (`spark.sql.artifact.isolation.enabled`): the cloned session gets a
-    * new session UUID, its jobs carry a new `JobArtifactState`, and each
-    * executor builds a new isolated session with its own class loader.
-    * Spark's codegen cache is keyed by class loader and code, so every
-    * query start would recompile every generated class and run it
-    * JIT-cold. When the calling session holds no session-scoped artifacts
-    * (no added jars, Python includes or REPL class files) that isolation
-    * has nothing to isolate, and the key is set to `false` for the start;
-    * the clone keeps the value after the parent's is restored. A session
-    * that holds artifacts, or that set the key itself, keeps Spark's
-    * behaviour unchanged. Confs passed in `confs` win over this one. */
-  def startWithConfs(spark: SparkSession, confs: Map[String, String])(
-      doStart: => StreamingQuery): StreamingQuery =
-    withConfs(spark, sharedSessionConfs(spark) ++ confs)(doStart)
-
-  private val IsolationConfKey = "spark.sql.artifact.isolation.enabled"
-
-  /** The artifact-isolation conf of [[startWithConfs]]: empty when the
-    * session holds artifacts or set the key itself. */
-  private def sharedSessionConfs(spark: SparkSession): Map[String, String] =
-    if (spark.conf.getAll.contains(IsolationConfKey) ||
-        org.apache.spark.sql.GraftBridge.holdsArtifacts(spark)) Map.empty
-    else Map(IsolationConfKey -> "false")
-
-  /** [[startWithConfs]] specialized to the state-store provider (plus
-    * changelog checkpointing when that provider is RocksDB). */
-  def startWithProvider(spark: SparkSession, provider: Option[String])(
-      doStart: => StreamingQuery): StreamingQuery =
-    startWithConfs(spark, providerConfs(provider))(doStart)
-
-  private def providerConfs(provider: Option[String]): Map[String, String] =
-    provider match {
-      case Some(p) if p == RocksDBProvider =>
-        Map(ProviderConfKey -> p, ChangelogConfKey -> "true")
-      case Some(p) => Map(ProviderConfKey -> p)
-      case None    => Map.empty
-    }
+  }
 
   /** S1/S2/S3 — the bounded-source scan levels become path shapes: a
     * collection is a directory, a database a glob of collections, a
@@ -229,24 +220,19 @@ object CdcPipeline {
     }.sum
   }
 
-  /** Wire source → transform → destination and start the query.
+  /** Wire source → transform → destination and start the query through
+    * [[startQuery]] with the config's state-store provider and partitions.
     * The foreachBatch body is the flush path (pipeline.rs:1721-1786):
     * write with retry/backoff, then metrics; offset commit (the "save
-    * resume token" step) happens in the engine after this returns.
-    * Local paths are served by [[graft.io.NioLocalFileSystem]] (installed
-    * here when the native Hadoop library is absent): the query's own
-    * session carries its confs into every trigger's checkpoint logs and
-    * sink writes. The context's Hadoop conf is made lean here
-    * ([[graft.io.LeanHadoopConf]]), so every task the query runs
-    * deserializes a conf without the yarn defaults or source records.
-    * Started through [[startWithConfs]], so a session without artifacts
-    * runs the query without artifact isolation and reuses the plan code
-    * earlier queries compiled. */
+    * resume token" step) happens in the engine after this returns. */
   def start(spark: SparkSession, cfg: PipelineConfig,
-            destination: Destination): StreamingQuery = {
+            destination: Destination): StreamingQuery =
+    startQuery(spark, cfg.stateStoreProvider, cfg.statePartitions)(
+      writeStream(spark, cfg, destination).start())
+
+  private def writeStream(spark: SparkSession, cfg: PipelineConfig,
+                     destination: Destination): DataStreamWriter[Row] = {
     import GraftMetrics._
-    graft.io.NioLocalFileSystem.install(spark)
-    graft.io.LeanHadoopConf.install(spark)
     val logLineCache =
       new java.util.concurrent.ConcurrentHashMap[String, Long]()
     val transformed = cfg.transform(source(spark, cfg))
@@ -357,14 +343,10 @@ object CdcPipeline {
             throw t // fail the batch -> offsets NOT committed -> redelivery
         }
       }
-    val triggered = cfg.triggerInterval match {
+    cfg.triggerInterval match {
       case Some(iv) => writer.trigger(Trigger.ProcessingTime(iv))
       case None     => writer.trigger(Trigger.AvailableNow())
     }
-    val confs = providerConfs(cfg.stateStoreProvider) ++
-      cfg.statePartitions.map(n => PartitionsConfKey -> n.toString) ++
-      graft.io.NioLocalFileSystem.confs
-    startWithConfs(spark, confs)(triggered.start())
   }
 
   /** Drain-and-stop (O8): wait for the current batch, then stop. */
@@ -374,37 +356,40 @@ object CdcPipeline {
   }
 
   /** O5 — restart-with-backoff driver loop (stream.rs:950-1011): run the
-    * query; on a retryable failure, restart FROM THE CHECKPOINT after an
-    * exponential backoff with jitter; `maxAttempts = 0` retries forever
-    * (stream.rs semantics). Returns the number of (re)starts performed.
+    * query; on a retryable failure, restart FROM THE CHECKPOINT after
+    * `cfg.retry`'s backoff, through the same [[Retry.withBackoff]] the
+    * in-batch writes use (seed 17; a `Capacity`/`RateLimit` retry-after
+    * hint in the failure's cause chain is honoured). `maxAttempts` bounds
+    * the starts; `0` retries forever (stream.rs semantics). Returns the
+    * number of starts performed.
     *
     * Retryability walks the failure's cause chain (the engine wraps the
     * real error in a StreamingQueryException) to the first classified
     * error — [[SourceError]] (reference reconnect policy: labels, then
     * transient codes; 286 fatal) or [[DestinationError]] — so a fatal
     * classification buried under engine wrappers is honored as fatal
-    * instead of being restarted as "unknown". An interrupt or a fatal JVM
-    * error is never restarted: the query is stopped and the error
-    * rethrown. */
+    * instead of being restarted as "unknown"; that error is rethrown. Once
+    * the starts are spent, the last query error is thrown as the cause of
+    * [[Retry.RetriesExhausted]]. An interrupt or a fatal JVM error is
+    * never restarted: the query is stopped and the error rethrown. */
   def runWithRestart(spark: SparkSession, cfg: PipelineConfig,
                      destination: Destination, maxAttempts: Int = 3,
                      sleep: Long => Unit = Thread.sleep): Int = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
+    var starts = 0
+    val policy = cfg.retry.copy(maxRetries =
+      if (maxAttempts == 0) Int.MaxValue else math.max(0, maxAttempts - 1))
+    Retry.withBackoff(policy, seed = 17L,
+      isRetryable = SourceError.isRetryableFailure,
+      onRetry = (_, _) =>
+        GraftMetrics.inc(GraftMetrics.Retries, "query" -> cfg.queryName),
+      sleep = sleep) {
+      starts += 1
       val q = start(spark, cfg, destination)
-      try {
-        q.awaitTermination()
-        done = true // clean termination (AvailableNow drained, or stop())
-      } catch {
-        case NonFatal(t) if SourceError.isRetryableFailure(t) &&
-          (maxAttempts == 0 || attempt < maxAttempts) =>
-          GraftMetrics.inc(GraftMetrics.Retries, "query" -> cfg.queryName)
-          sleep(cfg.retry.delayMs(attempt, seed = 17L))
-      } finally q.stop() // an interrupted wait leaves the query running
+      // clean termination: AvailableNow drained, or stop(); an interrupted
+      // wait leaves the query running
+      try q.awaitTermination() finally q.stop()
     }
-    attempt
+    starts
   }
 }
 

@@ -118,9 +118,11 @@ final class FileDestination(
     if (closed) throw new DestinationError.Closed(
       s"write_batch on closed destination $outputDir")
     val dir = f"$outputDir/batch_id=$batchId%06d"
-    Writers.write(df, dir, format, compression, strategy, tsCol,
-      maxFilesPerKey = maxFilesPerKey, targetFileBytes = targetFileBytes,
-      filesPerKeyHint = filesPerKeyHint)
+    CallSite.named(df.sparkSession.sparkContext, "FileDestination.writeBatch") {
+      Writers.write(df, dir, format, compression, strategy, tsCol,
+        maxFilesPerKey = maxFilesPerKey, targetFileBytes = targetFileBytes,
+        filesPerKeyHint = filesPerKeyHint)
+    }
     if (zoneMapCols.nonEmpty)
       graft.sources.ZoneMap.update(df.sparkSession, outputDir, zoneMapCols,
         sketchCols = sketchCols)

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * the bucket, as a generation ([[BucketedStateTable.append]]) — one
   * scan-side write job per trigger, no shuffle, no aggregate, no read of
   * the base — and every [[BucketedStateTable.MaxGenerations]]th trigger
-  * compacts the generations into the buckets, reducing them first, an
-  * amortized whole-table rewrite. [[read]] takes the same per-key max
+  * compacts the generations into the buckets, reducing them with the
+  * buckets' rows in one pass, an amortized whole-table rewrite. [[read]] takes the same per-key max
   * over base ∪ generations, last-writer-wins across restarts and
   * out-of-order batches. The first fold, and every `tombstones = false`
   * fold, reduces the batch and folds it copy-on-write instead (reads ONLY

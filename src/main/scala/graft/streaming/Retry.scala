@@ -5,6 +5,9 @@ import scala.util.control.NonFatal
 /** Exponential backoff with cap and ±10% deterministic jitter — the retry
   * policy every reference layer shares (pipeline.rs:1790-1868
   * write_with_retry; stream.rs:556-576 reconnect backoff; redis.rs:508-534).
+  * Here too it is the one loop: [[CdcPipeline.start]]'s in-batch write and
+  * [[CdcPipeline.runWithRestart]]'s query restarts both run through
+  * [[withBackoff]].
   */
 object Retry {
 
@@ -36,8 +39,9 @@ object Retry {
 
   /** Run `f`, retrying retryable failures per `policy`; non-retryable
     * errors propagate immediately (pipeline.rs:1850-1860), and so do an
-    * interrupt and a fatal JVM error, whatever `isRetryable` says.
-    * `onRetry` feeds the retries_total metric. */
+    * interrupt and a fatal JVM error, whatever `isRetryable` says. Once
+    * the retries are spent, the last failure is the cause of
+    * [[RetriesExhausted]]. `onRetry` feeds the retries_total metric. */
   def withBackoff[A](policy: Policy, seed: Long = 0L,
                      isRetryable: Throwable => Boolean = DestinationError.isRetryable,
                      onRetry: (Int, Throwable) => Unit = (_, _) => (),
@@ -51,12 +55,13 @@ object Retry {
           onRetry(attempt, t)
           // O7: a capacity/rate-limit signal carries the destination's own
           // retry_after hint (destination.rs:255-263) — honour it when it
-          // asks for MORE patience than the backoff schedule would give
-          val hinted = t match {
-            case c: DestinationError.Capacity  => c.retryAfterMs
-            case r: DestinationError.RateLimit => r.retryAfterMs
-            case _                             => 0L
-          }
+          // asks for MORE patience than the backoff schedule would give,
+          // also under the wrappers of a failed query's error
+          val hinted = Iterator.iterate(t)(_.getCause).take(16)
+            .takeWhile(_ != null).collectFirst {
+              case c: DestinationError.Capacity  => c.retryAfterMs
+              case r: DestinationError.RateLimit => r.retryAfterMs
+            }.getOrElse(0L)
           sleep(math.max(policy.delayMs(attempt, seed), hinted))
         case NonFatal(t) if isRetryable(t) =>
           throw new RetriesExhausted(attempt, t)

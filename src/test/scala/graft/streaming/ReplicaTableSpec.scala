@@ -429,7 +429,7 @@ class ReplicaTableSpec extends SparkSpec {
       .count() === 20L)
   }
 
-  test("the compacting fold runs <= 7 jobs, none of them a 1-task parquet " +
+  test("the compacting fold runs <= 6 jobs, none of them a 1-task parquet " +
       "schema-inference job") {
     val path = freshPath("compact-jobs")
     val bound = BucketedStateTable.MaxGenerations
@@ -450,7 +450,7 @@ class ReplicaTableSpec extends SparkSpec {
         stages.exists(_._2.contains("ParallelCollectionRDD"))
     }
     assert(schemaJobs.isEmpty, s"schema-inference jobs: $schemaJobs of $jobs")
-    assert(jobs.size <= 7, s"${jobs.size} jobs: $jobs")
+    assert(jobs.size <= 6, s"${jobs.size} jobs: $jobs")
     val got = ReplicaTable.read(spark, path)
     assert(got.count() === 2000L && got.filter(col("ver") =!= bound).isEmpty)
   }

@@ -40,8 +40,8 @@ class StreamingQuotaSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1) // one wave per micro-batch
       .json(src)
     val admitted = StreamingQuota.admitByTokenBudget(stream, budget)
-    val q = CdcPipeline.startWithProvider(spark,
-      Some(CdcPipeline.RocksDBProvider)) {
+    val q = CdcPipeline.startQuery(spark,
+      Some(CdcPipeline.RocksDBProvider), None) {
       admitted.writeStream.queryName("quota").format("memory")
         .outputMode("append")
         .option("checkpointLocation", ckpt)

@@ -40,8 +40,8 @@ class StreamingSampleSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1)
       .json(src)
     val snaps = StreamingSample.weightedK(stream, k, weightCol = "n_chars")
-    val q = CdcPipeline.startWithProvider(spark,
-      Some(CdcPipeline.RocksDBProvider)) {
+    val q = CdcPipeline.startQuery(spark,
+      Some(CdcPipeline.RocksDBProvider), None) {
       snaps.writeStream.queryName("wres").format("memory")
         .outputMode("update")
         .option("checkpointLocation", ckpt)
@@ -94,8 +94,8 @@ class StreamingSampleSpec extends SparkSpec {
       .option("maxFilesPerTrigger", 1)
       .json(src)
     val snaps = StreamingSample.weightedK(stream, k = 3, weightCol = "n_chars")
-    val q = CdcPipeline.startWithProvider(spark,
-      Some(CdcPipeline.RocksDBProvider)) {
+    val q = CdcPipeline.startQuery(spark,
+      Some(CdcPipeline.RocksDBProvider), None) {
       snaps.writeStream.queryName("wres_dup").format("memory")
         .outputMode("update")
         .option("checkpointLocation", ckpt)

@@ -435,6 +435,23 @@ class StreamingSpec extends SparkSpec {
     assert(!leftRunning, "the interrupted loop left its query running")
   }
 
+  test("a restart waits out the retry-after hint of the failure that " +
+      "ended the query") {
+    val (src, ckpt, _) = fresh("restart-hint")
+    val n = stageSource(src, parts = 2)
+    val mock = new MockDestination(failNextWrites = 1,
+      failWith = new DestinationError.Capacity("buffer full", 0.99,
+        retryAfterMs = 4321))
+    val c = cfg(src, ckpt, "restart_hint")
+      .copy(retry = Retry.Policy(maxRetries = 0, initialDelayMs = 1, maxDelayMs = 2))
+    val slept = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val starts = CdcPipeline.runWithRestart(spark, c, mock, maxAttempts = 3,
+      sleep = slept += _)
+    assert(starts === 2, s"expected 2 starts, got $starts")
+    assert(slept.toSeq === Seq(4321L), s"restart sleeps $slept")
+    assert(mock.batches.map(_._2).sum === n, "restart lost events")
+  }
+
   test("graceful stop drains the in-flight batch; restart completes the feed (O8/A3)") {
     val (src, ckpt, out) = fresh("stop")
     val n = stageSource(src, parts = 8)
@@ -1683,5 +1700,63 @@ class StreamingSpec extends SparkSpec {
     assert(explicitSessions.size === 1 && explicitSessions.head.nonEmpty,
       s"a session that set $key lost its isolation: $explicitSessions")
     assert(explicit.conf.get(key) === "true")
+  }
+
+  test("destination steps name their stages; the stream's other jobs keep " +
+      "the query's call site, in the next trigger too") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (src, ckpt, out) = fresh("stage-names")
+    // one file per trigger: the replica's first fold, generations up to
+    // the compaction, then one more plain trigger
+    stageSource(src, parts = BucketedStateTable.MaxGenerations + 2)
+    val files = new FileDestination(s"$out/files", OutFormat.Jsonl,
+      OutCompression.None, KeyStrategy.CollectionBased)
+    val dest = new Destination {
+      def writeBatch(df: DataFrame, batchId: Long): Unit = {
+        df.count() // a job outside any named step
+        files.writeBatch(df, batchId)
+        ReplicaTable.applyBatch(df.sparkSession, s"$out/replica", df,
+          Seq("user_id"), Seq("cluster_time", "event_id"),
+          col("operation") === "delete", nBuckets = 4, batchId = batchId)
+      }
+      def metadata: DestinationMetadata =
+        DestinationMetadata("stage-names", supportsTransactions = false)
+    }
+    // (job id, batch id, stage names) of every streaming job
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+            Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.add((e.jobId, b.toLong, e.stageInfos.map(_.name))))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val q = CdcPipeline.start(spark, cfg(src, ckpt, "stage_names")
+        .copy(maxFilesPerTrigger = Some(1)), dest)
+      assert(q.awaitTermination(300000) && q.exception.isEmpty)
+    } finally {
+      org.apache.spark.sql.GraftBridge.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    val byBatch = jobs.asScala.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (b, js) => b -> js.sortBy(_._1).map(_._3) }
+    assert(byBatch.map(_._1) === (0L to BucketedStateTable.MaxGenerations + 1L))
+    // the first job of the first trigger runs before any named step
+    val querySite = byBatch.head._2.head.head
+    assert(querySite.startsWith("start at CdcPipeline.scala:"), querySite)
+    val (write, append, compact) = ("FileDestination.writeBatch",
+      "BucketedStateTable.append", "BucketedStateTable.compact")
+    byBatch.foreach { case (b, js) =>
+      val names = js.flatten.toSet
+      assert(js.head.forall(_ == querySite),
+        s"batch $b: its first job is named ${js.head}")
+      val want = Set(querySite, write) ++
+        (if (b == 0L) Nil else Seq(append)) ++
+        (if (b == BucketedStateTable.MaxGenerations.toLong) Seq(compact) else Nil)
+      // the replica's first fold is no named step
+      assert(names === want, s"batch $b")
+    }
   }
 }

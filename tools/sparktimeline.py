@@ -35,10 +35,15 @@ read (input plus shuffle) and records written (output plus shuffle).
 
 Last, one `median` line per query and stage: the median deserialize and
 run time of that stage's tasks over all the query's batches. A stage is
-named `k/n (call site)`: the k-th of the n stages that ran tasks in its
-batch (ordered by stage id), so a batch of another shape (say a
-compacting trigger) lists its stages apart. Times are milliseconds.
-Exits 2 on a usage error or a log it cannot read.
+known by its name, the call site of the job that created it: graft names
+each destination step's stages (`FileDestination.writeBatch`,
+`BucketedStateTable.append`, `BucketedStateTable.compact`), and the
+stream's other jobs keep the query's own (`start at CdcPipeline.scala:N`).
+Stages of one name in one batch (a shuffle's map and result stages) are
+told apart as `k/n`, the k-th of that batch's n stages of the name that
+ran tasks, by stage id. So a write stage pools over plain and compacting
+triggers alike. Times are milliseconds. Exits 2 on a usage error or a
+log it cannot read.
 """
 import json
 import os
@@ -169,25 +174,28 @@ def render(jobs, names):
 
 
 def medians(groups, names):
-    """One line per (query, stage position and batch stage count, stage
-    name): the median deserialize and run time of its tasks over all the
-    query's batches."""
+    """One line per (query, stage name, place among the batch's stages of
+    that name): the median deserialize and run time of its tasks over all
+    the query's batches."""
     stages = {}
     for (query, _), group in groups.items():
         tasks = [t for job in group for t in job["tasks"]]
         stage_names = {}
         for job in group:
             stage_names.update(job["stage_names"])
-        ran = sorted({t["stage"] for t in tasks})
-        for k, sid in enumerate(ran, 1):
-            key = (query, f"{k}/{len(ran)}", stage_names.get(sid, "-"))
-            stages.setdefault(key, []).extend(t for t in tasks if t["stage"] == sid)
+        by_name = {}
+        for sid in sorted({t["stage"] for t in tasks}):
+            by_name.setdefault(stage_names.get(sid, "-"), []).append(sid)
+        for name, sids in by_name.items():
+            for k, sid in enumerate(sids, 1):
+                key = (query, name, f"{k}/{len(sids)}")
+                stages.setdefault(key, []).extend(t for t in tasks if t["stage"] == sid)
     out = []
-    for (query, k, stage), tasks in stages.items():
+    for (query, name, k), tasks in stages.items():
         label = query_label(query, names)
         deser = statistics.median(t["deser"] for t in tasks)
         run = statistics.median(t["run"] for t in tasks)
-        out.append(f"median {label} stage {k} ({stage}): {len(tasks)} tasks, "
+        out.append(f"median {label} {name} stage {k}: {len(tasks)} tasks, "
                    f"deser {deser:g} ms, run {run:g} ms")
     return out
 

@@ -92,34 +92,48 @@ class RenderTest(unittest.TestCase):
 
 class MedianTest(unittest.TestCase):
 
-    def test_one_median_line_per_query_and_stage(self):
-        _, out, _ = run_main(FIXTURE)
-        self.assertEqual([ln for ln in out.splitlines() if ln.startswith("median")], [
-            "median query - stage 1/1 (run at Fixture.scala:1): 1 tasks, "
-            "deser 30 ms, run 12 ms",
-            # batch 3 ran two stages, batches 4 and 10 one each
-            f"median query {QUERY} (replica) stage 1/2 (run at Fixture.scala:1): "
-            "2 tasks, deser 3.5 ms, run 21 ms",
-            f"median query {QUERY} (replica) stage 2/2 (run at Fixture.scala:1): "
-            "1 tasks, deser 18 ms, run 25 ms",
-            f"median query {QUERY} (replica) stage 1/1 (run at Fixture.scala:1): "
-            "4 tasks, deser 15.5 ms, run 22.5 ms"])
-
-    def test_a_stage_with_another_call_site_is_listed_apart(self):
+    @staticmethod
+    def renamed(stages):
+        """The fixture's lines with the stages `stages` maps renamed."""
         lines = []
         with open(FIXTURE, encoding="utf-8") as f:
             for line in f:
                 e = json.loads(line)
-                if e.get("Job ID") == 4 and "Stage Infos" in e:
-                    e["Stage Infos"][0]["Stage Name"] = "compact at Fixture.scala:2"
+                for info in e.get("Stage Infos", []):
+                    info["Stage Name"] = stages.get(info["Stage ID"], info["Stage Name"])
                 lines.append(json.dumps(e))
-        out = sparktimeline.render(*sparktimeline.parse(lines))
-        self.assertIn(f"median query {QUERY} (replica) stage 1/1 "
-                      "(compact at Fixture.scala:2): 1 tasks, deser 2 ms, run 5 ms",
-                      out.splitlines())
-        self.assertIn(f"median query {QUERY} (replica) stage 1/1 "
-                      "(run at Fixture.scala:1): 3 tasks, deser 16 ms, run 24 ms",
-                      out.splitlines())
+        return sparktimeline.render(*sparktimeline.parse(lines)).splitlines()
+
+    def test_one_median_line_per_query_and_stage(self):
+        _, out, _ = run_main(FIXTURE)
+        self.assertEqual([ln for ln in out.splitlines() if ln.startswith("median")], [
+            "median query - run at Fixture.scala:1 stage 1/1: 1 tasks, "
+            "deser 30 ms, run 12 ms",
+            # batch 3 ran two stages of one name, batches 4 and 10 one each
+            f"median query {QUERY} (replica) run at Fixture.scala:1 stage 1/2: "
+            "2 tasks, deser 3.5 ms, run 21 ms",
+            f"median query {QUERY} (replica) run at Fixture.scala:1 stage 2/2: "
+            "1 tasks, deser 18 ms, run 25 ms",
+            f"median query {QUERY} (replica) run at Fixture.scala:1 stage 1/1: "
+            "4 tasks, deser 15.5 ms, run 22.5 ms"])
+
+    def test_a_stage_with_another_call_site_is_listed_apart(self):
+        lines = self.renamed({4: "BucketedStateTable.compact"})
+        self.assertIn(f"median query {QUERY} (replica) BucketedStateTable.compact "
+                      "stage 1/1: 1 tasks, deser 2 ms, run 5 ms", lines)
+        self.assertIn(f"median query {QUERY} (replica) run at Fixture.scala:1 "
+                      "stage 1/1: 3 tasks, deser 16 ms, run 24 ms", lines)
+
+    def test_a_named_stage_pools_over_batches_of_other_shapes(self):
+        # the write is the second stage of batch 3 and the only one of
+        # batch 4: its name, not its position, makes it one stage
+        lines = self.renamed({2: "FileDestination.writeBatch",
+                              3: "FileDestination.writeBatch"})
+        self.assertEqual([ln for ln in lines if ln.startswith(f"median query {QUERY}")], [
+            f"median query {QUERY} (replica) run at Fixture.scala:1 stage 1/1: "
+            "3 tasks, deser 3 ms, run 20 ms",
+            f"median query {QUERY} (replica) FileDestination.writeBatch stage 1/1: "
+            "4 tasks, deser 16.5 ms, run 24.5 ms"])
 
 
 class CompressedTest(unittest.TestCase):
